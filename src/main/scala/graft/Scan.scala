@@ -36,9 +36,6 @@ final case class TableScanResult(
   */
 object Scan {
 
-  private def isDateLike(dt: DataType): Boolean =
-    dt == TimestampType || dt == DateType || dt == TimestampNTZType
-
   /** Scan one delimited file (whiteRRabbit.R:218-446). */
   def scanFile(spark: SparkSession, path: String,
       config: ScanConfig): TableScanResult = {
@@ -108,8 +105,8 @@ object Scan {
     val summaryLocal = spark.createDataFrame(
       java.util.Arrays.asList(keptRows: _*), summary.schema)
 
-    val freqCols = profiled.schema.fields
-      .filterNot(f => isDateLike(f.dataType)) // ref :331 — no date freq
+    val freqCols = profiled.schema.fields // ref :331 — no date freq
+      .filterNot(f => Profile.isDateLike(f.dataType))
       .map(_.name).toSeq
     val freqSchema = StructType(Seq(
       StructField("Column", StringType),

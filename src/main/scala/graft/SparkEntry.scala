@@ -430,18 +430,6 @@ object SparkEntry {
   private def stringified(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).cast(StringType).as(c)).toSeq: _*)
 
-  /** Widen a NARROW scan to the session's parallelism before a
-    * compute-heavy pass (optimization r19, guide §2.5 "input skew —
-    * repartition immediately after the read"). A small parquet table
-    * is one row group = one unsplittable task however many cores the
-    * box has; the inference date-parse cascade over stringified
-    * orders ran 2.0 s in a SINGLE task at 32 cores. The gate makes
-    * this scale-neutral: a corpus-sized input already scans wider
-    * than the cluster and passes through untouched — only a scan
-    * narrower than the box pays one small round-robin shuffle.
-    */
-  private def widened(df: DataFrame): DataFrame = Profile.widened(df)
-
   private val inferSchema = StructType(Seq(
     StructField("column_name", StringType, nullable = false),
     StructField("inferred_type", StringType, nullable = false)))
@@ -451,7 +439,9 @@ object SparkEntry {
     * cascade is gone with the passes it amortized).
     */
   private def typeinferQuery(s: SparkSession, df: DataFrame): DataFrame = {
-    val inf = TypeInference.infer(widened(stringified(df)))
+    // widened: a one-row-group parquet scan is one task, and the
+    // date-parse cascade over stringified orders ran 2.0 s in it
+    val inf = TypeInference.infer(Profile.widened(stringified(df)))
     val rows = inf.toSeq.sortBy(_._1).map { case (c, t) =>
       Row(c, t.label) }
     s.createDataFrame(java.util.Arrays.asList(rows: _*), inferSchema)
@@ -3192,13 +3182,14 @@ object SparkEntry {
     // ops 5-6 roundtrip: stringify → infer → promote → profile must
     // reproduce the typed table's profile exactly. The promoted frame
     // localCheckpoints (optimization r18, guide §1.2): the profile
-    // runs TWO jobs (counter agg + histogram melt) and each would
+    // reads it twice (counters agg + histogram melt) and each pass would
     // otherwise re-evaluate the full promote cast cascade — the
     // 40-format date parse included — over every row; materializing
-    // parses once and hands both jobs binary columns.
+    // parses once and hands both passes binary columns.
     "typeinfer_roundtrip" -> ((s, dir) => {
       val promoted = TypeInference
-        .inferAndPromote(widened(stringified(tbl(s, dir, "orders"))))
+        .inferAndPromote(
+          Profile.widened(stringified(tbl(s, dir, "orders"))))
         ._1.localCheckpoint(true)
       // summary = one row per column; released via collectReleased
       collectReleased(roundedSummary(promoted), promoted)

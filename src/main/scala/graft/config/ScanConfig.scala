@@ -24,12 +24,17 @@ package graft.config
   *     (whiteRRabbit.R:252, :288); a fixed seed makes runs reproducible
   *     and oracle-checkable.
   *   - exactQuantiles: the reference computes exact quantiles in memory
-  *     (whiteRRabbit.R:365-372). The exact default computes type-7
-  *     quantiles from the per-column value histogram (no value
-  *     buffering — Profile.histogramStats); exactQuantiles=false
-  *     switches to `percentile_approx` sketches, whose state stays
-  *     constant-size even for columns whose histogram would approach
-  *     the row count.
+  *     (whiteRRabbit.R:365-372). The exact default computes exact
+  *     distinct counts and type-7 quantiles from the per-column value
+  *     histogram (no value buffering — Profile.histogramStats).
+  *     exactQuantiles=false switches the profile to
+  *     Profile.summarizeApprox, whose state stays constant-size even for
+  *     columns whose histogram would approach the row count, under an
+  *     error contract instead of exactness: distinct counts are HLL++
+  *     estimates at relative standard deviation 0.05, and each quartile
+  *     or date median is within rank error 1/quantileAccuracy of the
+  *     exact one. Counters and min/max stay exact; mean and sd agree
+  *     with the exact path up to floating-point summation order.
   */
 final case class ScanConfig(
     workingFolder: String = ".",
@@ -47,10 +52,10 @@ final case class ScanConfig(
     randomSample: Boolean = true,
     seed: Long = 42L,
     exactQuantiles: Boolean = true,
-    // percentile_approx accuracy: 1000 ≈ ±0.1% rank error. The sketch
-    // gets MORE expensive to update than exact percentile at high
-    // accuracy (measured 45s vs 11s at sf0.1 with accuracy=10000);
-    // 1000 keeps the approx path strictly cheaper.
+    // sketch quantile accuracy: 1000 ≈ ±0.1% rank error. The sketch
+    // gets MORE expensive to update at high accuracy (percentile_approx
+    // measured 45s vs 11s for exact percentile at sf0.1 with
+    // accuracy=10000).
     quantileAccuracy: Int = 1000
 ) {
   /** Field separator implied by the delimiter choice (whiteRRabbit.R:110-116). */

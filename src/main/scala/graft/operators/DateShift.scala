@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Date anonymization: every value in every date/timestamp column is
   * shifted by an independent uniform random offset in [-range, +range]
@@ -15,14 +14,11 @@ import org.apache.spark.sql.types._
   */
 object DateShift {
 
-  private def isDateLike(dt: DataType): Boolean =
-    dt == TimestampType || dt == DateType || dt == TimestampNTZType
-
   def shiftDates(df: DataFrame, seed: Long = 42L,
       range: Int = 5): DataFrame = {
     val span = 2 * range + 1
     val cols = df.schema.fields.zipWithIndex.map { case (f, i) =>
-      if (isDateLike(f.dataType)) {
+      if (Profile.isDateLike(f.dataType)) {
         // floor(rand*span)-range ∈ [-range, range], uniform; a distinct
         // seed per column keeps offsets independent across columns.
         expr(s"timestampadd(DAY, CAST(floor(rand(${seed + i}) * $span) " +

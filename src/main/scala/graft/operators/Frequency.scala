@@ -22,10 +22,10 @@ import org.apache.spark.sql.types._
   *     deterministic tiebreak (count DESC, value ASC) per SURVEY §7.4.9.
   *
   * Plan shape / scale: instead of one groupBy job per column (the
-  *  reference loops column-by-column), all requested columns are melted
-  *  into (col_name, value) pairs with a generator (`explode`) and
-  *  aggregated in a SINGLE shuffle keyed by (col_name, value), with
-  *  map-side partial aggregation. The top-K rank is a second, much
+  *  reference loops column-by-column), the counts are the profile's
+  *  value histogram ([[Profile.valueHistogram]]): all requested columns
+  *  melted into (column, value) keys and aggregated in a SINGLE shuffle
+  *  with map-side partial aggregation. The top-K rank is a second, much
   *  smaller shuffle over the already-thresholded counts. The
   *  min_cell_count filter runs before the rank window, so the window
   *  partition for a column holds only values with ≥ minCellCount
@@ -44,27 +44,27 @@ object Frequency {
       minCellCount: Long = 5L,
       maxDistinctValues: Int = 1000): DataFrame = {
     require(cols.nonEmpty, "frequencies: no columns requested")
-    val dateCols = df.schema.fields
-      .filter(f => f.dataType == TimestampType || f.dataType == DateType ||
-        f.dataType == TimestampNTZType)
-      .map(_.name).toSet
-    val use = cols.filterNot(dateCols.contains) // ref :331 — no date freq
+    val fields = df.schema.fields
+    val use = cols.map(df.schema.fieldIndex) // ref :331 — no date freq
+      .filterNot(i => Profile.isDateLike(fields(i).dataType))
     require(use.nonEmpty, "frequencies: only date columns requested")
 
-    val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val kvs: Seq[Column] = use.map { c =>
-      struct(lit(c).as("col_name"),
-        renderValue(col(c), byName(c)).as("value"))
-    }
-    val pairs = df
-      .select(explode(array(kvs: _*)).as("kv"))
-      .select(col("kv.col_name").as("col_name"), col("kv.value").as("value"))
-      .where(col("value").isNotNull && col("value") =!= lit(""))
-
-    val counts = pairs
-      .groupBy("col_name", "value")
-      .agg(count(lit(1)).as("cnt"))
+    // Render each histogram key as the reference's value string. Floating
+    // columns are keyed by their (+0.0-normalized) double; every other
+    // key already is cast(string). Rendering is injective on the keys,
+    // so each rendered value keeps its own count.
+    def floating(dt: DataType) = use.filter(fields(_).dataType == dt)
+    val value =
+      when(col("i").isin(floating(FloatType): _*),
+        renderValue(col("vn").cast(FloatType), FloatType))
+        .when(col("i").isin(floating(DoubleType): _*),
+          renderValue(col("vn"), DoubleType))
+        .otherwise(col("vs"))
+    val counts = Profile.valueHistogram(df, use)
       .where(col("cnt") >= lit(minCellCount))
+      .select(element_at(typedLit(fields.map(_.name)), col("i") + 1)
+        .as("col_name"), value.as("value"), col("cnt"))
+      .where(col("value") =!= lit(""))
 
     // Two-level top-K so no single window partition ever holds a whole
     // column's retained values: level 1 ranks within (column, hash

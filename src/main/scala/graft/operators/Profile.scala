@@ -7,22 +7,19 @@ import org.apache.spark.sql.types._
 /** Per-column profile statistics — the reference's core product.
   *
   * The reference iterates over columns in driver memory and computes each
-  * column's counters/stats separately (whiteRRabbit.R:309-423). Here the
-  * whole profile is ONE Spark aggregation: every column's counters and
-  * moments are expressions inside a single `agg()`, so the input is
-  * scanned once (columnar, whole-stage-codegen), partially aggregated
-  * map-side, and reduced to a single row — no wide shuffle. The one-row
-  * result is reshaped driver-side into one output row per column.
+  * column's counters/stats separately (whiteRRabbit.R:309-423). Here every
+  * column's counters and moments are expressions inside ONE `agg()` (one
+  * scan, map-side partial aggregation, a single-row result), and every
+  * per-value statistic — exact distinct counts, exact quartiles and the
+  * frequency table ([[Frequency.frequencies]]) — comes from ONE melt into
+  * a (column, value) → count histogram ([[valueHistogram]]). The results
+  * are reshaped driver-side into one output row per column.
   *
-  * Scale notes (100 TB):
-  *   - `countDistinct` on N columns rewrites to an `expand` + hash
-  *     aggregate; it is exact, matching the reference
-  *     (whiteRRabbit.R:327). For columns where exactness is not needed,
-  *     see [[summarizeApprox]] which uses HLL sketches and exact-median
-  *     replaced by `percentile_approx` — single-pass, spill-free.
-  *   - Exact `percentile` buffers per-group values; on one global group
-  *     this means a per-partition buffer merge on the driver-side
-  *     reducer. At 100 TB prefer the approx variant.
+  * Scale notes (100 TB): the histogram is distributed hash aggregation
+  * with map-side combine; its heaviest state is one row per distinct
+  * value, never a per-group value buffer. Where exactness is not needed,
+  * [[summarizeApprox]] replaces it with HLL and quantile sketches —
+  * single-pass, constant memory.
   */
 object Profile {
 
@@ -53,11 +50,17 @@ object Profile {
   ))
 
   private def isNum(dt: DataType): Boolean = dt.isInstanceOf[NumericType]
-  // Parquet written without isAdjustedToUTC surfaces as TIMESTAMP_NTZ in
-  // Spark 4; with the session tz pinned to UTC it denotes the same
-  // instant, so both flavors get the date-stat treatment.
-  private def isTs(dt: DataType): Boolean =
+
+  /** DATE, TIMESTAMP and TIMESTAMP_NTZ: the columns that get the date
+    * stats and no frequency table (whiteRRabbit.R:331). Parquet written
+    * without isAdjustedToUTC surfaces as TIMESTAMP_NTZ in Spark 4; with
+    * the session tz pinned to UTC it denotes the same instant.
+    */
+  private[graft] def isDateLike(dt: DataType): Boolean =
     dt == TimestampType || dt == DateType || dt == TimestampNTZType
+
+  private def epochMicros(c: Column, dt: DataType): Column =
+    unix_micros(if (dt == TimestampType) c else c.cast(TimestampType))
 
   /** R class name for the summary's DataType field, matching what the
     * reference records after type promotion (whiteRRabbit.R:311, :403).
@@ -70,29 +73,6 @@ object Profile {
     case other                              => other.simpleString
   }
 
-  /** Profile every column of `df`.
-    * Semantics per column (whiteRRabbit.R:313-327):
-    *   missing  = count of NULLs;
-    *   empty    = count of "" (string columns only, 0 otherwise);
-    *   nonMissing excludes NULL for all columns and also "" for strings;
-    *   distinct is exact and excludes NULL (and "" for strings);
-    *   numeric stats over non-NULL values: min/max/mean/sd(sample)/
-    *     quartiles (type-7 linear interpolation = Spark exact percentile);
-    *   date stats: earliest/latest/median epoch-microseconds (median may
-    *     interpolate between two instants, whiteRRabbit.R:389-398).
-    *
-    * Plan shape: TWO jobs. Job A computes counters + moments for all
-    * columns in one codegen'd `agg()` — and nothing with a heavy object
-    * buffer rides in it (a mixed declarative/object aggregate forces
-    * the whole plan onto ObjectHashAggregate, measured 2x slower than
-    * the jobs run apart; N `countDistinct`s in one agg would plan an
-    * `Expand` that multiplies every row N-fold, measured 10x). Job B
-    * melts the columns to (colIdx, value) pairs and computes BOTH the
-    * exact distinct counts AND the exact type-7 quantiles from the
-    * per-column value histogram (see [[histogramStats]]) — fully
-    * distributed hash aggregation, no per-group value buffering
-    * anywhere in the exact path.
-    */
   /** Widen a NARROW input to the session's parallelism before the
     * profile's compute-heavy passes (optimization r19, guide §2.5
     * "input skew — repartition immediately after the read"). A small
@@ -109,161 +89,144 @@ object Profile {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  // summarize (exact path) deliberately NOT widened: its heavy work
-  // (histogram melt) redistributes at its own exchange already, and
-  // the measured effect of a pre-repartition was a small REGRESSION
-  // on small tables (summary_orders 2.53→2.87, customer 2.62→3.37 —
-  // two extra full-row shuffles per profile) with lineitem flat.
+  /** Profile every column of `df`.
+    * Semantics per column (whiteRRabbit.R:313-327):
+    *   missing  = count of NULLs;
+    *   empty    = count of "" (string columns only, 0 otherwise);
+    *   nonMissing excludes NULL for all columns and also "" for strings;
+    *   distinct is exact and excludes NULL (and "" for strings);
+    *   numeric stats over non-NULL values: min/max/mean/sd(sample)/
+    *     quartiles (type-7 linear interpolation = Spark exact percentile);
+    *   date stats: earliest/latest/median epoch-microseconds (median may
+    *     interpolate between two instants, whiteRRabbit.R:389-398).
+    *
+    * Plan shape: the counters job first, then the histogram pipeline —
+    * 9 Spark jobs on a scan_large table. The counters job computes
+    * counters + moments for all columns in one codegen'd `agg()`, and
+    * nothing with a heavy object buffer rides in it (a mixed
+    * declarative/object aggregate forces the whole plan onto
+    * ObjectHashAggregate, measured 2x slower than the jobs run apart;
+    * N `countDistinct`s in one agg would plan an `Expand` that
+    * multiplies every row N-fold, measured 10x). Its one row gives each
+    * column's non-missing count and rank base as driver constants. The
+    * histogram pipeline ([[histogramRanked]]) melts the columns into
+    * the value histogram and derives BOTH the exact distinct counts AND
+    * the exact type-7 quantiles from it ([[histogramStats]]) — fully
+    * distributed hash aggregation, no per-group value buffering
+    * anywhere in the exact path.
+    *
+    * Deliberately NOT [[widened]]: the histogram melt redistributes at
+    * its own exchange already, and the measured effect of a
+    * pre-repartition was a small REGRESSION on small tables
+    * (summary_orders 2.53→2.87, customer 2.62→3.37 — two extra
+    * full-row shuffles per profile) with lineitem flat.
+    *
+    * `exactQuantiles = false` is [[summarizeApprox]] at `accuracy`:
+    * HLL distinct counts (rsd 0.05) and sketch quantiles with rank
+    * error ≤ 1/accuracy.
+    */
   def summarize(
       df: DataFrame,
       exactQuantiles: Boolean = true,
-      accuracy: Int = 10000): DataFrame = {
-    val fields = df.schema.fields
-    require(fields.nonEmpty, "cannot profile a zero-column DataFrame")
-
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    aggs += count(lit(1)).as("total")
-    fields.zipWithIndex.foreach { case (f, i) =>
-      val c = col(f.name)
-      aggs += count(when(c.isNull, lit(1))).as(s"m_$i")
-      f.dataType match {
-        case StringType =>
-          aggs += count(when(c === lit(""), lit(1))).as(s"e_$i")
-        case t if isNum(t) =>
-          val cd = c.cast(DoubleType)
-          aggs += min(cd).as(s"mn_$i")
-          aggs += max(cd).as(s"mx_$i")
-          aggs += avg(cd).as(s"av_$i")
-          aggs += stddev_samp(cd).as(s"sd_$i")
-          if (!exactQuantiles)
-            aggs += percentile_approx(cd,
-              array(lit(0.25), lit(0.5), lit(0.75)), lit(accuracy))
-              .as(s"q_$i")
-        case t if isTs(t) =>
-          val us = unix_micros(
-            if (f.dataType == TimestampType) c else c.cast(TimestampType))
-          aggs += min(us).as(s"tn_$i")
-          aggs += max(us).as(s"tx_$i")
-          if (!exactQuantiles)
-            aggs += percentile_approx(us, lit(0.5), lit(accuracy))
-              .as(s"tm_$i")
-        case _ => ()
+      accuracy: Int = 10000): DataFrame =
+    if (!exactQuantiles) summarizeApprox(df, accuracy = accuracy)
+    else {
+      val fields = df.schema.fields
+      require(fields.nonEmpty, "cannot profile a zero-column DataFrame")
+      val aggs = scala.collection.mutable.ArrayBuffer[Column](
+        count(lit(1)).as("total"))
+      fields.zipWithIndex.foreach { case (f, i) =>
+        val c = col(f.name)
+        aggs += count(when(c.isNull, lit(1))).as(s"m_$i")
+        f.dataType match {
+          case StringType =>
+            aggs += count(when(c === lit(""), lit(1))).as(s"e_$i")
+          case t if isNum(t) =>
+            val cd = c.cast(DoubleType)
+            aggs += min(cd).as(s"mn_$i")
+            aggs += max(cd).as(s"mx_$i")
+            aggs += avg(cd).as(s"av_$i")
+            aggs += stddev_samp(cd).as(s"sd_$i")
+          case t if isDateLike(t) =>
+            val us = epochMicros(c, t)
+            aggs += min(us).as(s"tn_$i")
+            aggs += max(us).as(s"tx_$i")
+          case _ => ()
+        }
       }
+      val counters = df.agg(aggs.head, aggs.tail.toSeq: _*).head()
+      val nonMissing = fields.indices.map { i =>
+        counters.getAs[Long]("total") - counters.getAs[Long](s"m_$i") -
+          emptyCount(counters, fields(i), i)
+      }
+      reshapeRows(df, counters, histogramStats(df, nonMissing))
     }
 
-    if (exactQuantiles) {
-      val hist = histogramStats(df)
-      reshapeLike(df, aggs.toSeq,
-        Some(hist.view.mapValues(_.distinct).toMap), Some(hist))
-    } else
-      reshapeLike(df, aggs.toSeq, Some(exactDistinctCounts(df)))
-  }
+  private def emptyCount(counters: Row, f: StructField, i: Int): Long =
+    if (f.dataType == StringType) counters.getAs[Long](s"e_$i") else 0L
 
-  /** Per-column stats derived from the value histogram in one job. */
-  private final case class HistStats(
-      distinct: Long,
-      quartiles: Option[(Double, Double, Double)],
-      tsMedianUs: Option[Double])
-
-  /** Exact distinct counts AND exact type-7 quantiles from ONE melt +
-    * histogram job: columns melt to (colIdx, value) pairs, a
-    * distributed hash aggregation builds each column's value histogram
-    * (value → multiplicity), a range-partitioned prefix sum
-    * ([[Ranking.prefixSums]]) accumulates rank ranges, and the
-    * quantile values are picked by rank and interpolated driver-side
-    * with the same lower+(higher-lower)·frac formula Spark's exact
-    * `percentile` uses — identical results with NO per-group value
-    * buffering and NO per-column window partition: the heaviest
-    * structure anywhere is one histogram row per distinct value,
-    * map-side combined, and rank partitioning follows the range
-    * sampler, so a single continuous column's histogram spreads over
-    * the whole cluster instead of piling one executor. (Exactness
-    * still costs a sorted pass over distinct values, which is why
-    * [[summarizeApprox]] (sketches) stays the recommended 100 TB
-    * default.)
+  /** The one value melt of the profile layer: columns `idx` of `df` as
+    * (i, vs, vn) keys — i the field index — with their multiplicities
+    * `cnt`. The exact profile (distinct counts, quartiles), the
+    * frequency table ([[Frequency.frequencies]]) and [[approxContract]]'s
+    * exact distinct counts all read it. NULLs, and "" in string
+    * columns, are dropped (whiteRRabbit.R:320-327). Only the `idx`
+    * columns are projected, so the plan prunes the others (a frequency
+    * table over non-date columns never parses dates).
     */
-  private def histogramStats(df: DataFrame): Map[Int, HistStats] =
-    histogramStatsOf(df, histogramRanked(df))
-
-  /** The melt → histogram → rank-range frame feeding
-    * [[histogramStats]], exposed (`private[graft]`) so the plan-shape
-    * suite can pin its scale property: NO window partitioned by the
-    * melt key — rank ranges come from the range-partitioned prefix
-    * sum, never a per-column single-partition sort.
-    */
-  private[graft] def histogramRanked(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private[graft] def valueHistogram(df: DataFrame,
+      idx: Seq[Int]): DataFrame = {
     val fields = df.schema.fields
     val nullS = lit(null).cast(StringType)
     val nullD = lit(null).cast(DoubleType)
-    val kvs = fields.zipWithIndex.map { case (f, i) =>
-      val c = col(f.name)
-      f.dataType match {
-        case StringType =>
-          struct(lit(i).as("i"), when(c =!= lit(""), c).as("vs"),
-            nullD.as("vn"))
-        case FloatType | DoubleType =>
-          // +0.0 collapses -0.0/0.0 like numeric DISTINCT does
-          struct(lit(i).as("i"), nullS.as("vs"),
-            (c.cast(DoubleType) + lit(0.0)).as("vn"))
-        case t if isNum(t) =>
-          // integral/decimal: the string identity keeps DISTINCT exact
-          // past 2^53 while ranks use the same double cast the old
-          // percentile(cast double) applied; duplicate vn under
-          // distinct vs only reorders equal rank values
-          struct(lit(i).as("i"), c.cast(StringType).as("vs"),
-            c.cast(DoubleType).as("vn"))
-        case t if isTs(t) =>
-          val us = unix_micros(
-            if (f.dataType == TimestampType) c else c.cast(TimestampType))
-          struct(lit(i).as("i"), nullS.as("vs"), us.cast(DoubleType).as("vn"))
-        case _ =>
-          struct(lit(i).as("i"), c.cast(StringType).as("vs"), nullD.as("vn"))
+    val kvs = idx.map { i =>
+      val c = col(fields(i).name)
+      val (vs, vn) = fields(i).dataType match {
+        case StringType => (when(c =!= lit(""), c), nullD)
+        // +0.0 collapses -0.0/0.0 like numeric DISTINCT does
+        case FloatType | DoubleType => (nullS, c.cast(DoubleType) + lit(0.0))
+        // integral/decimal: the string identity keeps DISTINCT exact
+        // past 2^53 while ranks use the same double cast the old
+        // percentile(cast double) applied; duplicate vn under
+        // distinct vs only reorders equal rank values
+        case t if isNum(t) => (c.cast(StringType), c.cast(DoubleType))
+        case t if isDateLike(t) => (nullS, epochMicros(c, t).cast(DoubleType))
+        case _ => (c.cast(StringType), nullD)
       }
+      struct(lit(i).as("i"), vs.as("vs"), vn.as("vn"))
     }
-    val hist = df
-      .select(explode(array(kvs.toSeq: _*)).as("kv"))
+    df.select(explode(array(kvs: _*)).as("kv"))
       .select(col("kv.i").as("i"), col("kv.vs").as("vs"),
         col("kv.vn").as("vn"))
       .where(col("vs").isNotNull || col("vn").isNotNull)
       .groupBy("i", "vs", "vn")
       .agg(count(lit(1)).as("cnt"))
-    // rank range [lo, hi) of each histogram row within its column —
-    // computed WITHOUT a per-column window partition. (The previous
-    // Window.partitionBy("i").orderBy("vn") shape put one column's
-    // ENTIRE histogram in one partition: parallelism capped at
-    // #columns and partition size at the column's distinct count — the
-    // one plan that wouldn't survive a continuous column at 100 TB.)
-    // The distributed form is the engine's own range-partition prefix
-    // sum (Ranking.prefixSums): a GLOBAL inclusive running count
-    // ordered by (i, vn, vs) — columns are contiguous in that order,
-    // and (i, vs, vn) is the histogram's grouping key so the order is
-    // total — minus each column's starting offset, computed from ONE
-    // row per column and broadcast. Partition sizes now follow the
-    // range sampler, never a single column's distinct count. A vn tie
-    // under distinct vs (integral identity past 2^53) only reorders
-    // equal-rank values, exactly as before.
-    val nPart = math.max(1,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val global = Ranking.prefixSums(hist,
-      Seq(col("i"), col("vn"), col("vs")), Seq("cnt" -> "hig"), nPart)
-    // one row per COLUMN: its total count and its starting offset in
-    // the global (i, vn, vs) order; the offset window runs over
-    // #columns rows, bounded by the schema, never by data
-    val colTotals = hist.groupBy("i")
-      .agg(sum("cnt").as("n"))
-      .withColumn("base", coalesce(
-        sum(col("n")).over(Window.orderBy("i")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    global.join(broadcast(colTotals), Seq("i"))
-      .withColumn("hi", col("hig") - col("base"))
-      .withColumn("lo", col("hi") - col("cnt"))
   }
 
-  private def histogramStatsOf(df: DataFrame,
-      ranked: DataFrame): Map[Int, HistStats] = {
+  /** Per-column stats derived from the value histogram. */
+  private[graft] final case class HistStats(
+      distinct: Long,
+      quartiles: Option[(Double, Double, Double)],
+      tsMedianUs: Option[Double])
+
+  /** Exact distinct counts AND exact type-7 quantiles from the ranked
+    * value histogram: the quantile values are picked by rank and
+    * interpolated driver-side with the same lower+(higher-lower)·frac
+    * formula Spark's exact `percentile` uses — identical results with
+    * NO per-group value buffering and NO per-column window partition.
+    * (Exactness still costs a sorted pass over distinct values, which
+    * is why [[summarizeApprox]] (sketches) stays the recommended 100 TB
+    * default.)
+    *
+    * `nonMissing(i)` is column i's non-missing count from the counters
+    * row. Each column's histogram must hold exactly that many values —
+    * the rank bases assume it — so a mismatch fails naming the column
+    * instead of picking a wrong rank.
+    */
+  private[graft] def histogramStats(df: DataFrame,
+      nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
     val fields = df.schema.fields
-    val aggs = Seq(count(lit(1)).as("dist"), first(col("n")).as("n")) ++
+    val aggs = Seq(count(lit(1)).as("dist"), sum(col("cnt")).as("held")) ++
       Seq(0.25 -> "25", 0.5 -> "50", 0.75 -> "75").flatMap { case (p, s) =>
         val h = (col("n") - lit(1L)).cast(DoubleType) * lit(p)
         val r0 = floor(h).cast(LongType)
@@ -274,58 +237,67 @@ object Profile {
           max(when(col("lo") <= r1 && r1 < col("hi"), col("vn")))
             .as(s"x1_$s"))
       }
-    val isNumIdx = fields.zipWithIndex.collect {
-      case (f, i) if isNum(f.dataType) => i
-    }.toSet
-    val isTsIdx = fields.zipWithIndex.collect {
-      case (f, i) if isTs(f.dataType) => i
-    }.toSet
-    ranked.groupBy("i").agg(aggs.head, aggs.tail: _*).collect().map { r =>
-      val i = r.getAs[Int]("i")
-      def interp(s: String, p: Double): Option[Double] =
-        if (r.isNullAt(r.fieldIndex(s"x0_$s"))) None
-        else {
-          val h = (r.getAs[Long]("n") - 1L) * p
-          val x0 = r.getAs[Double](s"x0_$s")
-          val x1 = r.getAs[Double](s"x1_$s")
-          Some(x0 + (x1 - x0) * (h - math.floor(h)))
-        }
-      val quartiles =
-        if (isNumIdx(i))
-          for (a <- interp("25", 0.25); b <- interp("50", 0.5);
-               c <- interp("75", 0.75)) yield (a, b, c)
-        else None
-      val tsMed = if (isTsIdx(i)) interp("50", 0.5) else None
-      i -> HistStats(r.getAs[Long]("dist"), quartiles, tsMed)
+    val byCol = histogramRanked(df, nonMissing)
+      .groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
+      .map(r => r.getAs[Int]("i") -> r).toMap
+    fields.indices.flatMap { i =>
+      val held = byCol.get(i).fold(0L)(_.getAs[Long]("held"))
+      if (held != nonMissing(i))
+        throw new IllegalStateException(s"profile: column " +
+          s"'${fields(i).name}' holds $held values in its histogram but " +
+          s"${nonMissing(i)} non-missing values in its counters")
+      byCol.get(i).map { r =>
+        def interp(s: String, p: Double): Option[Double] =
+          if (r.isNullAt(r.fieldIndex(s"x0_$s"))) None
+          else {
+            val h = (nonMissing(i) - 1L) * p
+            val x0 = r.getAs[Double](s"x0_$s")
+            val x1 = r.getAs[Double](s"x1_$s")
+            Some(x0 + (x1 - x0) * (h - math.floor(h)))
+          }
+        val dt = fields(i).dataType
+        val quartiles =
+          if (isNum(dt))
+            for (a <- interp("25", 0.25); b <- interp("50", 0.5);
+                 c <- interp("75", 0.75)) yield (a, b, c)
+          else None
+        val tsMed = if (isDateLike(dt)) interp("50", 0.5) else None
+        i -> HistStats(r.getAs[Long]("dist"), quartiles, tsMed)
+      }
     }.toMap
   }
 
-  /** Exact per-column distinct counts in one melt + two hash aggs.
-    * Values are carried as strings (injective for every profiled type;
-    * floating columns are +0.0-normalized so -0.0 and 0.0 collapse the
-    * way numeric DISTINCT does). NULLs — and "" for string columns —
-    * are excluded per the reference (whiteRRabbit.R:320-327).
+  /** The value histogram of every column of `df` with each row's rank
+    * range [lo, hi) within its column and the column's size n, exposed
+    * (`private[graft]`) so the plan-shape suite can pin its scale
+    * property: NO window partitioned by the melt key.
+    *
+    * The rank ranges come from the engine's range-partition prefix sum
+    * ([[Ranking.prefixSums]]): a GLOBAL inclusive running count ordered
+    * by (i, vn, vs) — columns are contiguous in that order, and
+    * (i, vs, vn) is the histogram's grouping key so the order is total
+    * — minus the column's rank base, the sum of the earlier columns'
+    * non-missing counts, a driver constant from the counters row.
+    * (A Window.partitionBy("i").orderBy("vn") shape would put one
+    * column's ENTIRE histogram in one partition: parallelism capped at
+    * #columns and partition size at the column's distinct count — the
+    * one plan that wouldn't survive a continuous column at 100 TB.)
+    * A vn tie under distinct vs (integral identity past 2^53) only
+    * reorders equal-rank values.
     */
-  private def exactDistinctCounts(df: DataFrame): Map[Int, Long] = {
-    val fields = df.schema.fields
-    val kvs = fields.zipWithIndex.map { case (f, i) =>
-      val c = col(f.name)
-      val v = f.dataType match {
-        case StringType => when(c =!= lit(""), c)
-        case FloatType | DoubleType =>
-          (c.cast(DoubleType) + lit(0.0)).cast(StringType)
-        case _ => c.cast(StringType)
-      }
-      struct(lit(i).as("i"), v.as("v"))
-    }
-    df.select(explode(array(kvs.toSeq: _*)).as("kv"))
-      .select(col("kv.i").as("i"), col("kv.v").as("v"))
-      .where(col("v").isNotNull)
-      .distinct()
-      .groupBy("i").agg(count(lit(1)).as("d"))
-      .collect()
-      .map(r => r.getAs[Int]("i") -> r.getAs[Long]("d"))
-      .toMap
+  private[graft] def histogramRanked(df: DataFrame,
+      nonMissing: IndexedSeq[Long]): DataFrame = {
+    val nPart = math.max(1,
+      df.sparkSession.sessionState.conf.numShufflePartitions)
+    val global = Ranking.prefixSums(
+      valueHistogram(df, df.schema.fields.indices),
+      Seq(col("i"), col("vn"), col("vs")), Seq("cnt" -> "hig"), nPart)
+    def ofColumn(perColumn: Seq[Long]): Column =
+      element_at(typedLit(perColumn.toArray), col("i") + 1)
+    global
+      .withColumn("n", ofColumn(nonMissing))
+      .withColumn("hi", col("hig") - ofColumn(nonMissing.scanLeft(0L)(_ + _)))
+      .withColumn("lo", col("hi") - col("cnt"))
   }
 
   /** Sketch-based profile for the 100 TB path: `approx_count_distinct`
@@ -383,10 +355,7 @@ object Profile {
       val (value, num) = f.dataType match {
         case StringType => (c, nullNum)
         case t if isNum(t) => (c, c.cast(DoubleType))
-        case t if isTs(t) =>
-          val ts = if (f.dataType == TimestampType) c
-            else c.cast(TimestampType)
-          (c, unix_micros(ts).cast(DoubleType))
+        case t if isDateLike(t) => (c, epochMicros(c, t).cast(DoubleType))
         case _ => (c, nullNum)
       }
       ProfileSketchAgg.sketch(value, num,
@@ -405,7 +374,7 @@ object Profile {
         if (s.isNullAt(s.fieldIndex(name))) null
         else Long.box(math.floor(s.getAs[Double](name)).toLong)
       val numeric = isNum(f.dataType)
-      val ts = isTs(f.dataType)
+      val ts = isDateLike(f.dataType)
       val (q1, med, q3) =
         if (numeric) (d("q1"), d("med"), d("q3"))
         else (null: java.lang.Double, null: java.lang.Double,
@@ -424,89 +393,39 @@ object Profile {
       java.util.Arrays.asList(rows: _*), summarySchema)
   }
 
-  /** Runs the single counters/moments agg job then reshapes (exact
-    * path).
+  /** Driver-side reshape of the exact profile: the counters row plus
+    * each column's histogram stats into one summary row per column.
     */
-  private def reshapeLike(df: DataFrame, aggs: Seq[Column],
-      distinctCounts: Option[Map[Int, Long]],
-      hist: Option[Map[Int, HistStats]] = None): DataFrame =
-    reshapeRows(df, Seq(df.agg(aggs.head, aggs.tail: _*).head()),
-      distinctCounts, hist)
-
-  /** Shared driver-side reshape used by summarize/summarizeApprox.
-    * Distinct counts come either from `distinctCounts` (exact melt job)
-    * or from `d_<i>` fields of the aggregation rows (approx path);
-    * quantiles come from `hist` (exact histogram job) when present,
-    * else from `q_<i>`/`tm_<i>` fields of the aggregation rows.
-    */
-  private def reshapeRows(df: DataFrame, allRows: Seq[Row],
-      distinctCounts: Option[Map[Int, Long]],
-      hist: Option[Map[Int, HistStats]]): DataFrame = {
-    val spark = df.sparkSession
-    val fields = df.schema.fields
-    def find(n: String): Option[(Row, Int)] = allRows.collectFirst {
-      case rr if rr.schema.fieldNames.contains(n) => (rr, rr.fieldIndex(n))
+  private def reshapeRows(df: DataFrame, counters: Row,
+      hist: Map[Int, HistStats]): DataFrame = {
+    def d(n: String): java.lang.Double =
+      if (counters.isNullAt(counters.fieldIndex(n))) null
+      else Double.box(counters.getAs[Double](n))
+    def us(n: String): java.lang.Long =
+      if (counters.isNullAt(counters.fieldIndex(n))) null
+      else Long.box(counters.getAs[Long](n))
+    val total = counters.getAs[Long]("total")
+    val rows: Seq[Row] = df.schema.fields.zipWithIndex.toSeq.map {
+      case (f, i) =>
+        val missing = counters.getAs[Long](s"m_$i")
+        val empty = emptyCount(counters, f, i)
+        val num = isNum(f.dataType)
+        val ts = isDateLike(f.dataType)
+        val h = hist.get(i)
+        def q(pick: ((Double, Double, Double)) => Double): java.lang.Double =
+          h.flatMap(_.quartiles).map(t => Double.box(pick(t))).orNull
+        Row(f.name, rClassName(f.dataType), total, total - missing - empty,
+          missing, empty, h.fold(0L)(_.distinct),
+          if (num) d(s"mn_$i") else null, if (num) d(s"mx_$i") else null,
+          if (num) d(s"av_$i") else null, q(_._2),
+          if (num) d(s"sd_$i") else null, q(_._1), q(_._3),
+          q(t => t._3 - t._1),
+          if (ts) us(s"tn_$i") else null, if (ts) us(s"tx_$i") else null,
+          h.flatMap(_.tsMedianUs)
+            .map(m => Long.box(math.floor(m).toLong)).orNull)
     }
-    def nn(n: String): Boolean =
-      find(n).exists { case (rr, ix) => !rr.isNullAt(ix) }
-    def gl(n: String): Long =
-      find(n).map { case (rr, ix) => rr.getLong(ix) }.get
-    def gd(n: String): java.lang.Double =
-      if (nn(n)) Double.box(find(n).map {
-        case (rr, ix) => rr.getDouble(ix) }.get)
-      else null
-    def glo(n: String): java.lang.Long =
-      if (nn(n)) Long.box(find(n).map {
-        case (rr, ix) => rr.getLong(ix) }.get)
-      else null
-    val total = gl("total")
-    val rows: Seq[Row] = fields.zipWithIndex.toSeq.map { case (f, i) =>
-      val missing = gl(s"m_$i")
-      val empty = if (f.dataType == StringType) gl(s"e_$i") else 0L
-      val nonMissing = total - missing - empty
-      var (mn, mx, av, med, sd, q1, q3, iqr) =
-        (null: java.lang.Double, null: java.lang.Double,
-         null: java.lang.Double, null: java.lang.Double,
-         null: java.lang.Double, null: java.lang.Double,
-         null: java.lang.Double, null: java.lang.Double)
-      if (isNum(f.dataType)) {
-        mn = gd(s"mn_$i"); mx = gd(s"mx_$i")
-        av = gd(s"av_$i"); sd = gd(s"sd_$i")
-        hist.flatMap(_.get(i)).flatMap(_.quartiles) match {
-          case Some((a, b, c)) =>
-            q1 = Double.box(a); med = Double.box(b); q3 = Double.box(c)
-            iqr = Double.box(c - a)
-          case None if nn(s"q_$i") =>
-            val q = find(s"q_$i").map { case (rr, ix) =>
-              rr.getAs[scala.collection.Seq[Double]](ix) }.get
-            q1 = Double.box(q(0)); med = Double.box(q(1))
-            q3 = Double.box(q(2)); iqr = Double.box(q(2) - q(0))
-          case None => ()
-        }
-      }
-      var (tn, tx, tm) =
-        (null: java.lang.Long, null: java.lang.Long, null: java.lang.Long)
-      if (isTs(f.dataType)) {
-        tn = glo(s"tn_$i"); tx = glo(s"tx_$i")
-        hist.flatMap(_.get(i)).flatMap(_.tsMedianUs) match {
-          case Some(us) => tm = Long.box(math.floor(us).toLong)
-          case None if nn(s"tm_$i") =>
-            val (rr, ix) = find(s"tm_$i").get
-            tm = rr.schema(ix).dataType match {
-              case DoubleType => Long.box(math.floor(rr.getDouble(ix)).toLong)
-              case _          => Long.box(rr.getLong(ix))
-            }
-          case None => ()
-        }
-      }
-      val distinct = distinctCounts match {
-        case Some(m) => m.getOrElse(i, 0L)
-        case None    => gl(s"d_$i")
-      }
-      Row(f.name, rClassName(f.dataType), total, nonMissing, missing, empty,
-        distinct, mn, mx, av, med, sd, q1, q3, iqr, tn, tx, tm)
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), summarySchema)
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), summarySchema)
   }
 
   /** Map the typed summary to the reference's 18-field all-as-written
@@ -663,7 +582,8 @@ object Profile {
     * pins them at 1 — a regression in the sketch path flips rows red
     * instead of hiding behind "no oracle".
     *
-    * Cost: the approx profile itself + one exact-distinct pass + ONE
+    * Cost: the approx profile itself + one exact-distinct pass (the
+    * shared [[valueHistogram]], one row per distinct value) + ONE
     * aggregation computing every CDF probe. Per-column collect is the
     * same report-bounded reshape the profile family already uses.
     */
@@ -686,7 +606,9 @@ object Profile {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val apF = Future(profile(df).collect()
       .map(r => r.getAs[String]("column_name") -> r).toMap)
-    val exactDF = Future(exactDistinctCounts(df))
+    val exactDF = Future(valueHistogram(df, fields.indices)
+      .groupBy("i").agg(count(lit(1)).as("d")).collect()
+      .map(r => r.getAs[Int]("i") -> r.getAs[Long]("d")).toMap)
     val ap = Await.result(apF, Duration.Inf)
     val exactD = Await.result(exactDF, Duration.Inf)
     val probes = scala.collection.mutable.ArrayBuffer[Column]()
@@ -701,7 +623,7 @@ object Profile {
             probes += count(when(cd <= m, 1)).as(s"le_${tag}_$i")
             probes += count(when(cd < m, 1)).as(s"lt_${tag}_$i")
           }
-      } else if (isTs(f.dataType)) {
+      } else if (isDateLike(f.dataType)) {
         val us = unix_micros(col(f.name).cast(TimestampType))
         probes += count(us).as(s"n_$i")
         val m = r.getAs[Long]("median_us")
@@ -723,7 +645,7 @@ object Profile {
     }
     val rows = fields.zipWithIndex.map { case (f, i) =>
       val dAp = ap(f.name).getAs[Long]("distinct_count")
-      val dEx = exactD(i)
+      val dEx = exactD.getOrElse(i, 0L)
       // absolute floor of 5: at tiny cardinalities (tens) HLL register
       // quantization dominates the relative rsd bound
       val dOk =

@@ -79,6 +79,58 @@ class ProfileFrequencySpec extends AnyFunSuite {
     assert(types("ts") == "POSIXct, POSIXt")
   }
 
+  test("quartiles and date median hold when every rank base is " +
+      "non-zero (numeric and timestamp columns after string columns " +
+      "with NULLs and \"\")") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("s1", StringType),
+      StructField("s2", StringType), StructField("amount", DoubleType),
+      StructField("ts", TimestampType), StructField("k", LongType)))
+    def ts(day: Int) = java.time.Instant.parse(f"2023-01-$day%02dT00:00:00Z")
+    val rows = Seq(
+      Row("x", "a", 10.0, ts(1), 1L),
+      Row("y", "", 3.0, ts(2), 2L),
+      Row(null, "b", 7.0, null, 3L),
+      Row("", "c", 1.0, ts(5), 4L),
+      Row("z", null, null, ts(10), 5L),
+      Row("x", "d", 4.0, null, 6L),
+      Row("w", "e", 4.0, null, 7L))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val s = Profile.summarize(df).collect()
+      .map(r => r.getString(0) -> r).toMap
+    // rank bases 0, 5, 10, 16, 20: s1 and s2 each hold 5 non-missing
+    assert(s("s1").getAs[Long]("non_missing") == 5L)
+    assert(s("s2").getAs[Long]("non_missing") == 5L)
+    assert(s("s1").getAs[Long]("distinct_count") == 4L)
+    // R: quantile(c(10, 3, 7, 1, 4, 4), c(.25, .5, .75)) = 3.25, 4, 6.25
+    val a = s("amount")
+    assert(a.getAs[Double]("q1_val") == 3.25)
+    assert(a.getAs[Double]("median_val") == 4.0)
+    assert(a.getAs[Double]("q3_val") == 6.25)
+    assert(a.getAs[Double]("iqr_val") == 3.0)
+    assert(a.getAs[Long]("distinct_count") == 5L)
+    // R: quantile(1:7, c(.25, .5, .75)) = 2.5, 4, 5.5
+    val k = s("k")
+    assert(k.getAs[Double]("q1_val") == 2.5)
+    assert(k.getAs[Double]("median_val") == 4.0)
+    assert(k.getAs[Double]("q3_val") == 5.5)
+    // Jan 1, 2, 5, 10: h = 1.5 → Jan 2 + 1.5 days = Jan 3 12:00
+    val day = 86400000000L
+    val jan1 = 1672531200000000L
+    assert(s("ts").getAs[Long]("median_us") == jan1 + 2 * day + day / 2)
+    assert(s("ts").getAs[Long]("earliest_us") == jan1)
+    assert(s("ts").getAs[Long]("latest_us") == jan1 + 9 * day)
+    // each column's histogram must hold its counters' non-missing
+    // count: a mismatch fails naming the column, not a wrong rank
+    val counts = df.columns.toIndexedSeq.map(c =>
+      s(c).getAs[Long]("non_missing"))
+    assert(Profile.histogramStats(df, counts).size == df.columns.length)
+    val e = intercept[IllegalStateException] {
+      Profile.histogramStats(df, counts.updated(2, counts(2) + 1))
+    }
+    assert(e.getMessage.contains("'amount'"), e.getMessage)
+  }
+
   private lazy val freqInput = (
     Seq.fill(10)("x") ++ Seq.fill(7)("y") ++ Seq.fill(7)("b") ++
       Seq.fill(3)("rare") ++ Seq("", "", null))
@@ -193,6 +245,36 @@ class ProfileFrequencySpec extends AnyFunSuite {
     val rows = Frequency.frequencies(df.toDF("d"), Seq("d"), 5, 100)
       .collect().map(_.getAs[String]("value")).toSet
     assert(rows == Set("1", "2.5", "-3"))
+    // the other rendering traps, five rows per value so minCellCount 5
+    // keeps each; -0.0 (3x) and 0.0 (2x) only reach 5 merged under "0"
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("d", DoubleType),
+      StructField("f", FloatType), StructField("dec", DecimalType(10, 2)),
+      StructField("l", LongType), StructField("s", StringType),
+      StructField("day", DateType)))
+    val traps = (0 until 25).map { k =>
+      val (block, first) = (k / 5, k / 5 == 0)
+      Row(Seq(1.0, 1.5, if (k % 5 < 3) -0.0 else 0.0, Double.NaN,
+          1e15)(block),
+        if (first) 0.1f else null,
+        Seq(BigDecimal("1.50").bigDecimal, BigDecimal("-2.00").bigDecimal)
+          .lift(block).orNull,
+        if (first) 12345678901234567L else null,
+        Seq("a", "", null).lift(block).orNull,
+        java.sql.Date.valueOf("2023-01-01"))
+    }
+    val trapDf = spark.createDataFrame(
+      java.util.Arrays.asList(traps: _*), schema)
+    val got = Frequency.frequencies(trapDf, trapDf.columns.toSeq, 5, 100)
+      .collect().map(r => (r.getAs[String]("col_name"),
+        r.getAs[String]("value"), r.getAs[Long]("cnt"))).toSet
+    assert(got == Set(
+      ("d", "1", 5L), ("d", "1.5", 5L), ("d", "0", 5L), ("d", "NaN", 5L),
+      ("d", "1.0E15", 5L), // past the 1e15 guard: the plain cast
+      ("f", "0.1", 5L), // the float's own rendering, not its double's
+      ("dec", "1.50", 5L), ("dec", "-2.00", 5L), // cast(string)
+      ("l", "12345678901234567", 5L), // exact past 2^53
+      ("s", "a", 5L))) // "" and NULL excluded; the date column: no table
   }
 
   test("frequency excludes NULL and empty and date columns " +
