@@ -4,7 +4,6 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.config.ScanConfig
@@ -75,9 +74,6 @@ object Scan {
     val profiled =
       if (excluded.isEmpty) typed
       else typed.drop(config.excludeCols: _*)
-    val summary =
-      if (excluded.isEmpty) fullSummary
-      else fullSummary.where(!col("column_name").isin(excluded.toSeq: _*))
 
     // Materialize both report sheets ONCE, here (optimization r18,
     // guide §1.2 "don't compute things twice" / §2.6): summary and
@@ -103,7 +99,7 @@ object Scan {
       else summaryRows.filterNot(r =>
         excluded.contains(r.getAs[String]("column_name")))
     val summaryLocal = spark.createDataFrame(
-      java.util.Arrays.asList(keptRows: _*), summary.schema)
+      java.util.Arrays.asList(keptRows: _*), fullSummary.schema)
 
     val freqCols = profiled.schema.fields // ref :331 — no date freq
       .filterNot(f => Profile.isDateLike(f.dataType))

@@ -56,32 +56,15 @@ object Dedup {
     * empty set dropped.
     */
   private def shingleSets(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int): DataFrame =
-    df.select(col(idCol).as("id"),
+      shingleSize: Int, blockCol: Option[String] = None): DataFrame =
+    df.select(idKeys(idCol, blockCol) :+
         graft.functions.SetExpressions.sortedShingleHashes(
-          TextFunctions.tokens(col(textCol)), shingleSize).as("sh"))
+          TextFunctions.tokens(col(textCol)), shingleSize).as("sh"): _*)
       .where(size(col("sh")) > 0)
 
-  /** MinHash signature: for each of k hash lanes, the minimum of a
-    * lane-mixed hash over the shingle set — computed per-row with
-    * higher-order array functions, no explode and no shuffle.
-    *
-    * Each shingle STRING is hashed exactly once (strings are the
-    * expensive part — hashing them k times measured ~10x slower at
-    * sf0.1); the k lanes re-mix the 64-bit value. The whole signature
-    * is ONE `aggregate` fold over the hashed array (outer loop over
-    * shingles, `zip_with` across lanes) — nesting it the other way
-    * around would re-evaluate the string hashing inside the per-lane
-    * lambda, since Catalyst inlines single-use projections into lambda
-    * bodies.
-    */
-  def minhashSignature(sh: Column, numHashes: Int): Column =
-    aggregate(
-      transform(sh, s => xxhash64(s)),
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, h) => zip_with(acc,
-        transform(sequence(lit(0), lit(numHashes - 1)), i => xxhash64(i, h)),
-        (a, b) => least(a, b)))
+  /** The id as `id`, plus the optional blocking key as `blk`. */
+  private def idKeys(idCol: String, blockCol: Option[String]): Seq[Column] =
+    col(idCol).as("id") +: blockCol.map(c => col(c).as("blk")).toSeq
 
   /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
     *
@@ -99,7 +82,7 @@ object Dedup {
     val sets = shingleSets(df, idCol, textCol, shingleSize)
     val cand = minhashCandidates(df, idCol, textCol, numHashes, bands,
       shingleSize)
-    verifyJaccard(cand, sets, threshold)
+    verifyJaccard(cand, sets, threshold).orderBy("id_a", "id_b")
   }
 
   /** The LSH candidate stage of [[minhashPairs]], unverified:
@@ -112,61 +95,78 @@ object Dedup {
       textCol: String, numHashes: Int, bands: Int,
       shingleSize: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
+    bucketPairs(bandBuckets(df, idCol, textCol, numHashes, bands,
+      shingleSize), Seq("band", "bh"))
+  }
+
+  /** LSH band buckets: one (id, [blk,] band, bh) row per document and
+    * band, `bh` hashing that band's numHashes/bands signature lanes.
+    * Signatures come from the codegen'd native expression over raw
+    * tokens (no shingle strings materialized — see MinHashSignature);
+    * the shingle sets are only joined back for exact-Jaccard
+    * verification of the few candidates.
+    */
+  private def bandBuckets(df: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, bands: Int, shingleSize: Int,
+      blockCol: Option[String] = None): DataFrame = {
     val r = numHashes / bands
-    // signatures come from the codegen'd native expression over raw
-    // tokens (no shingle strings materialized — see MinHashSignature);
-    // the string shingle sets are only joined back for exact-Jaccard
-    // verification of the few candidates
+    val ids = col("id") +: blockCol.map(_ => col("blk")).toSeq
     val withSig = df
-      .select(col(idCol).as("id"),
+      .select(idKeys(idCol, blockCol) :+
         graft.functions.MinHashExpression.minhashSignature(
           TextFunctions.tokens(col(textCol)), numHashes, shingleSize)
-          .as("sig"))
+          .as("sig"): _*)
       .where(col("sig").isNotNull)
     val bandStructs = transform(sequence(lit(0), lit(bands - 1)),
       j => struct(j.as("band"),
         xxhash64(j, slice(col("sig"), j * lit(r) + lit(1), lit(r)))
           .as("bh")))
-    val buckets = withSig
-      .select(col("id"), explode(bandStructs).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.bh").as("bh"))
-    // candidates via groupBy + in-bucket pair expansion rather than a
-    // bucket self-join: a self-join re-executes the whole signature
-    // lineage for each side, doubling the expensive part. Buckets are
-    // LSH-sized (near-dups only), so the collect_list stays small.
+    withSig
+      .select(ids :+ explode(bandStructs).as("b"): _*)
+      .select(ids ++ Seq(col("b.band").as("band"), col("b.bh").as("bh")): _*)
+  }
+
+  /** Distinct (id_a, id_b) pairs sharing a bucket of `keys`. A groupBy
+    * + in-bucket pair expansion rather than a bucket self-join: a
+    * self-join re-executes the whole signature lineage for each side,
+    * doubling the expensive part. Buckets are LSH-sized (near-dups
+    * only), so the collect_list stays small.
+    *
+    * Hot-bucket salting (VERDICT r14 #2): a degenerate corpus
+    * (thousands of identical / near-empty docs sharing a band hash)
+    * lands one quadratic task on the expansion. Buckets over
+    * [[maxLshBucket]] are split into ceil(n/cap) salt cells by id hash;
+    * within-cell pairs expand per cell task, and cross-cell pairs come
+    * from ONE extra self-join of the per-cell aggregates (both join
+    * sides share an identical exchange subtree, so the upstream
+    * computes once). Every task's pair fan-out is then O(cap²) instead
+    * of O(hot-bucket²).
+    */
+  private def bucketPairs(buckets: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
     val bucketed = buckets
-      .groupBy("band", "bh")
+      .groupBy(k: _*)
       .agg(collect_list(col("id")).as("ids"))
       .where(size(col("ids")) > 1)
-    // Hot-bucket salting (VERDICT r14 #2): a degenerate corpus
-    // (thousands of identical / near-empty docs sharing a band hash)
-    // lands one quadratic task on the expansion above. Buckets over
-    // the cap are split into ceil(n/cap) salt cells by id hash;
-    // within-cell pairs expand per cell task, and cross-cell pairs
-    // come from ONE extra self-join of the per-cell aggregates (both
-    // join sides share an identical exchange subtree, so the upstream
-    // computes once). Every task's pair fan-out is then O(cap²)
-    // instead of O(hot-bucket²).
     val cap = maxLshBucket
     val smallPairs = bucketed.where(size(col("ids")) <= cap)
       .select(explode(pairsOf(array_sort(col("ids")))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
     val cells = bucketed.where(size(col("ids")) > cap)
-      .select(col("band"), col("bh"),
+      .select(k ++ Seq(
         ceil(size(col("ids")).cast("double") / cap).cast("int").as("nc"),
-        explode(col("ids")).as("id"))
+        explode(col("ids")).as("id")): _*)
       .withColumn("cell", pmod(xxhash64(col("id")), col("nc")).cast("int"))
-      .groupBy("band", "bh", "cell")
+      .groupBy(k :+ col("cell"): _*)
       .agg(collect_list(col("id")).as("cids"))
     val withinPairs = cells
       .where(size(col("cids")) > 1)
       .select(explode(pairsOf(array_sort(col("cids")))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
     val crossPairs = cells
-      .select(col("band"), col("bh"), col("cell").as("ca"),
-        col("cids").as("ia"))
-      .join(cells.select(col("band"), col("bh"), col("cell").as("cb"),
-        col("cids").as("ib")), Seq("band", "bh"))
+      .select(k ++ Seq(col("cell").as("ca"), col("cids").as("ia")): _*)
+      .join(cells.select(k ++ Seq(col("cell").as("cb"),
+        col("cids").as("ib")): _*), keys)
       .where(col("ca") < col("cb"))
       .select(explode(flatten(transform(col("ia"), x =>
         transform(col("ib"), y =>
@@ -176,7 +176,7 @@ object Dedup {
     smallPairs.union(withinPairs).union(crossPairs).distinct()
   }
 
-  /** In-bucket pair-expansion cap for [[minhashCandidates]]: buckets
+  /** In-bucket pair-expansion cap for [[bucketPairs]]: buckets
     * with more ids than this are salted into cells so no single task
     * expands a quadratic hot bucket. Overridable (system property) so
     * the spec can force the salted path on a small corpus and prove
@@ -213,7 +213,7 @@ object Dedup {
         col("a.g") === col("b.g") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val truth = verifyJaccardUnsorted(truthCand, sets, threshold)
+    val truth = verifyJaccard(truthCand, sets, threshold)
       .select("id_a", "id_b")
     val cand = minhashCandidates(sample, idCol, textCol, numHashes,
       bands, shingleSize)
@@ -249,25 +249,11 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3)
       : DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    def bucketsOf(df: DataFrame): DataFrame = {
-      val withSig = df.select(col(idCol).as("id"),
-        graft.functions.MinHashExpression.minhashSignature(
-          TextFunctions.tokens(col(textCol)), numHashes, shingleSize)
-          .as("sig"))
-        .where(col("sig").isNotNull)
-      val bandStructs = transform(sequence(lit(0), lit(bands - 1)),
-        j => struct(j.as("band"),
-          xxhash64(j, slice(col("sig"), j * lit(r) + lit(1), lit(r)))
-            .as("bh")))
-      withSig.select(col("id"), explode(bandStructs).as("b"))
-        .select(col("id"), col("b.band").as("band"), col("b.bh").as("bh"))
-    }
-    val cand = bucketsOf(batch)
-      .select(col("band"), col("bh"), col("id").as("id_a"))
-      .join(bucketsOf(seen)
-        .select(col("band"), col("bh"), col("id").as("id_b")),
-        Seq("band", "bh"))
+    def bucketsOf(df: DataFrame, id: String): DataFrame =
+      bandBuckets(df, idCol, textCol, numHashes, bands, shingleSize)
+        .select(col("band"), col("bh"), col("id").as(id))
+    val cand = bucketsOf(batch, "id_a")
+      .join(bucketsOf(seen, "id_b"), Seq("band", "bh"))
       .select(col("id_a"), col("id_b")).distinct()
     val sets = shingleSets(
       batch.select(col(idCol), col(textCol))
@@ -286,7 +272,17 @@ object Dedup {
           y.as("id_b")))))
 
   /** Join candidate pairs back to their shingle sets and keep those
-    * with exact Jaccard ≥ threshold (rounded at 6 decimals so the
+    * with exact Jaccard ≥ threshold (see [[jaccardAtLeast]]).
+    */
+  private def verifyJaccard(cand: DataFrame, sets: DataFrame,
+      threshold: Double): DataFrame = {
+    val sa = sets.select(col("id").as("id_a"), col("sh").as("sh_a"))
+    val sb = sets.select(col("id").as("id_b"), col("sh").as("sh_b"))
+    jaccardAtLeast(cand.join(sa, "id_a").join(sb, "id_b"), threshold)
+  }
+
+  /** (id_a, id_b, jac) for the (id_a, id_b, sh_a, sh_b) pairs with
+    * exact Jaccard ≥ threshold (rounded at 6 decimals so the
     * comparison is oracle-stable). A size-ratio prefilter runs before
     * the merge: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so any pair whose
     * set sizes differ by more than the threshold ratio cannot qualify —
@@ -294,15 +290,9 @@ object Dedup {
     * 0.9 it skips the linear merge for every candidate pair whose sizes
     * differ >10%).
     */
-  private def verifyJaccard(cand: DataFrame, sets: DataFrame,
+  private def jaccardAtLeast(pairs: DataFrame,
       threshold: Double): DataFrame =
-    verifyJaccardUnsorted(cand, sets, threshold).orderBy("id_a", "id_b")
-
-  private def verifyJaccardUnsorted(cand: DataFrame, sets: DataFrame,
-      threshold: Double): DataFrame = {
-    val sa = sets.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val sb = sets.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    cand.join(sa, "id_a").join(sb, "id_b")
+    pairs
       .where(size(col("sh_a")).cast("double") >=
           lit(threshold) * size(col("sh_b")) &&
         size(col("sh_b")).cast("double") >=
@@ -310,7 +300,6 @@ object Dedup {
       .withColumn("jac", jaccard(col("sh_a"), col("sh_b")))
       .where(col("jac") >= threshold)
       .select("id_a", "id_b", "jac")
-  }
 
   /** Exact Jaccard of two SORTED distinct-element arrays: the
     * intersection is a codegen'd linear merge and |A∪B| is derived as
@@ -421,19 +410,10 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       blockCol: String, threshold: Double, shingleSize: Int = 1,
       salts: Int = 8): DataFrame = {
-    val sets = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        graft.functions.SetExpressions.sortedShingleHashes(
-          TextFunctions.tokens(col(textCol)), shingleSize).as("sh"))
-      .where(size(col("sh")) > 0)
-    val a = sets.select(col("blk"),
-      pmod(xxhash64(col("id")), lit(salts)).as("salt"),
-      col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = sets.select(col("blk"),
-      explode(sequence(lit(0L), lit(salts - 1L))).as("salt"),
-      col("id").as("id_b"), col("sh").as("sh_b"))
     val inter = graft.functions.SetExpressions
       .sortedIntersectCount(col("sh_a"), col("sh_b"))
-    a.join(b, Seq("blk", "salt")).where(col("id_a") < col("id_b"))
+    blockPairs(shingleSets(df, idCol, textCol, shingleSize, Some(blockCol)),
+        salts)
       .withColumn("containment", round(inter.cast("double") /
         least(size(col("sh_a")), size(col("sh_b"))), 6))
       .where(col("containment") >= threshold)
@@ -454,16 +434,20 @@ object Dedup {
 
   private def exactPairsInBlocks(df: DataFrame, idCol: String,
       textCol: String, blockCol: String, threshold: Double,
-      shingleSize: Int, salts: Int = 8): DataFrame = {
-    val sets = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        graft.functions.SetExpressions.sortedShingleHashes(
-          TextFunctions.tokens(col(textCol)), shingleSize).as("sh"))
-      .where(size(col("sh")) > 0)
-    // salt the join key: a block key alone gives at most #blocks-way
-    // parallelism (20 sources → 20 tasks); side A takes one salt per
-    // row, side B replicates across all salts, so the same pairs
-    // surface (each once, thanks to the id_a < id_b filter) across
-    // #blocks × salts partitions
+      shingleSize: Int): DataFrame =
+    jaccardAtLeast(blockPairs(
+      shingleSets(df, idCol, textCol, shingleSize, Some(blockCol)),
+      salts = 8), threshold)
+
+  /** Every (id_a < id_b) pair of block-keyed shingle sets
+    * (id, blk, sh) sharing a block, as (blk, salt, id_a, sh_a, id_b,
+    * sh_b). The join key is salted: a block key alone gives at most
+    * #blocks-way parallelism (20 sources → 20 tasks); side A takes one
+    * salt per row, side B replicates across all salts, so the same
+    * pairs surface (each once, thanks to the id_a < id_b filter) across
+    * #blocks × salts partitions.
+    */
+  private def blockPairs(sets: DataFrame, salts: Int): DataFrame = {
     val a = sets.select(col("blk"),
       pmod(xxhash64(col("id")), lit(salts)).as("salt"),
       col("id").as("id_a"), col("sh").as("sh_a"))
@@ -471,43 +455,21 @@ object Dedup {
       explode(sequence(lit(0L), lit(salts - 1L))).as("salt"),
       col("id").as("id_b"), col("sh").as("sh_b"))
     a.join(b, Seq("blk", "salt")).where(col("id_a") < col("id_b"))
-      .where(size(col("sh_a")).cast("double") >=
-          lit(threshold) * size(col("sh_b")) &&
-        size(col("sh_b")).cast("double") >=
-          lit(threshold) * size(col("sh_a")))
-      .withColumn("jac", jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jac") >= threshold)
-      .select("id_a", "id_b", "jac")
   }
 
   /** Banded candidate generation within blocks (the oversized-block
-    * spill path of [[blockedJaccardPairs]]): same shape as
-    * [[minhashPairs]] but bucketed by (block, band, band-hash).
+    * spill path of [[blockedJaccardPairs]]): [[minhashPairs]]' band
+    * buckets and salted pair expansion, bucketed by (block, band,
+    * band-hash), so an oversized block of identical documents is
+    * salted like any hot LSH bucket.
     */
   private def bandedPairsInBlocks(df: DataFrame, idCol: String,
       textCol: String, blockCol: String, threshold: Double,
       shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
-    val r = numHashes / bands
-    val sets = shingleSets(df, idCol, textCol, shingleSize)
-    val withSig = df
-      .select(col(idCol).as("id"), col(blockCol).as("blk"),
-        graft.functions.MinHashExpression.minhashSignature(
-          TextFunctions.tokens(col(textCol)), numHashes, shingleSize)
-          .as("sig"))
-      .where(col("sig").isNotNull)
-    val bandStructs = transform(sequence(lit(0), lit(bands - 1)),
-      j => struct(j.as("band"),
-        xxhash64(j, slice(col("sig"), j * lit(r) + lit(1), lit(r)))
-          .as("bh")))
-    val cand = withSig
-      .select(col("id"), col("blk"), explode(bandStructs).as("b"))
-      .groupBy(col("blk"), col("b.band"), col("b.bh"))
-      .agg(collect_list(col("id")).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(pairsOf(array_sort(col("ids")))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
-    verifyJaccardUnsorted(cand, sets, threshold)
+    val cand = bucketPairs(bandBuckets(df, idCol, textCol, numHashes,
+      bands, shingleSize, Some(blockCol)), Seq("blk", "band", "bh"))
+    verifyJaccard(cand, shingleSets(df, idCol, textCol, shingleSize),
+      threshold)
   }
 
   /** Cross-source near-duplicate overlap report: aggregates any pair
@@ -834,16 +796,10 @@ object Dedup {
     definitelyNew.unionByName(verifiedNew)
   }
 
-  /** 64-bit SimHash over whitespace tokens: bit i of the signature is
-    * the majority vote of bit i of the token hash across the token
-    * multiset. Delegates to the native codegen expression
-    * [[graft.functions.SimHash64]] (primitive vote array, tokens
-    * hashed once).
-    */
-  def simhash64(toks: Column): Column =
-    graft.functions.SetExpressions.simhash64(toks)
-
   /** SimHash near-duplicate pairs with Hamming distance ≤ maxHamming.
+    * The signature is the native 64-bit SimHash
+    * ([[graft.functions.SimHash64]]): bit i is the majority vote of bit
+    * i of the token hash across the token multiset.
     *
     * Candidate generation blocks on 4 disjoint 16-bit chunks of the
     * signature: any pair within Hamming distance 3 is identical in at
@@ -863,7 +819,7 @@ object Dedup {
       "4-chunk blocking is only complete for maxHamming <= 3")
     val sigOf: Column => Column =
       if (replayableHash) graft.functions.SetExpressions.polySimhash64
-      else simhash64
+      else graft.functions.SetExpressions.simhash64
     val base = df.select(col(idCol).as("id"),
         TextFunctions.tokens(col(textCol)).as("toks"))
       .where(size(col("toks")) > 0)
@@ -945,10 +901,7 @@ object Dedup {
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, numBlocks: Int = 32): DataFrame = {
     val spark = df.sparkSession
-    val v = df.select(col(idCol).as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("vec"))
-      .withColumn("norm",
-        graft.functions.VectorExpressions.vectorNorm(col("vec")))
+    val v = Similarity.normed(df, idCol, vecCol)
       .withColumn("bkt", pmod(xxhash64(col("id")), lit(numBlocks)).cast("int"))
     val grid = spark.range(numBlocks.toLong)
       .select(col("id").cast("int").as("bu"))
@@ -963,46 +916,14 @@ object Dedup {
       // each unordered pair appears exactly once: off-diagonal cells
       // see it in one orientation, the diagonal keeps id_a < id_b
       .where(col("bu") < col("bv") || col("id_a") < col("id_b"))
-      .withColumn("cos", round(
-        graft.functions.VectorExpressions.vectorDot(col("vec_a"),
-          col("vec_b")) / (col("norm_a") * col("norm_b")), 6))
+      .withColumn("cos", round(Similarity.cosine(col("vec_a"),
+        col("vec_b"), col("norm_a"), col("norm_b")), 6))
       .where(col("cos") >= threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("cos"))
       .orderBy("id_a", "id_b")
   }
 
-  /** Sub-document (chunk-level) exact dedup, the C4-style pass that
-    * removes boilerplate repeated ACROSS documents rather than whole
-    * duplicate documents: split each document into fixed-size token
-    * chunks, keep only the globally-first occurrence of each distinct
-    * chunk (ordered by (id, position)), and reassemble what survives
-    * in original order. The reference profiles whole columns
-    * (`whiteRRabbit.R:296-341`) and never looks inside a value; this
-    * is pure extension surface for corpus curation.
-    *
-    * Output: (id, n_chunks, n_kept, text_clean) — documents whose
-    * every chunk was seen earlier elsewhere survive with
-    * `text_clean = ""`, so the row count is stable and callers can
-    * filter on `n_kept`.
-    *
-    * Scale shape: chunks are built by a per-row `transform` over the
-    * token array (no explode-then-regroup), and the keep-first decision
-    * is `groupBy(chunk).agg(min(struct(id, chunk_idx)))` — the same
-    * (id, chunk_idx) total order a first-seen window would use, but as
-    * an AGGREGATE it gets map-side partial combine, so a boilerplate
-    * chunk shared by half the corpus collapses to one row per map task
-    * instead of funneling a corpus-sized sort partition through one
-    * reducer (the previous window-by-chunk shape did exactly that and
-    * smoked 15× at 10× data — hot-chunk skew, not volume). The winning
-    * (id, chunk_idx) rows ARE the kept chunks, so there is no join-back
-    * on the chunk key at all; reassembly aggregates the winners by id
-    * (document-sized groups) and left-joins onto the per-doc chunk
-    * counts (id-keyed, one row per doc). At 100 TB key the aggregate by
-    * `xxhash64(chunk)` instead of the chunk string to halve the shuffle
-    * width (kept as the string here so a SQL oracle can replay the
-    * operator bit-for-bit).
-    */
   /** Chunk-family scaffolding, shared by [[chunkDedup]],
     * [[boilerplateChunkFilter]] and [[intraDocChunkDedup]]: split each
     * document into fixed-size token chunks as an ordered
@@ -1040,6 +961,37 @@ object Dedup {
         coalesce(col("text_clean"), lit("")).as("text_clean"))
   }
 
+  /** Sub-document (chunk-level) exact dedup, the C4-style pass that
+    * removes boilerplate repeated ACROSS documents rather than whole
+    * duplicate documents: split each document into fixed-size token
+    * chunks, keep only the globally-first occurrence of each distinct
+    * chunk (ordered by (id, position)), and reassemble what survives
+    * in original order. The reference profiles whole columns
+    * (`whiteRRabbit.R:296-341`) and never looks inside a value; this
+    * is pure extension surface for corpus curation.
+    *
+    * Output: (id, n_chunks, n_kept, text_clean) — documents whose
+    * every chunk was seen earlier elsewhere survive with
+    * `text_clean = ""`, so the row count is stable and callers can
+    * filter on `n_kept`.
+    *
+    * Scale shape: chunks are built by a per-row `transform` over the
+    * token array (no explode-then-regroup), and the keep-first decision
+    * is `groupBy(chunk).agg(min(struct(id, chunk_idx)))` — the same
+    * (id, chunk_idx) total order a first-seen window would use, but as
+    * an AGGREGATE it gets map-side partial combine, so a boilerplate
+    * chunk shared by half the corpus collapses to one row per map task
+    * instead of funneling a corpus-sized sort partition through one
+    * reducer (the previous window-by-chunk shape did exactly that and
+    * smoked 15× at 10× data — hot-chunk skew, not volume). The winning
+    * (id, chunk_idx) rows ARE the kept chunks, so there is no join-back
+    * on the chunk key at all; reassembly aggregates the winners by id
+    * (document-sized groups) and left-joins onto the per-doc chunk
+    * counts (id-keyed, one row per doc). At 100 TB key the aggregate by
+    * `xxhash64(chunk)` instead of the chunk string to halve the shuffle
+    * width (kept as the string here so a SQL oracle can replay the
+    * operator bit-for-bit).
+    */
   def chunkDedup(df: DataFrame, idCol: String, textCol: String,
       chunkSize: Int = 10): DataFrame = {
     val chunked = chunkify(df, idCol, textCol, chunkSize)

@@ -24,7 +24,7 @@ import graft.functions.VectorExpressions
 object Similarity {
 
   /** id + double vector + L2 norm (norm precomputed once per row). */
-  private def normed(df: DataFrame, idCol: String,
+  private[operators] def normed(df: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     df.select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("vec"))
@@ -78,10 +78,7 @@ object Similarity {
       numCentroids: Int, nprobe: Int, numQueries: Int, k: Int)
       : DataFrame = {
     val v = normed(df, idCol, vecCol)
-    val cents = v.where(col("id") < numCentroids)
-      .select(col("id").as("cid"), col("vec").as("cvec"),
-        col("norm").as("cnorm"))
-    knnIvfWith(v, cents, nprobe, numQueries, k)
+    knnIvfWith(v, seedCentroids(v, numCentroids), nprobe, numQueries, k)
   }
 
   /** Deterministic Lloyd's k-means for the IVF coarse quantizer: seed
@@ -106,18 +103,9 @@ object Similarity {
   def trainIvfCentroids(df: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int, iterations: Int = 2): DataFrame = {
     val v = normed(df, idCol, vecCol)
-    var cents = v.where(col("id") < numCentroids)
-      .select(col("id").as("cid"), col("vec").as("cvec"),
-        col("norm").as("cnorm"))
+    var cents = seedCentroids(v, numCentroids)
     for (_ <- 1 to iterations) {
-      val assigned = v.crossJoin(broadcast(cents))
-        .withColumn("csim",
-          cosine(col("cvec"), col("vec"), col("cnorm"), col("norm")))
-        .groupBy("id")
-        .agg(max(struct(col("csim"), col("cid"))).as("best"))
-        .select(col("id"), col("best.cid").as("cid"))
-        .join(v, Seq("id"))
-      cents = assigned
+      cents = assignWith(v, cents)
         .select(col("cid"), posexplode(col("vec")).as(Seq("dim", "x")))
         .groupBy("cid", "dim")
         .agg(round(
@@ -161,11 +149,7 @@ object Similarity {
     val v = normed(df, idCol, vecCol)
     val cents = trainIvfCentroids(df, idCol, vecCol, numCentroids,
       iterations).persist()
-    v.crossJoin(broadcast(cents))
-      .withColumn("csim",
-        cosine(col("cvec"), col("vec"), col("cnorm"), col("norm")))
-      .groupBy("id")
-      .agg(max(struct(col("csim"), col("cid"))).as("best"))
+    nearestCentroid(v, cents)
       .select(col("id"), col("best.cid").as("cid"),
         col("best.csim").as("csim"))
   }
@@ -187,11 +171,23 @@ object Similarity {
   // max(struct) aggregates partially map-side, then the single
   // assignment row rejoins the vector payload
   private def assignWith(v: DataFrame, cents: DataFrame): DataFrame =
+    nearestCentroid(v, cents)
+      .select(col("id"), col("best.cid").as("cid"))
+      .join(v, Seq("id"))
+
+  // (id, best) with best = the (csim, cid) struct of each row's
+  // nearest centroid — the one argmax every assignment shares
+  private def nearestCentroid(v: DataFrame, cents: DataFrame): DataFrame =
     centroidScored(v, cents)
       .groupBy("id")
       .agg(max(struct(col("csim"), col("cid"))).as("best"))
-      .select(col("id"), col("best.cid").as("cid"))
-      .join(v, Seq("id"))
+
+  // the deterministic seed quantizer: vectors with id < n stand in for
+  // trained centroids, as (cid, cvec, cnorm)
+  private def seedCentroids(v: DataFrame, n: Int): DataFrame =
+    v.where(col("id") < n)
+      .select(col("id").as("cid"), col("vec").as("cvec"),
+        col("norm").as("cnorm"))
 
   /** The seed coarse quantizer as a standalone frame (cid, cvec,
     * cnorm) — vectors with `id < numCentroids`, the same stand-in
@@ -200,9 +196,7 @@ object Similarity {
     */
   def ivfSeedCentroids(df: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int): DataFrame =
-    normed(df, idCol, vecCol).where(col("id") < numCentroids)
-      .select(col("id").as("cid"), col("vec").as("cvec"),
-        col("norm").as("cnorm"))
+    seedCentroids(normed(df, idCol, vecCol), numCentroids)
 
   /** Assign a batch of vectors to the inverted lists of `cents`:
     * (cid, id, vec, norm) rows, the PERSISTENT index format. Each
@@ -629,16 +623,7 @@ object Similarity {
   def semanticNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int, threshold: Double): DataFrame = {
     val v = normed(df, idCol, vecCol)
-    val cents = v.where(col("id") < numCentroids)
-      .select(col("id").as("cid"), col("vec").as("cvec"),
-        col("norm").as("cnorm"))
-    val assigned = v.crossJoin(broadcast(cents))
-      .withColumn("csim",
-        cosine(col("cvec"), col("vec"), col("cnorm"), col("norm")))
-      .groupBy("id")
-      .agg(max(struct(col("csim"), col("cid"))).as("best"))
-      .select(col("id"), col("best.cid").as("cid"))
-      .join(v, Seq("id"))
+    val assigned = assignWith(v, seedCentroids(v, numCentroids))
     val a = assigned.select(col("cid"), col("id").as("id_a"),
       col("vec").as("vec_a"), col("norm").as("norm_a"))
     val b = assigned.select(col("cid"), col("id").as("id_b"),
@@ -1301,10 +1286,6 @@ object Similarity {
     val cu = broadcast(cents.select(col("cid"),
       transform(col("cvec"), x => x / col("cnorm")).as("cuvec")))
 
-    def scored(side: DataFrame): DataFrame =
-      side.crossJoin(broadcast(cents))
-        .withColumn("csim",
-          cosine(col("cvec"), col("vec"), col("cnorm"), col("norm")))
     // unit-space residual vs the assigned (or probed) centroid
     val rvec = zip_with(
       transform(col("vec"), x => x / col("norm")), col("cuvec"),
@@ -1312,11 +1293,7 @@ object Similarity {
 
     // corpus: one list per vector (argmax with the (sim, cid) struct
     // tie-break), residual against the OWN list's centroid
-    val assigned = scored(v)
-      .groupBy("id")
-      .agg(max(struct(col("csim"), col("cid"))).as("best"))
-      .select(col("id"), col("best.cid").as("cid"))
-      .join(v, Seq("id"))
+    val assigned = assignWith(v, cents)
       .join(cu, Seq("cid"))
       .withColumn("rvec", rvec)
 
@@ -1355,7 +1332,7 @@ object Similarity {
     // per-list because the centroid term differs)
     val probeW = Window.partitionBy("id")
       .orderBy(col("csim").desc, col("cid").desc)
-    val probes = scored(v.where(col("id") < numQueries))
+    val probes = centroidScored(v.where(col("id") < numQueries), cents)
       .withColumn("pr", row_number().over(probeW))
       .where(col("pr") <= nprobe)
       .select(col("id").as("query_id"), col("cid"), col("vec"),

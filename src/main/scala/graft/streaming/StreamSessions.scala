@@ -27,10 +27,11 @@ import org.apache.spark.sql.SparkSession
   * over the 5 heaviest) — the per-batch work is compute-bound, so
   * partitions must grow with batch rows, and 512 KiB of compressed
   * input per partition reproduces the measured optimum at both
-  * scales. A production deployment overrides the knob (conf or env)
-  * exactly as it would size `spark.sql.shuffle.partitions` for
-  * batch; the point the default preserves is that a WIDER box alone
-  * never multiplies state-store count.
+  * scales. A production deployment overrides the count with the
+  * session conf [[ConfKey]] exactly as it would size
+  * `spark.sql.shuffle.partitions` for batch; the point the default
+  * preserves is that a WIDER box alone never multiplies state-store
+  * count.
   *
   * The child session shares the SparkContext (same cores, same
   * scheduler — scan parallelism is unchanged; only the post-shuffle
@@ -39,7 +40,6 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamSessions {
   val ConfKey = "spark.graft.stream.statePartitions"
-  val EnvKey = "SPARK_GRAFT_STREAM_PARTS"
   val BytesPerPartition = 512L * 1024
   val MinParts = 4
   val MaxParts = 512
@@ -60,8 +60,7 @@ object StreamSessions {
     */
   def statePartitions(spark: SparkSession,
       inputPaths: Seq[String]): Int =
-    sys.env.get(EnvKey)
-      .orElse(spark.conf.getOption(ConfKey))
+    spark.conf.getOption(ConfKey)
       .map(_.toInt)
       .getOrElse {
         val bytes = inputPaths.map(sizeOf).sum

@@ -93,6 +93,51 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(pairs.contains((0L, 1L))) // same block, near-dup
   }
 
+  test("blocked jaccard spill path reproduces the exact blocked pair set " +
+      "at t=0.9 (deterministic hashes, fixed data)") {
+    // 120 random 30-word docs, each with a copy that has 0-3 words
+    // replaced (Jaccard 1.0, ~0.93, ~0.87, ~0.8: both sides of 0.9),
+    // in three 80-doc blocks; a 50-row bound sends every block down
+    // the banded spill path
+    val rnd = new scala.util.Random(7)
+    def word(): String = s"w${rnd.nextInt(300)}"
+    val fixture = (0 until 120).flatMap { i =>
+      val toks = Array.fill(30)(word())
+      val edited = toks.clone()
+      (0 until i % 4).foreach(_ => edited(rnd.nextInt(30)) = word())
+      Seq((2L * i, toks.mkString(" "), s"b${i % 3}"),
+        (2L * i + 1, edited.mkString(" "), s"b${i % 3}"))
+    }.toDF("doc_id", "text", "blk")
+    val banded = Dedup.blockedJaccardPairs(fixture, "doc_id", "text", "blk",
+        threshold = 0.9, maxBlockSize = 50)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = Dedup.exactBlockedJaccardPairs(fixture, "doc_id", "text",
+        "blk", threshold = 0.9)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(exact.size >= 60)
+    assert(banded == exact,
+      s"spill path missed ${exact.diff(banded).size} of ${exact.size} " +
+        s"pairs, added ${banded.diff(exact).size}")
+  }
+
+  test("blocked jaccard spill path salts a hot bucket: n identical docs " +
+      "in one oversized block give exactly n(n-1)/2 verified pairs") {
+    // every band of every doc hashes alike, so each band is one
+    // 1500-id bucket; a 256 cap salts it into 6 cells. One-row bands
+    // (raised to 4 for the miss target) keep the candidate volume at
+    // 4 x n(n-1)/2.
+    val n = 1500
+    val degen = spark.range(n).toDF("doc_id")
+      .withColumn("text", lit(base)).withColumn("blk", lit("x"))
+    System.setProperty("graft.lsh.bucket.cap", "256")
+    try {
+      val pairs = Dedup.blockedJaccardPairs(degen, "doc_id", "text", "blk",
+        threshold = 0.9, numHashes = 2, bands = 2, maxBlockSize = 100,
+        sorted = false)
+      assert(pairs.count() == n.toLong * (n - 1) / 2)
+    } finally System.clearProperty("graft.lsh.bucket.cap")
+  }
+
   test("minhash banding reproduces the exact pair set at t=0.7 on the " +
       "sf0.001 documents (deterministic hashes, fixed data)") {
     val docs = spark.read

@@ -33,10 +33,10 @@ class StreamSessionsSpec extends AnyFunSuite {
   test("conf override wins and the child session carries the count") {
     val s2 = spark.newSession()
     s2.conf.set(StreamSessions.ConfKey, "7")
+    val before = s2.conf.get("spark.sql.shuffle.partitions")
     val child = StreamSessions.streamSession(s2, Seq("/nonexistent"))
     assert(child.conf.get("spark.sql.shuffle.partitions") == "7")
     // the parent session's own shuffle conf is untouched
-    assert(s2.conf.get("spark.sql.shuffle.partitions") !=
-      "7" || spark.conf.get("spark.sql.shuffle.partitions") == "7")
+    assert(s2.conf.get("spark.sql.shuffle.partitions") == before)
   }
 }
