@@ -265,10 +265,10 @@ object Bench {
     // optional comma-separated filter for focused timing runs
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(',').map(_.trim).toSet)
-    // bench times the oracle-gated queries PLUS the bench-only paths
-    // (sketch-value profiles, the graph search-only head — see
-    // SparkEntry.benchOnlyQueries)
-    val allQueries = SparkEntry.queries ++ SparkEntry.benchOnlyQueries
+    // bench times every registry entry: the oracle-gated queries PLUS
+    // the bench-only ones gated by a ContractTwin (sketch-value
+    // profiles, the graph search-only head)
+    val allQueries = SparkEntry.registry.map { case (k, e) => k -> e.run }
     val selected = allQueries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .toSeq.sortBy(_._1)
@@ -718,7 +718,7 @@ object Bench {
     println(s"""{"metric":"total","value":$totalFull,"unit":"sec","reps":$maxReps,"full_reps":$fullReps,"reps_run":$fullRepsRun,"rep_totals":$repTotalsJson,"calib_sec":$calibJson,"n_registered":${allQueries.size},"targeted":$targetedJson,"queries":$qs,"failed":$failed,"sf":"$sfDir"$sf1Section}""")
     // ONE authoritative count: every registered query must carry a
     // timing in this artifact. n_registered is the registry size
-    // (|queries| + |benchOnlyQueries|); on an unfiltered run any gap
+    // (every SparkEntry.registry entry); on an unfiltered run any gap
     // between it and n_queries is exactly the failed list, and the
     // process exits nonzero so a partial artifact can't read as a
     // clean one.

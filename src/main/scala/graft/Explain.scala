@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val all = SparkEntry.queries ++ SparkEntry.benchOnlyQueries
+    val all = SparkEntry.registry
     val names = if (args.length > 1) Seq(args(1))
                 else all.keys.toSeq.sorted
     val spark = graft.hadoop.FastLocalFileSystem.config(
@@ -23,7 +23,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      try all(n)(spark, sfDir).explain("formatted")
+      try all(n).run(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"explain failed: $e") }
     }
     spark.stop()

@@ -40,8 +40,8 @@ object Prof {
     val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val all = SparkEntry.queries ++ SparkEntry.benchOnlyQueries
-    val fn = all.getOrElse(name, sys.error(s"unknown query $name"))
+    val fn = SparkEntry.registry
+      .getOrElse(name, sys.error(s"unknown query $name")).run
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[

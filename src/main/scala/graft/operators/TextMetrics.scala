@@ -405,11 +405,13 @@ object TextMetrics {
     // and the dictionary joins compare longs. The r18 driver measured
     // the string-keyed shape as the suite's worst citizen on all
     // three axes (40 s at 32 cores, 25x at 10x data, 8 cores beating
-    // 32 by 12x — GC/spill contention from string-keyed hash maps);
-    // xxhash64 is collision-free on any realistic vocabulary
-    // (birthday bound ~n²/2⁶⁵: ~3e-8 for a 1M-token vocab) and the
-    // output carries doc ids and probabilities only, so results are
-    // identical — the oracle gate pins that at every tested SF.
+    // 32 by 12x — GC/spill contention from string-keyed hash maps).
+    // Collision contract: over n distinct tokens the chance that any
+    // two share an xxhash64 id is about n²/2⁶⁵ — ~3e-8 at 10⁶ tokens,
+    // ~2.7% at 10⁹. A collision merges the two tokens' counts, and
+    // with them every bigram and unigram probability they enter. The
+    // output carries doc ids and probabilities only; the oracle gate
+    // pins string-keyed equality at every tested SF.
     val bi = base.select(col("id"), explode(transform(
         sequence(lit(1), size(col("__toks")) - 1),
         i => struct(xxhash64(element_at(col("__toks"), i)).as("h1"),

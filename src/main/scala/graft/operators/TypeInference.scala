@@ -89,7 +89,8 @@ object TypeInference {
     * leading format-free `try_to_timestamp` covers the ISO family
     * (Ymd / Ymd HMS / YmdT — the reference's top-priority formats)
     * including variable-length fractional seconds, which fixed
-    * patterns cannot express; the explicit list then covers the
+    * patterns cannot express (it is not tried on pure digits — see
+    * `neverDateGate`); the explicit list then covers the
     * slash/dash/dot-separated and compact mdY/dmy families in
     * preference order.
     *
@@ -110,16 +111,20 @@ object TypeInference {
       "(?i)^(?=.*(?:jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec))" +
       "[0-9a-z:, ./-]+$"
 
-  /** Charset-gate survivors that can still NEVER parse — measured
+  /** Charset-gate survivors that can NEVER parse — measured
     * empirically against the full cascade (probe in round 15): pure-
-    * digit strings parse only at lengths 4-6 (bare-year ISO parse), 8
-    * (yyyyMMdd) and 14 (yyyyMMddHHmmss); single-dot decimals never
-    * parse (every dotted date format carries two dots); and among
-    * separator-joined digit groups (no time part), FOUR or more
-    * groups can never parse (every separated date format has exactly
-    * three), nor can three groups whose MIDDLE group has ≥3 digits
-    * (the middle is strictly a ≤2-digit month or day in every
-    * format, and strict parsing never consumes a partial group).
+    * digit strings parse only at lengths 8 (yyyyMMdd) and 14
+    * (yyyyMMddHHmmss) — the format-free ISO parse is never tried on
+    * them, since it reads "2023" as 2023-01-01 and "202311" as the
+    * year 202311 while the reference's Ymd families need a month and
+    * a day (a column of 4-digit codes would turn datetime);
+    * single-dot decimals never parse (every dotted date format
+    * carries two dots); and among separator-joined digit groups (no
+    * time part), FOUR or more groups can never parse (every separated
+    * date format has exactly three), nor can three groups whose
+    * MIDDLE group has ≥3 digits (the middle is strictly a ≤2-digit
+    * month or day in every format, and strict parsing never consumes
+    * a partial group).
     * Together these fast-NULL stringified numerics, decimals, phone
     * numbers, IPs and dotted version strings — the common charset-
     * gate survivors that are not dates — so FULL-COLUMN date
@@ -132,16 +137,16 @@ object TypeInference {
     * ungated over these shapes.)
     */
   private val neverDateGate =
-    "^(?:[0-9]{1,3}|[0-9]{7}|[0-9]{9,13}|[0-9]{15,}|[0-9]+\\.[0-9]+" +
+    "^(?:[0-9]{1,7}|[0-9]{9,13}|[0-9]{15,}|[0-9]+\\.[0-9]+" +
       "|(?:[0-9]+[./-]){3,}[0-9]+" +
       "|[0-9]+[./-][0-9]{3,}[./-][0-9]+)$"
 
-  /** Pure-digit gate-survivors (lengths 4-6, 8, 14) can match ONLY
-    * the compact formats — bare-year ISO, yyyyMMdd, yyyyMMddHHmmss;
-    * every other format needs a separator. Routing them down a
-    * three-parser branch instead of the full cascade matters because
-    * a FAILED `try_to_timestamp(_, fmt)` costs an internal exception
-    * per row per format: an ID column of 8-digit keys ("10000001" —
+  /** Pure-digit gate-survivors (lengths 8, 14) can match ONLY the
+    * compact formats yyyyMMdd and yyyyMMddHHmmss; every other format
+    * needs a separator. Routing them down a two-parser branch instead
+    * of the full cascade matters because a FAILED
+    * `try_to_timestamp(_, fmt)` costs an internal exception per row
+    * per format: an ID column of 8-digit keys ("10000001" —
     * month 00, never a date) measured 24 s for one sf1 column through
     * the full cascade and ~1 s through this branch. The two
     * plausibility regexes (month 01-12, day 01-31, HH:mm:ss bounds)
@@ -160,7 +165,6 @@ object TypeInference {
     when(t.rlike(dateCharsetGate) && !t.rlike(neverDateGate),
       when(t.rlike("^[0-9]+$"),
         coalesce(
-          try_to_timestamp(t),
           when(t.rlike(compactDateShape),
             try_to_timestamp(t, lit("yyyyMMdd"))),
           when(t.rlike(compactTsShape),

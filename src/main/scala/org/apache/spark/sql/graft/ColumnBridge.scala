@@ -59,4 +59,28 @@ object ColumnBridge {
         }
       case _ => ()
     }
+
+  /** Collect `out` to a local relation, then release every frame in
+    * `pinned` — `Dataset.unpersist` for cache() pins and
+    * [[unpersistCheckpointed]] for localCheckpoint blocks — on the
+    * failure path too. For results that are report-sized by
+    * construction: a long-lived session running such a query hundreds
+    * of times (the bench sweep) must not accrue its pins until LRU
+    * eviction or the ContextCleaner GC sweep. With no pins it only
+    * cuts the lineage: downstream plans scan the in-memory rows.
+    * Public because a `private[graft]` here would name this package,
+    * not the top-level `graft` one.
+    */
+  def collectReleased(out: org.apache.spark.sql.DataFrame,
+      pinned: org.apache.spark.sql.DataFrame*)
+      : org.apache.spark.sql.DataFrame = {
+    val rows =
+      try out.collect()
+      finally pinned.foreach { df =>
+        scala.util.Try(df.unpersist())
+        scala.util.Try(unpersistCheckpointed(df))
+      }
+    import scala.jdk.CollectionConverters._
+    out.sparkSession.createDataFrame(rows.toSeq.asJava, out.schema)
+  }
 }

@@ -16,7 +16,7 @@ class PlanShapeSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def planOf(name: String): String =
-    (SparkEntry.queries ++ SparkEntry.benchOnlyQueries)(name)(spark, dir)
+    SparkEntry.registry(name).run(spark, dir)
       .queryExecution.executedPlan.toString
 
   private def count(hay: String, needle: String): Int =
@@ -182,9 +182,12 @@ class PlanShapeSpec extends AnyFunSuite {
   test("knn_graph / knn_graph_incremental release every cache they " +
       "pin (VERDICT r16 #4): the context's persistent-RDD set returns " +
       "to its pre-call state after the query completes") {
-    for (q <- Seq("knn_graph", "knn_graph_incremental")) {
+    // typeinfer_roundtrip and split_leakage_safe release their
+    // localCheckpoint pins through the same collectReleased
+    for (q <- Seq("knn_graph", "knn_graph_incremental",
+        "typeinfer_roundtrip", "split_leakage_safe")) {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      SparkEntry.queries(q)(spark, dir).count()
+      SparkEntry.registry(q).run(spark, dir).count()
       val after = spark.sparkContext.getPersistentRDDs.keySet
       assert(after == before,
         s"$q leaked cached RDDs: ${(after -- before).toSeq.sorted}")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * n_registered = queries + bench-only) must reconcile against a
   * committed file mechanically. A registry change without a manifest
   * regeneration fails here with the exact regeneration command.
-  * No SparkSession needed — the registry maps are pure values.
+  * No SparkSession needed — the registry is a pure value.
   */
 class QueryManifestSpec extends AnyFunSuite {
 
@@ -21,20 +21,15 @@ class QueryManifestSpec extends AnyFunSuite {
         "`tools/run.sh graft.QueryManifest` and commit the result")
   }
 
-  test("registry invariants: oracle SQL only for registered queries, " +
-      "contract twins oracle-backed, bench-only names disjoint") {
-    val qs = SparkEntry.queries.keySet
-    val bench = SparkEntry.benchOnlyQueries.keySet
-    // an oracle without a query would silently never run
-    val orphanOracles = SparkEntry.oracleSql.keySet -- qs
-    assert(orphanOracles.isEmpty,
-      s"oracle SQL with no registered query: $orphanOracles")
-    // a bench-only name shadowing a gated query would double-count
-    assert((qs & bench).isEmpty, qs & bench)
+  test("registry invariant: every contract twin is an " +
+      "oracle-gated query") {
     // every bench-only query's accuracy pin must itself be
     // oracle-gated, or the pin pins nothing
-    bench.foreach { b =>
-      val twin = SparkEntry.contractTwinOf(b)
+    val twins = SparkEntry.registry.collect {
+      case (b, SparkEntry.Query(_, SparkEntry.ContractTwin(t))) => b -> t
+    }
+    assert(twins.nonEmpty)
+    twins.foreach { case (b, twin) =>
       assert(SparkEntry.oracleSql.contains(twin),
         s"bench-only $b names contract twin $twin which has no oracle")
     }

@@ -219,7 +219,7 @@ class SamplingDateShiftSpec extends AnyFunSuite {
 
   test("leakage-safe split keeps every near-dup pair in one split and " +
       "assigns every doc (sf0.001 documents)") {
-    val out = SparkEntry.queries("split_leakage_safe")(
+    val out = SparkEntry.registry("split_leakage_safe").run(
       spark, "/root/testdata/sf0.001").collect()
     assert(out.map(_.getLong(1)).sum == 500, "every doc gets a split")
     assert(out.forall(_.getLong(3) == 0L),

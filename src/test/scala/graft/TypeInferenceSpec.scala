@@ -77,6 +77,13 @@ class TypeInferenceSpec extends AnyFunSuite {
     assert(promoted.head.startsWith("2023-12-25"))
   }
 
+  test("4-digit codes mixed with words stay character, not bare-year " +
+      "datetime") {
+    val codes = (1 to 90).map(i => (1000 + i * 37).toString)
+    val words = (1 to 10).map(i => s"word$i")
+    assert(inferOne(codes ++ words) == CharacterT)
+  }
+
   test("numeric is preferred over datetime when both could apply") {
     // all-digit strings parse as numbers, not yyyyMMdd dates
     assert(inferOne(Seq("20230115", "20230216", "20230317")) == NumericT)
@@ -174,7 +181,7 @@ class TypeInferenceSpec extends AnyFunSuite {
   test("the never-date fast gate is speed-only: gated parse equals " +
       "the ungated cascade over adversarial near-date shapes") {
     import org.apache.spark.sql.functions.{coalesce, col, lit, trim,
-      try_to_timestamp}
+      try_to_timestamp, when}
     // phone numbers, IPs, versions, decimals, long digits, mixed
     // separators, real dates in every family, date-shaped non-dates
     val values = Seq(
@@ -184,11 +191,15 @@ class TypeInferenceSpec extends AnyFunSuite {
       "99-99-9999", "1/2", "may-fly",
       "2024-08-15", "2024-08-15 10:00:00", "20240815", "8/15/2024",
       "2024.8.5", "Aug 15, 2024", "20240815 101112",
-      "2024-08-15T10:11:12", "9999")
+      "2024-08-15T10:11:12", "9999", "2023", "202311")
     val df = values.toDF("v")
-    val ungated = coalesce((try_to_timestamp(trim(col("v"))) +:
-      TypeInference.dateFormats.map(f =>
-        try_to_timestamp(trim(col("v")), lit(f)))): _*)
+    // the format-free ISO parse is never tried on pure digits: it
+    // would read bare years ("2023") and year-month runs ("202311")
+    // as dates, which the reference's Ymd families do not
+    val v = trim(col("v"))
+    val ungated = coalesce((when(!v.rlike("^[0-9]+$"),
+      try_to_timestamp(v)) +:
+      TypeInference.dateFormats.map(f => try_to_timestamp(v, lit(f)))): _*)
     val rows = df.select(col("v"),
         TypeInference.dateParse("v").as("gated"),
         ungated.as("raw")).collect()
@@ -200,7 +211,7 @@ class TypeInferenceSpec extends AnyFunSuite {
     }
     // and the gate actually fires on the never shapes (speed claim)
     val neverShapes = Seq("415-555-0123", "192.168.0.1", "1.2.3.4.5",
-      "10-200-30", "3.14", "1234567")
+      "10-200-30", "3.14", "1234567", "2023", "12345", "202311", "9999")
     rows.filter(r => neverShapes.contains(r.getString(0)))
       .foreach(r => assert(r.isNullAt(1), r.getString(0)))
   }
