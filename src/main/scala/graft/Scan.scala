@@ -58,9 +58,7 @@ object Scan {
     // only widens the sampling margin — the survivor check stays exact
     val capped = Sampling.cap(df0, config.maxRows, config.randomSample,
       config.seed, totalRows = Some(totalRows))
-    val (promoted, inference) = TypeInference.inferAndPromote(
-      capped, threshold = 0.8, seed = config.seed,
-      randomSample = config.randomSample)
+    val (promoted, inference) = TypeInference.inferAndPromote(capped)
     val typed =
       if (config.shiftDates) DateShift.shiftDates(promoted, config.seed)
       else promoted

@@ -95,16 +95,14 @@ object ProfileSketch {
 /** One-pass profile aggregate (SURVEY §4's deferred optional — VERDICT
   * r3 #7): a single [[TypedImperativeAggregate]] that folds counters,
   * moments, min/max, HLL distinct, and sketch quantiles per column in
-  * one input scan. The concurrent-jobs formulation in
-  * `Profile.summarizeApprox` reads the input three times (cheap when
-  * the page cache holds it, 3x the IO when it does not); this reads
-  * it ONCE — the right trade at 100 TB where the scan dominates.
+  * one input scan — at 100 TB the scan dominates, so the sketch
+  * profile reads its input exactly once.
   *
   * `value` is the raw column (any type — feeds null/empty counters and
   * the HLL); `num` is the numeric projection (cast-to-double, or
   * epoch-micros for timestamps; a null literal for plain strings) that
   * feeds min/max/moments/quantiles. Output is one struct per column;
-  * `Profile.summarizeOnePass` reshapes driver-side.
+  * `Profile.summarizeApprox` reshapes driver-side.
   *
   * Accuracy contracts match the stock sketches (same underlying
   * HyperLogLogPlusPlusHelper / QuantileSummaries implementations):

@@ -120,17 +120,6 @@ object TextFunctions {
   def fingerprint(c: Column): Column =
     sha2(encode(regexp_replace(lower(c), "\\s+", " "), "UTF-8"), 256)
 
-  /** 64-bit rolling (polynomial) hash over tokens — an order-sensitive
-    * sibling of [[fingerprint]] (same tokens in a different order hash
-    * differently). Modulus keeps the fold inside BIGINT under ANSI
-    * arithmetic.
-    */
-  def rollingHash(toks: Column): Column = {
-    val m = lit(1000000000000003L) // prime below 2^50: 31*m + m < 2^63
-    aggregate(toks, lit(0L).cast("long"),
-      (acc, t) => pmod(acc * lit(31L) + pmod(xxhash64(t), m), m))
-  }
-
   // -- PII detection / redaction --------------------------------------
 
   /** PII patterns, deliberately RE2-compatible (no backreferences or

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: treat image/audio/video payloads as
@@ -508,53 +508,5 @@ object Multimodal {
         (id, audioFingerprint64(decodeWav(bytes)._2))
       })
       .toDF("doc_id", "afp")
-  }
-
-  /** Batched partition-local decode to an ANN-ready feature vector:
-    * the BMP is parsed for real and `dim` equal pixel-index buckets
-    * each contribute their mean normalized intensity
-    * ((B+G+R) / 3·255) — a crude but honest image embedding whose
-    * accumulation order is fixed (sequential k), so features are
-    * bit-deterministic. The `grouped(batchSize)` shape is where a
-    * GPU/codec batch call would slot in.
-    */
-  def decodeFeatures(df: DataFrame, dim: Int = 8,
-      batchSize: Int = 64, numBuckets: Int = 32): DataFrame = {
-    require(dim > 0)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val payloads: Dataset[(Long, Array[Byte])] = df
-      .repartition(numBuckets, col("content_hash"))
-      .select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-    payloads.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // a real implementation would hand `batch` to the codec /
-        // accelerator in one call; the BMP parser maps it element-wise
-        batch.map { case (id, bytes) =>
-          val (w, h, px) = decodeImage(bytes)
-          val npx = w * h
-          val sums = new Array[Double](dim)
-          val cnts = new Array[Int](dim)
-          var k = 0
-          while (k < npx) {
-            val d = (k.toLong * dim / npx).toInt
-            sums(d) += ((px(3 * k) & 0xff) + (px(3 * k + 1) & 0xff) +
-              (px(3 * k + 2) & 0xff)).toDouble
-            cnts(d) += 1
-            k += 1
-          }
-          val out = new Array[Float](dim)
-          var d = 0
-          while (d < dim) {
-            out(d) =
-              if (cnts(d) == 0) 0f
-              else (sums(d) / (765.0 * cnts(d))).toFloat
-            d += 1
-          }
-          (id, out)
-        }
-      }
-    }.toDF("doc_id", "features")
   }
 }

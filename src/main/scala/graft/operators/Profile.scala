@@ -306,45 +306,23 @@ object Profile {
     * Semantics diverge from the reference (documented per SURVEY.md §2
     * op 10).
     *
-    * Delegates to [[summarizeOnePass]]: the historical three-
-    * concurrent-jobs design (codegen counters + HLL agg + percentile
-    * agg as separate overlapping scans) only won while the input sat
-    * in the page cache, and at 32 cores the three jobs contend with
-    * each other — r9 measured it 2.2x SLOWER than the one-pass custom
-    * aggregate warm (4.26 s vs 1.92 s at 10x lineitem) on top of
-    * scanning the input three times where one pass suffices. One
-    * implementation, one scan; `accuracy` maps to the sketch's
-    * relative error exactly as percentile_approx defines it
-    * (rank error <= 1/accuracy).
+    * One scan: every column's counters, moments, min/max, HLL distinct
+    * and sketch quantiles fold inside a single custom
+    * [[graft.functions.ProfileSketchAgg]] aggregate. Quantile values
+    * buffer unboxed and flush in sorted batches (see ProfileSketch).
+    * The sketches are the stock ones (HyperLogLogPlusPlusHelper,
+    * QuantileSummaries), so the accuracy contracts are those of
+    * approx_count_distinct / percentile_approx: `accuracy` bounds the
+    * rank error by 1/accuracy.
     *
     * Defaults: rsd 0.05 = Spark's own approx_count_distinct default
     * (0.01 measured 16x slower HLL updates for precision a profile
     * report does not need); accuracy 100 = 1% rank error, well inside
     * report-grade quantile needs.
     */
-  def summarizeApprox(df: DataFrame, rsd: Double = 0.05,
+  def summarizeApprox(df0: DataFrame, rsd: Double = 0.05,
       accuracy: Int = 100): DataFrame = {
     require(accuracy > 0, s"accuracy must be positive: $accuracy")
-    summarizeOnePass(df, rsd, relativeError = 1.0 / accuracy)
-  }
-
-  /** ONE-pass, ONE-scan approx profile: every column's counters,
-    * moments, min/max, HLL distinct, and sketch quantiles fold inside
-    * a single custom [[graft.functions.ProfileSketchAgg]] aggregate —
-    * the input is read exactly once. [[summarizeApprox]]'s three
-    * concurrent jobs scan it three times, which only wins while the
-    * input sits in the page cache; at 100 TB the scan IS the cost and
-    * this path does a third of it. Quantile values buffer unboxed and
-    * flush in sorted batches (see ProfileSketch), which made this the
-    * fastest profile path warm as well: 1.4 s vs 2.2 s (approx) on
-    * lineitem at sf0.1 and 1.4-1.8 s vs 4.0-4.3 s at 10x, median-of-3.
-    * Same sketch implementations underneath
-    * (HyperLogLogPlusPlusHelper, QuantileSummaries), so accuracy
-    * contracts are identical to the stock approx_count_distinct /
-    * percentile_approx.
-    */
-  def summarizeOnePass(df0: DataFrame, rsd: Double = 0.05,
-      relativeError: Double = 0.01): DataFrame = {
     import graft.functions.ProfileSketchAgg
     val df = widened(df0)
     val fields = df.schema.fields
@@ -359,7 +337,8 @@ object Profile {
         case _ => (c, nullNum)
       }
       ProfileSketchAgg.sketch(value, num,
-        isString = f.dataType == StringType, rsd, relativeError).as(s"s_$i")
+        isString = f.dataType == StringType, rsd, 1.0 / accuracy)
+        .as(s"s_$i")
     }
     val r = df.agg(aggs.head, aggs.tail.toSeq: _*).head()
     val rows: Seq[Row] = fields.zipWithIndex.toSeq.map { case (f, i) =>
@@ -465,7 +444,7 @@ object Profile {
     * map-side-combined groupBy on the bucket id — no sort, no window,
     * so the plan is a pair of scans at any scale (equi-DEPTH buckets
     * would need a global sort or quantile boundaries; use
-    * [[approxSummary]]'s sketch path for those).
+    * [[summarizeApprox]]'s sketch path for those).
     *
     * Bucket assignment is `least(b-1, floor((x-lo)*b/(hi-lo)))` with
     * the arithmetic in exactly that order so a SQL oracle replays the
@@ -588,8 +567,7 @@ object Profile {
     * same report-bounded reshape the profile family already uses.
     */
   def approxContract(df0: DataFrame, eps: Double = 0.02,
-      distinctTol: Double = 0.15,
-      profile: DataFrame => DataFrame = summarizeApprox(_)): DataFrame = {
+      distinctTol: Double = 0.15): DataFrame = {
     // widened ONCE here: the contract's three passes (profile, exact
     // distinct, rank probes) all read the same narrow scan
     val df = widened(df0)
@@ -604,7 +582,7 @@ object Profile {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val apF = Future(profile(df).collect()
+    val apF = Future(summarizeApprox(df).collect()
       .map(r => r.getAs[String]("column_name") -> r).toMap)
     val exactDF = Future(valueHistogram(df, fields.indices)
       .groupBy("i").agg(count(lit(1)).as("d")).collect()

@@ -30,14 +30,13 @@ import org.apache.spark.sql.types._
   *
   * Divergence (documented): the reference votes on ≤1000 sampled
   * non-empty values per column (unseeded); here every non-empty value
-  * of the column votes by default (the infinite-sample limit), so
-  * mostly-empty columns get a full-strength per-column decision
-  * instead of a noisy handful of votes. Decisions differ from a given
-  * reference run only for columns whose true rate sits within sampling
-  * noise of the 0.8 boundary — where the unseeded reference is itself
+  * of the column votes (the infinite-sample limit), so mostly-empty
+  * columns get a full-strength per-column decision instead of a noisy
+  * handful of votes. Decisions differ from a given reference run only
+  * for columns whose true rate sits within sampling noise of the 0.8
+  * boundary — where the unseeded reference is itself
   * nondeterministic. See [[infer]] for why the numeric sample vote is
-  * redundant — and for `sampleVote = true`, the compatibility mode
-  * that reproduces the reference's exact sampled decision procedure.
+  * redundant.
   */
 object TypeInference {
 
@@ -200,52 +199,25 @@ object TypeInference {
     *     except for sample luck within ~±0.03 of the boundary, where
     *     the unseeded reference is itself nondeterministic).
     *
-    * Both decisions come from ONE full-column aggregation pass —
-    * there is no sampled pre-filter anymore (r15): the neverDateGate
-    * regex makes the full date validation as cheap on numeric columns
-    * as the old pre-filter made skipping them, and full-column rates
-    * are the decision procedure anyway. `randomSample` is therefore
-    * decision-neutral and retained for signature compatibility.
+    * Both decisions come from ONE full-column aggregation pass; the
+    * neverDateGate regex makes the full date validation as cheap on
+    * numeric columns as a sampled pre-filter would make skipping them.
     *
-    * `sampleVote = true` (off by default) switches to the REFERENCE'S
-    * exact decision procedure (whiteRRabbit.R:147-151, 172-187): per
-    * column, up to `sampleSize` randomly sampled NON-EMPTY values vote
-    * first — numeric proceeds to full validation only when the sampled
-    * numeric rate ≥ threshold, and datetime requires BOTH the sampled
-    * rate AND the full-column rate ≥ threshold (our seeded sample
-    * stands in for the reference's unseeded one). The two modes agree
-    * except for columns whose true rate sits within sampling noise of
-    * the threshold — where the unseeded reference is itself
-    * nondeterministic run to run (pinned by TypeInferenceSpec's
-    * agreement test).
+    * `seed` and `randomSample` do not affect the decision. They are
+    * kept because the benchmark harness (perfbench/Workloads.scala)
+    * calls `infer` with them by name.
     */
   def infer(
       df: DataFrame,
-      sampleSize: Int = 1000,
       threshold: Double = 0.8,
       seed: Long = 42L,
-      randomSample: Boolean = true,
-      sampleVote: Boolean = false): Map[String, InferredType] = {
+      randomSample: Boolean = true): Map[String, InferredType] = {
     val strCols = df.schema.fields
       .filter(_.dataType == StringType).map(_.name).toSeq
     if (strCols.isEmpty) return Map.empty
 
-    if (sampleVote)
-      return inferSampleVote(df, strCols, sampleSize, threshold, seed)
-
-    // ONE full-column aggregation pass (VERDICT r14 #3): per column,
-    // the numeric all-or-nothing counters AND the full date-parse
-    // rate, in a single agg. Earlier rounds pre-filtered date
-    // candidates with a sampled scan to keep the 40-format cascade
-    // off non-date columns; the neverDateGate fast-NULL (one regex)
-    // now rejects stringified numerics — the only charset-gate
-    // survivors that are not dates — so validating every column costs
-    // what validating candidates alone used to, minus the whole
-    // sampling scan. Decisions are identical to the old
-    // randomSample=false arm (full-column rates decide everything);
-    // the sampled pre-filter could only diverge from this in a
-    // >=5-sigma sampling accident, so `randomSample` is now decision-
-    // neutral and kept only for signature compatibility.
+    // ONE full-column aggregation pass: per column, the numeric
+    // all-or-nothing counters AND the full date-parse rate
     val checkAggs =
       strCols.zipWithIndex.flatMap { case (c, i) =>
         // all-or-nothing: any non-empty value failing to parse vetoes
@@ -270,56 +242,6 @@ object TypeInference {
     decisions.toMap
   }
 
-  /** Reference-exact sample-vote decision path (whiteRRabbit.R:147-151
-    * numeric, :172-187 date): per column, ≤ sampleSize non-empty values
-    * vote; the full column validates only when the vote passes. One
-    * TakeOrderedAndProject job per column for the vote (per-partition
-    * top-k of rand — no full shuffle), then the same single full-column
-    * validation aggregation as the default path.
-    */
-  private def inferSampleVote(df: DataFrame, strCols: Seq[String],
-      sampleSize: Int, threshold: Double,
-      seed: Long): Map[String, InferredType] = {
-    // per-column sampled (numericRate, dateRate); (-1,-1) = no votes
-    val votes: Seq[(Double, Double)] = strCols.zipWithIndex.map {
-      case (c, i) =>
-        val sampled = df.select(col(s"`$c`"))
-          .where(nonEmpty(c))
-          .orderBy(rand(seed + i)).limit(sampleSize)
-        val r = sampled.agg(
-          avg(when(numericParse(c).isNotNull, 1.0).otherwise(0.0))
-            .as("num"),
-          avg(when(dateParse(c).isNotNull, 1.0).otherwise(0.0))
-            .as("dat")).head()
-        if (r.isNullAt(0)) (-1.0, -1.0)
-        else (r.getDouble(0), r.getDouble(1))
-    }
-    val dateCand = strCols.zipWithIndex
-      .filter { case (_, i) => votes(i)._2 >= threshold }
-    val checkAggs =
-      strCols.zipWithIndex.flatMap { case (c, i) =>
-        Seq(count(when(nonEmpty(c) && numericParse(c).isNull, lit(1)))
-            .as(s"bad_$i"),
-          count(when(nonEmpty(c), lit(1))).as(s"n_$i"))
-      } ++ dateCand.map { case (c, i) =>
-        rate(c, dateParse(c)).as(s"full_$i")
-      }
-    val full = df.agg(checkAggs.head, checkAggs.tail: _*).head()
-    val dateCandIdx = dateCand.map(_._2).toSet
-    strCols.zipWithIndex.map { case (c, i) =>
-      val numericOk = votes(i)._1 >= threshold &&
-        full.getAs[Long](s"n_$i") > 0L && full.getAs[Long](s"bad_$i") == 0L
-      val dateOk = dateCandIdx(i) &&
-        !full.isNullAt(full.fieldIndex(s"full_$i")) &&
-        full.getAs[Double](s"full_$i") >= threshold
-      val t: InferredType =
-        if (numericOk) NumericT
-        else if (dateOk) DatetimeT
-        else CharacterT
-      c -> t
-    }.toMap
-  }
-
   /** Apply an inference result as a single cast projection. */
   def promote(df: DataFrame,
       inference: Map[String, InferredType]): DataFrame = {
@@ -336,12 +258,9 @@ object TypeInference {
   }
 
   /** infer + promote in one call (whiteRRabbit.R:275-280 per-column loop). */
-  def inferAndPromote(df: DataFrame, sampleSize: Int = 1000,
-      threshold: Double = 0.8, seed: Long = 42L,
-      randomSample: Boolean = true, sampleVote: Boolean = false)
+  def inferAndPromote(df: DataFrame, threshold: Double = 0.8)
       : (DataFrame, Map[String, InferredType]) = {
-    val inf = infer(df, sampleSize, threshold, seed, randomSample,
-      sampleVote)
+    val inf = infer(df, threshold)
     (promote(df, inf), inf)
   }
 }

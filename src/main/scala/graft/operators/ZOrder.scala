@@ -89,37 +89,17 @@ object ZOrder {
     }.mkString("(", " + ", ")")
   }
 
-  private def clustered(df: DataFrame, xCol: String, yCol: String,
-      xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-      numFiles: Int): DataFrame =
-    df.withColumn("z",
-        mortonCode(col(xCol), col(yCol), xMin, xMax, yMin, yMax))
-      .repartitionByRange(numFiles, col("z"))
-      .sortWithinPartitions("z")
-      .drop("z")
-
-  /** Write `df` Z-clustered on (xCol, yCol): range-partition into
-    * `numFiles` contiguous Z-ranges, sort each file by Z. One shuffle
-    * at write time buys file-level skipping on both columns for every
-    * read after.
+  /** Z-cluster `df` on a Morton `code` ([[mortonCode]] /
+    * [[mortonCodeN]]): range-partition into `numFiles` contiguous
+    * Z-ranges and sort each partition by Z, dropping the code column.
+    * One shuffle at write time buys file-level skipping on every coded
+    * dimension for every read after; write the result with
+    * `write.parquet` or commit it as a [[graft.sources.VersionedTable]]
+    * snapshot (what `OPTIMIZE ZORDER BY` is in Delta).
     */
-  def layoutZOrder(df: DataFrame, xCol: String, yCol: String,
-      xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-      numFiles: Int, path: String): Unit =
-    clustered(df, xCol, yCol, xMin, xMax, yMin, yMax, numFiles)
-      .write.mode("overwrite").parquet(path)
-
-  /** Z-cluster `df` and COMMIT it as the next snapshot of the
-    * [[graft.sources.VersionedTable]] at `root` — what `OPTIMIZE
-    * ZORDER BY` is in Delta: layout evolution with history. Each
-    * re-cluster (new bounds, grown data) is a new version; a crashed
-    * rewrite never corrupts the serving layout (manifest-last), and
-    * old layouts stay time-travelable. Returns the committed version.
-    */
-  def layoutZOrderVersioned(df: DataFrame, xCol: String, yCol: String,
-      xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-      numFiles: Int, root: String, tag: String = ""): Long =
-    graft.sources.VersionedTable.commit(
-      clustered(df, xCol, yCol, xMin, xMax, yMin, yMax, numFiles),
-      root, tag)
+  def clustered(df: DataFrame, code: Column, numFiles: Int): DataFrame =
+    df.withColumn("__graft_zc", code)
+      .repartitionByRange(numFiles, col("__graft_zc"))
+      .sortWithinPartitions("__graft_zc")
+      .drop("__graft_zc")
 }

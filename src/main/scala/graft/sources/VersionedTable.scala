@@ -3182,12 +3182,9 @@ object VersionedTable {
     }
     val bytes = dataBytes(spark, root, v)
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val zc = graft.operators.ZOrder.mortonCodeN(dims,
-      bits = math.min(16, 62 / dims.size))
-    val packed = cur.withColumn("__graft_zc", zc)
-      .repartitionByRange(nFiles, col("__graft_zc"))
-      .sortWithinPartitions("__graft_zc")
-      .drop("__graft_zc")
+    val packed = graft.operators.ZOrder.clustered(cur,
+      graft.operators.ZOrder.mortonCodeN(dims,
+        bits = math.min(16, 62 / dims.size)), nFiles)
     // stats coverage is the UNION of the Z dimensions and whatever
     // the prior sidecar covered (numeric and string families both) —
     // a rewrite must never silently shrink data-skipping coverage

@@ -246,26 +246,6 @@ object StreamingProfile {
           expr(s"INTERVAL $lookback"))
       .select(col("purchase_id"), col("click_id"))
 
-  /** LEFT OUTER stream-stream interval join: purchases with no click
-    * in the lookback window STILL emit (null click_id) — but only
-    * once the watermark proves no matching click can arrive, i.e.
-    * when the purchase's state is evicted. The interval condition
-    * bounds state in both directions exactly as in [[funnelPairs]];
-    * the outer rows are the abandoned-funnel signal (paid conversion
-    * with no attributable click). Emission timing is
-    * watermark-driven, so the spec drives micro-batches explicitly
-    * instead of a bounded-replay oracle.
-    */
-  def funnelPairsOuter(purchases: DataFrame, clicks: DataFrame,
-      lookback: String): DataFrame =
-    purchases.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") -
-          expr(s"INTERVAL $lookback"),
-      "leftOuter")
-      .select(col("purchase_id"), col("click_id"))
-
   /** Run the funnel join over two bounded replays of the events
     * stream (two independent file-source streams, as deployment would
     * have two topics).

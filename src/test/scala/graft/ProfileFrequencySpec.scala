@@ -205,12 +205,6 @@ class ProfileFrequencySpec extends AnyFunSuite {
       spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")))
   }
 
-  test("one-pass sketch profile tracks the exact profile within the " +
-      "same sketch tolerances (sf0.001 lineitem)") {
-    checkApproxAgainstExact(Profile.summarizeOnePass(
-      spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")))
-  }
-
   test("profile handles empty tables and all-null columns") {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("n", DoubleType),
@@ -222,8 +216,8 @@ class ProfileFrequencySpec extends AnyFunSuite {
     assert(es("n").getAs[Long]("total_count") == 0)
     assert(es("n").getAs[Long]("distinct_count") == 0)
     assert(es("n").isNullAt(es("n").fieldIndex("median_val")))
-    // the one-pass sketch path handles the same degenerate shapes
-    val os = Profile.summarizeOnePass(empty).collect()
+    // the sketch path handles the same degenerate shapes
+    val os = Profile.summarizeApprox(empty).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(os("n").getAs[Long]("total_count") == 0)
     assert(os("n").getAs[Long]("distinct_count") == 0)

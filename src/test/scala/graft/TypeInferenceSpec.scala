@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TypeInference
@@ -16,6 +17,44 @@ class TypeInferenceSpec extends AnyFunSuite {
 
   private def inferOne(values: Seq[String]): TypeInference.InferredType =
     TypeInference.infer(values.toDF("c"), randomSample = false)("c")
+
+  /** The reference's sampled decision procedure (whiteRRabbit.R:147-151
+    * numeric, :172-187 date), the reference for [[TypeInference.infer]]:
+    * per column, up to `sampleSize` seeded random non-empty values vote
+    * first. Numeric goes on to full-column validation (every non-empty
+    * value must parse) only when the sampled numeric rate ≥ threshold;
+    * datetime needs BOTH the sampled and the full-column date rate ≥
+    * threshold.
+    */
+  private def sampleVote(df: DataFrame, sampleSize: Int = 1000,
+      threshold: Double = 0.8,
+      seed: Long = 42L): Map[String, TypeInference.InferredType] = {
+    import org.apache.spark.sql.functions.{avg, col, count, lit, rand,
+      when}
+    df.columns.toSeq.zipWithIndex.map { case (c, i) =>
+      val v = col(s"`$c`")
+      val nonEmpty = v.isNotNull && v =!= lit("")
+      def rateOf(parsed: Column) =
+        avg(when(parsed.isNotNull, 1.0).otherwise(0.0))
+      val voted = df.select(v).where(nonEmpty)
+        .orderBy(rand(seed + i)).limit(sampleSize)
+        .agg(rateOf(TypeInference.numericParse(c)),
+          rateOf(TypeInference.dateParse(c))).head()
+      val full = df.agg(
+        count(when(nonEmpty && TypeInference.numericParse(c).isNull,
+          lit(1))),
+        count(when(nonEmpty, lit(1))),
+        avg(when(nonEmpty, when(TypeInference.dateParse(c).isNotNull,
+          1.0).otherwise(0.0)))).head()
+      val numericOk = !voted.isNullAt(0) &&
+        voted.getDouble(0) >= threshold &&
+        full.getLong(1) > 0L && full.getLong(0) == 0L
+      val dateOk = !voted.isNullAt(1) && voted.getDouble(1) >= threshold &&
+        !full.isNullAt(2) && full.getDouble(2) >= threshold
+      c -> (if (numericOk) NumericT else if (dateOk) DatetimeT
+        else CharacterT)
+    }.toMap
+  }
 
   test("numeric strings with NA and empty promote to numeric " +
       "(test_robust_parse.R:5-12)") {
@@ -171,11 +210,30 @@ class TypeInferenceSpec extends AnyFunSuite {
     val df = rows.toDF("num", "date", "date95", "date50", "txt",
       "sparse")
     val full = TypeInference.infer(df)
-    val voted = TypeInference.infer(df, sampleVote = true)
+    val voted = sampleVote(df)
     assert(full == voted, s"modes disagree: full=$full voted=$voted")
     assert(voted("num") == NumericT && voted("date") == DatetimeT &&
       voted("date95") == DatetimeT && voted("date50") == CharacterT &&
       voted("txt") == CharacterT && voted("sparse") == NumericT)
+  }
+
+  test("infer's seed and randomSample do not change any decision " +
+      "(date column just above the 0.8 threshold)") {
+    // date81: 81 of every 100 values parse as dates — a rate of 0.81,
+    // where any sampled vote would flip with the seed
+    val rows = (0 until 1000).map { i =>
+      (i.toString,
+        if (i % 100 < 81) f"2023-02-${i % 28 + 1}%02d" else s"memo $i",
+        if (i % 100 < 79) f"2023-03-${i % 28 + 1}%02d" else s"memo $i",
+        s"text $i")
+    }
+    val df = rows.toDF("num", "date81", "date79", "txt")
+    val want = Map("num" -> NumericT, "date81" -> DatetimeT,
+      "date79" -> CharacterT, "txt" -> CharacterT)
+    for (seed <- Seq(1L, 977L); randomSample <- Seq(true, false))
+      assert(TypeInference.infer(df, seed = seed,
+        randomSample = randomSample) == want,
+        s"seed=$seed randomSample=$randomSample")
   }
 
   test("the never-date fast gate is speed-only: gated parse equals " +

@@ -121,11 +121,11 @@ class VersionedTableSpec extends AnyFunSuite {
     val pts = spark.range(0, 20000).select(
       (pmod(xxhash64(col("id")), lit(10000L)) / 10.0).as("x"),
       (pmod(xxhash64(col("id"), lit(1)), lit(10000L)) / 10.0).as("y"))
-    val v0 = ZOrder.layoutZOrderVersioned(pts, "x", "y",
-      0.0, 1000.0, 0.0, 1000.0, numFiles = 4, root = root)
+    val code = ZOrder.mortonCode(col("x"), col("y"),
+      0.0, 1000.0, 0.0, 1000.0)
+    val v0 = VersionedTable.commit(ZOrder.clustered(pts, code, 4), root)
     // data grew / re-cluster finer: a NEW version, not an overwrite
-    val v1 = ZOrder.layoutZOrderVersioned(pts, "x", "y",
-      0.0, 1000.0, 0.0, 1000.0, numFiles = 16, root = root)
+    val v1 = VersionedTable.commit(ZOrder.clustered(pts, code, 16), root)
     assert(v0 == 0L && v1 == 1L)
     // both versions hold the full dataset
     assert(VersionedTable.readVersion(spark, root, v0).count() == 20000)
@@ -455,10 +455,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val pts = spark.range(0, 40000).select(
       pmod(xxhash64(col("id")), lit(1000L)).cast("double").as("x"),
       pmod(xxhash64(col("id"), lit(1)), lit(1000L)).cast("double").as("y"))
-    val z = pts.withColumn("zc",
-        ZOrder.mortonCode(col("x"), col("y"), 0.0, 1000.0, 0.0, 1000.0))
-      .repartitionByRange(16, col("zc")).sortWithinPartitions("zc")
-      .drop("zc")
+    val z = ZOrder.clustered(pts,
+      ZOrder.mortonCode(col("x"), col("y"), 0.0, 1000.0, 0.0, 1000.0), 16)
     val v = VersionedTable.commitWithStats(z, root,
       statsCols = Seq("x", "y"))
     val all = VersionedTable.dataFileCount(spark, root, v)
@@ -490,10 +488,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val pts = spark.range(0, 40000).select(
       pmod(xxhash64(col("id")), lit(1000L)).cast("double").as("x"),
       pmod(xxhash64(col("id"), lit(1)), lit(1000L)).cast("double").as("y"))
-    val z = pts.withColumn("zc",
-        ZOrder.mortonCode(col("x"), col("y"), 0.0, 1000.0, 0.0, 1000.0))
-      .repartitionByRange(16, col("zc")).sortWithinPartitions("zc")
-      .drop("zc")
+    val z = ZOrder.clustered(pts,
+      ZOrder.mortonCode(col("x"), col("y"), 0.0, 1000.0, 0.0, 1000.0), 16)
     VersionedTable.commitWithStats(z, root, statsCols = Seq("x", "y"))
     val bytes = VersionedTable.dataBytes(spark, root, 0L)
     val v1 = VersionedTable.compactZOrder(spark, root, Seq("x", "y"),

@@ -61,8 +61,9 @@ class ZOrderSpec extends AnyFunSuite {
       (pmod(xxhash64(col("id"), lit(1)), lit(10000L)) / 10.0).as("y"))
     val zDir = "target/tmp/zorder_pts"
     val xDir = "target/tmp/xsort_pts"
-    ZOrder.layoutZOrder(pts, "x", "y", 0.0, 1000.0, 0.0, 1000.0,
-      numFiles = 16, path = zDir)
+    ZOrder.clustered(pts, ZOrder.mortonCode(col("x"), col("y"),
+        0.0, 1000.0, 0.0, 1000.0), numFiles = 16)
+      .write.mode("overwrite").parquet(zDir)
     pts.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(xDir)
 
