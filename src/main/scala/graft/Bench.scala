@@ -163,8 +163,8 @@ object Bench {
 
   /** Timed-pair plan for a smoke entry (VERDICT r17 #5 — the r17
     * 4-pairs-per-cheap-entry policy is what made the core smoke cost
-    * ~1100 s of the 43-min wall): the two approx-profile paths keep
-    * 5 pairs (three concurrent jobs each — the most load-sensitive
+    * ~1100 s of the 43-min wall): the approx-profile path keeps
+    * 5 pairs (three concurrent jobs — the most load-sensitive
     * timings in the suite), the historical flag/watch set keeps 2,
     * everything else runs ONE steady-state pair after its warm-up —
     * the flag path stays safe because any >=10x single-pair ratio
@@ -420,8 +420,8 @@ object Bench {
       "scd2_history", "dedup_substring", "dsir_select",
       // historical flags / structurally load-sensitive watch items
       "dedup_minhash", "minhash_eval", "typeinfer_roundtrip",
-      "summary_lineitem_approx", "summary_lineitem_onepass",
-      "dedup_substring_apply", "dedup_containment")
+      "summary_lineitem_approx", "dedup_substring_apply",
+      "dedup_containment")
     val sf1Tail = Seq("asof_last_order", "col_entropy", "data_split",
       "dedup_chunks", "dedup_clusters", "dedup_exact",
       "dedup_incremental", "dedup_jaccard_block", "dedup_keep_best",

@@ -3157,15 +3157,6 @@ object SparkEntry {
       Profile.summarizeApprox(tbl(s, dir, "lineitem"))
         .orderBy("column_name"),
       ContractTwin("summary_approx_contract")),
-    // the same gate and the same sketch profile under a second name,
-    // kept so the query set and its manifest stay as published
-    "summary_onepass_contract" -> Query((s, dir) =>
-      Profile.approxContract(tbl(s, dir, "lineitem")),
-      Oracle(sketchContractOracle)),
-    "summary_lineitem_onepass" -> Query((s, dir) =>
-      Profile.summarizeApprox(tbl(s, dir, "lineitem"))
-        .orderBy("column_name"),
-      ContractTwin("summary_onepass_contract")),
     // date aggregate suite (op 13) on microsecond-precision timestamps
     "summary_events" -> Query((s, dir) => roundedSummary(tbl(s, dir, "events")),
       Oracle(summaryOracle("events"))),
@@ -4405,8 +4396,8 @@ object SparkEntry {
         li.repartitionByRange(8, col("l_orderkey"))
           .sortWithinPartitions("l_orderkey"),
         root, statsCols = Seq("l_orderkey"), tag = "clustered")
-      def shape(d: DataFrame) = d
-        .where(col("l_orderkey").cast("double").between(1000d, 2000d))
+      val in = col("l_orderkey").cast("double").between(1000d, 2000d)
+      def shape(d: DataFrame) = d.where(in)
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n_lines"),
           sum(col("l_quantity").cast("decimal(18,2)"))
@@ -4416,8 +4407,7 @@ object SparkEntry {
       // row-for-row against the same aggregate straight off the
       // source table before anything is returned
       selfVerified(s, "table_pruned_scan", root,
-        shape(graft.sources.VersionedTable.readPruned(s, root, v,
-          "l_orderkey", 1000d, 2000d)),
+        shape(graft.sources.VersionedTable.readWhereVersion(s, root, v, in)),
         shape(li))
     },
       // pruned range scan must lose no rows vs the plain filter
@@ -4446,17 +4436,16 @@ object SparkEntry {
           0d, b.getDouble(0), 0d, b.getDouble(1)), numFiles = 16)
       val v = graft.sources.VersionedTable.commitWithStats(z, root,
         statsCols = Seq("l_orderkey", "l_partkey"), tag = "zorder")
-      def shape(d: DataFrame) = d
-        .where(col("l_orderkey").cast("double").between(1000d, 4000d) &&
-          col("l_partkey").cast("double").between(1d, 100d))
+      val in = col("l_orderkey").cast("double").between(1000d, 4000d) &&
+        col("l_partkey").cast("double").between(1d, 100d)
+      def shape(d: DataFrame) = d.where(in)
         .groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("n_lines"),
           sum(col("l_quantity").cast("decimal(18,2)"))
             .cast("double").as("sum_qty"))
         .orderBy("l_partkey")
       selfVerified(s, "table_pruned_scan2", root,
-        shape(graft.sources.VersionedTable.readPruned(s, root, v, Seq(
-          ("l_orderkey", 1000d, 4000d), ("l_partkey", 1d, 100d)))),
+        shape(graft.sources.VersionedTable.readWhereVersion(s, root, v, in)),
         shape(li))
     },
       // conjunction pruning on the Z-ordered pair must lose no rows
@@ -4483,12 +4472,11 @@ object SparkEntry {
         li.repartition(16, col("l_orderkey")), root,
         bloomCols = Seq("l_orderkey"), expectedItemsPerFile = 100000L,
         tag = "hashed")
+      val in = col("l_orderkey").isin(7L, 996L, 1995L, 2950L)
       selfVerified(s, "table_bloom_lookup", root,
-        graft.sources.VersionedTable.readPointLookup(s, root, v,
-            "l_orderkey", Seq(7L, 996L, 1995L, 2950L))
+        graft.sources.VersionedTable.readWhereVersion(s, root, v, in)
           .orderBy("l_orderkey", "l_linenumber"),
-        li.where(col("l_orderkey").isin(7L, 996L, 1995L, 2950L))
-          .orderBy("l_orderkey", "l_linenumber"))
+        li.where(in).orderBy("l_orderkey", "l_linenumber"))
     },
       // Bloom admission is one-sided, so the lookup must equal the
       // plain IN filter row-for-row; file-skip evidence is spec-side
@@ -5309,17 +5297,15 @@ object SparkEntry {
           .sortWithinPartitions("o_orderpriority"),
         root, statsCols = Nil, tag = "bypriority",
         stringStatsCols = Seq("o_orderpriority"))
-      def shape(d: DataFrame) = d
-        .where(col("o_orderpriority").cast("string")
-          .between("1-URGENT", "2-HIGH"))
+      val in = col("o_orderpriority").between("1-URGENT", "2-HIGH")
+      def shape(d: DataFrame) = d.where(in)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)"))
             .cast("double").as("sum_price"))
         .orderBy("o_orderpriority")
       selfVerified(s, "table_pruned_string", root,
-        shape(graft.sources.VersionedTable.readPrunedString(s, root, v,
-          Seq(("o_orderpriority", "1-URGENT", "2-HIGH")))),
+        shape(graft.sources.VersionedTable.readWhereVersion(s, root, v, in)),
         shape(o))
     },
       // lexicographic pruning loses no rows vs the plain string range
@@ -5386,17 +5372,16 @@ object SparkEntry {
         Seq("l_orderkey", "l_partkey"),
         targetBytes = graft.sources.VersionedTable.dataBytes(s, root, 0L)
           / 4 + 1)
-      def shape(d: DataFrame) = d
-        .where(col("l_orderkey").cast("double").between(1000d, 4000d) &&
-          col("l_partkey").cast("double").between(1d, 100d))
+      val in = col("l_orderkey").cast("double").between(1000d, 4000d) &&
+        col("l_partkey").cast("double").between(1d, 100d)
+      def shape(d: DataFrame) = d.where(in)
         .groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("n_lines"),
           sum(col("l_quantity").cast("decimal(18,2)"))
             .cast("double").as("sum_qty"))
         .orderBy("l_partkey")
       selfVerified(s, "table_compact_zorder", root,
-        shape(graft.sources.VersionedTable.readPruned(s, root, v, Seq(
-          ("l_orderkey", 1000d, 4000d), ("l_partkey", 1d, 100d)))),
+        shape(graft.sources.VersionedTable.readWhereVersion(s, root, v, in)),
         shape(li))
     },
       // the rewritten (compacted) Z layout answers exactly the plain
@@ -5548,8 +5533,8 @@ object SparkEntry {
         root, statsCols = Seq("o_orderkey"), tag = "clustered")
       val in = col("o_orderkey").cast("double").between(1000d, 8000d)
       selfVerified(s, "table_profile_snapshot", root,
-        roundedSummary(graft.sources.VersionedTable.readPruned(
-          s, root, v, "o_orderkey", 1000d, 8000d)),
+        roundedSummary(graft.sources.VersionedTable.readWhereVersion(
+          s, root, v, in)),
         roundedSummary(o.where(in)))
     },
       // the pruned-snapshot profile equals the profile of the plain

@@ -604,7 +604,7 @@ object VersionedTable {
     // was built over xxhash64 of the NARROW physical values, while
     // probes now hash literals at the widened logical type (an INT
     // bloom never admits the LONG probe of the same key — silent row
-    // loss through readPointLookup/readWhere). The carry drops the
+    // loss through readWhereVersion). The carry drops the
     // widened field's bloom column; everything else copies verbatim.
     carrySidecars(spark, root, prevV, next, staleBloomPhys)
     next
@@ -1521,39 +1521,6 @@ object VersionedTable {
       s"at $root (concurrent commits on every attempt)")
   }
 
-  /** Rewrite commit PINNED to the base snapshot it was planned from:
-    * publishes at exactly `baseV + 1` (no head re-resolution), so a
-    * concurrent commit makes the manifest claim fail loudly instead
-    * of silently dropping the interleaved data change. Data writes
-    * into a collision-free directory (never `v<next>`, which a racing
-    * plain commit would also write). Stats, when requested, stage
-    * into a tmp dir and rename into place only AFTER the publish —
-    * a lost race must not leave a version-named sidecar behind for
-    * whoever legitimately takes that version id (a crash between
-    * publish and rename just leaves the new version conservatively
-    * sidecar-less, the carrySidecars guarantee). Always
-    * dataChange=false: this is the maintenance path.
-    */
-  /** The per-file min/max stats frame both stats-writing commit paths
-    * share: numeric families cast to double (`mn_`/`mx_`), string
-    * families keep native UTF8 binary order (`smn_`/`smx_` — the
-    * order parquet itself uses, so lexicographic range pruning is
-    * sound), one row per written file.
-    */
-  private def statsFrame(written: DataFrame, statsCols: Seq[String],
-      stringStatsCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val aggs = statsCols.flatMap { c =>
-      Seq(min(col(c).cast("double")).as(s"mn_$c"),
-        max(col(c).cast("double")).as(s"mx_$c"))
-    } ++ stringStatsCols.flatMap { c =>
-      Seq(min(col(c).cast("string")).as(s"smn_$c"),
-        max(col(c).cast("string")).as(s"smx_$c"))
-    }
-    written.groupBy(input_file_name().as("path"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
   /** One pinned-base round-robin bin-pack attempt: `ceil(bytes /
     * targetBytes)` files, no clustering, delete sidecar folded —
     * shared by [[compact]], [[compactDeletes]] and
@@ -1569,6 +1536,19 @@ object VersionedTable {
       root, if (tag.nonEmpty) tag else s"compact-v$v", v)
   }
 
+  /** Rewrite commit PINNED to the base snapshot it was planned from:
+    * publishes at exactly `baseV + 1` (no head re-resolution), so a
+    * concurrent commit makes the manifest claim fail loudly instead
+    * of silently dropping the interleaved data change. Data writes
+    * into a collision-free directory (never `v<next>`, which a racing
+    * plain commit would also write). Stats, when requested, stage
+    * into a tmp dir and rename into place only AFTER the publish —
+    * a lost race must not leave a version-named sidecar behind for
+    * whoever legitimately takes that version id (a crash between
+    * publish and rename just leaves the new version conservatively
+    * sidecar-less, the carrySidecars guarantee). Always
+    * dataChange=false: this is the maintenance path.
+    */
   // dataChange defaults false (the compaction family); [[rollback]]
   // pins with dataChange=true — a restore CHANGES logical content,
   // streams must not silently rebase over it
@@ -2102,27 +2082,39 @@ object VersionedTable {
       statsCols: Seq[String], tag: String = "",
       stringStatsCols: Seq[String] = Nil,
       dataChange: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
     require(statsCols.nonEmpty || stringStatsCols.nonEmpty,
       "commitWithStats needs at least one stats column")
+    commitWithSidecar(df, root, tag, statsDir(root, _),
+      statsFrame(_, statsCols, stringStatsCols), dataChange)
+  }
+
+  /** Shared skeleton of the sidecar-building REWRITES — the rewrite
+    * twin of [[commitAppendWithSidecar]]: write `df` as the new
+    * version's only data dir, build its per-file sidecar with
+    * `sidecar` over the just-written (still hot) files, and publish.
+    * A rewrite commit re-baselines the field mapping (if any) to the
+    * logical names just written, so the sidecar's column names are
+    * simultaneously logical and physical — consistent with pruning's
+    * physical-name resolution.
+    */
+  private def commitWithSidecar(df: DataFrame, root: String, tag: String,
+      sidecarOf: Long => String, sidecar: DataFrame => DataFrame,
+      dataChange: Boolean): Long = {
     val spark = df.sparkSession
-    // a stats commit is a REWRITE: the mapping (if any) re-baselines
-    // to the logical names just written, so the sidecar's column
-    // names are simultaneously logical and physical — consistent with
-    // pruning's physical-name resolution
     val prevFields = latestVersion(spark, root)
       .flatMap(v => resolveFields(spark, root, v))
     val (next, dataDir) = nextVersionDir(spark, root)
+    val sidecarName = new Path(sidecarOf(next)).getName
     writeIntent(spark, root, s"v$next")
-    writeIntent(spark, root, s"_graft_stats_v$next")
+    writeIntent(spark, root, sidecarName)
     df.write.mode("overwrite").parquet(dataDir)
-    statsFrame(spark.read.parquet(dataDir), statsCols, stringStatsCols)
+    sidecar(spark.read.parquet(dataDir))
       .coalesce(1)
-      .write.mode("overwrite").parquet(statsDir(root, next))
+      .write.mode("overwrite").parquet(sidecarOf(next))
     publish(spark, root, next, tag, fields = rebaseline(df, prevFields),
       dataChange = dataChange)
     clearIntent(spark, root, s"v$next")
-    clearIntent(spark, root, s"_graft_stats_v$next")
+    clearIntent(spark, root, sidecarName)
     next
   }
 
@@ -2131,6 +2123,45 @@ object VersionedTable {
 
   private def bloomDir(root: String, version: Long): String =
     s"$root/_graft_bloom_v$version"
+
+  /** The per-file min/max stats frame every stats-writing commit path
+    * shares: numeric families cast to double (`mn_`/`mx_`), string
+    * families keep native UTF8 binary order (`smn_`/`smx_` — the
+    * order parquet itself uses, so lexicographic range pruning is
+    * sound), one row per written file.
+    */
+  private def statsFrame(written: DataFrame, statsCols: Seq[String],
+      stringStatsCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+    val aggs = statsCols.flatMap { c =>
+      Seq(min(col(c).cast("double")).as(s"mn_$c"),
+        max(col(c).cast("double")).as(s"mx_$c"))
+    } ++ stringStatsCols.flatMap { c =>
+      Seq(min(col(c).cast("string")).as(s"smn_$c"),
+        max(col(c).cast("string")).as(s"smx_$c"))
+    }
+    written.groupBy(input_file_name().as("path"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The per-file Bloom sidecar frame both Bloom-writing commit paths
+    * share: one mergeable `BloomFilterAggregate` over `xxhash64(col)`
+    * per column (`bf_`), one row per written file.
+    */
+  private def bloomFrame(written: DataFrame, bloomCols: Seq[String],
+      expectedItemsPerFile: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val aggs = bloomCols.map { c =>
+      ColumnBridge.column(
+        new BloomFilterAggregate(
+          ColumnBridge.expression(xxhash64(col(c))),
+          expectedItemsPerFile).toAggregateExpression()).as(s"bf_$c")
+    }
+    written.groupBy(input_file_name().as("path"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
 
   /** Carry the previous version's stats/bloom sidecars forward to a
     * new version that REWROTE NO DATA FILE (MoR delete commits, plain
@@ -2189,7 +2220,7 @@ object VersionedTable {
     * hash-distributed key column has every file spanning the whole
     * domain, so range stats prune nothing, but a Bloom of each file's
     * key set answers "could key k be in this file?" with no data I/O
-    * ([[readPointLookup]]). One distributed aggregation grouped by
+    * ([[readWhereVersion]]). One distributed aggregation grouped by
     * `input_file_name()` builds every file's filter in a single pass
     * over the just-written (still hot) bytes — Spark's own mergeable
     * `BloomFilterAggregate` over `xxhash64(col)`, so lookups must
@@ -2202,32 +2233,9 @@ object VersionedTable {
   def commitWithBloom(df: DataFrame, root: String,
       bloomCols: Seq[String], expectedItemsPerFile: Long = 1000000L,
       tag: String = ""): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     require(bloomCols.nonEmpty, "commitWithBloom needs at least one column")
-    val spark = df.sparkSession
-    val prevFields = latestVersion(spark, root)
-      .flatMap(v => resolveFields(spark, root, v))
-    val (next, dataDir) = nextVersionDir(spark, root)
-    writeIntent(spark, root, s"v$next")
-    writeIntent(spark, root, s"_graft_bloom_v$next")
-    df.write.mode("overwrite").parquet(dataDir)
-    val written = spark.read.parquet(dataDir)
-    val aggs = bloomCols.map { c =>
-      ColumnBridge.column(
-        new BloomFilterAggregate(
-          ColumnBridge.expression(xxhash64(col(c))),
-          expectedItemsPerFile).toAggregateExpression()).as(s"bf_$c")
-    }
-    written.groupBy(input_file_name().as("path"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(bloomDir(root, next))
-    publish(spark, root, next, tag, fields = rebaseline(df, prevFields))
-    clearIntent(spark, root, s"v$next")
-    clearIntent(spark, root, s"_graft_bloom_v$next")
-    next
+    commitWithSidecar(df, root, tag, bloomDir(root, _),
+      bloomFrame(_, bloomCols, expectedItemsPerFile), dataChange = true)
   }
 
   /** The data files of snapshot `version` whose Bloom filter on
@@ -2269,24 +2277,6 @@ object VersionedTable {
         (r.getString(0), keep)
       }
     conservativeSubset(all, verdicts)
-  }
-
-  /** Point lookup through the Bloom sidecar: open ONLY the files that
-    * might contain one of `values` on `colName`, then apply the exact
-    * IN filter (Bloom admission is one-sided — admitted files still
-    * need the row-level check). On a key-partitioned snapshot each
-    * probed key lives in one file, so a needle lookup on 100 TB opens
-    * O(|values|) files plus the ~3% false-positive tail instead of
-    * every file.
-    */
-  def readPointLookup(spark: SparkSession, root: String, version: Long,
-      colName: String, values: Seq[Any]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val paths = bloomPrunedPaths(spark, root, version, colName, values)
-    if (paths.isEmpty) readVersion(spark, root, version).where(lit(false))
-    else readScoped(spark, root, readManifest(spark, root, version),
-      version, onlyPaths = Some(paths), mergeSchema = false)
-      .where(col(colName).isin(values: _*))
   }
 
   /** Shared skeleton of the sidecar-merging fast appends: write the
@@ -2345,33 +2335,24 @@ object VersionedTable {
   /** Fast APPEND with data skipping intact: stats for the DELTA files
     * are one aggregation over the just-written delta, and the new
     * sidecar is the previous version's sidecar plus those rows — so
-    * per-commit cost stays delta-sized and [[readPruned]] keeps
+    * per-commit cost stays delta-sized and [[readWhereVersion]] keeps
     * pruning across the whole append chain. If the previous version
     * carries no sidecar its files simply stay un-covered, which
     * [[prunedPaths]] handles conservatively (they are always read).
     */
   def commitAppendWithStats(delta: DataFrame, root: String,
       statsCols: Seq[String], tag: String = ""): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
     require(statsCols.nonEmpty,
       "commitAppendWithStats needs at least one stats column")
     commitAppendWithSidecar(delta, root, tag, statsDir(root, _),
-      (written, phys) => {
-        val aggs = statsCols.flatMap { c =>
-          val p = phys(c)
-          Seq(min(col(p).cast("double")).as(s"mn_$p"),
-            max(col(p).cast("double")).as(s"mx_$p"))
-        }
-        written.groupBy(input_file_name().as("path"))
-          .agg(aggs.head, aggs.tail: _*)
-      })
+      (written, phys) => statsFrame(written, statsCols.map(phys), Nil))
   }
 
   /** Fast APPEND with point-lookup skipping intact — the Bloom twin
     * of [[commitAppendWithStats]]: the delta files' filters are one
     * aggregation over the just-written delta, and the new sidecar is
     * the previous version's rows plus those — so a key-indexed table
-    * absorbing streaming batches keeps [[readPointLookup]] opening
+    * absorbing streaming batches keeps [[readWhereVersion]] opening
     * O(|probed keys|) files across the whole append chain instead of
     * decaying to every-delta-file reads (uncovered files are always
     * conservatively read). Per-commit cost stays delta-sized.
@@ -2379,44 +2360,25 @@ object VersionedTable {
   def commitAppendWithBloom(delta: DataFrame, root: String,
       bloomCols: Seq[String], expectedItemsPerFile: Long = 1000000L,
       tag: String = ""): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     require(bloomCols.nonEmpty,
       "commitAppendWithBloom needs at least one column")
     commitAppendWithSidecar(delta, root, tag, bloomDir(root, _),
-      (written, phys) => {
-        val aggs = bloomCols.map { c =>
-          val p = phys(c)
-          ColumnBridge.column(
-            new BloomFilterAggregate(
-              ColumnBridge.expression(xxhash64(col(p))),
-              expectedItemsPerFile).toAggregateExpression()).as(s"bf_$p")
-        }
-        written.groupBy(input_file_name().as("path"))
-          .agg(aggs.head, aggs.tail: _*)
-      })
+      (written, phys) =>
+        bloomFrame(written, bloomCols.map(phys), expectedItemsPerFile))
   }
 
-  /** The data files of snapshot `version` whose [min, max] range on
-    * `colName` intersects [lo, hi] — resolved from the stats sidecar
-    * alone (no data I/O). Falls back to ALL files when the snapshot
-    * has no stats or the column was not collected. Conservative in
-    * both null directions: a file whose min/max is null (all-null
-    * column chunk) is kept, and a data file the sidecar does not
-    * mention at all (e.g. appended without stats) is kept too —
-    * pruning may only ever REMOVE provably-disjoint files.
-    */
-  def prunedPaths(spark: SparkSession, root: String, version: Long,
-      colName: String, lo: Double, hi: Double): Seq[String] =
-    prunedPaths(spark, root, version, Seq((colName, lo, hi)))
-
-  /** Conjunctive form: keep a file only if its [min, max] intersects
-    * EVERY predicate's range — the multi-column skip a Z-ordered
-    * layout exists for (a needle query on either/both clustered dims
-    * prunes through one sidecar pass). Predicates on columns the
-    * sidecar never collected are ignored here (no stats to prune on)
-    * and left to [[readPruned]]'s exact row filter.
+  /** The data files of snapshot `version` whose [min, max] range
+    * intersects EVERY predicate's `(colName, lo, hi)` range — resolved
+    * from the stats sidecar alone (no data I/O); a conjunction is the
+    * multi-column skip a Z-ordered layout exists for (a needle query
+    * on either/both clustered dims prunes through one sidecar pass).
+    * Falls back to ALL files when the snapshot has no stats; predicates
+    * on columns the sidecar never collected are ignored (no stats to
+    * prune on). Conservative in both null directions: a file whose
+    * min/max is null (all-null column chunk) is kept, and a data file
+    * the sidecar does not mention at all (e.g. appended without stats)
+    * is kept too — pruning may only ever REMOVE provably-disjoint
+    * files; [[readWhereVersion]] re-applies the exact row filter.
     */
   def prunedPaths(spark: SparkSession, root: String, version: Long,
       preds: Seq[(String, Double, Double)]): Seq[String] = {
@@ -2496,26 +2458,6 @@ object VersionedTable {
       c => s"smn_$c", c => s"smx_$c")
   }
 
-  /** Range scan through the STRING stats: open only the files whose
-    * lexicographic [smn, smx] admits every predicate, then apply the
-    * exact row filters — the categorical/date-string needle path
-    * (`readPruned`'s cast-to-double stats are blind to these).
-    */
-  def readPrunedString(spark: SparkSession, root: String, version: Long,
-      preds: Seq[(String, String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(preds.nonEmpty, "readPrunedString needs at least one predicate")
-    val paths = prunedPathsString(spark, root, version, preds)
-    val base =
-      if (paths.isEmpty)
-        readVersion(spark, root, version).where(lit(false))
-      else readScoped(spark, root, readManifest(spark, root, version),
-        version, onlyPaths = Some(paths), mergeSchema = false)
-    preds.foldLeft(base) { case (d, (c, lo, hi)) =>
-      d.where(col(c).cast("string").between(lo, hi))
-    }
-  }
-
   private def dataPaths(spark: SparkSession, root: String,
       version: Long): Seq[String] = {
     val f = fs(spark, root)
@@ -2526,44 +2468,13 @@ object VersionedTable {
     }
   }
 
-  /** Range scan through the stats sidecar: read ONLY the files whose
-    * stats admit `colName` ∈ [lo, hi], then apply the exact predicate
-    * (stats pruning is conservative, files still carry out-of-range
-    * rows at their edges). On a clustered snapshot this touches
-    * O(selectivity) of the files instead of all of them — the
-    * manifest-level skip that makes needle queries on 100 TB cheap
-    * before a single row group is opened.
-    */
-  def readPruned(spark: SparkSession, root: String, version: Long,
-      colName: String, lo: Double, hi: Double): DataFrame =
-    readPruned(spark, root, version, Seq((colName, lo, hi)))
-
-  /** Conjunctive range scan: files must survive EVERY predicate's
-    * stats check, rows every exact predicate — the public API through
-    * which a Z-ordered snapshot skips on either/both of its
-    * clustered dimensions.
-    */
-  def readPruned(spark: SparkSession, root: String, version: Long,
-      preds: Seq[(String, Double, Double)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(preds.nonEmpty, "readPruned needs at least one predicate")
-    val paths = prunedPaths(spark, root, version, preds)
-    val base =
-      if (paths.isEmpty)
-        readVersion(spark, root, version).where(lit(false))
-      else readScoped(spark, root, readManifest(spark, root, version),
-        version, onlyPaths = Some(paths), mergeSchema = false)
-    preds.foldLeft(base) { case (d, (c, lo, hi)) =>
-      d.where(col(c).cast("double").between(lo, hi))
-    }
-  }
-
   /** The data files of snapshot `version` that might satisfy `pred` —
     * AUTOMATIC data skipping from an arbitrary predicate, the scan-
     * planning step Delta/Iceberg run on every filtered read. The
     * predicate's conjunct tree is walked for per-column bounds
-    * (`>`, `>=`, `<`, `<=`, `===`, `isin`, attribute on either side,
-    * casts stripped); numeric bounds prune through the `mn_`/`mx_`
+    * (`>`, `>=`, `<`, `<=`, `===`, `isin`, `between`, attribute on
+    * either side, a `cast("double")` compared on the numeric stats
+    * scale); numeric bounds prune through the `mn_`/`mx_`
     * stats, string bounds through the lexicographic `smn_`/`smx_`
     * family, and equality/IN probes additionally consult the Bloom
     * sidecar when one covers the column. Every verdict path is
@@ -2628,7 +2539,13 @@ object VersionedTable {
 
   /** Time travel composed with automatic data skipping: the filtered
     * read of snapshot `version`, pruned through whatever sidecars that
-    * version carries.
+    * version carries — the table layer's one filtered read. The
+    * common shapes: a numeric-stats range scan is
+    * `col(c).cast("double").between(lo, hi)` (AND several for a
+    * Z-ordered conjunction), a lexicographic one on a string column
+    * `col(c).between(lo, hi)`, a Bloom point lookup
+    * `col(c).isin(keys: _*)` with keys of the column's own type. An
+    * empty `isin()` matches no row, so it reads as an empty result.
     */
   def readWhereVersion(spark: SparkSession, root: String, version: Long,
       pred: org.apache.spark.sql.Column): DataFrame = {
@@ -2886,7 +2803,7 @@ object VersionedTable {
   /** CLUSTERING-preserving OPTIMIZE: [[compact]]'s round-robin
     * exchange bin-packs perfectly but destroys any range/Z clustering
     * the snapshot carried — after it, every file spans the whole
-    * domain and [[readPruned]] stops skipping (r9 verdict gap).
+    * domain and [[prunedPathsWhere]] stops skipping (r9 verdict gap).
     * This variant re-sorts into `ceil(bytes / targetBytes)` files by
     * range on `sortCols` AND re-collects the stats sidecar, so data
     * skipping survives the rewrite: the stats columns default to
@@ -3137,7 +3054,7 @@ object VersionedTable {
     * the current snapshot, the same writer-supplied-edges rule the
     * original Z write used — range-cluster on the code into
     * `ceil(bytes / targetBytes)` files, and re-collect min/max stats
-    * on every dimension, so conjunctive [[readPruned]] keeps skipping
+    * on every dimension, so conjunctive [[readWhereVersion]] keeps skipping
     * on either/both dims after the rewrite. One shuffle, same cost
     * shape as [[compact]]. An empty snapshot (nothing to cluster)
     * falls back to plain bin-packing. Returns the new version id.

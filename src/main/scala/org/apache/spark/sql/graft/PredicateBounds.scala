@@ -16,7 +16,8 @@ import org.apache.spark.sql.internal.{Cast => NCast, ColumnNode,
   * closed ones, open bounds are the IEEE infinities (a file whose
   * stats hold literal Infinity values must stay admitted), one-sided
   * string lower bounds produce nothing (astral-plane code points
-  * sort above any BMP sentinel), and a conjunct the walker cannot
+  * sort above any BMP sentinel; a lower bound only tightens a range
+  * the same column's upper bound opened), and a conjunct the walker cannot
   * parse (OR, arithmetic, UDF) simply contributes no bound — the
   * caller always re-applies the full predicate row-level.
   */
@@ -88,19 +89,22 @@ object PredicateBounds {
         f.arguments.flatMap(conjuncts)
       case x => Seq(x)
     }
-    def attrName(n: ColumnNode): Option[String] = n match {
-      case a: NAttr => a.nameParts.lastOption
+    // the column a comparison side names, and whether it reaches it
+    // through a stripped double cast
+    def attrName(n: ColumnNode): Option[(String, Boolean)] = n match {
+      case a: NAttr => a.nameParts.lastOption.map((_, false))
       // a cast is stripped ONLY when it is the identity on the stats
-      // scale: numeric stats are collected as cast-to-double, so
-      // `col(c).cast("double") >= L` compares exactly the stored
-      // scale. Any OTHER cast (date-truncation of a timestamp, a
+      // scale: numeric stats are collected as cast-to-double (epoch
+      // seconds for timestamps), so `col(c).cast("double") >= L`
+      // compares exactly the stored `mn_`/`mx_` scale whatever c's
+      // type. Any OTHER cast (date-truncation of a timestamp, a
       // narrowing int cast) is monotone but NOT the stats scale —
       // mapping its literal onto the raw column's stats would prune
       // files whose rows match the predicate (silent row loss), so
       // those conjuncts contribute no bound.
       case c: NCast
           if c.dataType == org.apache.spark.sql.types.DoubleType =>
-        attrName(c.child)
+        attrName(c.child).map(a => (a._1, true))
       case _ => None
     }
     def numVal(n: ColumnNode): Option[Double] = n match {
@@ -158,32 +162,47 @@ object PredicateBounds {
     // literal against a numeric column (`col(n) <= "10"`) is compared
     // NUMERICALLY by Spark but the smn_/smx_ sidecar is
     // lexicographic — pruning through it would silently drop matching
-    // files, so those conjuncts contribute no string bound.
-    def boundsVal(c: String,
+    // files, so those conjuncts contribute no string bound. A column
+    // compared through its double cast is on the double scale whatever
+    // its type: numeric literals only, never a string bound or probe
+    // (`col(s).cast("double") === "10"` matches the string "010").
+    def boundsVal(a: (String, Boolean),
         l: ColumnNode): (Option[Double], Option[String]) =
-      colType(c) match {
+      if (a._2) (numVal(l), None) else colType(a._1) match {
         case Some(t) if isTemporal(t) =>
           (litValue(l).flatMap(temporalVal(_, t)), None)
         case Some(org.apache.spark.sql.types.StringType) =>
           (numVal(l), strVal(l))
         case _ => (numVal(l), None)
       }
+    // string bounds order as the sidecar does, by UTF8 bytes: in
+    // UTF-16 order a supplementary character sorts BELOW U+E000-U+FFFF,
+    // so an IN list mixing the two would get lo > hi and prune the
+    // files that hold its keys
+    val byUtf8: Ordering[String] = Ordering.fromLessThan((x, y) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(x).compareTo(
+        org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0)
     val numB = Seq.newBuilder[(String, Double, Double)]
     val strB = Seq.newBuilder[(String, String, String)]
+    val strLoB = Seq.newBuilder[(String, String)]
     val probeB = Seq.newBuilder[(String, Seq[Any])]
     val inf = Double.PositiveInfinity
-    def cmpAttr(op: String, c: String, l: ColumnNode): Unit = {
-      val (nv, sv) = boundsVal(c, l)
+    def probe(a: (String, Boolean), l: ColumnNode): Option[Any] =
+      if (a._2) None else probeVal(l, colType(a._1))
+    def cmpAttr(op: String, a: (String, Boolean), l: ColumnNode): Unit = {
+      val c = a._1
+      val (nv, sv) = boundsVal(a, l)
       op match {
         case ">" | ">=" =>
           nv.foreach(v => numB += ((c, v, inf)))
+          sv.foreach(v => strLoB += ((c, v)))
         case "<" | "<=" =>
           nv.foreach(v => numB += ((c, -inf, v)))
           sv.foreach(v => strB += ((c, "", v)))
         case "=" =>
           nv.foreach(v => numB += ((c, v, v)))
           sv.foreach(v => strB += ((c, v, v)))
-          probeVal(l, colType(c)).foreach(v => probeB += ((c, Seq(v))))
+          probe(a, l).foreach(v => probeB += ((c, Seq(v))))
         case _ => ()
       }
     }
@@ -200,15 +219,17 @@ object PredicateBounds {
           cmpAttr(flipped, c, l)
         case _ => ()
       }
-    def inList(a: ColumnNode, vs: Seq[ColumnNode]): Unit =
-      attrName(a).foreach { c =>
+    def inList(n: ColumnNode, vs: Seq[ColumnNode]): Unit =
+      attrName(n).foreach { a =>
+        val c = a._1
         if (vs.nonEmpty) {
-          val pairs = vs.map(boundsVal(c, _))
+          val pairs = vs.map(boundsVal(a, _))
           val nums = pairs.flatMap(_._1)
           if (nums.length == vs.length) numB += ((c, nums.min, nums.max))
           val strs = pairs.flatMap(_._2)
-          if (strs.length == vs.length) strB += ((c, strs.min, strs.max))
-          val probes = vs.flatMap(probeVal(_, colType(c)))
+          if (strs.length == vs.length)
+            strB += ((c, strs.min(byUtf8), strs.max(byUtf8)))
+          val probes = vs.flatMap(probe(a, _))
           if (probes.length == vs.length) probeB += ((c, probes))
         }
       }
@@ -228,7 +249,14 @@ object PredicateBounds {
         }
       case _ => () // unparseable conjunct: no bound, still row-filtered
     }
-    Bounds(numB.result(), strB.result(), probeB.result())
+    // a string lower bound has no sound upper sentinel on its own, so
+    // it only tightens a range the same column's upper bound or
+    // equality opened (`between` on a string column prunes both ends)
+    val strLo = strLoB.result().groupMapReduce(_._1)(_._2)(byUtf8.max)
+    val strings = strB.result().map { case (c, lo, hi) =>
+      (c, strLo.get(c).filter(byUtf8.gt(_, lo)).getOrElse(lo), hi)
+    }
+    Bounds(numB.result(), strings, probeB.result())
   }
 
   /** Rebuild a PARSED catalyst predicate as a public-DSL Column so

@@ -103,7 +103,7 @@ class CloneSpec extends AnyFunSuite {
       Seq("doc_id", "v"))
     val all = VersionedTable.dataFileCount(spark, dst, 0L)
     val pruned = VersionedTable.prunedPaths(spark, dst, 0L,
-      "doc_id", 100.0, 199.0)
+      Seq(("doc_id", 100.0, 199.0)))
     assert(all == 8 && pruned.size < all && pruned.nonEmpty,
       s"clone lost skipping: ${pruned.size} of $all")
     assert(VersionedTable.readWhere(spark, dst,

@@ -204,10 +204,10 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("summary_lineitem_onepass: the assembled summary frame never " +
+  test("summary_lineitem_approx: the assembled summary frame never " +
       "re-scans the table (the single data pass lives in the sketch " +
       "aggregate job)") {
-    val p = planOf("summary_lineitem_onepass")
+    val p = planOf("summary_lineitem_approx")
     assert(!p.contains("FileScan") && !p.contains("Scan parquet"),
       s"summary output re-reads the input:\n${p.take(600)}")
     assert(count(p, "Exchange") <= 2, s"exchange count grew:\n$p")

@@ -158,5 +158,52 @@ class PredicateBoundsFuzzSpec extends AnyFunSuite {
     assert(got == (0L to 10L).toSeq,
       s"string-stats pruning dropped numerically-matching rows: $got")
     VersionedTable.destroy(spark, root)
+    // the same trap through a double cast on a STRING column: the
+    // comparison runs on the double scale, so neither the string stats
+    // nor the Bloom probe of the raw literal may prune ("010" == 10.0)
+    val strs = (0L until 100L).map(k => (k, k.toString)).toDF("k", "s")
+    VersionedTable.commitWithStats(
+      strs.repartitionByRange(4, col("s")).sortWithinPartitions("s"),
+      root, statsCols = Nil, stringStatsCols = Seq("s"))
+    val le = col("s").cast("double") <= "10"
+    assert(VersionedTable.readWhere(spark, root, le).count() == 11L)
+    VersionedTable.destroy(spark, root)
+    val padded = (0L until 100L).map(k => (k, f"$k%03d")).toDF("k", "s")
+    VersionedTable.commitWithBloom(padded.repartition(8, col("k")), root,
+      bloomCols = Seq("s"), expectedItemsPerFile = 1000L)
+    val eq = col("s").cast("double") === "10"
+    assert(VersionedTable.readWhere(spark, root, eq).count() == 1L)
+    VersionedTable.destroy(spark, root)
+    // an IN list's string range is ordered as the stats are (UTF8
+    // bytes): U+FF61 sorts above a surrogate pair in UTF-16, below the
+    // astral code point it encodes in UTF8
+    val (halfwidth, astral) = ("\uFF61", "\uD83D\uDE00")
+    val mixed = (0L until 300L).map(k => (k,
+      if (k < 100) halfwidth else if (k < 200) "a" else astral))
+      .toDF("k", "s")
+    VersionedTable.commitWithStats(
+      mixed.repartitionByRange(3, col("k")).sortWithinPartitions("k"),
+      root, statsCols = Nil, stringStatsCols = Seq("s"))
+    assert(VersionedTable.readWhere(spark, root,
+      col("s").isin(halfwidth, astral)).count() == 200L)
+    VersionedTable.destroy(spark, root)
+    // and a double-cast numeric range prunes exactly as the stats
+    // scale does, on a Long column and on a timestamp column (whose
+    // stats hold epoch seconds)
+    val events = (0L until 800L).map(k => (k,
+      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(k * 3600))))
+      .toDF("k", "ts")
+    val v = VersionedTable.commitWithStats(
+      events.repartitionByRange(8, col("k")).sortWithinPartitions("k"),
+      root, statsCols = Seq("k", "ts"))
+    for ((c, lo, hi) <- Seq(("k", 0d, 10d), ("ts", 0d, 36000d))) {
+      val viaWhere = VersionedTable.prunedPathsWhere(spark, root, v,
+        col(c).cast("double").between(lo, hi))
+      assert(viaWhere ==
+        VersionedTable.prunedPaths(spark, root, v, Seq((c, lo, hi))),
+        s"$c: the double-cast range must prune through its stats")
+      assert(viaWhere.size == 1, s"$c kept ${viaWhere.size} of 8 files")
+    }
+    VersionedTable.destroy(spark, root)
   }
 }

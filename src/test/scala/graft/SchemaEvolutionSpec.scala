@@ -155,7 +155,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     // pruning keys through the mapping onto the physical sidecar: a
     // needle range on the NEW name touches a strict file subset
     val pruned = VersionedTable.prunedPaths(spark, root, v1,
-      "doc_id", 100.0, 199.0)
+      Seq(("doc_id", 100.0, 199.0)))
     assert(pruned.size < all && pruned.nonEmpty)
     // and readWhere (automatic skipping) is exact under the new name
     val got = VersionedTable.readWhere(spark, root,
@@ -316,8 +316,8 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       "k", Seq(1234L)).size == nFiles)
     // and the POINT LOOKUP — the row-loss path the stale bloom would
     // break — still finds the row
-    val got = VersionedTable.readPointLookup(spark, root, v1,
-      "k", Seq(1234L)).select("k", "other").collect()
+    val got = VersionedTable.readWhereVersion(spark, root, v1,
+      col("k").isin(1234L)).select("k", "other").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1234L, 12340L)))
     // the untouched column's bloom survived the carry and still prunes

@@ -322,20 +322,22 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(all == 8)
     // a 1000-wide needle on a 8000-wide domain: 1-2 of 8 files
     val picked = VersionedTable.prunedPaths(spark, root, v,
-      "k", 2100d, 2900d)
+      Seq(("k", 2100d, 2900d)))
     assert(picked.size < all / 2,
       s"stats must prune most files: ${picked.size} of $all")
-    val got = VersionedTable.readPruned(spark, root, v, "k",
-      2100d, 2900d).collect().map(_.getLong(0)).sorted
+    val got = VersionedTable.readWhereVersion(spark, root, v,
+      col("k").cast("double").between(2100d, 2900d))
+      .collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (2100L to 2900L),
       "pruned scan must equal the exact filter")
     // out-of-domain range: zero files, empty result, schema intact
-    assert(VersionedTable.prunedPaths(spark, root, v, "k",
-      20000d, 30000d).isEmpty)
-    assert(VersionedTable.readPruned(spark, root, v, "k",
-      20000d, 30000d).count() == 0L)
+    assert(VersionedTable.prunedPaths(spark, root, v,
+      Seq(("k", 20000d, 30000d))).isEmpty)
+    assert(VersionedTable.readWhereVersion(spark, root, v,
+      col("k").cast("double").between(20000d, 30000d)).count() == 0L)
     // un-collected column falls back to all files, still correct
-    val gotV = VersionedTable.readPruned(spark, root, v, "v", 3d, 3d)
+    val gotV = VersionedTable.readWhereVersion(spark, root, v,
+      col("v").cast("double").between(3d, 3d))
     assert(gotV.count() == base.where(col("v") === 3).count())
     // vacuum drops the expired version's stats sidecar with it
     VersionedTable.commit(base.limit(10), root)
@@ -367,11 +369,12 @@ class VersionedTableSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).sorted.toSeq == (0L until 8000L))
     // and the needle still skips files through the REBUILT sidecar
     val picked = VersionedTable.prunedPaths(spark, root, v1,
-      "k", 2100d, 2900d)
+      Seq(("k", 2100d, 2900d)))
     assert(picked.size < all,
       s"compacted table lost data skipping: ${picked.size} of $all")
-    val got = VersionedTable.readPruned(spark, root, v1, "k",
-      2100d, 2900d).collect().map(_.getLong(0)).sorted
+    val got = VersionedTable.readWhereVersion(spark, root, v1,
+      col("k").cast("double").between(2100d, 2900d))
+      .collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (2100L to 2900L))
   }
 
@@ -390,17 +393,19 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.dataFileCount(spark, root, v2) == 6)
     // a needle inside the SECOND batch prunes to that batch's files
     val picked = VersionedTable.prunedPaths(spark, root, v2,
-      "k", 1200d, 1300d)
+      Seq(("k", 1200d, 1300d)))
     assert(picked.size <= 2,
       s"append-chain pruning must stay delta-tight: ${picked.size}")
-    val got = VersionedTable.readPruned(spark, root, v2, "k",
-      1200d, 1300d).collect().map(_.getLong(0)).sorted
+    val got = VersionedTable.readWhereVersion(spark, root, v2,
+      col("k").cast("double").between(1200d, 1300d))
+      .collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (1200L to 1300L))
     // a stats-less append leaves its files UN-covered: they must
     // always be read, never silently dropped
     val v3 = VersionedTable.commitAppend(ranged(3000, 4000), root)
-    val got3 = VersionedTable.readPruned(spark, root, v3, "k",
-      3500d, 3600d).collect().map(_.getLong(0)).sorted
+    val got3 = VersionedTable.readWhereVersion(spark, root, v3,
+      col("k").cast("double").between(3500d, 3600d))
+      .collect().map(_.getLong(0)).sorted
     assert(got3.toSeq == (3500L to 3600L),
       "uncovered appended files must stay visible to pruned reads")
     assert(v0 == 0L && v1 == 1L && v2 == 2L && v3 == 3L)
@@ -474,8 +479,9 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(both.size <= math.min(onX.size, onY.size))
     // and the scan through the public API loses no rows vs the
     // exact two-predicate filter
-    val got = VersionedTable.readPruned(spark, root, v, Seq(
-      ("x", 100d, 160d), ("y", 100d, 160d))).count()
+    val got = VersionedTable.readWhereVersion(spark, root, v,
+      col("x").cast("double").between(100d, 160d) &&
+        col("y").cast("double").between(100d, 160d)).count()
     val want = pts.where(col("x").between(100, 160) &&
       col("y").between(100, 160)).count()
     assert(got == want, s"conjunction pruned scan lost rows: $got/$want")
@@ -504,8 +510,9 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(onX.size < all, s"x-band must still skip: ${onX.size} of $all")
     assert(onY.size < all, s"y-band must still skip: ${onY.size} of $all")
     // and no row is lost vs the exact filter
-    val got = VersionedTable.readPruned(spark, root, v1, Seq(
-      ("x", 100d, 160d), ("y", 100d, 160d))).count()
+    val got = VersionedTable.readWhereVersion(spark, root, v1,
+      col("x").cast("double").between(100d, 160d) &&
+        col("y").cast("double").between(100d, 160d)).count()
     val want = pts.where(col("x").between(100, 160) &&
       col("y").between(100, 160)).count()
     assert(got == want, s"compacted Z scan lost rows: $got/$want")
@@ -527,7 +534,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.readVersion(spark, root, v1).count() == 4000L)
     val all = VersionedTable.dataFileCount(spark, root, v1)
     val picked = VersionedTable.prunedPaths(spark, root, v1,
-      "k", 100d, 400d)
+      Seq(("k", 100d, 400d)))
     assert(picked.size < all,
       s"degenerate-dim fallback lost skipping: ${picked.size} of $all")
     // the policy hook must take the clustering-preserving path when a
@@ -541,7 +548,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(v3.isDefined)
     val all3 = VersionedTable.dataFileCount(spark, root, v3.get)
     val picked3 = VersionedTable.prunedPaths(spark, root, v3.get,
-      "k", 100d, 400d)
+      Seq(("k", 100d, 400d)))
     assert(picked3.size < all3,
       s"policy-hook compaction destroyed skipping: ${picked3.size}/$all3")
     // a TWO-dimension sidecar must route through the Z rewrite: after
@@ -588,14 +595,15 @@ class VersionedTableSpec extends AnyFunSuite {
     doctored.toDF("path", "mn_k", "mx_k").coalesce(1)
       .write.mode("overwrite").parquet(sd)
     val picked = VersionedTable.prunedPaths(spark, root, v,
-      "k", 0d, 1e12)
+      Seq(("k", 0d, 1e12)))
     // every file exactly once, every returned path really exists
     assert(picked.size == picked.distinct.size,
       "a path must never be returned twice")
     assert(picked.size == 8, s"all 8 covered files kept: ${picked.size}")
     assert(!picked.exists(_.contains("nonexistent")),
       "a sidecar row must never inject a path the listing lacks")
-    val got = VersionedTable.readPruned(spark, root, v, "k", 2100d, 2900d)
+    val got = VersionedTable.readWhereVersion(spark, root, v,
+        col("k").cast("double").between(2100d, 2900d))
       .collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (2100L to 2900L),
       "doctored sidecar must not change scan results")
@@ -615,8 +623,8 @@ class VersionedTableSpec extends AnyFunSuite {
         val v = VersionedTable.commitWithStats(
           df.repartitionByRange(4, col("k")).sortWithinPartitions("k"),
           root, statsCols = Seq("k"))
-        val got = VersionedTable.readPruned(spark, root, v,
-          "k", 0d, n.toDouble).count()
+        val got = VersionedTable.readWhereVersion(spark, root, v,
+          col("k").cast("double").between(0d, n.toDouble)).count()
         assert(got == n, s"$name read $got of $n rows")
       }
     }
@@ -670,14 +678,14 @@ class VersionedTableSpec extends AnyFunSuite {
       "k", Seq(1234L))
     assert(kept.nonEmpty && kept.size <= 4,
       s"bloom admitted ${kept.size} of $allFiles files")
-    val got = VersionedTable.readPointLookup(spark, root, v,
-        "k", Seq(7L, 1234L, 3999L))
+    val got = VersionedTable.readWhereVersion(spark, root, v,
+        col("k").isin(7L, 1234L, 3999L))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((7L, 70L), (1234L, 12340L), (3999L, 39990L)))
     // a key outside the domain: every file may be bloom-rejected —
     // the lookup is empty, never an error
-    assert(VersionedTable.readPointLookup(spark, root, v,
-      "k", Seq(999999L)).count() == 0L)
+    assert(VersionedTable.readWhereVersion(spark, root, v,
+      col("k").isin(999999L)).count() == 0L)
     // conservative fallbacks: un-bloomed column and un-bloomed commit
     // both fall back to the full listing
     assert(VersionedTable.bloomPrunedPaths(spark, root, v,
@@ -724,8 +732,11 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq(("cat", "banana", "banana")))
     assert(kept.size < allFiles,
       s"string stats kept ${kept.size} of $allFiles files")
-    val got = VersionedTable.readPrunedString(spark, root, v,
-      Seq(("cat", "banana", "banana")))
+    // a string `between` prunes on BOTH ends, like the explicit range
+    assert(VersionedTable.prunedPathsWhere(spark, root, v,
+      col("cat").between("banana", "banana")) == kept)
+    val got = VersionedTable.readWhereVersion(spark, root, v,
+      col("cat").between("banana", "banana"))
     assert(got.count() == 100L)
     assert(got.select("cat").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("banana"))
@@ -748,8 +759,8 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(!names.contains("_graft_bloom_v0") && !names.contains("v0"))
     assert(names.contains("_graft_bloom_v1"))
     // the survivor still prunes
-    assert(VersionedTable.readPointLookup(spark, root, v1,
-      "k", Seq(150L)).count() == 1L)
+    assert(VersionedTable.readWhereVersion(spark, root, v1,
+      col("k").isin(150L)).count() == 1L)
   }
 
   test("named refs: tags are immutable, branches move, vacuum " +
@@ -882,8 +893,8 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq(7L, 1100L))
     assert(paths.size < all / 2,
       s"bloom chain should skip files: ${paths.size} of $all")
-    assert(VersionedTable.readPointLookup(spark, root, v1, "k",
-      Seq(7L, 1100L)).select("k", "v").as[(Long, String)]
+    assert(VersionedTable.readWhereVersion(spark, root, v1,
+      col("k").isin(7L, 1100L)).select("k", "v").as[(Long, String)]
       .collect().toSeq.sorted == Seq((7L, "r7"), (1100L, "d1100")))
     // readWhere routes the same probes through the merged sidecar
     assert(VersionedTable.readWhere(spark, root,
@@ -1038,7 +1049,8 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.commitAppendWithStats(
       Seq((10L, "r10-new")).toDF("k", "v"), root, statsCols = Seq("k"))
     val v = VersionedTable.latestVersion(spark, root).get
-    val got = VersionedTable.readPruned(spark, root, v, "k", 1d, 25d)
+    val got = VersionedTable.readWhereVersion(spark, root, v,
+        col("k").cast("double").between(1d, 25d))
       .select("k", "v").as[(Long, String)].collect().toSeq.sorted
     val want = ((1L to 25L).filterNot(Set(10L, 20L))
       .map(k => (k, s"r$k")) :+ (10L, "r10-new")).sorted
