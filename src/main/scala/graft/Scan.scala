@@ -4,6 +4,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types._
 
 import graft.config.ScanConfig
@@ -27,11 +28,13 @@ final case class TableScanResult(
 /** End-to-end scan orchestration (whiteRRabbit.R:218-480).
   *
   * Pipeline per table: fast row count → all-string read → row cap
-  * (sample/head) → type promotion → optional date shift → column
-  * exclusion → profile + frequency. Unlike the reference's sequential
-  * per-file loop (whiteRRabbit.R:450-464), folders are scanned with the
-  * per-file Spark jobs submitted concurrently from driver threads —
-  * files share the cluster instead of queueing behind each other.
+  * (sample/head) → one value histogram of the capped sample → type
+  * promotion → optional date shift → column exclusion → profile +
+  * frequency, both read off the histogram. Unlike the reference's
+  * sequential per-file loop (whiteRRabbit.R:450-464), folders are
+  * scanned with the per-file Spark jobs submitted concurrently from
+  * driver threads — files share the cluster instead of queueing
+  * behind each other.
   */
 object Scan {
 
@@ -48,6 +51,32 @@ object Scan {
     * files the raw line count including the header (the reference's
     * N_rows quirk, whiteRRabbit.R:222 vs :439); pass the row count for
     * headerless sources like parquet.
+    *
+    * Histogram-first plan: every number of the report is a function
+    * of the capped sample's raw histogram H, (column, raw value) →
+    * count, except the row count, the NULL/"" counts and the moments,
+    * which one per-cell counters pass computes. Per table:
+    *   1. the counters pass ([[Profile.counterAggs]] with the numeric
+    *      parse of every string column, so a promoted column's moments
+    *      are the same aggregate over the same values as over the
+    *      promoted column) and the fill of H run concurrently — on a
+    *      capped sample (one partition) each is one Spark job;
+    *   2. H is persisted with each distinct raw value's numeric and
+    *      date parse ([[TypeInference.parsed]]), so the parse cascade
+    *      runs once per distinct (column, value) rather than per cell
+    *      per consumer; the inference votes are weighted sums over H
+    *      and are what fills it;
+    *   3. H re-keyed by the decisions and regrouped ("1" and "1.0"
+    *      merge) is the typed histogram T ([[typedHistogram]]); the
+    *      profile's distinct counts, quartiles and date stats
+    *      ([[Profile.statsOf]]) and the frequency table
+    *      ([[Frequency.topK]]) both read T, concurrently;
+    *   4. H is released, blocking, before returning — on failure too.
+    * No step re-reads the source or re-draws the sample after step 1,
+    * except with `shiftDates` (the shifted date columns are melted
+    * per cell, since each row draws its own shift) and with
+    * `exactQuantiles = false` (the sketch summary reads the promoted
+    * sample).
     */
   def scanTable(spark: SparkSession, df0: DataFrame, name: String,
       totalRows: Long, config: ScanConfig): TableScanResult = {
@@ -58,67 +87,154 @@ object Scan {
     // only widens the sampling margin — the survivor check stays exact
     val capped = Sampling.cap(df0, config.maxRows, config.randomSample,
       config.seed, totalRows = Some(totalRows))
-    val (promoted, inference) = TypeInference.inferAndPromote(capped)
-    val typed =
-      if (config.shiftDates) DateShift.shiftDates(promoted, config.seed)
-      else promoted
+    val fields = capped.schema.fields
+    val strIdx = fields.indices.filter(fields(_).dataType == StringType)
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val countersF = onPool(spark) {
+      if (!config.exactQuantiles) None
+      else {
+        val aggs = Profile.counterAggs(fields, stringMoments = true)
+        Some(capped.agg(aggs.head, aggs.tail: _*).head())
+      }
+    }
+    val h = TypeInference.parsed(
+      Profile.regroup(Profile.melt(capped, fields.indices, raw = true)),
+      strIdx).persist()
+    try {
+      val votes = TypeInference.votes(h, strIdx)
+      val inference = strIdx.map(i =>
+        fields(i).name -> TypeInference.decide(votes.get(i), 0.8)).toMap
+      val promoted = TypeInference.promote(capped, inference)
+      val typed =
+        if (config.shiftDates) DateShift.shiftDates(promoted, config.seed)
+        else promoted
+      val typedFields = typed.schema.fields
+      val t = typedHistogram(h, typed, inference, config.shiftDates)
 
-    // all-empty census runs on the full column set (ref :294-303) ...
-    val fullSummary = Profile.summarize(
-      typed, config.exactQuantiles, config.quantileAccuracy)
-    // ... while summaries/frequencies run on the post-exclusion set
-    // (ref :304-309).
-    val excluded = config.excludeCols.toSet
-    val profiled =
-      if (excluded.isEmpty) typed
-      else typed.drop(config.excludeCols: _*)
+      // summaries/frequencies run on the post-exclusion set (ref
+      // :304-309), the frequency table without date columns (ref :331)
+      val excluded = config.excludeCols.toSet
+      val freqIdx = typedFields.indices.filterNot(i =>
+        excluded.contains(typedFields(i).name) ||
+          Profile.isDateLike(typedFields(i).dataType))
+      val freqF = onPool(spark) {
+        if (config.scanFieldValues && freqIdx.nonEmpty)
+          Some(Frequency.asReference(Frequency.topK(
+            t.where(col("i").isin(freqIdx: _*)), typedFields,
+            config.minCellCount, config.maxDistinctValues)).collect())
+        else None
+      }
 
-    // Materialize both report sheets ONCE, here (optimization r18,
-    // guide §1.2 "don't compute things twice" / §2.6): summary and
-    // frequency are REPORT-sized by construction (one row per column;
-    // top-maxDistinctValues per column), yet every sink used to
-    // recompute their full Spark pipelines per write — the TSV,
-    // workbook and xlsx sinks each re-ran the profile and frequency
-    // jobs (3x each), plus per-sink `freq.isEmpty` actions. Collecting
-    // once and re-wrapping as local relations makes every downstream
-    // write/read a driver-local operation, and — because scanFolder
-    // runs scanFile in parallel futures — moves ALL of a folder's
-    // profile compute into the concurrently-scheduled per-file jobs.
-    // The collected rows also answer nRowsChecked/nFieldsEmpty, which
-    // used to be one more separate collect of the same aggregate.
-    val summaryRows = fullSummary.collect()
-    val nRowsChecked =
-      if (summaryRows.nonEmpty) summaryRows.head.getAs[Long]("total_count")
-      else 0L
-    val nFieldsEmpty =
-      summaryRows.count(_.getAs[Long]("non_missing") == 0L).toLong
-    val keptRows =
-      if (excluded.isEmpty) summaryRows
-      else summaryRows.filterNot(r =>
+      // the all-empty census runs on the full column set (ref :294-303)
+      val fullSummary = Await.result(countersF, Duration.Inf) match {
+        case None => Profile.summarize(typed, exactQuantiles = false,
+          config.quantileAccuracy)
+        case Some(counters) =>
+          val total = counters.getAs[Long]("total")
+          val counts = fields.indices.map { i =>
+            val c = Profile.countsOf(counters, i)
+            inference.get(fields(i).name) match {
+              case Some(TypeInference.NumericT) =>
+                c.copy(missing = c.missing + c.empty, empty = 0L)
+              case Some(TypeInference.DatetimeT) =>
+                c.copy(missing = total - votes(i).hits, empty = 0L)
+              case _ => c
+            }
+          }
+          Profile.summaryFrame(spark, typedFields, total, counts,
+            Profile.statsOf(t, typedFields,
+              counts.map(c => total - c.missing - c.empty)))
+      }
+
+      // Both report sheets are REPORT-sized by construction (one row
+      // per column; top-maxDistinctValues per column): collected once
+      // here and re-wrapped as local relations, every sink write is a
+      // driver-local operation (optimization r18), and — because
+      // scanFolder runs scanFile in parallel futures — all of a
+      // folder's profile compute runs in the concurrently-scheduled
+      // per-file jobs. The collected rows also answer nRowsChecked
+      // and nFieldsEmpty.
+      val summaryRows = fullSummary.collect()
+      val nRowsChecked =
+        if (summaryRows.nonEmpty) summaryRows.head.getAs[Long]("total_count")
+        else 0L
+      val nFieldsEmpty =
+        summaryRows.count(_.getAs[Long]("non_missing") == 0L).toLong
+      val keptRows = summaryRows.filterNot(r =>
         excluded.contains(r.getAs[String]("column_name")))
-    val summaryLocal = spark.createDataFrame(
-      java.util.Arrays.asList(keptRows: _*), fullSummary.schema)
+      val summaryLocal = spark.createDataFrame(
+        java.util.Arrays.asList(keptRows: _*), fullSummary.schema)
+      val freqRows = Await.result(freqF, Duration.Inf)
+        .getOrElse(Array.empty[Row])
+      val freq = spark.createDataFrame(
+        java.util.Arrays.asList(freqRows: _*), freqSchema)
 
-    val freqCols = profiled.schema.fields // ref :331 — no date freq
-      .filterNot(f => Profile.isDateLike(f.dataType))
-      .map(_.name).toSeq
-    val freqSchema = StructType(Seq(
-      StructField("Column", StringType),
-      StructField("Value", StringType),
-      StructField("Count", LongType),
-      StructField("Percentage", DoubleType)))
-    val freq =
-      if (config.scanFieldValues && freqCols.nonEmpty) {
-        val f = Frequency.referenceFrequencies(profiled, freqCols,
-          config.minCellCount, config.maxDistinctValues)
-        spark.createDataFrame(
-          java.util.Arrays.asList(f.collect(): _*), f.schema)
-      } else
-        spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), freqSchema)
+      TableScanResult(name, totalRows, nRowsChecked, nFields, nFieldsEmpty,
+        summaryLocal, freq, inference)
+    } finally h.unpersist(blocking = true)
+  }
 
-    TableScanResult(name, totalRows, nRowsChecked, nFields, nFieldsEmpty,
-      summaryLocal, freq, inference)
+  private val freqSchema: StructType = StructType(Seq(
+    StructField("Column", StringType),
+    StructField("Value", StringType),
+    StructField("Count", LongType),
+    StructField("Percentage", DoubleType)))
+
+  /** The typed histogram T of `typed` from the capped sample's parsed
+    * raw histogram `h` ((i, vs, vn, cnt, us_lo, us_hi, num, dt) rows):
+    * each string column's raw keys re-keyed by its decision — numeric
+    * to the +0.0-normalized parse, datetime to the parsed epoch micros,
+    * character to the value minus "" — and non-string columns' typed
+    * keys kept, then regrouped, so T is [[Profile.valueHistogram]] of
+    * `typed` without a second pass over the cells. With `shifted`, the
+    * date-like columns of `typed` are melted per cell instead, since
+    * their shifted values are not a function of the raw value.
+    */
+  private[graft] def typedHistogram(h: DataFrame, typed: DataFrame,
+      inference: Map[String, TypeInference.InferredType],
+      shifted: Boolean): DataFrame = {
+    val fields = typed.schema.fields
+    def decided(t: TypeInference.InferredType) =
+      fields.indices.filter(i => inference.get(fields(i).name).contains(t))
+    val (num, date, chr) = (decided(TypeInference.NumericT),
+      decided(TypeInference.DatetimeT), decided(TypeInference.CharacterT))
+    val i = col("i")
+    val us = when(i.isin(date: _*), col("dt"))
+    val rekeyed = h.select(i,
+      when(i.isin(chr: _*), when(col("vs") =!= lit(""), col("vs")))
+        .when(i.isin(num ++ date: _*), lit(null).cast(StringType))
+        .otherwise(col("vs")).as("vs"),
+      when(i.isin(num: _*), col("num") + lit(0.0))
+        .when(i.isin(date: _*), col("dt").cast(DoubleType))
+        .otherwise(col("vn")).as("vn"),
+      col("cnt"),
+      us.otherwise(col("us_lo")).as("us_lo"),
+      us.otherwise(col("us_hi")).as("us_hi"))
+      .where(col("vs").isNotNull || col("vn").isNotNull)
+    val dateLike =
+      fields.indices.filter(j => Profile.isDateLike(fields(j).dataType))
+    Profile.regroup(
+      if (!shifted || dateLike.isEmpty) rekeyed
+      else rekeyed.where(!i.isin(dateLike: _*))
+        .unionByName(Profile.melt(typed, dateLike, raw = false)))
+  }
+
+  /** `body` on a driver pool thread carrying the caller's job group
+    * and description, so its jobs are attributed (and cancelled) with
+    * the caller's.
+    */
+  private def onPool[T](spark: SparkSession)(body: => T)(
+      implicit ec: ExecutionContext): Future[T] = {
+    val sc = spark.sparkContext
+    val keys = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel", "spark.job.tags")
+    val caller = keys.map(k => k -> sc.getLocalProperty(k))
+    Future {
+      val saved = keys.map(k => k -> sc.getLocalProperty(k))
+      caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body
+      finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
   }
 
   /** Scan every matching file in config.workingFolder, files in
@@ -130,7 +246,7 @@ object Scan {
       : Seq[TableScanResult] = {
     val files = DelimitedSource.listFiles(
       spark, config.workingFolder, config.filePattern)
-    val futures = files.map(f => Future(scanFile(spark, f, config)))
+    val futures = files.map(f => onPool(spark)(scanFile(spark, f, config)))
     Await.result(Future.sequence(futures), Duration.Inf)
   }
 

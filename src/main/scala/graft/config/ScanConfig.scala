@@ -26,8 +26,10 @@ package graft.config
   *   - exactQuantiles: the reference computes exact quantiles in memory
   *     (whiteRRabbit.R:365-372). The exact default computes exact
   *     distinct counts and type-7 quantiles from the per-column value
-  *     histogram (no value buffering — Profile.histogramStats).
-  *     exactQuantiles=false switches the profile to
+  *     histogram (no value buffering — Profile.statsOf; in a scan, the
+  *     capped sample's histogram that inference and the frequency
+  *     table also read, Scan.scanTable).
+  *     exactQuantiles=false switches the summary sheet to
   *     Profile.summarizeApprox, whose state stays constant-size even for
   *     columns whose histogram would approach the row count, under an
   *     error contract instead of exactness: distinct counts are HLL++

@@ -150,7 +150,8 @@ object Dedup {
       .where(size(col("ids")) > 1)
     val cap = maxLshBucket
     val smallPairs = bucketed.where(size(col("ids")) <= cap)
-      .select(explode(pairsOf(array_sort(col("ids")))).as("p"))
+      .select(array_sort(col("ids")).as("ids"))
+      .select(explode(pairsOf(col("ids"))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
     val cells = bucketed.where(size(col("ids")) > cap)
       .select(k ++ Seq(
@@ -161,7 +162,8 @@ object Dedup {
       .agg(collect_list(col("id")).as("cids"))
     val withinPairs = cells
       .where(size(col("cids")) > 1)
-      .select(explode(pairsOf(array_sort(col("cids")))).as("p"))
+      .select(array_sort(col("cids")).as("cids"))
+      .select(explode(pairsOf(col("cids"))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
     val crossPairs = cells
       .select(k ++ Seq(col("cell").as("ca"), col("cids").as("ia")): _*)
@@ -264,7 +266,12 @@ object Dedup {
     batch.join(dup, Seq(idCol), "left_anti")
   }
 
-  /** All ordered pairs (a < b) of a sorted id array, as structs. */
+  /** All ordered pairs (a < b) of a sorted id array, as structs.
+    * `ids` is referenced inside the lambdas, so it must be a bound
+    * column, not an expression: higher-order functions run
+    * interpreted and would re-evaluate it (an `array_sort`, say) for
+    * every emitted pair.
+    */
   private def pairsOf(ids: Column): Column =
     flatten(transform(sequence(lit(0), size(ids) - 2), i =>
       transform(slice(ids, i + lit(2), size(ids)),

@@ -25,8 +25,10 @@ import org.apache.spark.sql.types._
   *  reference loops column-by-column), the counts are the profile's
   *  value histogram ([[Profile.valueHistogram]]): all requested columns
   *  melted into (column, value) keys and aggregated in a SINGLE shuffle
-  *  with map-side partial aggregation. The top-K rank is a second, much
-  *  smaller shuffle over the already-thresholded counts. The
+  *  with map-side partial aggregation — or, in a scan, the typed
+  *  histogram the profile already reads, with no melt of its own
+  *  ([[topK]]). The top-K rank is a second, much smaller shuffle over
+  *  the already-thresholded counts. The
   *  min_cell_count filter runs before the rank window, so the window
   *  partition for a column holds only values with ≥ minCellCount
   *  occurrences — at 100 TB the long tail (the dangerous part of a
@@ -34,7 +36,8 @@ import org.apache.spark.sql.types._
   */
 object Frequency {
 
-  /** Frequency table for the given columns of `df`.
+  /** Frequency table for the given columns of `df`: the top-K
+    * ([[topK]]) of their value histogram ([[Profile.valueHistogram]]).
     * Output: (col_name string, value string, cnt long, pct double),
     * ordered (col_name, cnt DESC, value).
     */
@@ -48,19 +51,33 @@ object Frequency {
     val use = cols.map(df.schema.fieldIndex) // ref :331 — no date freq
       .filterNot(i => Profile.isDateLike(fields(i).dataType))
     require(use.nonEmpty, "frequencies: only date columns requested")
+    topK(Profile.valueHistogram(df, use), fields, minCellCount,
+      maxDistinctValues)
+  }
 
+  /** The thresholded top-K frequency table of a typed value histogram
+    * `hist` ((i, vs, vn, cnt) rows of non-date columns, as
+    * [[Profile.valueHistogram]] builds them) whose column i is
+    * `fields(i)`. Same output as [[frequencies]].
+    */
+  private[graft] def topK(
+      hist: DataFrame,
+      fields: Array[StructField],
+      minCellCount: Long,
+      maxDistinctValues: Int): DataFrame = {
     // Render each histogram key as the reference's value string. Floating
     // columns are keyed by their (+0.0-normalized) double; every other
     // key already is cast(string). Rendering is injective on the keys,
     // so each rendered value keeps its own count.
-    def floating(dt: DataType) = use.filter(fields(_).dataType == dt)
+    def floating(dt: DataType) =
+      fields.indices.filter(fields(_).dataType == dt)
     val value =
       when(col("i").isin(floating(FloatType): _*),
         renderValue(col("vn").cast(FloatType), FloatType))
         .when(col("i").isin(floating(DoubleType): _*),
           renderValue(col("vn"), DoubleType))
         .otherwise(col("vs"))
-    val counts = Profile.valueHistogram(df, use)
+    val counts = hist
       .where(col("cnt") >= lit(minCellCount))
       .select(element_at(typedLit(fields.map(_.name)), col("i") + 1)
         .as("col_name"), value.as("value"), col("cnt"))
@@ -179,7 +196,11 @@ object Frequency {
       cols: Seq[String],
       minCellCount: Long = 5L,
       maxDistinctValues: Int = 1000): DataFrame =
-    frequencies(df, cols, minCellCount, maxDistinctValues).select(
+    asReference(frequencies(df, cols, minCellCount, maxDistinctValues))
+
+  /** A frequency table under the reference's column names. */
+  private[graft] def asReference(freq: DataFrame): DataFrame =
+    freq.select(
       col("col_name").as("Column"),
       col("value").as("Value"),
       col("cnt").as("Count"),

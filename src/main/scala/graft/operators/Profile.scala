@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Per-column profile statistics — the reference's core product.
@@ -100,20 +101,19 @@ object Profile {
     *   date stats: earliest/latest/median epoch-microseconds (median may
     *     interpolate between two instants, whiteRRabbit.R:389-398).
     *
-    * Plan shape: the counters job first, then the histogram pipeline —
-    * 9 Spark jobs on a scan_large table. The counters job computes
-    * counters + moments for all columns in one codegen'd `agg()`, and
-    * nothing with a heavy object buffer rides in it (a mixed
-    * declarative/object aggregate forces the whole plan onto
-    * ObjectHashAggregate, measured 2x slower than the jobs run apart;
-    * N `countDistinct`s in one agg would plan an `Expand` that
-    * multiplies every row N-fold, measured 10x). Its one row gives each
-    * column's non-missing count and rank base as driver constants. The
-    * histogram pipeline ([[histogramRanked]]) melts the columns into
-    * the value histogram and derives BOTH the exact distinct counts AND
-    * the exact type-7 quantiles from it ([[histogramStats]]) — fully
-    * distributed hash aggregation, no per-group value buffering
-    * anywhere in the exact path.
+    * Plan shape: the counters job, then the value histogram's stats
+    * ([[histogramStats]]) — on a table whose histogram fits the
+    * driver walk, 2 Spark jobs plus the histogram's exchange. The
+    * counters job computes counters + moments for all columns in one
+    * codegen'd `agg()`, and nothing with a heavy object buffer rides
+    * in it (a mixed declarative/object aggregate forces the whole plan
+    * onto ObjectHashAggregate, measured 2x slower than the jobs run
+    * apart; N `countDistinct`s in one agg would plan an `Expand` that
+    * multiplies every row N-fold, measured 10x). Its one row gives
+    * each column's non-missing count. The value histogram answers the
+    * exact distinct counts, the exact type-7 quantiles and the date
+    * range — fully distributed hash aggregation, no per-group value
+    * buffering anywhere in the exact path.
     *
     * Deliberately NOT [[widened]]: the histogram melt redistributes at
     * its own exchange already, and the measured effect of a
@@ -133,101 +133,246 @@ object Profile {
     else {
       val fields = df.schema.fields
       require(fields.nonEmpty, "cannot profile a zero-column DataFrame")
-      val aggs = scala.collection.mutable.ArrayBuffer[Column](
-        count(lit(1)).as("total"))
-      fields.zipWithIndex.foreach { case (f, i) =>
-        val c = col(f.name)
-        aggs += count(when(c.isNull, lit(1))).as(s"m_$i")
-        f.dataType match {
-          case StringType =>
-            aggs += count(when(c === lit(""), lit(1))).as(s"e_$i")
-          case t if isNum(t) =>
-            val cd = c.cast(DoubleType)
-            aggs += min(cd).as(s"mn_$i")
-            aggs += max(cd).as(s"mx_$i")
-            aggs += avg(cd).as(s"av_$i")
-            aggs += stddev_samp(cd).as(s"sd_$i")
-          case t if isDateLike(t) =>
-            val us = epochMicros(c, t)
-            aggs += min(us).as(s"tn_$i")
-            aggs += max(us).as(s"tx_$i")
-          case _ => ()
-        }
-      }
-      val counters = df.agg(aggs.head, aggs.tail.toSeq: _*).head()
-      val nonMissing = fields.indices.map { i =>
-        counters.getAs[Long]("total") - counters.getAs[Long](s"m_$i") -
-          emptyCount(counters, fields(i), i)
-      }
-      reshapeRows(df, counters, histogramStats(df, nonMissing))
+      val aggs = counterAggs(fields, stringMoments = false)
+      val counters = df.agg(aggs.head, aggs.tail: _*).head()
+      val counts = fields.indices.map(countsOf(counters, _))
+      val total = counters.getAs[Long]("total")
+      summaryFrame(df.sparkSession, fields, total, counts,
+        histogramStats(df, counts.map(c => total - c.missing - c.empty)))
     }
 
-  private def emptyCount(counters: Row, f: StructField, i: Int): Long =
-    if (f.dataType == StringType) counters.getAs[Long](s"e_$i") else 0L
-
-  /** The one value melt of the profile layer: columns `idx` of `df` as
-    * (i, vs, vn) keys — i the field index — with their multiplicities
-    * `cnt`. The exact profile (distinct counts, quartiles), the
-    * frequency table ([[Frequency.frequencies]]) and [[approxContract]]'s
-    * exact distinct counts all read it. NULLs, and "" in string
-    * columns, are dropped (whiteRRabbit.R:320-327). Only the `idx`
-    * columns are projected, so the plan prunes the others (a frequency
-    * table over non-date columns never parses dates).
+  /** The counters row's aggregates: the row count `total`, and per
+    * column i its NULL count `m_i`, its "" count `e_i` (string columns)
+    * and the moments `mn_i`/`mx_i`/`av_i`/`sd_i` of its numeric value.
+    * A numeric column's value is its double cast; with `stringMoments`
+    * a string column's is [[TypeInference.numericParse]], so the
+    * moments of a column promoted to numeric come from the raw column
+    * in one pass before the decision — the same aggregate over the
+    * same values in the same order as over the promoted column.
     */
-  private[graft] def valueHistogram(df: DataFrame,
-      idx: Seq[Int]): DataFrame = {
+  private[graft] def counterAggs(fields: Array[StructField],
+      stringMoments: Boolean): Seq[Column] =
+    count(lit(1)).as("total") +: fields.toSeq.zipWithIndex.flatMap {
+      case (f, i) =>
+        val c = col(f.name)
+        val value = f.dataType match {
+          case StringType if stringMoments =>
+            Some(TypeInference.numericParse(f.name))
+          case t if isNum(t) => Some(c.cast(DoubleType))
+          case _ => None
+        }
+        Seq(count(when(c.isNull, lit(1))).as(s"m_$i")) ++
+          (if (f.dataType == StringType)
+            Seq(count(when(c === lit(""), lit(1))).as(s"e_$i"))
+          else Nil) ++
+          value.toSeq.flatMap(v => Seq(min(v).as(s"mn_$i"),
+            max(v).as(s"mx_$i"), avg(v).as(s"av_$i"),
+            stddev_samp(v).as(s"sd_$i")))
+    }
+
+  /** One column's counters, read off the counters row: NULL and ""
+    * counts and the boxed moments (min, max, mean, sd), empty when the
+    * row has none for the column.
+    */
+  private[graft] final case class ColCounts(missing: Long, empty: Long,
+      moments: Seq[java.lang.Double])
+
+  private[graft] def countsOf(counters: Row, i: Int): ColCounts = {
+    def has(n: String) = counters.schema.fieldNames.contains(n)
+    def d(n: String): java.lang.Double =
+      if (counters.isNullAt(counters.fieldIndex(n))) null
+      else Double.box(counters.getAs[Double](n))
+    ColCounts(counters.getAs[Long](s"m_$i"),
+      if (has(s"e_$i")) counters.getAs[Long](s"e_$i") else 0L,
+      if (has(s"mn_$i")) Seq("mn", "mx", "av", "sd").map(m => d(s"${m}_$i"))
+      else Nil)
+  }
+
+  /** Columns `idx` of `df` melted to one row per cell: (i, vs, vn, cnt,
+    * us_lo, us_hi) with i the field index, cnt = 1 and the keys
+    *   - string: vs the value; with `raw` as written, else NULL for ""
+    *     (whiteRRabbit.R:320-327);
+    *   - float/double: vn the +0.0-normalized double (-0.0 and 0.0
+    *     collapse like numeric DISTINCT does);
+    *   - integral/decimal: vs the string identity (keeps DISTINCT exact
+    *     past 2^53) and vn the double cast ranks use (a duplicate vn
+    *     under distinct vs only reorders equal rank values);
+    *   - date-like: vn the epoch micros as a double, and us_lo/us_hi
+    *     the exact Long micros, since a double rounds beyond 2^53 µs;
+    *   - other: vs the string cast.
+    * Without `raw`, cells with no key (NULL, "") are dropped.
+    */
+  private[graft] def melt(df: DataFrame, idx: Seq[Int],
+      raw: Boolean): DataFrame = {
     val fields = df.schema.fields
     val nullS = lit(null).cast(StringType)
     val nullD = lit(null).cast(DoubleType)
+    val nullL = lit(null).cast(LongType)
     val kvs = idx.map { i =>
       val c = col(fields(i).name)
-      val (vs, vn) = fields(i).dataType match {
-        case StringType => (when(c =!= lit(""), c), nullD)
-        // +0.0 collapses -0.0/0.0 like numeric DISTINCT does
-        case FloatType | DoubleType => (nullS, c.cast(DoubleType) + lit(0.0))
-        // integral/decimal: the string identity keeps DISTINCT exact
-        // past 2^53 while ranks use the same double cast the old
-        // percentile(cast double) applied; duplicate vn under
-        // distinct vs only reorders equal rank values
-        case t if isNum(t) => (c.cast(StringType), c.cast(DoubleType))
-        case t if isDateLike(t) => (nullS, epochMicros(c, t).cast(DoubleType))
-        case _ => (c.cast(StringType), nullD)
+      val (vs, vn, us) = fields(i).dataType match {
+        case StringType =>
+          (if (raw) c else when(c =!= lit(""), c), nullD, nullL)
+        case FloatType | DoubleType =>
+          (nullS, c.cast(DoubleType) + lit(0.0), nullL)
+        case t if isNum(t) => (c.cast(StringType), c.cast(DoubleType), nullL)
+        case t if isDateLike(t) =>
+          val u = epochMicros(c, t)
+          (nullS, u.cast(DoubleType), u)
+        case _ => (c.cast(StringType), nullD, nullL)
       }
-      struct(lit(i).as("i"), vs.as("vs"), vn.as("vn"))
+      struct(lit(i).as("i"), vs.as("vs"), vn.as("vn"), us.as("us"))
     }
-    df.select(explode(array(kvs: _*)).as("kv"))
+    val cells = df.select(explode(array(kvs: _*)).as("kv"))
       .select(col("kv.i").as("i"), col("kv.vs").as("vs"),
-        col("kv.vn").as("vn"))
-      .where(col("vs").isNotNull || col("vn").isNotNull)
-      .groupBy("i", "vs", "vn")
-      .agg(count(lit(1)).as("cnt"))
+        col("kv.vn").as("vn"), lit(1L).as("cnt"), col("kv.us").as("us_lo"),
+        col("kv.us").as("us_hi"))
+    if (raw) cells
+    else cells.where(col("vs").isNotNull || col("vn").isNotNull)
   }
 
-  /** Per-column stats derived from the value histogram. */
+  /** Sum melted or histogram rows by their (i, vs, vn) key: counts add,
+    * the exact date range widens.
+    */
+  private[graft] def regroup(rows: DataFrame): DataFrame =
+    rows.groupBy("i", "vs", "vn").agg(sum(col("cnt")).as("cnt"),
+      min(col("us_lo")).as("us_lo"), max(col("us_hi")).as("us_hi"))
+
+  /** The value histogram of columns `idx` of `df`: (i, vs, vn) keys
+    * ([[melt]]) with their multiplicities `cnt` and exact date range
+    * (us_lo, us_hi). The exact profile (distinct counts, quartiles,
+    * date range), the frequency table ([[Frequency.frequencies]]) and
+    * [[approxContract]]'s exact distinct counts all read it. NULLs,
+    * and "" in string columns, are dropped (whiteRRabbit.R:320-327).
+    * Only the `idx` columns are projected, so the plan prunes the
+    * others (a frequency table over non-date columns never parses
+    * dates).
+    */
+  private[graft] def valueHistogram(df: DataFrame,
+      idx: Seq[Int]): DataFrame =
+    regroup(melt(df, idx, raw = false))
+
+  /** Per-column stats derived from the value histogram; `tsRange` is a
+    * date-like column's exact (earliest, latest) epoch micros.
+    */
   private[graft] final case class HistStats(
       distinct: Long,
       quartiles: Option[(Double, Double, Double)],
-      tsMedianUs: Option[Double])
+      tsMedianUs: Option[Double],
+      tsRange: Option[(Long, Long)])
 
-  /** Exact distinct counts AND exact type-7 quantiles from the ranked
-    * value histogram: the quantile values are picked by rank and
-    * interpolated driver-side with the same lower+(higher-lower)·frac
-    * formula Spark's exact `percentile` uses — identical results with
-    * NO per-group value buffering and NO per-column window partition.
-    * (Exactness still costs a sorted pass over distinct values, which
-    * is why [[summarizeApprox]] (sketches) stays the recommended 100 TB
-    * default.)
-    *
-    * `nonMissing(i)` is column i's non-missing count from the counters
-    * row. Each column's histogram must hold exactly that many values —
-    * the rank bases assume it — so a mismatch fails naming the column
-    * instead of picking a wrong rank.
+  /** The exact stats of every column of `df` from its value histogram
+    * ([[statsOf]]). `nonMissing(i)` is column i's non-missing count
+    * from the counters row.
     */
   private[graft] def histogramStats(df: DataFrame,
+      nonMissing: IndexedSeq[Long]): Map[Int, HistStats] =
+    statsOf(valueHistogram(df, df.schema.fields.indices),
+      df.schema.fields, nonMissing)
+
+  /** Histograms of at most this many rows are walked on the driver:
+    * one collected row is five boxed fields (i, vn, cnt, us_lo,
+    * us_hi), ~130 bytes, so the bound holds a table's walk under
+    * ~26 MB of driver heap. Larger histograms take the distributed
+    * [[histogramRanked]] walk.
+    */
+  private val DriverWalkRows = 200000
+
+  /** Exact distinct counts, type-7 quartiles, date medians and date
+    * ranges of the columns `fields` from their typed value histogram
+    * `hist` ((i, vs, vn, cnt, us_lo, us_hi) rows, as
+    * [[valueHistogram]] builds them).
+    *
+    * A histogram of at most [[DriverWalkRows]] rows is collected in
+    * one job and walked on the driver ([[driverStats]]); a larger one
+    * runs the distributed rank walk ([[rankedStats]]). Both give the
+    * same stats, which the scan-equivalence suite pins. A histogram
+    * has at most Σ nonMissing rows; when that passes the bound, the
+    * histogram is first checkpointed locally, so the collect that
+    * finds it too large and the rank walk share one computation of
+    * it. (Not `persist`: the walk's prefix sum is only right when its
+    * two range exchanges are reused, and adaptive execution does not
+    * reuse them over a cached relation.)
+    *
+    * Each column's histogram must hold exactly `nonMissing(i)` values
+    * — the rank bases assume it — so a mismatch fails naming the
+    * column instead of picking a wrong rank.
+    */
+  private[graft] def statsOf(hist: DataFrame, fields: Array[StructField],
       nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
-    val fields = df.schema.fields
+    val mayOverflow = nonMissing.sum > DriverWalkRows
+    val h = if (mayOverflow) hist.localCheckpoint() else hist
+    try {
+      val rows = h.select("i", "vn", "cnt", "us_lo", "us_hi")
+        .limit(DriverWalkRows + 1).collect()
+      if (rows.length <= DriverWalkRows) driverStats(rows, fields, nonMissing)
+      else rankedStats(h, fields, nonMissing)
+    } finally if (mayOverflow) ColumnBridge.unpersistCheckpointed(h)
+  }
+
+  private def checkHeld(fields: Array[StructField],
+      nonMissing: IndexedSeq[Long], held: Int => Long): Unit =
+    fields.indices.foreach { i =>
+      if (held(i) != nonMissing(i))
+        throw new IllegalStateException(s"profile: column " +
+          s"'${fields(i).name}' holds ${held(i)} values in its histogram " +
+          s"but ${nonMissing(i)} non-missing values in its counters")
+    }
+
+  /** Type-7 quantile p of n ranked values, from `at`, the value at a
+    * rank: the lower+(higher-lower)·frac interpolation between ranks
+    * floor((n-1)p) and ceil((n-1)p) that Spark's exact `percentile`
+    * uses.
+    */
+  private def type7(n: Long, p: Double, at: Long => Double): Double = {
+    val h = (n - 1L) * p
+    val x0 = at(math.floor(h).toLong)
+    x0 + (at(math.ceil(h).toLong) - x0) * (h - math.floor(h))
+  }
+
+  private def histStats(dt: DataType, distinct: Long, q: Double => Double,
+      range: => (Long, Long)): HistStats =
+    HistStats(distinct,
+      if (isNum(dt)) Some((q(0.25), q(0.5), q(0.75))) else None,
+      if (isDateLike(dt)) Some(q(0.5)) else None,
+      if (isDateLike(dt)) Some(range) else None)
+
+  /** [[statsOf]] on the driver over the collected (i, vn, cnt, us_lo,
+    * us_hi) rows: each column's rows in Spark's (i, vn) order — NaN
+    * greatest, by `java.lang.Double.compare` on the +0.0-normalized
+    * keys — with each row covering the rank range [lo, lo + cnt).
+    */
+  private[graft] def driverStats(rows: Array[Row], fields: Array[StructField],
+      nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
+    val byCol = rows.groupBy(_.getInt(0))
+    checkHeld(fields, nonMissing,
+      i => byCol.get(i).fold(0L)(_.map(_.getLong(2)).sum))
+    val byVn = Ordering.fromLessThan[Double](
+      (a, b) => java.lang.Double.compare(a, b) < 0)
+    byCol.map { case (i, rs) =>
+      val dt = fields(i).dataType
+      val ranked =
+        if (isNum(dt) || isDateLike(dt)) rs.sortBy(_.getDouble(1))(byVn)
+        else rs
+      lazy val his = ranked.map(_.getLong(2)).scanLeft(0L)(_ + _).tail
+      def at(r: Long): Double = ranked(his.indexWhere(r < _)).getDouble(1)
+      i -> histStats(dt, rs.length.toLong, type7(nonMissing(i), _, at),
+        (rs.map(_.getLong(3)).min, rs.map(_.getLong(4)).max))
+    }
+  }
+
+  /** [[statsOf]] distributed: the quantile values are picked by rank
+    * from the ranked histogram ([[histogramRanked]]) and interpolated
+    * driver-side — no per-group value buffering and no per-column
+    * window partition. (Exactness still costs a sorted pass over
+    * distinct values, which is why [[summarizeApprox]] (sketches)
+    * stays the recommended 100 TB default.)
+    */
+  private[graft] def rankedStats(hist: DataFrame, fields: Array[StructField],
+      nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
+    val tags = Seq(0.25 -> "25", 0.5 -> "50", 0.75 -> "75")
     val aggs = Seq(count(lit(1)).as("dist"), sum(col("cnt")).as("held")) ++
-      Seq(0.25 -> "25", 0.5 -> "50", 0.75 -> "75").flatMap { case (p, s) =>
+      tags.flatMap { case (p, s) =>
         val h = (col("n") - lit(1L)).cast(DoubleType) * lit(p)
         val r0 = floor(h).cast(LongType)
         val r1 = ceil(h).cast(LongType)
@@ -237,38 +382,30 @@ object Profile {
           max(when(col("lo") <= r1 && r1 < col("hi"), col("vn")))
             .as(s"x1_$s"))
       }
-    val byCol = histogramRanked(df, nonMissing)
+    val byCol = histogramRanked(hist, nonMissing)
       .groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
       .map(r => r.getAs[Int]("i") -> r).toMap
-    fields.indices.flatMap { i =>
-      val held = byCol.get(i).fold(0L)(_.getAs[Long]("held"))
-      if (held != nonMissing(i))
-        throw new IllegalStateException(s"profile: column " +
-          s"'${fields(i).name}' holds $held values in its histogram but " +
-          s"${nonMissing(i)} non-missing values in its counters")
-      byCol.get(i).map { r =>
-        def interp(s: String, p: Double): Option[Double] =
-          if (r.isNullAt(r.fieldIndex(s"x0_$s"))) None
-          else {
-            val h = (nonMissing(i) - 1L) * p
-            val x0 = r.getAs[Double](s"x0_$s")
-            val x1 = r.getAs[Double](s"x1_$s")
-            Some(x0 + (x1 - x0) * (h - math.floor(h)))
-          }
-        val dt = fields(i).dataType
-        val quartiles =
-          if (isNum(dt))
-            for (a <- interp("25", 0.25); b <- interp("50", 0.5);
-                 c <- interp("75", 0.75)) yield (a, b, c)
-          else None
-        val tsMed = if (isDateLike(dt)) interp("50", 0.5) else None
-        i -> HistStats(r.getAs[Long]("dist"), quartiles, tsMed)
-      }
-    }.toMap
+    checkHeld(fields, nonMissing,
+      i => byCol.get(i).fold(0L)(_.getAs[Long]("held")))
+    val ranges =
+      if (!fields.exists(f => isDateLike(f.dataType))) Map.empty[Int, Row]
+      else hist.groupBy("i").agg(min(col("us_lo")), max(col("us_hi")))
+        .collect().map(r => r.getInt(0) -> r).toMap
+    val tag = tags.toMap
+    byCol.map { case (i, r) =>
+      // x0/x1 are the values at the floor/ceil ranks of p
+      def q(p: Double) = type7(nonMissing(i), p, rank =>
+        r.getAs[Double](
+          if (rank == math.floor((nonMissing(i) - 1L) * p).toLong)
+            s"x0_${tag(p)}"
+          else s"x1_${tag(p)}"))
+      i -> histStats(fields(i).dataType, r.getAs[Long]("dist"), q,
+        (ranges(i).getLong(1), ranges(i).getLong(2)))
+    }
   }
 
-  /** The value histogram of every column of `df` with each row's rank
-    * range [lo, hi) within its column and the column's size n, exposed
+  /** The value histogram `hist` with each row's rank range [lo, hi)
+    * within its column and the column's size n, exposed
     * (`private[graft]`) so the plan-shape suite can pin its scale
     * property: NO window partitioned by the melt key.
     *
@@ -285,12 +422,14 @@ object Profile {
     * A vn tie under distinct vs (integral identity past 2^53) only
     * reorders equal-rank values.
     */
-  private[graft] def histogramRanked(df: DataFrame,
+  private[graft] def histogramRanked(hist: DataFrame,
       nonMissing: IndexedSeq[Long]): DataFrame = {
     val nPart = math.max(1,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val global = Ranking.prefixSums(
-      valueHistogram(df, df.schema.fields.indices),
+      hist.sparkSession.sessionState.conf.numShufflePartitions)
+    // only the columns both prefix-sum branches read: a column one
+    // branch prunes makes their range exchanges differ, so they are
+    // not reused, sample different bounds and misalign the offsets
+    val global = Ranking.prefixSums(hist.select("i", "vs", "vn", "cnt"),
       Seq(col("i"), col("vn"), col("vs")), Seq("cnt" -> "hig"), nPart)
     def ofColumn(perColumn: Seq[Long]): Column =
       element_at(typedLit(perColumn.toArray), col("i") + 1)
@@ -372,39 +511,31 @@ object Profile {
       java.util.Arrays.asList(rows: _*), summarySchema)
   }
 
-  /** Driver-side reshape of the exact profile: the counters row plus
-    * each column's histogram stats into one summary row per column.
+  /** Driver-side reshape of the exact profile: each column's counters
+    * and histogram stats into one summary row per column. Moments are
+    * read for numeric columns only, the date range and median for
+    * date-like ones.
     */
-  private def reshapeRows(df: DataFrame, counters: Row,
+  private[graft] def summaryFrame(spark: SparkSession,
+      fields: Array[StructField], total: Long, counts: IndexedSeq[ColCounts],
       hist: Map[Int, HistStats]): DataFrame = {
-    def d(n: String): java.lang.Double =
-      if (counters.isNullAt(counters.fieldIndex(n))) null
-      else Double.box(counters.getAs[Double](n))
-    def us(n: String): java.lang.Long =
-      if (counters.isNullAt(counters.fieldIndex(n))) null
-      else Long.box(counters.getAs[Long](n))
-    val total = counters.getAs[Long]("total")
-    val rows: Seq[Row] = df.schema.fields.zipWithIndex.toSeq.map {
-      case (f, i) =>
-        val missing = counters.getAs[Long](s"m_$i")
-        val empty = emptyCount(counters, f, i)
-        val num = isNum(f.dataType)
-        val ts = isDateLike(f.dataType)
-        val h = hist.get(i)
-        def q(pick: ((Double, Double, Double)) => Double): java.lang.Double =
-          h.flatMap(_.quartiles).map(t => Double.box(pick(t))).orNull
-        Row(f.name, rClassName(f.dataType), total, total - missing - empty,
-          missing, empty, h.fold(0L)(_.distinct),
-          if (num) d(s"mn_$i") else null, if (num) d(s"mx_$i") else null,
-          if (num) d(s"av_$i") else null, q(_._2),
-          if (num) d(s"sd_$i") else null, q(_._1), q(_._3),
-          q(t => t._3 - t._1),
-          if (ts) us(s"tn_$i") else null, if (ts) us(s"tx_$i") else null,
-          h.flatMap(_.tsMedianUs)
-            .map(m => Long.box(math.floor(m).toLong)).orNull)
+    val rows: Seq[Row] = fields.toSeq.zipWithIndex.map { case (f, i) =>
+      val c = counts(i)
+      val h = hist.get(i)
+      val Seq(mn, mx, av, sd) =
+        if (isNum(f.dataType)) c.moments else Seq.fill(4)(null)
+      def q(pick: ((Double, Double, Double)) => Double): java.lang.Double =
+        h.flatMap(_.quartiles).map(t => Double.box(pick(t))).orNull
+      def us(pick: ((Long, Long)) => Long): java.lang.Long =
+        h.flatMap(_.tsRange).map(r => Long.box(pick(r))).orNull
+      Row(f.name, rClassName(f.dataType), total,
+        total - c.missing - c.empty, c.missing, c.empty,
+        h.fold(0L)(_.distinct), mn, mx, av, q(_._2), sd, q(_._1), q(_._3),
+        q(t => t._3 - t._1), us(_._1), us(_._2),
+        h.flatMap(_.tsMedianUs)
+          .map(m => Long.box(math.floor(m).toLong)).orNull)
     }
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), summarySchema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), summarySchema)
   }
 
   /** Map the typed summary to the reference's 18-field all-as-written

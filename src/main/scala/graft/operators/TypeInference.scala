@@ -20,13 +20,15 @@ import org.apache.spark.sql.types._
   *   - format preference order decides ambiguous values (mdY before
   *     dmy: "01/02/2023" is January 2nd — whiteRRabbit.R:174-178).
   *
-  * Plan shape: inference costs exactly ONE extra job per table — a
-  * single full-column aggregation computing the numeric counters and
-  * the date-parse rate for ALL string columns at once — then a single
-  * cast projection. All parsing runs in codegen'd builtins
-  * (`try_cast`, `try_to_timestamp`); no UDFs. The date cascade stays
-  * affordable full-column because two regex gates fast-NULL every
-  * non-date value shape before any parser runs (see [[dateParse]]).
+  * Plan shape: inference is ONE aggregation — the numeric counters
+  * and the date-parse rate of ALL string columns at once, over the
+  * columns melted to (column, value) cells — then a single cast
+  * projection. Over a value histogram (the scan's) the parse cascade
+  * runs once per distinct value instead of once per cell. All parsing
+  * runs in codegen'd builtins (`try_cast`, `try_to_timestamp`); no
+  * UDFs. The date cascade stays affordable full-column because two
+  * regex gates fast-NULL every non-date value shape before any parser
+  * runs (see [[dateParse]]).
   *
   * Divergence (documented): the reference votes on ≤1000 sampled
   * non-empty values per column (unseeded); here every non-empty value
@@ -173,12 +175,49 @@ object TypeInference {
           dateFormats.map(f => try_to_timestamp(t, lit(f)))): _*)))
   }
 
-  private def nonEmpty(name: String): Column =
-    col(s"`$name`").isNotNull && col(s"`$name`") =!= lit("")
+  /** `cells` — (i, vs, cnt, …) rows, one per cell or per distinct
+    * cell value of the columns i — plus each string value's parses:
+    * `num` ([[numericParse]]) and `dt` ([[dateParse]] as epoch micros),
+    * for the string columns `strIdx` only. Over a histogram, the
+    * parse cascade runs once per distinct (column, value).
+    */
+  private[graft] def parsed(cells: DataFrame, strIdx: Seq[Int]): DataFrame = {
+    val isStr = col("i").isin(strIdx: _*)
+    cells.withColumn("num", when(isStr, numericParse("vs")))
+      .withColumn("dt", when(isStr, unix_micros(dateParse("vs"))))
+  }
 
-  /** Success-rate of `parsed` over non-empty values (NULL if none). */
-  private def rate(name: String, parsed: Column): Column =
-    avg(when(nonEmpty(name), when(parsed.isNotNull, 1.0).otherwise(0.0)))
+  /** Each string column's votes over [[parsed]] cells: `n` non-empty
+    * values, `bad` of them failing the numeric parse, `hits` of them
+    * passing the date parse — each value weighted by its count.
+    */
+  private[graft] final case class Votes(n: Long, bad: Long, hits: Long)
+
+  private[graft] def votes(cells: DataFrame,
+      strIdx: Seq[Int]): Map[Int, Votes] = {
+    def weighted(c: Column) = sum(when(c, col("cnt")).otherwise(lit(0L)))
+    cells.where(col("i").isin(strIdx: _*) &&
+        col("vs").isNotNull && col("vs") =!= lit(""))
+      .groupBy("i")
+      .agg(sum(col("cnt")), weighted(col("num").isNull),
+        weighted(col("dt").isNotNull))
+      .collect()
+      .map(r => r.getInt(0) -> Votes(r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
+  }
+
+  /** A string column's promotion decision from its votes:
+    * numeric iff it has ≥1 non-empty value and every one parses, else
+    * datetime iff the date-parse rate hits/n ≥ `threshold` (the same
+    * double `avg` of 0/1 votes gives), else character.
+    */
+  private[graft] def decide(v: Option[Votes], threshold: Double): InferredType =
+    v match {
+      case Some(Votes(n, 0L, _)) if n > 0L => NumericT
+      case Some(Votes(n, _, hits))
+          if n > 0L && hits.toDouble / n.toDouble >= threshold => DatetimeT
+      case _ => CharacterT
+    }
 
   /** Infer a promotion decision for every string column of `df`.
     *
@@ -199,9 +238,12 @@ object TypeInference {
     *     except for sample luck within ~±0.03 of the boundary, where
     *     the unseeded reference is itself nondeterministic).
     *
-    * Both decisions come from ONE full-column aggregation pass; the
-    * neverDateGate regex makes the full date validation as cheap on
-    * numeric columns as a sampled pre-filter would make skipping them.
+    * Both decisions come from ONE aggregation pass over the string
+    * columns melted to one row per cell ([[votes]] over [[parsed]]
+    * cells, each weighing 1) — the same aggregate the scan runs over
+    * its value histogram; the neverDateGate regex makes the full date
+    * validation as cheap on numeric columns as a sampled pre-filter
+    * would make skipping them.
     *
     * `seed` and `randomSample` do not affect the decision. They are
     * kept because the benchmark harness (perfbench/Workloads.scala)
@@ -212,34 +254,11 @@ object TypeInference {
       threshold: Double = 0.8,
       seed: Long = 42L,
       randomSample: Boolean = true): Map[String, InferredType] = {
-    val strCols = df.schema.fields
-      .filter(_.dataType == StringType).map(_.name).toSeq
-    if (strCols.isEmpty) return Map.empty
-
-    // ONE full-column aggregation pass: per column, the numeric
-    // all-or-nothing counters AND the full date-parse rate
-    val checkAggs =
-      strCols.zipWithIndex.flatMap { case (c, i) =>
-        // all-or-nothing: any non-empty value failing to parse vetoes
-        Seq(count(when(nonEmpty(c) && numericParse(c).isNull, lit(1)))
-            .as(s"bad_$i"),
-          count(when(nonEmpty(c), lit(1))).as(s"n_$i"),
-          rate(c, dateParse(c)).as(s"full_$i"))
-      }
-    val full = df.agg(checkAggs.head, checkAggs.tail: _*).head()
-    val decisions = strCols.zipWithIndex.map { case (c, i) =>
-      val numericOk = full.getAs[Long](s"n_$i") > 0L &&
-        full.getAs[Long](s"bad_$i") == 0L
-      val dateOk =
-        !full.isNullAt(full.fieldIndex(s"full_$i")) &&
-        full.getAs[Double](s"full_$i") >= threshold
-      val t: InferredType =
-        if (numericOk) NumericT
-        else if (dateOk) DatetimeT
-        else CharacterT
-      c -> t
-    }
-    decisions.toMap
+    val fields = df.schema.fields
+    val strIdx = fields.indices.filter(fields(_).dataType == StringType)
+    if (strIdx.isEmpty) return Map.empty
+    val v = votes(parsed(Profile.melt(df, strIdx, raw = true), strIdx), strIdx)
+    strIdx.map(i => fields(i).name -> decide(v.get(i), threshold)).toMap
   }
 
   /** Apply an inference result as a single cast projection. */

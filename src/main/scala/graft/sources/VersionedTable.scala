@@ -2336,7 +2336,11 @@ object VersionedTable {
     * are one aggregation over the just-written delta, and the new
     * sidecar is the previous version's sidecar plus those rows — so
     * per-commit cost stays delta-sized and [[readWhereVersion]] keeps
-    * pruning across the whole append chain. If the previous version
+    * pruning across the whole append chain. The delta's stats cover
+    * every family the previous sidecar covers (numeric and string, as
+    * compaction re-collects them) on top of `statsCols`, so the two
+    * merge; otherwise the delta's rows would stand alone and every
+    * base file would fall out of coverage. If the previous version
     * carries no sidecar its files simply stay un-covered, which
     * [[prunedPaths]] handles conservatively (they are always read).
     */
@@ -2344,8 +2348,13 @@ object VersionedTable {
       statsCols: Seq[String], tag: String = ""): Long = {
     require(statsCols.nonEmpty,
       "commitAppendWithStats needs at least one stats column")
+    val spark = delta.sparkSession
+    val (priorNum, priorStr) = latestVersion(spark, root)
+      .fold((Seq.empty[String], Seq.empty[String]))(
+        priorStatsCols(spark, root, _))
     commitAppendWithSidecar(delta, root, tag, statsDir(root, _),
-      (written, phys) => statsFrame(written, statsCols.map(phys), Nil))
+      (written, phys) => statsFrame(written,
+        (statsCols ++ priorNum).distinct.map(phys), priorStr.map(phys)))
   }
 
   /** Fast APPEND with point-lookup skipping intact — the Bloom twin

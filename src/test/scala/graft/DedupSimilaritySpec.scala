@@ -69,6 +69,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(pairs.count() == n.toLong * (n - 1) / 2)
   }
 
+  test("pair expansion sorts each bucket once: no ArraySort inside " +
+      "the pair lambdas of the optimized plan") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort,
+      LambdaFunction}
+    val plan = Dedup.minhashCandidates(docs, "doc_id", "text",
+      numHashes = 4, bands = 2, shingleSize = 3)
+      .queryExecution.optimizedPlan
+    val exprs = plan.collect { case p => p.expressions }.flatten
+    val sorts = exprs.flatMap(_.collect { case s: ArraySort => s })
+    val inLambda = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+      .flatMap(_.collect { case s: ArraySort => s })
+    // one sort per expansion branch (small buckets, salted cells)
+    assert(sorts.size == 2, plan.toString)
+    assert(inLambda.isEmpty, plan.toString)
+  }
+
   test("minhash verification rejects below-threshold candidates") {
     val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
       threshold = 0.999).collect()

@@ -322,7 +322,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // the rank bases are driver-side literals, so the plan does not
     // depend on the non-missing counts passed in
     val p = graft.operators.Profile
-      .histogramRanked(df, IndexedSeq.fill(df.columns.length)(0L))
+      .histogramRanked(graft.operators.Profile.valueHistogram(df,
+        df.schema.fields.indices), IndexedSeq.fill(df.columns.length)(0L))
       .queryExecution.executedPlan.toString
     // the old shape planned `Window [...], [i#N], [vn#M ASC ...]` — one
     // partition per COLUMN, sized by the column's distinct count; the

@@ -13,12 +13,13 @@ import graft.sources.DelimitedSource
 /** Job budget of one table scan: the Spark jobs [[Scan.scanTable]]
   * submits (sample cap, inference, promotion, profile, frequency) on a
   * small fixed fixture, counted with a SparkListener. The bound is the
-  * count the profile layer's single value histogram brings it to; a
-  * change that adds a job per table fails here.
+  * count the histogram-first scan brings it to — counters pass, fill
+  * of the raw histogram, inference votes, profile stats, frequency
+  * table; a change that adds a job per table fails here.
   */
 class ScanJobBudgetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  private val budget = 11
+  private val budget = 5
 
   test("one scanTable call stays within its Spark job budget") {
     val dir = graft.config.Scratch.dir + "/scan_job_budget"

@@ -715,6 +715,37 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, root).count() == 3L)
   }
 
+  test("a stats append keeps the base sidecar's string family: a " +
+      "string predicate still prunes the base files") {
+    val root = freshRoot("appendstrstats")
+    val cats = Seq("apple", "banana", "cherry", "date")
+    val base = spark.range(0L, 400L).toDF("ts")
+      .withColumn("s", element_at(
+        typedLit(cats), (col("ts") % 4 + 1).cast("int")))
+    val v0 = VersionedTable.commitWithStats(
+      base.repartitionByRange(4, col("s")).sortWithinPartitions("s"),
+      root, statsCols = Seq("ts"), stringStatsCols = Seq("s"))
+    val baseFiles = VersionedTable.dataFileCount(spark, root, v0)
+    assert(baseFiles >= 3)
+    val delta = spark.range(400L, 440L).toDF("ts")
+      .withColumn("s", lit("zebra")).coalesce(1)
+    val v1 = VersionedTable.commitAppendWithStats(delta, root,
+      statsCols = Seq("ts"))
+    val allFiles = VersionedTable.dataFileCount(spark, root, v1)
+    assert(allFiles == baseFiles + 1)
+    // the base files keep their string stats: "banana" lives in ~1 of
+    // them, and the delta's own "zebra" file is pruned too
+    val kept = VersionedTable.prunedPathsWhere(spark, root, v1,
+      col("s") === "banana")
+    assert(kept.size < baseFiles,
+      s"string stats kept ${kept.size} of $allFiles files")
+    assert(VersionedTable.readWhereVersion(spark, root, v1,
+      col("s") === "banana").count() == 100L)
+    // the numeric family still covers the delta
+    assert(VersionedTable.prunedPathsWhere(spark, root, v1,
+      col("ts").cast("double") >= 420d).size == 1)
+  }
+
   test("string stats prune a category-clustered scan to the matching " +
       "files; numeric pruning is blind to the same column") {
     val root = freshRoot("strstats")
