@@ -28,9 +28,10 @@ final case class TableScanResult(
 /** End-to-end scan orchestration (whiteRRabbit.R:218-480).
   *
   * Pipeline per table: fast row count → all-string read → row cap
-  * (sample/head) → one value histogram of the capped sample → type
-  * promotion → optional date shift → column exclusion → profile +
-  * frequency, both read off the histogram. Unlike the reference's
+  * (sample/head) → type inference → promotion → optional date shift →
+  * column exclusion → profile + frequency. In the exact (default)
+  * mode inference, profile and frequency all read one value histogram
+  * of the capped sample (see [[scanTable]]). Unlike the reference's
   * sequential per-file loop (whiteRRabbit.R:450-464), folders are
   * scanned with the per-file Spark jobs submitted concurrently from
   * driver threads — files share the cluster instead of queueing
@@ -52,10 +53,99 @@ object Scan {
     * N_rows quirk, whiteRRabbit.R:222 vs :439); pass the row count for
     * headerless sources like parquet.
     *
-    * Histogram-first plan: every number of the report is a function
-    * of the capped sample's raw histogram H, (column, raw value) →
-    * count, except the row count, the NULL/"" counts and the moments,
-    * which one per-cell counters pass computes. Per table:
+    * The exact (default) profile is histogram-first ([[exactScan]]);
+    * `exactQuantiles = false` keeps the per-cell pipeline with the
+    * constant-state sketch summary ([[sketchScan]]).
+    */
+  def scanTable(spark: SparkSession, df0: DataFrame, name: String,
+      totalRows: Long, config: ScanConfig): TableScanResult = {
+    // nFields is counted BEFORE column exclusion (ref :293 vs :304)
+    val nFields = df0.columns.length
+    // totalRows (the already-paid line count) feeds exactK's pre-thin;
+    // for delimited sources it overcounts by the header line, which
+    // only widens the sampling margin — the survivor check stays exact
+    val capped = Sampling.cap(df0, config.maxRows, config.randomSample,
+      config.seed, totalRows = Some(totalRows))
+    val Sheets(inference, summaryRows, freqRows) =
+      if (config.exactQuantiles) exactScan(spark, capped, config)
+      else sketchScan(capped, config)
+
+    // Both report sheets are REPORT-sized by construction (one row
+    // per column; top-maxDistinctValues per column): collected once
+    // and re-wrapped as local relations, every sink write is a
+    // driver-local operation (optimization r18), and — because
+    // scanFolder runs scanFile in parallel futures — all of a
+    // folder's profile compute runs in the concurrently-scheduled
+    // per-file jobs. The collected rows also answer nRowsChecked
+    // and nFieldsEmpty. The all-empty census runs on the full column
+    // set (ref :294-303), the summary sheet on the post-exclusion set
+    // (ref :304-309).
+    val nRowsChecked =
+      if (summaryRows.nonEmpty) summaryRows.head.getAs[Long]("total_count")
+      else 0L
+    val nFieldsEmpty =
+      summaryRows.count(_.getAs[Long]("non_missing") == 0L).toLong
+    val keptRows = summaryRows.filterNot(r =>
+      config.excludeCols.contains(r.getAs[String]("column_name")))
+    val summaryLocal = spark.createDataFrame(
+      java.util.Arrays.asList(keptRows: _*), Profile.summarySchema)
+    val freq = spark.createDataFrame(
+      java.util.Arrays.asList(freqRows: _*), freqSchema)
+    TableScanResult(name, totalRows, nRowsChecked, nFields, nFieldsEmpty,
+      summaryLocal, freq, inference)
+  }
+
+  /** A scan's decisions and its collected sheets: the summary of every
+    * column and the frequency rows of the kept ones.
+    */
+  private final case class Sheets(
+      inference: Map[String, TypeInference.InferredType],
+      summary: Array[Row], freq: Array[Row])
+
+  private val freqSchema: StructType = StructType(Seq(
+    StructField("Column", StringType),
+    StructField("Value", StringType),
+    StructField("Count", LongType),
+    StructField("Percentage", DoubleType)))
+
+  /** The frequency table's columns: the kept (ref :304-309) non-date
+    * (ref :331) columns of the typed table.
+    */
+  private def freqIdx(fields: Array[StructField],
+      config: ScanConfig): Seq[Int] =
+    if (!config.scanFieldValues) Nil
+    else fields.indices.filterNot(i =>
+      config.excludeCols.contains(fields(i).name) ||
+        Profile.isDateLike(fields(i).dataType))
+
+  private def dateShifted(promoted: DataFrame,
+      config: ScanConfig): DataFrame =
+    if (config.shiftDates) DateShift.shiftDates(promoted, config.seed)
+    else promoted
+
+  /** The sketch-mode scan, per cell: inference
+    * ([[TypeInference.infer]]), promotion, the optional date shift,
+    * the constant-state sketch summary ([[Profile.summarizeApprox]])
+    * and the frequency table of the typed sample's value histogram.
+    * Nothing is persisted.
+    */
+  private def sketchScan(capped: DataFrame, config: ScanConfig): Sheets = {
+    val inference = TypeInference.infer(capped)
+    val typed = dateShifted(TypeInference.promote(capped, inference), config)
+    val fields = typed.schema.fields
+    val idx = freqIdx(fields, config)
+    Sheets(inference,
+      Profile.summarizeApprox(typed, accuracy = config.quantileAccuracy)
+        .collect(),
+      if (idx.isEmpty) Array.empty[Row]
+      else Frequency.referenceFrequencies(typed, idx.map(fields(_).name),
+        config.minCellCount, config.maxDistinctValues).collect())
+  }
+
+  /** The exact scan, histogram-first: every number of the report is a
+    * function of the capped sample's raw histogram H, (column, raw
+    * value) → count, except the row count, the NULL/"" counts and the
+    * moments, which one per-cell counters pass computes:
     *   1. the counters pass ([[Profile.counterAggs]] with the numeric
     *      parse of every string column, so a promoted column's moments
     *      are the same aggregate over the same values as over the
@@ -71,31 +161,20 @@ object Scan {
     *      profile's distinct counts, quartiles and date stats
     *      ([[Profile.statsOf]]) and the frequency table
     *      ([[Frequency.topK]]) both read T, concurrently;
-    *   4. H is released, blocking, before returning — on failure too.
+    *   4. every job this scan started has finished and H is released,
+    *      blocking, before returning — on failure too.
     * No step re-reads the source or re-draws the sample after step 1,
-    * except with `shiftDates` (the shifted date columns are melted
-    * per cell, since each row draws its own shift) and with
-    * `exactQuantiles = false` (the sketch summary reads the promoted
-    * sample).
+    * except with `shiftDates`: the shifted date columns are melted per
+    * cell, since each row draws its own shift.
     */
-  def scanTable(spark: SparkSession, df0: DataFrame, name: String,
-      totalRows: Long, config: ScanConfig): TableScanResult = {
-    // nFields is counted BEFORE column exclusion (ref :293 vs :304)
-    val nFields = df0.columns.length
-    // totalRows (the already-paid line count) feeds exactK's pre-thin;
-    // for delimited sources it overcounts by the header line, which
-    // only widens the sampling margin — the survivor check stays exact
-    val capped = Sampling.cap(df0, config.maxRows, config.randomSample,
-      config.seed, totalRows = Some(totalRows))
+  private def exactScan(spark: SparkSession, capped: DataFrame,
+      config: ScanConfig): Sheets = {
     val fields = capped.schema.fields
     val strIdx = fields.indices.filter(fields(_).dataType == StringType)
     implicit val ec: ExecutionContext = ExecutionContext.global
     val countersF = onPool(spark) {
-      if (!config.exactQuantiles) None
-      else {
-        val aggs = Profile.counterAggs(fields, stringMoments = true)
-        Some(capped.agg(aggs.head, aggs.tail: _*).head())
-      }
+      val aggs = Profile.counterAggs(fields, stringMoments = true)
+      capped.agg(aggs.head, aggs.tail: _*).head()
     }
     val h = TypeInference.parsed(
       Profile.regroup(Profile.melt(capped, fields.indices, raw = true)),
@@ -104,91 +183,55 @@ object Scan {
       val votes = TypeInference.votes(h, strIdx)
       val inference = strIdx.map(i =>
         fields(i).name -> TypeInference.decide(votes.get(i), 0.8)).toMap
-      val promoted = TypeInference.promote(capped, inference)
       val typed =
-        if (config.shiftDates) DateShift.shiftDates(promoted, config.seed)
-        else promoted
+        dateShifted(TypeInference.promote(capped, inference), config)
       val typedFields = typed.schema.fields
-      val t = typedHistogram(h, typed, inference, config.shiftDates)
-
-      // summaries/frequencies run on the post-exclusion set (ref
-      // :304-309), the frequency table without date columns (ref :331)
-      val excluded = config.excludeCols.toSet
-      val freqIdx = typedFields.indices.filterNot(i =>
-        excluded.contains(typedFields(i).name) ||
-          Profile.isDateLike(typedFields(i).dataType))
+      val idx = freqIdx(typedFields, config)
+      // the frequency table has no date column, so it never needs the
+      // shifted dates' per-cell melt
       val freqF = onPool(spark) {
-        if (config.scanFieldValues && freqIdx.nonEmpty)
-          Some(Frequency.asReference(Frequency.topK(
-            t.where(col("i").isin(freqIdx: _*)), typedFields,
-            config.minCellCount, config.maxDistinctValues)).collect())
-        else None
+        if (idx.isEmpty) Array.empty[Row]
+        else Frequency.asReference(Frequency.topK(
+          typedHistogram(h, typed, inference, shifted = false)
+            .where(col("i").isin(idx: _*)), typedFields,
+          config.minCellCount, config.maxDistinctValues)).collect()
       }
-
-      // the all-empty census runs on the full column set (ref :294-303)
-      val fullSummary = Await.result(countersF, Duration.Inf) match {
-        case None => Profile.summarize(typed, exactQuantiles = false,
-          config.quantileAccuracy)
-        case Some(counters) =>
-          val total = counters.getAs[Long]("total")
-          val counts = fields.indices.map { i =>
-            val c = Profile.countsOf(counters, i)
-            inference.get(fields(i).name) match {
-              case Some(TypeInference.NumericT) =>
-                c.copy(missing = c.missing + c.empty, empty = 0L)
-              case Some(TypeInference.DatetimeT) =>
-                c.copy(missing = total - votes(i).hits, empty = 0L)
-              case _ => c
-            }
+      try {
+        val counters = Await.result(countersF, Duration.Inf)
+        val total = counters.getAs[Long]("total")
+        val counts = fields.indices.map { i =>
+          val c = Profile.countsOf(counters, i)
+          inference.get(fields(i).name) match {
+            case Some(TypeInference.NumericT) =>
+              c.copy(missing = c.missing + c.empty, empty = 0L)
+            case Some(TypeInference.DatetimeT) =>
+              c.copy(missing = total - votes(i).hits, empty = 0L)
+            case _ => c
           }
-          Profile.summaryFrame(spark, typedFields, total, counts,
-            Profile.statsOf(t, typedFields,
-              counts.map(c => total - c.missing - c.empty)))
-      }
-
-      // Both report sheets are REPORT-sized by construction (one row
-      // per column; top-maxDistinctValues per column): collected once
-      // here and re-wrapped as local relations, every sink write is a
-      // driver-local operation (optimization r18), and — because
-      // scanFolder runs scanFile in parallel futures — all of a
-      // folder's profile compute runs in the concurrently-scheduled
-      // per-file jobs. The collected rows also answer nRowsChecked
-      // and nFieldsEmpty.
-      val summaryRows = fullSummary.collect()
-      val nRowsChecked =
-        if (summaryRows.nonEmpty) summaryRows.head.getAs[Long]("total_count")
-        else 0L
-      val nFieldsEmpty =
-        summaryRows.count(_.getAs[Long]("non_missing") == 0L).toLong
-      val keptRows = summaryRows.filterNot(r =>
-        excluded.contains(r.getAs[String]("column_name")))
-      val summaryLocal = spark.createDataFrame(
-        java.util.Arrays.asList(keptRows: _*), fullSummary.schema)
-      val freqRows = Await.result(freqF, Duration.Inf)
-        .getOrElse(Array.empty[Row])
-      val freq = spark.createDataFrame(
-        java.util.Arrays.asList(freqRows: _*), freqSchema)
-
-      TableScanResult(name, totalRows, nRowsChecked, nFields, nFieldsEmpty,
-        summaryLocal, freq, inference)
-    } finally h.unpersist(blocking = true)
+        }
+        val summary = Profile.summaryFrame(spark, typedFields, total, counts,
+          Profile.statsOf(
+            typedHistogram(h, typed, inference, config.shiftDates),
+            typedFields,
+            counts.map(c => total - c.missing - c.empty))).collect()
+        Sheets(inference, summary, Await.result(freqF, Duration.Inf))
+      } finally Await.ready(freqF, Duration.Inf)
+    } finally {
+      Await.ready(countersF, Duration.Inf)
+      h.unpersist(blocking = true)
+    }
   }
 
-  private val freqSchema: StructType = StructType(Seq(
-    StructField("Column", StringType),
-    StructField("Value", StringType),
-    StructField("Count", LongType),
-    StructField("Percentage", DoubleType)))
-
   /** The typed histogram T of `typed` from the capped sample's parsed
-    * raw histogram `h` ((i, vs, vn, cnt, us_lo, us_hi, num, dt) rows):
-    * each string column's raw keys re-keyed by its decision — numeric
-    * to the +0.0-normalized parse, datetime to the parsed epoch micros,
-    * character to the value minus "" — and non-string columns' typed
-    * keys kept, then regrouped, so T is [[Profile.valueHistogram]] of
-    * `typed` without a second pass over the cells. With `shifted`, the
-    * date-like columns of `typed` are melted per cell instead, since
-    * their shifted values are not a function of the raw value.
+    * raw histogram `h` ((i, vs, vn, cnt, num, dt) rows): each string
+    * column's raw keys re-keyed by its decision — numeric to the
+    * +0.0-normalized parse, datetime to the parsed epoch micros (exact
+    * in vs, as a double in vn), character to the value minus "" — and
+    * non-string columns' typed keys kept, then regrouped, so T is
+    * [[Profile.valueHistogram]] of `typed` without a second pass over
+    * the cells. With `shifted`, the date-like columns of `typed` are
+    * melted per cell instead, since their shifted values are not a
+    * function of the raw value.
     */
   private[graft] def typedHistogram(h: DataFrame, typed: DataFrame,
       inference: Map[String, TypeInference.InferredType],
@@ -199,17 +242,15 @@ object Scan {
     val (num, date, chr) = (decided(TypeInference.NumericT),
       decided(TypeInference.DatetimeT), decided(TypeInference.CharacterT))
     val i = col("i")
-    val us = when(i.isin(date: _*), col("dt"))
     val rekeyed = h.select(i,
       when(i.isin(chr: _*), when(col("vs") =!= lit(""), col("vs")))
-        .when(i.isin(num ++ date: _*), lit(null).cast(StringType))
+        .when(i.isin(num: _*), lit(null).cast(StringType))
+        .when(i.isin(date: _*), col("dt").cast(StringType))
         .otherwise(col("vs")).as("vs"),
       when(i.isin(num: _*), col("num") + lit(0.0))
         .when(i.isin(date: _*), col("dt").cast(DoubleType))
         .otherwise(col("vn")).as("vn"),
-      col("cnt"),
-      us.otherwise(col("us_lo")).as("us_lo"),
-      us.otherwise(col("us_hi")).as("us_hi"))
+      col("cnt"))
       .where(col("vs").isNotNull || col("vn").isNotNull)
     val dateLike =
       fields.indices.filter(j => Profile.isDateLike(fields(j).dataType))

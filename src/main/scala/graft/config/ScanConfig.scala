@@ -29,14 +29,15 @@ package graft.config
   *     histogram (no value buffering — Profile.statsOf; in a scan, the
   *     capped sample's histogram that inference and the frequency
   *     table also read, Scan.scanTable).
-  *     exactQuantiles=false switches the summary sheet to
-  *     Profile.summarizeApprox, whose state stays constant-size even for
-  *     columns whose histogram would approach the row count, under an
-  *     error contract instead of exactness: distinct counts are HLL++
-  *     estimates at relative standard deviation 0.05, and each quartile
-  *     or date median is within rank error 1/quantileAccuracy of the
-  *     exact one. Counters and min/max stay exact; mean and sd agree
-  *     with the exact path up to floating-point summation order.
+  *     exactQuantiles=false scans per cell and persists nothing: the
+  *     summary sheet is Profile.summarizeApprox, whose state stays
+  *     constant-size even for columns whose histogram would approach
+  *     the row count, under an error contract instead of exactness:
+  *     distinct counts are HLL++ estimates at relative standard
+  *     deviation 0.05, and each quartile or date median is within rank
+  *     error 1/quantileAccuracy of the exact one. Counters and min/max
+  *     stay exact; mean and sd agree with the exact path up to
+  *     floating-point summation order.
   */
 final case class ScanConfig(
     workingFolder: String = ".",

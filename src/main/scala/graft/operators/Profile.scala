@@ -102,13 +102,14 @@ object Profile {
     *     interpolate between two instants, whiteRRabbit.R:389-398).
     *
     * Plan shape: the counters job, then the value histogram's stats
-    * ([[histogramStats]]) — on a table whose histogram fits the
-    * driver walk, 2 Spark jobs plus the histogram's exchange. The
-    * counters job computes counters + moments for all columns in one
-    * codegen'd `agg()`, and nothing with a heavy object buffer rides
-    * in it (a mixed declarative/object aggregate forces the whole plan
-    * onto ObjectHashAggregate, measured 2x slower than the jobs run
-    * apart; N `countDistinct`s in one agg would plan an `Expand` that
+    * ([[histogramStats]]) — 2 Spark jobs when the table has at most
+    * 200k non-missing cells (the driver walk, [[statsOf]]), else the
+    * counters job plus the distributed rank walk. The counters job
+    * computes counters + moments for all columns in one codegen'd
+    * `agg()`, and nothing with a heavy object buffer rides in it (a
+    * mixed declarative/object aggregate forces the whole plan onto
+    * ObjectHashAggregate, measured 2x slower than the jobs run apart;
+    * N `countDistinct`s in one agg would plan an `Expand` that
     * multiplies every row N-fold, measured 10x). Its one row gives
     * each column's non-missing count. The value histogram answers the
     * exact distinct counts, the exact type-7 quantiles and the date
@@ -188,8 +189,8 @@ object Profile {
       else Nil)
   }
 
-  /** Columns `idx` of `df` melted to one row per cell: (i, vs, vn, cnt,
-    * us_lo, us_hi) with i the field index, cnt = 1 and the keys
+  /** Columns `idx` of `df` melted to one row per cell: (i, vs, vn, cnt)
+    * with i the field index, cnt = 1 and the keys
     *   - string: vs the value; with `raw` as written, else NULL for ""
     *     (whiteRRabbit.R:320-327);
     *   - float/double: vn the +0.0-normalized double (-0.0 and 0.0
@@ -197,8 +198,9 @@ object Profile {
     *   - integral/decimal: vs the string identity (keeps DISTINCT exact
     *     past 2^53) and vn the double cast ranks use (a duplicate vn
     *     under distinct vs only reorders equal rank values);
-    *   - date-like: vn the epoch micros as a double, and us_lo/us_hi
-    *     the exact Long micros, since a double rounds beyond 2^53 µs;
+    *   - date-like: vs the exact epoch micros as a string and vn the
+    *     same micros as a double, since a double rounds beyond 2^53 µs
+    *     (the date range reads vs, the ranks vn);
     *   - other: vs the string cast.
     * Without `raw`, cells with no key (NULL, "") are dropped.
     */
@@ -207,43 +209,36 @@ object Profile {
     val fields = df.schema.fields
     val nullS = lit(null).cast(StringType)
     val nullD = lit(null).cast(DoubleType)
-    val nullL = lit(null).cast(LongType)
     val kvs = idx.map { i =>
       val c = col(fields(i).name)
-      val (vs, vn, us) = fields(i).dataType match {
-        case StringType =>
-          (if (raw) c else when(c =!= lit(""), c), nullD, nullL)
-        case FloatType | DoubleType =>
-          (nullS, c.cast(DoubleType) + lit(0.0), nullL)
-        case t if isNum(t) => (c.cast(StringType), c.cast(DoubleType), nullL)
+      val (vs, vn) = fields(i).dataType match {
+        case StringType => (if (raw) c else when(c =!= lit(""), c), nullD)
+        case FloatType | DoubleType => (nullS, c.cast(DoubleType) + lit(0.0))
+        case t if isNum(t) => (c.cast(StringType), c.cast(DoubleType))
         case t if isDateLike(t) =>
           val u = epochMicros(c, t)
-          (nullS, u.cast(DoubleType), u)
-        case _ => (c.cast(StringType), nullD, nullL)
+          (u.cast(StringType), u.cast(DoubleType))
+        case _ => (c.cast(StringType), nullD)
       }
-      struct(lit(i).as("i"), vs.as("vs"), vn.as("vn"), us.as("us"))
+      struct(lit(i).as("i"), vs.as("vs"), vn.as("vn"))
     }
     val cells = df.select(explode(array(kvs: _*)).as("kv"))
       .select(col("kv.i").as("i"), col("kv.vs").as("vs"),
-        col("kv.vn").as("vn"), lit(1L).as("cnt"), col("kv.us").as("us_lo"),
-        col("kv.us").as("us_hi"))
+        col("kv.vn").as("vn"), lit(1L).as("cnt"))
     if (raw) cells
     else cells.where(col("vs").isNotNull || col("vn").isNotNull)
   }
 
-  /** Sum melted or histogram rows by their (i, vs, vn) key: counts add,
-    * the exact date range widens.
-    */
+  /** Sum melted or histogram rows by their (i, vs, vn) key. */
   private[graft] def regroup(rows: DataFrame): DataFrame =
-    rows.groupBy("i", "vs", "vn").agg(sum(col("cnt")).as("cnt"),
-      min(col("us_lo")).as("us_lo"), max(col("us_hi")).as("us_hi"))
+    rows.groupBy("i", "vs", "vn").agg(sum(col("cnt")).as("cnt"))
 
   /** The value histogram of columns `idx` of `df`: (i, vs, vn) keys
-    * ([[melt]]) with their multiplicities `cnt` and exact date range
-    * (us_lo, us_hi). The exact profile (distinct counts, quartiles,
-    * date range), the frequency table ([[Frequency.frequencies]]) and
-    * [[approxContract]]'s exact distinct counts all read it. NULLs,
-    * and "" in string columns, are dropped (whiteRRabbit.R:320-327).
+    * ([[melt]]) with their multiplicities `cnt`. The exact profile
+    * (distinct counts, quartiles, date range), the frequency table
+    * ([[Frequency.frequencies]]) and [[approxContract]]'s exact
+    * distinct counts all read it. NULLs, and "" in string columns,
+    * are dropped (whiteRRabbit.R:320-327).
     * Only the `idx` columns are projected, so the plan prunes the
     * others (a frequency table over non-date columns never parses
     * dates).
@@ -270,44 +265,41 @@ object Profile {
     statsOf(valueHistogram(df, df.schema.fields.indices),
       df.schema.fields, nonMissing)
 
-  /** Histograms of at most this many rows are walked on the driver:
-    * one collected row is five boxed fields (i, vn, cnt, us_lo,
-    * us_hi), ~130 bytes, so the bound holds a table's walk under
-    * ~26 MB of driver heap. Larger histograms take the distributed
-    * [[histogramRanked]] walk.
+  /** Histograms of at most this many rows are walked on the driver. A
+    * histogram never has more rows than its columns have non-missing
+    * values, so the walk is chosen from that sum, with no probe of the
+    * histogram itself. One collected row is four fields (i, vn, cnt,
+    * and a date column's micros), boxed in a Row: about 130 bytes, so
+    * the walk holds under ~26 MB of driver heap (an estimate of the
+    * JVM object layout, not a measurement). Larger histograms take
+    * the distributed [[histogramRanked]] walk.
     */
   private val DriverWalkRows = 200000
 
   /** Exact distinct counts, type-7 quartiles, date medians and date
     * ranges of the columns `fields` from their typed value histogram
-    * `hist` ((i, vs, vn, cnt, us_lo, us_hi) rows, as
-    * [[valueHistogram]] builds them).
-    *
-    * A histogram of at most [[DriverWalkRows]] rows is collected in
-    * one job and walked on the driver ([[driverStats]]); a larger one
-    * runs the distributed rank walk ([[rankedStats]]). Both give the
-    * same stats, which the scan-equivalence suite pins. A histogram
-    * has at most Σ nonMissing rows; when that passes the bound, the
-    * histogram is first checkpointed locally, so the collect that
-    * finds it too large and the rank walk share one computation of
-    * it. (Not `persist`: the walk's prefix sum is only right when its
-    * two range exchanges are reused, and adaptive execution does not
-    * reuse them over a cached relation.)
+    * `hist` ((i, vs, vn, cnt) rows, as [[valueHistogram]] builds
+    * them): collected in one job and walked on the driver
+    * ([[driverStats]]) when Σ `nonMissing` is at most
+    * [[DriverWalkRows]], else the distributed rank walk
+    * ([[rankedStats]]). Both give the same stats, which the
+    * scan-equivalence suite pins.
     *
     * Each column's histogram must hold exactly `nonMissing(i)` values
     * — the rank bases assume it — so a mismatch fails naming the
     * column instead of picking a wrong rank.
     */
   private[graft] def statsOf(hist: DataFrame, fields: Array[StructField],
-      nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
-    val mayOverflow = nonMissing.sum > DriverWalkRows
-    val h = if (mayOverflow) hist.localCheckpoint() else hist
-    try {
-      val rows = h.select("i", "vn", "cnt", "us_lo", "us_hi")
-        .limit(DriverWalkRows + 1).collect()
-      if (rows.length <= DriverWalkRows) driverStats(rows, fields, nonMissing)
-      else rankedStats(h, fields, nonMissing)
-    } finally if (mayOverflow) ColumnBridge.unpersistCheckpointed(h)
+      nonMissing: IndexedSeq[Long]): Map[Int, HistStats] =
+    if (nonMissing.sum <= DriverWalkRows) driverStats(hist, fields, nonMissing)
+    else rankedStats(hist, fields, nonMissing)
+
+  /** A histogram row's exact epoch micros for the date-like columns of
+    * `fields` (their vs key, [[melt]]), NULL for every other column.
+    */
+  private def exactMicros(fields: Array[StructField]): Column = {
+    val dates = fields.indices.filter(i => isDateLike(fields(i).dataType))
+    when(col("i").isin(dates: _*), col("vs").cast(LongType))
   }
 
   private def checkHeld(fields: Array[StructField],
@@ -337,14 +329,15 @@ object Profile {
       if (isDateLike(dt)) Some(q(0.5)) else None,
       if (isDateLike(dt)) Some(range) else None)
 
-  /** [[statsOf]] on the driver over the collected (i, vn, cnt, us_lo,
-    * us_hi) rows: each column's rows in Spark's (i, vn) order — NaN
+  /** [[statsOf]] on the driver: `hist` collected as (i, vn, cnt, us)
+    * rows in one job, each column's rows in Spark's (i, vn) order — NaN
     * greatest, by `java.lang.Double.compare` on the +0.0-normalized
     * keys — with each row covering the rank range [lo, lo + cnt).
     */
-  private[graft] def driverStats(rows: Array[Row], fields: Array[StructField],
+  private[graft] def driverStats(hist: DataFrame, fields: Array[StructField],
       nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
-    val byCol = rows.groupBy(_.getInt(0))
+    val byCol = hist.select(col("i"), col("vn"), col("cnt"),
+      exactMicros(fields)).collect().groupBy(_.getInt(0))
     checkHeld(fields, nonMissing,
       i => byCol.get(i).fold(0L)(_.map(_.getLong(2)).sum))
     val byVn = Ordering.fromLessThan[Double](
@@ -357,7 +350,7 @@ object Profile {
       lazy val his = ranked.map(_.getLong(2)).scanLeft(0L)(_ + _).tail
       def at(r: Long): Double = ranked(his.indexWhere(r < _)).getDouble(1)
       i -> histStats(dt, rs.length.toLong, type7(nonMissing(i), _, at),
-        (rs.map(_.getLong(3)).min, rs.map(_.getLong(4)).max))
+        (rs.map(_.getLong(3)).min, rs.map(_.getLong(3)).max))
     }
   }
 
@@ -367,11 +360,24 @@ object Profile {
     * window partition. (Exactness still costs a sorted pass over
     * distinct values, which is why [[summarizeApprox]] (sketches)
     * stays the recommended 100 TB default.)
+    *
+    * The walk reads a local checkpoint of `hist`, released before
+    * returning. The prefix sum reads its input twice and is only right
+    * when both reads share one range exchange; adaptive execution does
+    * not share it when the input reads a cached relation (the scan's
+    * typed histogram reads the persisted raw one), and each exchange
+    * then samples its own bounds. Over the checkpoint the exchange is
+    * shared, and the histogram is computed once however often the walk
+    * reads it (a frame over `hist.rdd` is also correct, but measured
+    * slower: its reads recompute part of the histogram). Like any local
+    * checkpoint it has no lineage: a lost executor fails the walk.
     */
   private[graft] def rankedStats(hist: DataFrame, fields: Array[StructField],
       nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
     val tags = Seq(0.25 -> "25", 0.5 -> "50", 0.75 -> "75")
-    val aggs = Seq(count(lit(1)).as("dist"), sum(col("cnt")).as("held")) ++
+    val us = exactMicros(fields)
+    val aggs = Seq(count(lit(1)).as("dist"), sum(col("cnt")).as("held"),
+        min(us).as("us_lo"), max(us).as("us_hi")) ++
       tags.flatMap { case (p, s) =>
         val h = (col("n") - lit(1L)).cast(DoubleType) * lit(p)
         val r0 = floor(h).cast(LongType)
@@ -382,15 +388,14 @@ object Profile {
           max(when(col("lo") <= r1 && r1 < col("hi"), col("vn")))
             .as(s"x1_$s"))
       }
-    val byCol = histogramRanked(hist, nonMissing)
-      .groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
-      .map(r => r.getAs[Int]("i") -> r).toMap
+    val leaf = hist.localCheckpoint()
+    val byCol =
+      try histogramRanked(leaf, nonMissing)
+        .groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
+        .map(r => r.getAs[Int]("i") -> r).toMap
+      finally ColumnBridge.unpersistCheckpointed(leaf)
     checkHeld(fields, nonMissing,
       i => byCol.get(i).fold(0L)(_.getAs[Long]("held")))
-    val ranges =
-      if (!fields.exists(f => isDateLike(f.dataType))) Map.empty[Int, Row]
-      else hist.groupBy("i").agg(min(col("us_lo")), max(col("us_hi")))
-        .collect().map(r => r.getInt(0) -> r).toMap
     val tag = tags.toMap
     byCol.map { case (i, r) =>
       // x0/x1 are the values at the floor/ceil ranks of p
@@ -400,7 +405,7 @@ object Profile {
             s"x0_${tag(p)}"
           else s"x1_${tag(p)}"))
       i -> histStats(fields(i).dataType, r.getAs[Long]("dist"), q,
-        (ranges(i).getLong(1), ranges(i).getLong(2)))
+        (r.getAs[Long]("us_lo"), r.getAs[Long]("us_hi")))
     }
   }
 

@@ -20,11 +20,12 @@ import org.apache.spark.sql.types._
   *   - format preference order decides ambiguous values (mdY before
   *     dmy: "01/02/2023" is January 2nd — whiteRRabbit.R:174-178).
   *
-  * Plan shape: inference is ONE aggregation — the numeric counters
-  * and the date-parse rate of ALL string columns at once, over the
-  * columns melted to (column, value) cells — then a single cast
-  * projection. Over a value histogram (the scan's) the parse cascade
-  * runs once per distinct value instead of once per cell. All parsing
+  * Plan shape: inference on a table costs exactly ONE extra job — a
+  * single global aggregation computing the vote counts of ALL string
+  * columns at once — then a single cast projection. The exact scan
+  * sums the same votes over its value histogram instead, so the parse
+  * cascade runs once per distinct value rather than once per cell
+  * ([[votes]]). All parsing
   * runs in codegen'd builtins (`try_cast`, `try_to_timestamp`); no
   * UDFs. The date cascade stays affordable full-column because two
   * regex gates fast-NULL every non-date value shape before any parser
@@ -175,11 +176,11 @@ object TypeInference {
           dateFormats.map(f => try_to_timestamp(t, lit(f)))): _*)))
   }
 
-  /** `cells` — (i, vs, cnt, …) rows, one per cell or per distinct
-    * cell value of the columns i — plus each string value's parses:
-    * `num` ([[numericParse]]) and `dt` ([[dateParse]] as epoch micros),
-    * for the string columns `strIdx` only. Over a histogram, the
-    * parse cascade runs once per distinct (column, value).
+  /** `cells` — (i, vs, cnt, …) histogram rows, one per distinct value
+    * of the columns i — plus each string value's parses: `num`
+    * ([[numericParse]]) and `dt` ([[dateParse]] as epoch micros), for
+    * the string columns `strIdx` only, so the parse cascade runs once
+    * per distinct (column, value).
     */
   private[graft] def parsed(cells: DataFrame, strIdx: Seq[Int]): DataFrame = {
     val isStr = col("i").isin(strIdx: _*)
@@ -187,22 +188,37 @@ object TypeInference {
       .withColumn("dt", when(isStr, unix_micros(dateParse("vs"))))
   }
 
-  /** Each string column's votes over [[parsed]] cells: `n` non-empty
-    * values, `bad` of them failing the numeric parse, `hits` of them
-    * passing the date parse — each value weighted by its count.
+  /** A string column's votes: `n` non-empty values, `bad` of them
+    * failing the numeric parse, `hits` of them passing the date parse.
     */
   private[graft] final case class Votes(n: Long, bad: Long, hits: Long)
 
+  /** The three vote counts of one string column as aggregates over
+    * rows carrying one of its values `value` with multiplicity
+    * `weight`, and that value's parses `num` ([[numericParse]]) and
+    * `dt` ([[dateParse]]).
+    */
+  private def voteAggs(value: Column, num: Column, dt: Column,
+      weight: Column): Seq[Column] = {
+    val nonEmpty = value.isNotNull && value =!= lit("")
+    def weighted(c: Column) =
+      coalesce(sum(when(nonEmpty && c, weight)), lit(0L))
+    Seq(weighted(lit(true)), weighted(num.isNull), weighted(dt.isNotNull))
+  }
+
+  private def votesOf(r: org.apache.spark.sql.Row, at: Int): Votes =
+    Votes(r.getLong(at), r.getLong(at + 1), r.getLong(at + 2))
+
+  /** Each string column's votes over [[parsed]] histogram rows, each
+    * value weighted by its count: one grouped aggregate.
+    */
   private[graft] def votes(cells: DataFrame,
       strIdx: Seq[Int]): Map[Int, Votes] = {
-    def weighted(c: Column) = sum(when(c, col("cnt")).otherwise(lit(0L)))
-    cells.where(col("i").isin(strIdx: _*) &&
-        col("vs").isNotNull && col("vs") =!= lit(""))
-      .groupBy("i")
-      .agg(sum(col("cnt")), weighted(col("num").isNull),
-        weighted(col("dt").isNotNull))
+    val aggs = voteAggs(col("vs"), col("num"), col("dt"), col("cnt"))
+    cells.where(col("i").isin(strIdx: _*))
+      .groupBy("i").agg(aggs.head, aggs.tail: _*)
       .collect()
-      .map(r => r.getInt(0) -> Votes(r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => r.getInt(0) -> votesOf(r, 1))
       .toMap
   }
 
@@ -238,10 +254,10 @@ object TypeInference {
     *     except for sample luck within ~±0.03 of the boundary, where
     *     the unseeded reference is itself nondeterministic).
     *
-    * Both decisions come from ONE aggregation pass over the string
-    * columns melted to one row per cell ([[votes]] over [[parsed]]
-    * cells, each weighing 1) — the same aggregate the scan runs over
-    * its value histogram; the neverDateGate regex makes the full date
+    * Both decisions come from ONE global aggregation pass over the
+    * string columns, each cell weighing 1 — the same vote aggregates
+    * the scan sums over its value histogram ([[votes]]), decided by the
+    * same [[decide]]; the neverDateGate regex makes the full date
     * validation as cheap on numeric columns as a sampled pre-filter
     * would make skipping them.
     *
@@ -254,11 +270,15 @@ object TypeInference {
       threshold: Double = 0.8,
       seed: Long = 42L,
       randomSample: Boolean = true): Map[String, InferredType] = {
-    val fields = df.schema.fields
-    val strIdx = fields.indices.filter(fields(_).dataType == StringType)
-    if (strIdx.isEmpty) return Map.empty
-    val v = votes(parsed(Profile.melt(df, strIdx, raw = true), strIdx), strIdx)
-    strIdx.map(i => fields(i).name -> decide(v.get(i), threshold)).toMap
+    val names = df.schema.fields.filter(_.dataType == StringType)
+      .map(_.name).toSeq
+    if (names.isEmpty) return Map.empty
+    val aggs = names.flatMap(c => voteAggs(col(s"`$c`"), numericParse(c),
+      dateParse(c), lit(1L)))
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    names.zipWithIndex.map { case (c, k) =>
+      c -> decide(Some(votesOf(r, 3 * k)), threshold)
+    }.toMap
   }
 
   /** Apply an inference result as a single cast projection. */

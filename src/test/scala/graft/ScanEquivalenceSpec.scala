@@ -139,6 +139,57 @@ class ScanEquivalenceSpec extends AnyFunSuite {
       .foreach(assertEquivalent(parquet, 90L, _))
   }
 
+  /** Cell r of the over-the-bound fixture's column c: a distinct key
+    * per row in ten columns, raw spellings that merge after promotion,
+    * empties and NAs, and two low-cardinality columns for frequency
+    * rows.
+    */
+  private def wideCell(c: Int, r: Int): String =
+    if (r % 97 == c) "" else if (r % 89 == c) "NA" else c match {
+      case 0 => s"${r / 8.0}"
+      case 1 => if (r % 3 == 0) s"$r.0" else s"$r"
+      case 2 => s" ${r - 10000}"
+      case 3 => f"${r / 100.0}%.2f"
+      case 4 => java.time.LocalDate.of(1950, 1, 1).plusDays(r).toString
+      case 5 => val d = java.time.LocalDate.of(1900, 1, 1).plusDays(r)
+        s"${d.getMonthValue}/${d.getDayOfMonth}/${d.getYear}"
+      case 6 => java.time.LocalDateTime.of(2000, 1, 1, 0, 0)
+        .plusSeconds(r * 7321L).toString.replace('T', ' ')
+      case 7 => if (r % 10 == 0) s"x$r"
+        else java.time.LocalDate.of(2010, 1, 1).plusDays(r).toString
+      case 8 => s"id$r"
+      case 9 => s"k${r % 40}"
+      case 10 => s"v $r w"
+      case _ => if (r % 2 == 0) s"${r % 9}" else s"${r % 9}.0"
+    }
+
+  test("histogram-first scanTable equals the per-cell pipeline on a " +
+      "table past the driver-walk bound, run after run") {
+    // 21k rows x 12 columns: ~247k non-missing cells and ~206k distinct
+    // typed keys, so both sides take the distributed rank walk, the
+    // scan's over a typed histogram read from the persisted raw one
+    val rows = 21000
+    val dir = graft.config.Scratch.runDir + "/scan_equivalence"
+    Files.createDirectories(Paths.get(dir))
+    val path = s"$dir/wide.tsv"
+    val lines = (0 until 12).map(c => s"c$c").mkString("\t") +:
+      (0 until rows).map(r => (0 until 12).map(wideCell(_, r))
+        .mkString("\t"))
+    Files.write(Paths.get(path), lines.mkString("", "\n", "\n")
+      .getBytes("UTF-8"))
+    val wide = DelimitedSource.read(spark, path, "\t")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Seq(ScanConfig(), ScanConfig(), ScanConfig(shiftDates = true))
+      .foreach(assertEquivalent(wide, rows + 1L, _))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    import TypeInference.{CharacterT, DatetimeT, NumericT}
+    assert(TypeInference.infer(wide) == Map("c0" -> NumericT,
+      "c1" -> NumericT, "c2" -> NumericT, "c3" -> NumericT,
+      "c4" -> DatetimeT, "c5" -> DatetimeT, "c6" -> DatetimeT,
+      "c7" -> DatetimeT, "c8" -> CharacterT, "c9" -> CharacterT,
+      "c10" -> CharacterT, "c11" -> NumericT))
+  }
+
   test("the driver walk and the distributed rank walk give identical " +
       "stats on the same histogram") {
     val big = java.sql.Timestamp.valueOf("9999-12-31 23:59:59.999999")
@@ -157,9 +208,7 @@ class ScanEquivalenceSpec extends AnyFunSuite {
       val nonMissing = Profile.summarize(typed).collect().toIndexedSeq
         .map(_.getAs[Long]("non_missing"))
       val hist = Profile.valueHistogram(typed, fields.indices)
-      val onDriver = Profile.driverStats(
-        hist.select("i", "vn", "cnt", "us_lo", "us_hi").collect(),
-        fields, nonMissing)
+      val onDriver = Profile.driverStats(hist, fields, nonMissing)
       val ranked = Profile.rankedStats(hist, fields, nonMissing)
       // toString: a NaN quartile must match a NaN quartile
       assert(onDriver.toSeq.sortBy(_._1).toString ==
@@ -169,9 +218,10 @@ class ScanEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("a histogram over the driver-walk bound takes the rank walk and " +
-      "matches Spark's exact percentile; its checkpoint is released") {
-    // 210k distinct doubles: past the 200k-row driver walk
+  test("a table over the driver-walk bound takes the rank walk, " +
+      "matches Spark's exact percentile and persists nothing") {
+    // 420k non-missing cells, 210k distinct doubles: past the 200k-cell
+    // driver walk
     val df = spark.range(0, 210000, 1, 4).select(
       ((col("id") * 7919) % 210011 / 7.0).as("x"),
       timestamp_seconds(col("id") * 61 + 1000000000L).as("ts"))
