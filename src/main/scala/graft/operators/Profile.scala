@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -361,16 +362,17 @@ object Profile {
     * distinct values, which is why [[summarizeApprox]] (sketches)
     * stays the recommended 100 TB default.)
     *
-    * The walk reads a local checkpoint of `hist`, released before
-    * returning. The prefix sum reads its input twice and is only right
-    * when both reads share one range exchange; adaptive execution does
-    * not share it when the input reads a cached relation (the scan's
-    * typed histogram reads the persisted raw one), and each exchange
-    * then samples its own bounds. Over the checkpoint the exchange is
-    * shared, and the histogram is computed once however often the walk
-    * reads it (a frame over `hist.rdd` is also correct, but measured
-    * slower: its reads recompute part of the histogram). Like any local
-    * checkpoint it has no lineage: a lost executor fails the walk.
+    * When `hist` reads a cached relation (the scan's typed histogram
+    * reads the persisted raw one), the walk reads a local checkpoint
+    * of it instead, released before returning. The prefix sum reads
+    * its input twice and is only right when both reads share one range
+    * exchange; adaptive execution does not share it over a cached
+    * relation, and each exchange then samples its own bounds. Over the
+    * checkpoint the exchange is shared (a frame over `hist.rdd` is also
+    * correct, but measured slower: its reads recompute part of the
+    * histogram). Like any local checkpoint it has no lineage: a lost
+    * executor fails the walk. Any other `hist` is walked as it is: its
+    * exchange is shared, and a checkpoint would cost one more job.
     */
   private[graft] def rankedStats(hist: DataFrame, fields: Array[StructField],
       nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
@@ -388,12 +390,14 @@ object Profile {
           max(when(col("lo") <= r1 && r1 < col("hi"), col("vn")))
             .as(s"x1_$s"))
       }
-    val leaf = hist.localCheckpoint()
+    val readsCache = hist.queryExecution.withCachedData
+      .exists(_.isInstanceOf[InMemoryRelation])
+    val leaf = if (readsCache) hist.localCheckpoint() else hist
     val byCol =
       try histogramRanked(leaf, nonMissing)
         .groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
         .map(r => r.getAs[Int]("i") -> r).toMap
-      finally ColumnBridge.unpersistCheckpointed(leaf)
+      finally if (readsCache) ColumnBridge.unpersistCheckpointed(leaf)
     checkHeld(fields, nonMissing,
       i => byCol.get(i).fold(0L)(_.getAs[Long]("held")))
     val tag = tags.toMap
@@ -465,10 +469,14 @@ object Profile {
     * report-grade quantile needs.
     */
   def summarizeApprox(df0: DataFrame, rsd: Double = 0.05,
+      accuracy: Int = 100): DataFrame =
+    sketchSummary(widened(df0), rsd, accuracy)
+
+  /** [[summarizeApprox]]'s body over an already [[widened]] `df`. */
+  private def sketchSummary(df: DataFrame, rsd: Double = 0.05,
       accuracy: Int = 100): DataFrame = {
     require(accuracy > 0, s"accuracy must be positive: $accuracy")
     import graft.functions.ProfileSketchAgg
-    val df = widened(df0)
     val fields = df.schema.fields
     require(fields.nonEmpty, "cannot profile a zero-column DataFrame")
     val nullNum = lit(null).cast(DoubleType)
@@ -718,7 +726,7 @@ object Profile {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val apF = Future(summarizeApprox(df).collect()
+    val apF = Future(sketchSummary(df).collect()
       .map(r => r.getAs[String]("column_name") -> r).toMap)
     val exactDF = Future(valueHistogram(df, fields.indices)
       .groupBy("i").agg(count(lit(1)).as("d")).collect()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.ParseShape
+
 /** Statistical type promotion for all-string tables — the reference's
   * single most load-bearing semantic (whiteRRabbit.R:139-204).
   *
@@ -26,10 +28,11 @@ import org.apache.spark.sql.types._
   * sums the same votes over its value histogram instead, so the parse
   * cascade runs once per distinct value rather than once per cell
   * ([[votes]]). All parsing
-  * runs in codegen'd builtins (`try_cast`, `try_to_timestamp`); no
-  * UDFs. The date cascade stays affordable full-column because two
-  * regex gates fast-NULL every non-date value shape before any parser
-  * runs (see [[dateParse]]).
+  * runs in codegen'd builtins (`try_cast`, `try_to_timestamp`) behind
+  * one native shape classifier ([[graft.functions.ParseShape]]); no
+  * UDFs. The date cascade stays affordable full-column because each
+  * value tries only the parsers its shape can match (see
+  * [[dateParse]]).
   *
   * Divergence (documented): the reference votes on ≤1000 sampled
   * non-empty values per column (unseeded); here every non-empty value
@@ -82,98 +85,57 @@ object TypeInference {
     "d MMM yyyy", "d/MMM/yyyy", "d.MMM.yyyy",
     "d MMMM yyyy", "d-MMMM-yyyy")
 
-  /** Parse a string column as double, NULL on failure (R as.numeric). */
-  def numericParse(name: String): Column =
-    expr(s"try_cast(trim(`$name`) AS DOUBLE)")
+  /** Parse a string column as double, NULL on failure (R as.numeric):
+    * `try_cast` of the trimmed value, tried only when its shape could
+    * be a double literal ([[graft.functions.ParseShape.NumericBit]]).
+    */
+  def numericParse(name: String): Column = {
+    val t = trim(col(s"`$name`"))
+    ParseShape.gate(ParseShape.parseShape(t), ParseShape.NumericBit, t)
+      .try_cast(DoubleType)
+  }
 
   /** Parse a string column as timestamp via the ordered format list;
     * coalesce implements the reference's first-match preference. The
     * leading format-free `try_to_timestamp` covers the ISO family
     * (Ymd / Ymd HMS / YmdT — the reference's top-priority formats)
     * including variable-length fractional seconds, which fixed
-    * patterns cannot express (it is not tried on pure digits — see
-    * `neverDateGate`); the explicit list then covers the
-    * slash/dash/dot-separated and compact mdY/dmy families in
-    * preference order.
+    * patterns cannot express; the explicit list then covers the
+    * slash/dash/dot-separated, compact and month-name mdY/dmy
+    * families in preference order.
     *
-    * A single charset regex gates the parser cascade: every format
-    * (and the ISO parser) can only accept strings of digits and
-    * date/time punctuation — or, for the month-name families, strings
-    * containing a month-name token — so values matching neither branch
-    * return NULL after one regex check instead of ~40 failed parser
-    * attempts. Same result, an order of magnitude cheaper on non-date
-    * string columns (measured 7.5 s → 4 s on the stringified-orders
-    * inference query at sf0.1). A non-date string that happens to
-    * contain a month token ("may-fly") just pays the parser cascade
-    * and still yields NULL — the gate only affects speed, never the
-    * decision.
+    * Each parser is guarded by its bit of the value's shape
+    * ([[graft.functions.ParseShape]]): one native pass over the bytes
+    * reads the value's token shape and sets the bit of every parser
+    * that could accept it. A failed `try_to_timestamp(_, fmt)` costs
+    * an exception per value, so a value tries only the parsers its
+    * shape can match — a decimal, phone-number or free-text value
+    * none, "1/2/2023" only `M/d/yyyy` and `d/M/yyyy` — and an
+    * 8-digit ID ("10000001", month 00) none, because the fixed-width
+    * fields keep their plausibility bounds (MM 01–12, dd 01–31, HH
+    * 00–23, mm and ss 00–59). Every bit is a superset of what its
+    * parser accepts, so the guards change the cost, never a result.
+    *
+    * What the shape rules do decide is the date language this parse
+    * has always had: a value is a date candidate only when it starts
+    * with a digit and holds only digits and `Tt:zZ+ ./-`, or holds a
+    * month token and only letters, digits and `:, ./-`; the ISO parse
+    * is never tried on pure digits (it reads "2023" as 2023-01-01 and
+    * "202311" as the year 202311, while the reference's Ymd families
+    * need a month and a day — a column of 4-digit codes would turn
+    * datetime); and three `./-`-joined digit groups whose middle group
+    * has three or more digits are not dates. So "\t2023-01-02",
+    * "T12:30", "+2023-01-02" and "2023-001-02" stay NULL, though a
+    * parser alone would read them. TypeInferenceSpec and
+    * ExpressionFuzzSpec pin guarded == unguarded over this language.
     */
-  private val dateCharsetGate =
-    "^[0-9][0-9Tt:zZ+ ./-]*$|" +
-      "(?i)^(?=.*(?:jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec))" +
-      "[0-9a-z:, ./-]+$"
-
-  /** Charset-gate survivors that can NEVER parse — measured
-    * empirically against the full cascade (probe in round 15): pure-
-    * digit strings parse only at lengths 8 (yyyyMMdd) and 14
-    * (yyyyMMddHHmmss) — the format-free ISO parse is never tried on
-    * them, since it reads "2023" as 2023-01-01 and "202311" as the
-    * year 202311 while the reference's Ymd families need a month and
-    * a day (a column of 4-digit codes would turn datetime);
-    * single-dot decimals never parse (every dotted date format
-    * carries two dots); and among separator-joined digit groups (no
-    * time part), FOUR or more groups can never parse (every separated
-    * date format has exactly three), nor can three groups whose
-    * MIDDLE group has ≥3 digits (the middle is strictly a ≤2-digit
-    * month or day in every format, and strict parsing never consumes
-    * a partial group).
-    * Together these fast-NULL stringified numerics, decimals, phone
-    * numbers, IPs and dotted version strings — the common charset-
-    * gate survivors that are not dates — so FULL-COLUMN date
-    * validation costs near what validating true date columns alone
-    * would, which is what lets [[infer]] run as a single aggregation
-    * pass with no sampled pre-filter. (NOT exhaustive: an adversarial
-    * column of date-SHAPED non-dates like '99-99-9999' still pays
-    * the cascade and still yields NULL — the gate only affects
-    * speed, never the decision; TypeInferenceSpec pins gated ==
-    * ungated over these shapes.)
-    */
-  private val neverDateGate =
-    "^(?:[0-9]{1,7}|[0-9]{9,13}|[0-9]{15,}|[0-9]+\\.[0-9]+" +
-      "|(?:[0-9]+[./-]){3,}[0-9]+" +
-      "|[0-9]+[./-][0-9]{3,}[./-][0-9]+)$"
-
-  /** Pure-digit gate-survivors (lengths 8, 14) can match ONLY the
-    * compact formats yyyyMMdd and yyyyMMddHHmmss; every other format
-    * needs a separator. Routing them down a two-parser branch instead
-    * of the full cascade matters because a FAILED
-    * `try_to_timestamp(_, fmt)` costs an internal exception per row
-    * per format: an ID column of 8-digit keys ("10000001" —
-    * month 00, never a date) measured 24 s for one sf1 column through
-    * the full cascade and ~1 s through this branch. The two
-    * plausibility regexes (month 01-12, day 01-31, HH:mm:ss bounds)
-    * cut even those exceptions to zero for implausible values —
-    * decision-free by construction: they are supersets of what the
-    * parsers accept (Feb 31 still attempts and fails).
-    */
-  private val compactDateShape =
-    "^[0-9]{4}(0[1-9]|1[0-2])(0[1-9]|[12][0-9]|3[01])$"
-  private val compactTsShape =
-    "^[0-9]{4}(0[1-9]|1[0-2])(0[1-9]|[12][0-9]|3[01])" +
-      "([01][0-9]|2[0-3])[0-5][0-9][0-5][0-9]$"
-
   def dateParse(name: String): Column = {
     val t = trim(col(s"`$name`"))
-    when(t.rlike(dateCharsetGate) && !t.rlike(neverDateGate),
-      when(t.rlike("^[0-9]+$"),
-        coalesce(
-          when(t.rlike(compactDateShape),
-            try_to_timestamp(t, lit("yyyyMMdd"))),
-          when(t.rlike(compactTsShape),
-            try_to_timestamp(t, lit("yyyyMMddHHmmss")))))
-      .otherwise(
-        coalesce((try_to_timestamp(t) +:
-          dateFormats.map(f => try_to_timestamp(t, lit(f)))): _*)))
+    val shape = ParseShape.parseShape(t)
+    def input(k: Int) = ParseShape.gate(shape, ParseShape.dateBit(k), t)
+    coalesce((try_to_timestamp(input(0)) +: dateFormats.zipWithIndex.map {
+      case (f, k) => try_to_timestamp(input(k + 1), lit(f))
+    }): _*)
   }
 
   /** `cells` — (i, vs, cnt, …) histogram rows, one per distinct value
@@ -183,9 +145,13 @@ object TypeInference {
     * per distinct (column, value).
     */
   private[graft] def parsed(cells: DataFrame, strIdx: Seq[Int]): DataFrame = {
-    val isStr = col("i").isin(strIdx: _*)
-    cells.withColumn("num", when(isStr, numericParse("vs")))
-      .withColumn("dt", when(isStr, unix_micros(dateParse("vs"))))
+    // NULL outside the string columns, so both parses read one column
+    // and the shape of a value is read once for both
+    val s = "__str_vs"
+    cells.withColumn(s, when(col("i").isin(strIdx: _*), col("vs")))
+      .withColumn("num", numericParse(s))
+      .withColumn("dt", unix_micros(dateParse(s)))
+      .drop(s)
   }
 
   /** A string column's votes: `n` non-empty values, `bad` of them
@@ -257,7 +223,7 @@ object TypeInference {
     * Both decisions come from ONE global aggregation pass over the
     * string columns, each cell weighing 1 — the same vote aggregates
     * the scan sums over its value histogram ([[votes]]), decided by the
-    * same [[decide]]; the neverDateGate regex makes the full date
+    * same [[decide]]; the shape classifier makes the full date
     * validation as cheap on numeric columns as a sampled pre-filter
     * would make skipping them.
     *

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Session scoping for the STREAMING query family (optimization r19,
@@ -44,15 +45,13 @@ object StreamSessions {
   val MinParts = 4
   val MaxParts = 512
 
-  private def sizeOf(path: String): Long = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) 0L
-    else if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally s.close()
-    } else java.nio.file.Files.size(p)
+  /** Bytes under `path` (a file or a directory tree) on whatever
+    * filesystem its scheme names, 0 when it does not exist.
+    */
+  private def sizeOf(spark: SparkSession, path: String): Long = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
   /** Data-proportional state-partition count for a stream whose
@@ -63,7 +62,7 @@ object StreamSessions {
     spark.conf.getOption(ConfKey)
       .map(_.toInt)
       .getOrElse {
-        val bytes = inputPaths.map(sizeOf).sum
+        val bytes = inputPaths.map(sizeOf(spark, _)).sum
         val p = (bytes + BytesPerPartition - 1) / BytesPerPartition
         math.min(MaxParts, math.max(MinParts, p)).toInt
       }

@@ -201,4 +201,40 @@ class ExpressionFuzzSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("parse shape kernel: guarded date and numeric parses equal the " +
+      "ungated parsers over 400k seeded strings, codegen and interpreted") {
+    import graft.operators.TypeInference
+    val corpus = ParseCorpus.strings(20261019L, 400000)
+    // one parse per job: a projection holding several 46-parser
+    // cascades compiles past the JIT's method size limit
+    def values(df: org.apache.spark.sql.DataFrame,
+        c: org.apache.spark.sql.Column): Seq[Any] =
+      df.select(c).collect().map(_.get(0)).toSeq
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val v = values(df, col("v"))
+      val d = values(df, unix_micros(TypeInference.dateParse("v")))
+      val n = values(df, TypeInference.numericParse("v"))
+      def mismatches(got: Seq[Any], want: Seq[Any]): Seq[String] =
+        v.indices.filterNot(i => java.util.Objects.equals(got(i), want(i)))
+          .map(i => s"'${v(i)}': ${got(i)} vs ${want(i)}")
+      for ((name, got, want) <- Seq(
+          ("ungated date", d, ParseCorpus.ungatedDate("v")),
+          ("regex-gated date", d, ParseCorpus.regexGatedDate("v")),
+          ("numeric", n, ParseCorpus.ungatedNumeric("v")))) {
+        val ref = values(df, if (name.contains("date")) unix_micros(want)
+          else want)
+        val bad = mismatches(got, ref)
+        assert(bad.isEmpty, s"$name: ${bad.size} mismatches: " +
+          bad.take(10).mkString("; "))
+      }
+      // the corpus reaches both parses, not only their NULLs
+      assert(d.count(_ != null) > v.size / 4 && n.count(_ != null) > v.size / 10)
+    }
+    // whole-stage codegen behind an exchange
+    val cached = corpus.toDF("v").repartition(8).cache()
+    try check(cached) finally cached.unpersist()
+    // a local relation folds its projection by interpreted evaluation
+    check(corpus.take(20000).toDF("v"))
+  }
 }

@@ -25,6 +25,10 @@ class StreamSessionsSpec extends AnyFunSuite {
     // session's core count
     val f16 = fileOf(16 * 1024 * 1024)
     assert(StreamSessions.statePartitions(spark, Seq(f16)) == 32)
+    // a scheme-qualified URI sizes through its Hadoop filesystem
+    assert(StreamSessions.statePartitions(spark, Seq("file://" + f16)) == 32)
+    // a directory counts every file under it
+    assert(StreamSessions.statePartitions(spark, Seq(dir.toString)) == 33)
     // missing path → floor, no throw
     assert(StreamSessions.statePartitions(spark,
       Seq(dir.resolve("absent").toString)) == StreamSessions.MinParts)

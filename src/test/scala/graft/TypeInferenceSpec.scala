@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -272,5 +274,97 @@ class TypeInferenceSpec extends AnyFunSuite {
       "10-200-30", "3.14", "1234567", "2023", "12345", "202311", "9999")
     rows.filter(r => neverShapes.contains(r.getString(0)))
       .foreach(r => assert(r.isNullAt(1), r.getString(0)))
+  }
+
+  /** The date-parser bits (ISO = 0, dateFormats(k-1) = k) the shape
+    * kernel sets for each value.
+    */
+  private def dateBits(values: Seq[String]): Seq[Set[Int]] = {
+    import org.apache.spark.sql.functions.{col, trim}
+    import graft.functions.ParseShape
+    values.toDF("v").repartition(2)
+      .select(col("v"), ParseShape.parseShape(trim(col("v"))))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .pipe(m => values.map(v => (0 to TypeInference.dateFormats.size)
+        .filter(k => (m(v) & ParseShape.dateBit(k)) != 0L).toSet))
+  }
+
+  private def bit(format: String): Int =
+    TypeInference.dateFormats.indexOf(format) + 1
+
+  test("shape kernel keeps the plausibility cuts: an out-of-range " +
+      "fixed-width field reaches no parser") {
+    // each fixed-width field just outside its range: MM 00/13, dd
+    // 00/32, HH 24, mm 60, ss 60, in the compact date and timestamp
+    val cut = Seq("10000001", "20231301", "20230100", "20230132",
+      "20230102240000", "20230102236000", "20230102235960")
+    dateBits(cut).zip(cut).foreach { case (b, v) =>
+      assert(b.isEmpty, s"'$v' reached parsers $b") }
+    // spaced: only the ISO parse, which fails without an exception
+    val spaced = Seq("20230102 2400", "20230102 2360", "20230102 240000",
+      "20230102 236000", "20230102 235960", "20231302 1011")
+    dateBits(spaced).zip(spaced).foreach { case (b, v) =>
+      assert(b == Set(0), s"'$v' reached parsers $b") }
+    // the bounds are plausibility, not validity: Feb 31 still tries
+    // (and fails) its one parser, a valid value gets its format's bit
+    val kept = Seq("20230231" -> "yyyyMMdd",
+      "20230102235959" -> "yyyyMMddHHmmss")
+    dateBits(kept.map(_._1)).zip(kept).foreach { case (b, (v, f)) =>
+      assert(b == Set(bit(f)), s"'$v' -> $b") }
+    val keptSpaced = Seq("20230102 2359" -> "yyyyMMdd HHmm",
+      "20230102 235959" -> "yyyyMMdd HHmmss")
+    dateBits(keptSpaced.map(_._1)).zip(keptSpaced).foreach {
+      case (b, (v, f)) => assert(b == Set(0, bit(f)), s"'$v' -> $b") }
+    // the ISO parse is never tried on pure digits
+    dateBits(Seq("2023", "202311", "1", "123456789012345"))
+      .foreach(b => assert(b.isEmpty))
+  }
+
+  test("shape kernel: a date-shaped value that fails pays only its " +
+      "candidate parsers") {
+    val Seq(feb30, noDay, phone, iso, dmyName) =
+      dateBits(Seq("2/30/2023", "13/13/2023", "415-55-0123",
+        "2023-01-02 10:11:12", "15-Aug-2024"))
+    // month 30 is no d/M/y: M/d/y only, not the 45 other parsers
+    assert(feb30 == Set(bit("M/d/yyyy")))
+    assert(noDay.isEmpty)
+    // 415 is no year, month or day: only the (exception-free) ISO parse
+    assert(phone == Set(0))
+    assert(iso == Set(0, bit("yyyy-M-d H:m:s")))
+    assert(dmyName == Set(0, bit("d-MMM-yyyy")))
+  }
+
+  test("shape kernel: a pattern outside the derived shapes keeps its " +
+      "bit on for every admitted value") {
+    import graft.functions.{ParseShape, ShapeClassifier}
+    import org.apache.spark.unsafe.types.UTF8String
+    // day-of-year has no derived shape; yyyy-M-d has one
+    val c = new ShapeClassifier(Seq("yyyy-DDD", "yyyy-M-d"))
+    def bits(v: String): Long =
+      c.mask(UTF8String.fromString(v)) & ~ParseShape.NumericBit
+    val Seq(iso, doy, ymd) = (0 to 2).map(ParseShape.dateBit)
+    assert(bits("2023-100") == (iso | doy))
+    assert(bits("2023-1-2") == (iso | doy | ymd))
+    assert(bits("abc") == 0L && bits("3.14") == 0L)
+  }
+
+  test("shape kernel runs once per value: one classifier call per " +
+      "column serves both parses in a projection and in an aggregate") {
+    import org.apache.spark.sql.functions.{col, count, lit, when}
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val df = s2.createDataFrame(Seq(("2023-01-02", "1/2/2023"),
+      ("abc", "12"))).toDF("a", "b").repartition(2)
+    def calls(d: DataFrame): Int = d.queryExecution.debug.codegenToSeq()
+      .map(c => "\\.mask\\(".r.findAllIn(c._2).size).sum
+    val cols = Seq("a", "b")
+    assert(calls(df.select(cols.flatMap(c => Seq(TypeInference.numericParse(c),
+      TypeInference.dateParse(c))): _*)) == 2)
+    assert(calls(df.agg(count(when(TypeInference.numericParse("a").isNull, 1)),
+      count(TypeInference.dateParse("a")))) == 1)
+    assert(calls(TypeInference.promote(df,
+      Map("a" -> DatetimeT, "b" -> NumericT))) == 2)
+    assert(calls(TypeInference.parsed(df.select(lit(0).as("i"),
+      col("a").as("vs")), Seq(0))) == 1)
   }
 }
