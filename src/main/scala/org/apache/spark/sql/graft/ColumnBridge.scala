@@ -40,6 +40,20 @@ object ColumnBridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       plan)
 
+  /** `df` as a frame over the one RDD its plan executes to, persisting
+    * nothing: every plan that reads the frame reads that RDD, so an
+    * exchange inside `df` runs, and samples its range bounds, once
+    * however many branches read it. Building the frame plans `df` and,
+    * under adaptive execution, runs its exchanges (`LogicalRDD` is
+    * private[sql], hence this bridge).
+    */
+  def overExecutedRdd(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ofRows(df.sparkSession, org.apache.spark.sql.execution.LogicalRDD
+      .fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
+
   /** Unpersist the RDDs behind a `localCheckpoint`ed DataFrame
     * (optimization r18). `Dataset.unpersist` only clears CacheManager
     * entries; a localCheckpoint persists at the RDD level, so its

@@ -40,19 +40,32 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("salted LSH path is pair-identical to the direct expansion") {
-    // force the salted path on the tiny corpus (every bucket over a
-    // 2-id cap splits into cells) and require the exact same verified
-    // pair set as the default direct expansion
-    val direct = Dedup.minhashPairs(docs, "doc_id", "text",
+    // force the replicated cell blocks (every bucket over the cap
+    // splits into ceil(n / cap) cells) and require the exact same
+    // verified pairs and candidates as the default direct expansion:
+    // on the five docs, and on a hot corpus whose 40-id buckets split
+    // into ~20, ~14 and ~8 cells, so off-diagonal blocks of nc >= 3
+    // cells are expanded
+    val hot = (0 until 40).map(i => (100L + i,
+      if (i % 4 == 0) base else base.replace("dog", s"dog$i"), "h"))
+      .toDF("doc_id", "text", "source").union(docs)
+    def verified = Dedup.minhashPairs(docs, "doc_id", "text",
       threshold = 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    System.setProperty("graft.lsh.bucket.cap", "2")
-    try {
-      val salted = Dedup.minhashPairs(docs, "doc_id", "text",
-        threshold = 0.5).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(salted == direct)
-    } finally System.clearProperty("graft.lsh.bucket.cap")
+    def candidates = Dedup.minhashCandidates(hot, "doc_id", "text",
+      numHashes = 16, bands = 8, shingleSize = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (direct, directCand) = (verified, candidates)
+    val same = (0 until 40 by 4).map(100L + _)
+    assert(same.combinations(2).forall(p => directCand((p(0), p(1)))))
+    assert(directCand.forall(p => p._1 < p._2))
+    for (cap <- Seq(2, 3, 5)) {
+      System.setProperty("graft.lsh.bucket.cap", cap.toString)
+      try {
+        assert(verified == direct, s"cap $cap")
+        assert(candidates == directCand, s"cap $cap")
+      } finally System.clearProperty("graft.lsh.bucket.cap")
+    }
   }
 
   test("degenerate hot bucket (5k identical docs) completes salted " +
@@ -80,9 +93,32 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val sorts = exprs.flatMap(_.collect { case s: ArraySort => s })
     val inLambda = exprs.flatMap(_.collect { case l: LambdaFunction => l })
       .flatMap(_.collect { case s: ArraySort => s })
-    // one sort per expansion branch (small buckets, salted cells)
-    assert(sorts.size == 2, plan.toString)
+    // one sort, of the lo cell's ids, in the one expansion branch
+    assert(sorts.size == 1, plan.toString)
     assert(inLambda.isEmpty, plan.toString)
+  }
+
+  test("LSH candidate plan: native band keys, no join, one collect_list " +
+      "aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import graft.functions.MinHashBandKeys
+    val plan = Dedup.minhashCandidates(docs, "doc_id", "text",
+      numHashes = 4, bands = 2, shingleSize = 3)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, plan.toString)
+    val keyNodes = plan.collect {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[MinHashBandKeys])) => p
+    }
+    assert(keyNodes.size == 1, plan.toString)
+    assert(!keyNodes.head.expressions.exists(_.exists(
+      _.isInstanceOf[LambdaFunction])), plan.toString)
+    val collects = plan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(
+        _.isInstanceOf[CollectList])) => a
+    }
+    assert(collects.size == 1, plan.toString)
   }
 
   test("minhash verification rejects below-threshold candidates") {
@@ -286,6 +322,34 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(fast.sameElements(dist))
     assert(fast.nonEmpty && fast.length == dist.length)
+  }
+
+  test("duplicate clustering gate boundary: gate = edge count runs " +
+      "driver-side, gate = count - 1 and a null id run distributed, " +
+      "with equal labels") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // the driver path returns a frame over the collected rows
+    def driverSide(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation])
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().filterNot(_.isNullAt(0))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 7L), (5L, 9L), (11L, 12L))
+    val pairs = edges.toDF("id_a", "id_b")
+    val n = edges.size.toLong
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
+      5L -> 5L, 9L -> 5L, 11L -> 11L, 12L -> 11L)
+    val atGate = Dedup.duplicateClusters(pairs, driverGateEdges = n)
+    val overGate = Dedup.duplicateClusters(pairs, driverGateEdges = n - 1)
+    assert(driverSide(atGate) && !driverSide(overGate))
+    assert(labels(atGate) == expected && labels(overGate) == expected)
+    // one null id under the gate: the driver union-find cannot take it
+    val withNull = (edges.map { case (a, b) => (Option(a), Option(b)) } :+
+      ((Option(13L), Option.empty[Long]))).toDF("id_a", "id_b")
+    val nulls = Dedup.duplicateClusters(withNull)
+    assert(!driverSide(nulls))
+    assert(labels(nulls) == expected + (13L -> 13L))
   }
 
   test("duplicate clustering converges on a long path graph and under " +

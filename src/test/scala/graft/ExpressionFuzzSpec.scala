@@ -84,6 +84,57 @@ class ExpressionFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("minhashBandKeys (codegen and interpreted) equals band keys " +
+      "folded from minhashSignature's lanes; short docs give NULL, no rows") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.functions.MinHashBandKeys
+    val n = 3
+    // ~100 seeded docs, with the 0-, 1- and 2-token docs the seed draws
+    // plus explicit ones shorter than n
+    val docs = (0 until 100).map(_ => doc(40).mkString(" ")) ++
+      Seq("", "a", "a b", "a b c")
+    for ((numHashes, bands) <- Seq((64, 16), (4, 2))) {
+      val r = numHashes / bands
+      def keys(df: org.apache.spark.sql.DataFrame) = df.select(
+          MinHashExpression.minhashSignature(
+            TextFunctions.tokens(col("text")), numHashes, n).as("sig"),
+          MinHashExpression.minhashBandKeys(
+            TextFunctions.tokens(col("text")), numHashes, n, bands).as("bk"))
+      // whole-stage codegen behind an exchange
+      val coded = keys(docs.toDF("text").repartition(3))
+      val codedRows = coded.collect().toSeq
+      val plan = coded.queryExecution.executedPlan
+      assert(new AdaptiveSparkPlanHelper {}.collect(plan) {
+        case w: WholeStageCodegenExec => w
+      }.exists(_.child.expressions.exists(_.exists(
+        _.isInstanceOf[MinHashBandKeys]))), plan.toString)
+      // a local relation folds its projection by interpreted evaluation
+      val interpreted = keys(docs.toDF("text"))
+      for (rows <- Seq(codedRows, interpreted.collect().toSeq)) {
+        assert(rows.size == docs.size)
+        // the exchange reorders rows: check each row's keys against the
+        // signature in the same row
+        rows.foreach { row =>
+          if (row.isNullAt(0)) assert(row.isNullAt(1))
+          else {
+            val sig = row.getSeq[Long](0).toIndexedSeq
+            val want = (0 until bands).map { j =>
+              sig.slice(j * r, (j + 1) * r)
+                .foldLeft(j.toLong)((h, lane) => XXH64.hashLong(lane, h))
+            }
+            assert(row.getSeq[Long](1) == want)
+          }
+        }
+      }
+      val short = docs.count(_.split(" ", -1).length < n)
+      assert(short >= 3 &&
+        interpreted.where(col("bk").isNull).count() == short)
+      assert(coded.select(posexplode(col("bk"))).count() ==
+        (docs.size - short).toLong * bands)
+    }
+  }
+
   test("simhash64 matches a reference bit-vote over 100 random docs") {
     val docs = (0 until 100).map(_ => doc(30)).filter(_.nonEmpty)
     val got = docs.map(d => d.mkString(" ")).toDF("text")

@@ -192,6 +192,45 @@ class RankingSpec extends AnyFunSuite {
     }
   }
 
+  test("globalRowNumber, prefixSums and equiDepthHistogram over a " +
+      "persisted input under adaptive execution equal the " +
+      "single-partition window") {
+    import graft.operators.Profile
+    assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    val rnd = new scala.util.Random(20261020L)
+    // more rows per input partition than the range sampler draws, so
+    // two range exchanges would sample different bounds; the string
+    // column is one the offsets branch never reads
+    val rows = (1L to 20000L).map(i =>
+      (i, rnd.nextInt(1000).toLong, rnd.nextInt(100).toLong, s"s$i"))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 6))
+      .toDF("id", "k", "x", "s").persist()
+    try {
+      val w = Window.orderBy(col("k"), col("id"))
+      val expected = df
+        .withColumn("rn", row_number().over(w))
+        .withColumn("cx", sum(col("x")).over(
+          w.rowsBetween(Window.unboundedPreceding, 0)))
+        .collect()
+        .map(r => (r.getLong(0), (r.getInt(4).toLong, r.getLong(5)))).toMap
+      val hist = Profile.equiDepthHistogram(df, "k", 7, numPartitions = 1)
+        .collect().toSeq.map(_.toSeq)
+      for (run <- 1 to 3) {
+        val ranked = Ranking.globalRowNumber(df,
+            Seq(col("k"), col("id")), numPartitions = 4)
+          .collect().map(r => (r.getLong(0), r.getLong(4))).toMap
+        val summed = Ranking.prefixSums(df, Seq(col("k"), col("id")),
+            Seq("x" -> "cx"), numPartitions = 4)
+          .collect().map(r => (r.getLong(0), r.getLong(4))).toMap
+        val bad = rows.count { case (id, _, _, _) =>
+          ranked(id) != expected(id)._1 || summed(id) != expected(id)._2 }
+        assert(bad == 0, s"$bad misranked rows in run $run")
+        assert(Profile.equiDepthHistogram(df, "k", 7, numPartitions = 4)
+          .collect().toSeq.map(_.toSeq) == hist, s"run $run")
+      }
+    } finally df.unpersist()
+  }
+
   test("ranking, prefix-sum, drift, and grouped-quantile operators " +
       "return empty results on empty input") {
     import graft.operators.{Drift, Profile}
