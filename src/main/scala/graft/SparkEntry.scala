@@ -7031,7 +7031,7 @@ object SparkEntry {
       // both post-checks — two data passes total, not four
       val (n1, mean1, cov1) = Similarity.momentsOf(emb, "embedding")
       val top = Similarity.pcaTopKFromCov(n1, cov1, 1).head
-      val corrected = Similarity.abttCorrectFromMoments(emb, "vec_id",
+      val corrected = Similarity.abttCorrect(emb, "vec_id",
         "embedding", mean1, cov1, numComponents = 2)
       val (n2, mean2, cov2) = Similarity.momentsOf(corrected,
         "corrected")

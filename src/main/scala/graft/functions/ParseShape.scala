@@ -135,8 +135,10 @@ case class ShapeGate(shape: Expression, value: Expression, bit: Long)
   *   - the ISO bit unless it is all digits (the ISO parse reads "2023"
   *     as a date, the reference's Ymd families do not), and only when
   *     it opens, after an optional sign, with a digit run followed by
-  *     its end, `-`, `:`, space or a `T`, or with a `T` run followed
-  *     by digits — the openings Spark's string-to-timestamp accepts;
+  *     its end, `-`, space or a `T` — the openings of a value with a
+  *     date part that Spark's string-to-timestamp accepts. A time-only
+  *     value ("12:30", "T12:30") gets no ISO bit: the ISO parse would
+  *     read it as that time on the day the parse runs;
   *   - format k's bit when its token kinds equal the format's and
   *     every field is plausible. The shape is derived from the
   *     pattern: `yyyy` is a digit run of exactly its width, or at
@@ -247,11 +249,9 @@ final class ShapeClassifier private[graft] (formats: Seq[String]) {
       val signed = k0 == Dash || k0 == Plus
       val a = if (signed) k1 else k0
       val c = if (signed) k2 else k1
-      val aFirst = if (signed) b1 else s.getByte(0)
       val cFirst = if (signed) b2 else b1
-      if ((a == Digits && (c == 0 || c == Dash || c == Colon ||
-            c == Space || (c == Letters && (cFirst | 0x20) == 't'))) ||
-          (a == Letters && (aFirst | 0x20) == 't' && c == Digits)) m |= 1L
+      if (a == Digits && (c == 0 || c == Dash || c == Space ||
+          (c == Letters && (cFirst | 0x20) == 't'))) m |= 1L
     }
     if (ntok <= MaxTokens) {
       val at = java.util.Arrays.binarySearch(sigKeys, sig)

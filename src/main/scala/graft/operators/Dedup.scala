@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.TextFunctions
 
@@ -567,8 +568,14 @@ object Dedup {
     // once (id_a < id_b), so the union is duplicate-free by
     // construction, and min-aggregation is insensitive to duplicate
     // edges anyway — a distinct here would be a pure extra shuffle.
-    val p = materialize(
-      pairs.select(col(idA).as("src"), col(idB).as("dst")), "cc_pairs")
+    // Pairs that already are a checkpoint (or a projection of one, as
+    // a caller's `minhashPairs(...).localCheckpoint()`) are read as
+    // they are: a copy would cost one more job and duplicate their rows.
+    // A `checkpointDir` still writes its reliable copy.
+    val edges0 = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+    val owned = checkpointDir.nonEmpty ||
+      !ColumnBridge.readsCheckpoint(edges0)
+    val p = if (owned) materialize(edges0, "cc_pairs") else edges0
     // gate conditions (ADVICE r18): BOTH id columns must share one
     // integral type (mixed Int/Long would emit the wider ids through
     // the head column's narrower type) and carry no nulls (the driver
@@ -587,10 +594,10 @@ object Dedup {
           !head.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         val out = driverComponents(head, p)
         // the gate path is done with the materialized pairs the moment
-        // they are collected — release the checkpoint pin (RDD-level;
-        // Dataset.unpersist does not see localCheckpoint blocks)
-        scala.util.Try(
-          org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpointed(p))
+        // they are collected — release its own checkpoint pin (RDD-level;
+        // Dataset.unpersist does not see localCheckpoint blocks), never
+        // the caller's
+        if (owned) scala.util.Try(ColumnBridge.unpersistCheckpointed(p))
         return out
       }
     }
@@ -753,7 +760,6 @@ object Dedup {
     */
   def incrementalNew(newDf: DataFrame, seenDf: DataFrame,
       textCol: String, expectedSeen: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 

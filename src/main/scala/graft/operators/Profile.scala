@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Per-column profile statistics — the reference's core product.
@@ -362,17 +360,10 @@ object Profile {
     * distinct values, which is why [[summarizeApprox]] (sketches)
     * stays the recommended 100 TB default.)
     *
-    * When `hist` reads a cached relation (the scan's typed histogram
-    * reads the persisted raw one), the walk reads a local checkpoint
-    * of it instead, released before returning. The prefix sum reads
-    * its input twice and is only right when both reads share one range
-    * exchange; adaptive execution does not share it over a cached
-    * relation, and each exchange then samples its own bounds. Over the
-    * checkpoint the exchange is shared (a frame over `hist.rdd` is also
-    * correct, but measured slower: its reads recompute part of the
-    * histogram). Like any local checkpoint it has no lineage: a lost
-    * executor fails the walk. Any other `hist` is walked as it is: its
-    * exchange is shared, and a checkpoint would cost one more job.
+    * `hist` is walked as it is, also when it reads a cached relation
+    * (the scan's typed histogram reads the persisted raw one):
+    * `Ranking.prefixSums` reads one executed range-partitioned RDD in
+    * both passes, so they share its bounds over any input.
     */
   private[graft] def rankedStats(hist: DataFrame, fields: Array[StructField],
       nonMissing: IndexedSeq[Long]): Map[Int, HistStats] = {
@@ -390,14 +381,9 @@ object Profile {
           max(when(col("lo") <= r1 && r1 < col("hi"), col("vn")))
             .as(s"x1_$s"))
       }
-    val readsCache = hist.queryExecution.withCachedData
-      .exists(_.isInstanceOf[InMemoryRelation])
-    val leaf = if (readsCache) hist.localCheckpoint() else hist
-    val byCol =
-      try histogramRanked(leaf, nonMissing)
-        .groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
-        .map(r => r.getAs[Int]("i") -> r).toMap
-      finally if (readsCache) ColumnBridge.unpersistCheckpointed(leaf)
+    val byCol = histogramRanked(hist, nonMissing)
+      .groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
+      .map(r => r.getAs[Int]("i") -> r).toMap
     checkHeld(fields, nonMissing,
       i => byCol.get(i).fold(0L)(_.getAs[Long]("held")))
     val tag = tags.toMap

@@ -7,20 +7,38 @@ import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.VectorExpressions
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (`Array[Float]`), LLM-pipeline extension surface.
+/** Nearest-neighbor search and embedding analytics over an embedding
+  * column (`Array[Float]`), LLM-pipeline extension surface.
   *
-  * Three tiers, trading recall for scale:
-  *   - [[knnBruteForce]]: exact top-k; query side broadcast, corpus
-  *     side streamed — one scan, no corpus shuffle. The baseline.
-  *   - [[knnIvf]]: IVF — corpus partitioned by nearest centroid,
-  *     queries probe only the nprobe closest inverted lists; touches
-  *     nprobe/numCentroids of the data.
-  *   - [[lshNearDupPairs]]: random-hyperplane LSH bucketing for
-  *     pair mining without any all-pairs join.
+  * Top-k search, one tier per recall/scale trade-off, every result a
+  * (query_id, rn, neighbor_id) frame for the query set {id < numQueries}:
+  *   - [[knnBruteForce]]: exact; the baseline every tier grades
+  *     against with [[recallAtK]].
+  *   - [[knnIvf]], [[knnIvfTrained]], [[knnIvfOnIndex]]: IVF — queries
+  *     probe the nprobe nearest inverted lists of a seed or k-means
+  *     coarse quantizer, over a one-shot or append-maintained index.
+  *   - [[knnGraph]], [[knnGraphOnIndex]]: beam search over a
+  *     cluster-blocked k-NN graph with IVF entry points.
+  *   - [[knnPq]], [[knnSq8]], [[knnIvfPq]]: compressed codes (product,
+  *     scalar and residual product quantization) scanned for a
+  *     shortlist that an exact-cosine rerank orders.
+  * The tiers share their stages: one broadcast query-side scan (the
+  * corpus streams once, no corpus shuffle before the rank), one
+  * top-nprobe centroid probe, one product quantizer and one shortlist
+  * rerank. A quantized tier (and the replayable LSH) checks every
+  * vector's length against `dim` in the plan and fails naming the row.
+  *
+  * Pair mining: [[semanticNearDupPairs]] (within coarse clusters) and
+  * [[lshNearDupPairs]] (random-hyperplane buckets; its integer twin
+  * [[lshNearDupPairsReplayable]] is the registered, oracle-replayed
+  * one), all verified by exact cosine. Beside search:
+  * [[semanticDecontaminate]], [[hardNegatives]], [[embeddingOutliers]],
+  * PCA ([[pcaTopK]]) and all-but-the-top correction ([[abttCorrect]]).
   *
   * All vector math is higher-order array expressions (zip_with +
-  * aggregate) over doubles — codegen'd, no UDF.
+  * aggregate) over doubles — codegen'd, no UDF — and deterministic
+  * (struct and id tie-breaks, fixed fold orders), so DuckDB oracles
+  * replay every registered query.
   */
 object Similarity {
 
@@ -38,27 +56,67 @@ object Similarity {
   def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
     VectorExpressions.vectorDot(a, b) / (normA * normB)
 
-  /** Exact cosine top-k for the query set {id < numQueries}. The query
-    * side is broadcast; each corpus partition computes its local
-    * similarities and the per-query rank is a shuffle keyed by
-    * query_id over corpus-side rows only.
+  // rows of a normed frame as the query side (query_id, qvec, qnorm)
+  private def asQueries(v: DataFrame): DataFrame =
+    v.select(col("id").as("query_id"), col("vec").as("qvec"),
+      col("norm").as("qnorm"))
+
+  // cosine of a query row and a corpus row paired by queryScan
+  private def querySim: Column =
+    cosine(col("qvec"), col("vec"), col("qnorm"), col("norm"))
+
+  // the query-side scan: `corpus` streams once past the broadcast
+  // query-side rows `q`, paired on `keys` (none: every query), self
+  // excluded — each corpus partition scores its own rows, and only the
+  // per-query rank that follows shuffles
+  private def queryScan(corpus: DataFrame, q: DataFrame,
+      keys: Seq[String] = Nil): DataFrame =
+    if (keys.isEmpty)
+      corpus.join(broadcast(q), col("id") =!= col("query_id"))
+    else corpus.join(broadcast(q), keys).where(col("id") =!= col("query_id"))
+
+  // the first n rows of each `part` group in `order`, numbered 1..n
+  // in the column `rn`
+  private def topN(df: DataFrame, part: String, n: Int, rn: String,
+      order: Column*): DataFrame =
+    df.withColumn(rn,
+        row_number().over(Window.partitionBy(part).orderBy(order: _*)))
+      .where(col(rn) <= n)
+
+  // per query the k rows of highest `sim` (ties by id) as the search
+  // result (query_id, rn, neighbor_id)
+  private def knnResult(scored: DataFrame, k: Int): DataFrame =
+    topN(scored, "query_id", k, "rn", col("sim").desc, col("id"))
+      .select(col("query_id"), col("rn"), col("id").as("neighbor_id"))
+      .orderBy("query_id", "rn")
+
+  // exact-cosine rerank of a quantized tier's (query_id, id) shortlist:
+  // only the shortlisted rows fetch their vectors from the normed `v`,
+  // so quantization error decides which candidates survive, never the
+  // final order
+  private def rerank(shortlist: DataFrame, v: DataFrame,
+      k: Int): DataFrame =
+    knnResult(shortlist.join(broadcast(asQueries(v)), Seq("query_id"))
+      .join(v, Seq("id")).withColumn("sim", querySim), k)
+
+  // `vec` when its length is `dim`; any other length fails the query
+  // naming the row's `id` and both lengths — a slice, element_at or
+  // zip_with past a short vector's end pads or cuts it silently
+  private def sized(vec: Column, id: Column, dim: Int): Column =
+    when(size(vec) =!= dim, raise_error(format_string(
+      s"vector id %s has length %d, expected dim=$dim", id, size(vec))))
+      .otherwise(vec)
+
+  /** Exact cosine top-k for the query set {id < numQueries}: the
+    * corpus streams past the broadcast queries (`queryScan`), then the
+    * per-query rank — a shuffle keyed by query_id over corpus-side
+    * rows only.
     */
   def knnBruteForce(df: DataFrame, idCol: String, vecCol: String,
       numQueries: Int, k: Int): DataFrame = {
     val v = normed(df, idCol, vecCol)
-    val q = v.where(col("id") < numQueries)
-      .select(col("id").as("query_id"), col("vec").as("qvec"),
-        col("norm").as("qnorm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id"))
-    v.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("sim",
-        cosine(col("qvec"), col("vec"), col("qnorm"), col("norm")))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("rn").as("rn"),
-        col("id").as("neighbor_id"))
-      .orderBy("query_id", "rn")
+    knnResult(queryScan(v, asQueries(v.where(col("id") < numQueries)))
+      .withColumn("sim", querySim), k)
   }
 
   /** IVF approximate top-k: vectors with id < numCentroids serve as the
@@ -183,6 +241,14 @@ object Similarity {
       .groupBy("id")
       .agg(max(struct(col("csim"), col("cid"))).as("best"))
 
+  // the top-nprobe centroid probe: each query row of `v`
+  // (id < numQueries) with its n nearest centroids, one row per
+  // (id, cid), centroid ties toward the larger cid
+  private def probes(v: DataFrame, cents: DataFrame, numQueries: Int,
+      n: Int): DataFrame =
+    topN(centroidScored(v.where(col("id") < numQueries), cents), "id", n,
+      "pr", col("csim").desc, col("cid").desc)
+
   // the deterministic seed quantizer: vectors with id < n stand in for
   // trained centroids, as (cid, cvec, cnorm)
   private def seedCentroids(v: DataFrame, n: Int): DataFrame =
@@ -231,24 +297,11 @@ object Similarity {
     // query side: the nprobe closest lists per query (the query set is
     // k-NN-sized; the rank window is bounded by numCentroids rows per
     // query)
-    val probeW = Window.partitionBy("id")
-      .orderBy(col("csim").desc, col("cid").desc)
-    val q = centroidScored(v.where(col("id") < numQueries), cents)
-      .withColumn("pr", row_number().over(probeW))
-      .where(col("pr") <= nprobe)
+    val q = probes(v, cents, numQueries, nprobe)
       .select(col("id").as("query_id"), col("vec").as("qvec"),
         col("norm").as("qnorm"), col("cid"))
-
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id"))
-    assigned.join(broadcast(q), Seq("cid"))
-      .where(col("id") =!= col("query_id"))
-      .withColumn("sim",
-        cosine(col("qvec"), col("vec"), col("qnorm"), col("norm")))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("id").as("neighbor_id"))
-      .orderBy("query_id", "rn")
+    knnResult(queryScan(assigned, q, Seq("cid"))
+      .withColumn("sim", querySim), k)
   }
 
   /** Graph-based ANN tier — beam search over a cluster-blocked k-NN
@@ -296,48 +349,10 @@ object Similarity {
   def knnGraph(df: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int, graphDegree: Int, numEntries: Int,
       beam: Int, rounds: Int, numQueries: Int, k: Int): DataFrame = {
-    val (out, pinned) = knnGraphPlan(df, idCol, vecCol, numCentroids,
-      graphDegree, numEntries, beam, rounds, numQueries, k)
-    ColumnBridge.collectReleased(out, pinned: _*)
-  }
-
-  /** [[knnGraph]]'s lazy plan + pinned caches (see
-    * [[graphSearchPlan]]) — the ONE construction site, so the
-    * plan-guard twin can never drift from the registered query;
-    * callers must unpersist the returned pins.
-    */
-  private[graft] def knnGraphPlan(df: DataFrame, idCol: String,
-      vecCol: String, numCentroids: Int, graphDegree: Int,
-      numEntries: Int, beam: Int, rounds: Int, numQueries: Int,
-      k: Int): (DataFrame, Seq[DataFrame]) = {
     val cents = ivfSeedCentroids(df, idCol, vecCol, numCentroids)
-    val edges = graphIndexEdges(df, idCol, vecCol, cents, None,
-      graphDegree)
-    graphSearchPlan(normed(df, idCol, vecCol), edges, cents,
+    graphSearch(normed(df, idCol, vecCol),
+      graphIndexEdges(df, idCol, vecCol, cents, None, graphDegree), cents,
       numEntries, beam, rounds, numQueries, k)
-  }
-
-  /** One REAL search round as a lazy plan, for the plan-shape guard:
-    * since r19 [[graphSearchPlan]] derives its final top-k from the
-    * last round's collected beam rows (no separate rescore job), so
-    * the search's returned frame is a local relation with nothing to
-    * inspect. This twin builds the identical index + entry frontier
-    * (same one-action collect) and returns the [[beamRoundPlan]] the
-    * loop would collect — the construction is shared, so the guard
-    * cannot drift from the registered query. Callers release the
-    * returned pins.
-    */
-  private[graft] def graphRoundPlanTwin(df: DataFrame, idCol: String,
-      vecCol: String, numCentroids: Int, graphDegree: Int,
-      numEntries: Int, beam: Int, numQueries: Int)
-      : (DataFrame, Seq[DataFrame]) = {
-    val cents = ivfSeedCentroids(df, idCol, vecCol, numCentroids)
-    val v = normed(df, idCol, vecCol)
-    val edges = graphIndexEdges(df, idCol, vecCol, cents, None,
-      graphDegree).localCheckpoint(true)
-    val (entries, q, _) = collectFrontier(v, cents, numQueries,
-      numEntries)
-    (beamRoundPlan(v, edges, q, entries, beam), Seq(edges))
   }
 
   /** ONE action collecting the entry points AND the query payloads
@@ -353,10 +368,7 @@ object Similarity {
       : (DataFrame, DataFrame, org.apache.spark.sql.types.StructType) = {
     val spark = v.sparkSession
     import scala.jdk.CollectionConverters._
-    val eBase = centroidScored(v.where(col("id") < numQueries), cents)
-      .withColumn("pr", row_number().over(Window.partitionBy("id")
-        .orderBy(col("csim").desc, col("cid").desc)))
-      .where(col("pr") <= numEntries)
+    val eBase = probes(v, cents, numQueries, numEntries)
       .select(col("id").as("query_id"), col("cid").as("id"),
         col("vec").as("qvec"), col("norm").as("qnorm"))
     val eRows = eBase.collect()
@@ -393,8 +405,6 @@ object Similarity {
     val b = assignWith(normed(batch, idCol, vecCol), cents)
       .select(col("cid"), col("id"), col("vec"), col("norm"))
     val pool = existing.map(b.unionByName(_)).getOrElse(b)
-    val eW = Window.partitionBy("src")
-      .orderBy(col("esim").desc, col("dst"))
     val out = b.select(col("cid"), col("id").as("src"),
         col("vec").as("svec"), col("norm").as("snorm"))
       .join(pool.select(col("cid"), col("id").as("dst"),
@@ -402,10 +412,9 @@ object Similarity {
       .where(col("src") =!= col("dst"))
       .withColumn("esim", cosine(col("svec"), col("dvec"),
         col("snorm"), col("dnorm")))
-      .withColumn("ern", row_number().over(eW))
-      .where(col("ern") <= graphDegree)
-      .select(col("src"), col("dst"))
-    out.union(out.select(col("dst").as("src"), col("src").as("dst")))
+    val top = topN(out, "src", graphDegree, "ern", col("esim").desc,
+      col("dst")).select(col("src"), col("dst"))
+    top.union(top.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
   }
 
@@ -418,55 +427,47 @@ object Similarity {
     */
   def knnGraphOnIndex(edges: DataFrame, index: DataFrame,
       cents: DataFrame, numEntries: Int, beam: Int, rounds: Int,
-      numQueries: Int, k: Int): DataFrame = {
-    val (out, pinned) = graphSearchPlan(
-      index.select(col("id"), col("vec"), col("norm")),
+      numQueries: Int, k: Int): DataFrame =
+    graphSearch(index.select(col("id"), col("vec"), col("norm")),
       edges, cents, numEntries, beam, rounds, numQueries, k)
-    ColumnBridge.collectReleased(out, pinned: _*)
-  }
 
-  /** The lazy beam-search plan plus the DataFrames it pinned, in
-    * release order. Package-private so PlanShapeSpec can assert the
-    * physical shape (no cartesian, bounded sides broadcast) on the
-    * REAL search plan — [[graphSearch]] collapses its result to a
-    * local relation after releasing the caches, which leaves nothing
-    * for a plan guard to inspect.
-    */
   /** The query rows broadcast-rescored against the vector table —
-    * shared by the round plan, the rounds == 0 degenerate path, and
-    * the plan-guard twin. The query's own id may enter the beam
-    * (sim 1.0 tops it) — kept: its out-edges are exactly the
-    * candidates a search wants, and the final rank excludes self.
+    * shared by the round plan and the rounds == 0 degenerate path.
+    * The query's own id may enter the beam (sim 1.0 tops it) — kept:
+    * its out-edges are exactly the candidates a search wants, and the
+    * final rank excludes self.
     */
   private def rescoredPlan(v: DataFrame, q: DataFrame,
       cand: DataFrame): DataFrame =
     v.join(broadcast(cand), Seq("id"))
       .join(broadcast(q), Seq("query_id"))
-      .withColumn("sim", cosine(col("qvec"), col("vec"),
-        col("qnorm"), col("norm")))
+      .withColumn("sim", querySim)
 
   /** ONE beam round as a lazy plan: expand `frontier` over the edge
     * table, union, dedup, rescore, beam-rank. The search loop
-    * collects this plan once per round; [[graphRoundPlanTwin]] hands
-    * the same construction to the plan guard.
+    * collects this plan once per round.
     */
   private def beamRoundPlan(v: DataFrame, edges: DataFrame,
       q: DataFrame, frontier: DataFrame, beam: Int): DataFrame = {
-    val bW = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id"))
     val expanded = edges.join(broadcast(frontier),
         col("id") === col("src"))
       .select(col("query_id"), col("dst").as("id"))
     val cand = frontier.union(expanded).distinct()
-    rescoredPlan(v, q, cand)
-      .withColumn("bn", row_number().over(bW))
-      .where(col("bn") <= beam)
+    topN(rescoredPlan(v, q, cand), "query_id", beam, "bn",
+      col("sim").desc, col("id"))
       .select(col("query_id"), col("id"), col("sim"))
   }
 
-  private[graft] def graphSearchPlan(v: DataFrame, edges0: DataFrame,
+  /** The beam search of [[knnGraph]] and [[knnGraphOnIndex]] over the
+    * vector table `v` and the edge table `edges0`: entry points from
+    * the centroid probe, `rounds` collected beam rounds, the top-k
+    * derived driver-side from the last round's rows. Returns the
+    * numQueries × k result as a local relation, with the edge table's
+    * checkpoint released.
+    */
+  private def graphSearch(v: DataFrame, edges0: DataFrame,
       cents: DataFrame, numEntries: Int, beam: Int, rounds: Int,
-      numQueries: Int, k: Int): (DataFrame, Seq[DataFrame]) = {
+      numQueries: Int, k: Int): DataFrame = {
     require(beam > k, s"beam $beam must exceed k $k (the query " +
       "itself may occupy one beam slot)")
     // the round-wise search routes the query vectors plus
@@ -489,8 +490,8 @@ object Similarity {
     // inside that job (an eager per-round count looked tidier for
     // releasing round n−1 early, but the extra job boundaries cost
     // knn_graph ~4× in the r17 sweep for a memory saving of one
-    // queries×beam-row frontier); every pin is handed to the caller
-    // and released after the final collect, success or failure.
+    // queries×beam-row frontier); the pin is released after the final
+    // collect.
     // r18 restructure, measured via per-stage task metrics + job
     // timelines (guide §1/§3.3/§5): the r17 shape (lazy persist pins,
     // one action) made every stage's task binary carry the whole
@@ -578,7 +579,7 @@ object Similarity {
         org.apache.spark.sql.types.StructField("rn",
           org.apache.spark.sql.types.IntegerType, nullable = false),
         eSchema(1).copy(name = "neighbor_id"))))
-    (out, Seq(edges))
+    ColumnBridge.collectReleased(out, edges)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023): corpus
@@ -659,8 +660,8 @@ object Similarity {
     * per-query-key equi-join on result-sized frames (k·queries rows,
     * never corpus-sized).
     */
-  def recallAtK(exact: DataFrame, approx: DataFrame, k: Int,
-      broadcastApprox: Boolean = true): DataFrame = {
+  def recallAtK(exact: DataFrame, approx: DataFrame,
+      k: Int): DataFrame = {
     // both sides are numQueries × k rows BY CONSTRUCTION for every
     // registry caller; without the hint the planner could not estimate
     // the windowed/searched subtrees, planned a sort-merge join, and
@@ -668,15 +669,11 @@ object Similarity {
     // task binary — a JFR of ann_recall_eval_graph showed
     // BloomFilterImplV2 deserialization as the top task-time frame
     // (optimization r18, guide §3.1/§3.2: hint when you KNOW a side is
-    // small). `broadcastApprox = false` is the escape hatch for a
-    // caller grading a corpus-scale approx frame (ADVICE r18): the
-    // plan then degrades gracefully to the planner's choice instead of
-    // forcing an over-cap broadcast build.
+    // small).
     val a = approx.select(col("query_id"), col("neighbor_id"),
       lit(1).as("hit"))
     exact.select(col("query_id"), col("neighbor_id"))
-      .join(if (broadcastApprox) broadcast(a) else a,
-        Seq("query_id", "neighbor_id"), "left")
+      .join(broadcast(a), Seq("query_id", "neighbor_id"), "left")
       .groupBy("query_id")
       .agg(count(col("hit")).as("n_hits"))
       .select(col("query_id"), col("n_hits"),
@@ -739,22 +736,29 @@ object Similarity {
       tol: Double = 1e-9, maxIters: Int = 20000): Seq[PcaTop] = {
     val d = cov0.length
     require(k >= 1 && k <= d, s"need 1 <= k <= $d components")
+    val trace = (0 until d).map(i => cov0(i)(i)).sum
+    topEigen(cov0, k, tol, maxIters).map { case (lambda, v, residual) =>
+      PcaTop(n, d, lambda, v, lambda / trace, residual)
+    }
+  }
+
+  // the top k (eigenvalue, eigenvector, residual) triples of `cov0` by
+  // power iteration, each deflated from a private copy (in place:
+  // later components iterate on the residual operator, orthogonal to
+  // everything already extracted)
+  private def topEigen(cov0: Array[Array[Double]], k: Int, tol: Double,
+      maxIters: Int): Seq[(Double, Array[Double], Double)] = {
     val cov = cov0.map(_.clone())
-    val trace = (0 until d).map(i => cov(i)(i)).sum
+    val d = cov.length
     (0 until k).map { _ =>
-      val (lambda, v, residual) = powerIterate(cov, tol, maxIters)
-      // deflate in place: later components iterate on the residual
-      // operator, orthogonal to everything already extracted
+      val e @ (lambda, v, _) = powerIterate(cov, tol, maxIters)
       var i = 0
       while (i < d) {
         var j = 0
-        while (j < d) {
-          cov(i)(j) -= lambda * v(i) * v(j)
-          j += 1
-        }
+        while (j < d) { cov(i)(j) -= lambda * v(i) * v(j); j += 1 }
         i += 1
       }
-      PcaTop(n, d, lambda, v, lambda / trace, residual)
+      e
     }
   }
 
@@ -865,43 +869,18 @@ object Similarity {
     * and removing them measurably improves cosine-similarity tasks.
     *
     * Scale shape: the model (mean + k component vectors) comes from
-    * the one-pass moments aggregate + driver-side deflation, then
+    * the caller's one-pass moments aggregate ([[momentsOf]], whose
+    * covariance the caller may share with [[pcaTopKFromCov]]) +
+    * driver-side deflation of a private copy of the covariance, then
     * ships back into the plan as ARRAY LITERALS (the BPE-vocab /
     * centroid pattern): the correction itself is a pure projection —
     * per-row zip_with arithmetic, no join, no shuffle, no second
     * aggregate. Output: idCol + `corrected` array&lt;double&gt;.
     */
   def abttCorrect(df: DataFrame, idCol: String, vecCol: String,
-      numComponents: Int = 1, tol: Double = 1e-9,
-      maxIters: Int = 20000): DataFrame = {
-    val (_, mean, cov) = momentsOf(df, vecCol)
-    abttCorrectFromMoments(df, idCol, vecCol, mean, cov,
-      numComponents, tol, maxIters)
-  }
-
-  /** [[abttCorrect]] from an ALREADY-computed moments pass — the
-    * one-data-pass path for callers that need the moments themselves
-    * (the pcaTopKFromCov pairing). Deflates a private copy of the
-    * covariance, so the caller's matrix survives.
-    */
-  def abttCorrectFromMoments(df: DataFrame, idCol: String,
-      vecCol: String, mean: Array[Double],
-      cov0: Array[Array[Double]], numComponents: Int,
+      mean: Array[Double], cov0: Array[Array[Double]], numComponents: Int,
       tol: Double = 1e-9, maxIters: Int = 20000): DataFrame = {
-    val cov = cov0.map(_.clone())
-    val comps = {
-      val d = cov.length
-      (0 until numComponents).map { _ =>
-        val (lambda, v, _) = powerIterate(cov, tol, maxIters)
-        var i = 0
-        while (i < d) {
-          var j = 0
-          while (j < d) { cov(i)(j) -= lambda * v(i) * v(j); j += 1 }
-          i += 1
-        }
-        v
-      }
-    }
+    val comps = topEigen(cov0, numComponents, tol, maxIters).map(_._2)
     val meanCol = array(mean.map(lit).toIndexedSeq: _*)
     val centered = df.select(col(idCol),
       zip_with(transform(col(vecCol), x => x.cast("double")), meanCol,
@@ -916,12 +895,13 @@ object Similarity {
     }
   }
 
-  /** Random-hyperplane LSH buckets: sign bits of numBits fixed random
-    * projections (hyperplanes derived deterministically from xxhash64 of
-    * (plane, dim) — no RNG state to ship). Vectors sharing a bucket are
-    * near-dup candidates; verify with exact cosine. Candidate
-    * generation is an equality join on the bucket key — never all
-    * pairs.
+  /** Random-hyperplane LSH near-duplicate pairs: a vector's bucket in
+    * each of `numTables` tables is the sign bits of `numBits`
+    * pseudo-random hyperplanes (xxhash64 components in [-1, 1)).
+    * Vectors sharing a bucket are candidates, verified by exact cosine
+    * ≥ threshold; candidate generation is an equality join on the
+    * bucket key — never all pairs — and verification makes precision
+    * 1.0 by construction.
     *
     * Parameter guidance: per-table collision probability for a pair at
     * angle θ is (1 - θ/π)^numBits, overall recall
@@ -932,58 +912,73 @@ object Similarity {
   def lshNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, numBits: Int = 6, numTables: Int = 8)
       : DataFrame = {
-    val v = normed(df, idCol, vecCol)
     // pseudo-random hyperplane component for (table t, bit b, dim i):
     // xxhash64 mapped to [-1, 1)
     def comp(t: Int, b: Int, i: Column): Column =
       pmod(xxhash64(lit(t * 7919 + b), i), lit(1000000L))
         .cast("double") / lit(500000.0) - lit(1.0)
-    def bucket(t: Int, vec: Column): Column =
-      (0 until numBits).map { b =>
-        val dot = VectorExpressions.vectorDot(vec,
-          transform(sequence(lit(0), size(vec) - 1), i => comp(t, b, i)))
-        when(dot >= 0, lit(1L) * lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
-
-    val tables = (0 until numTables).map { t =>
-      v.select(lit(t).as("tbl"), bucket(t, col("vec")).as("bucket"),
-        col("id"), col("vec"), col("norm"))
-    }.reduce(_ union _)
-    pairsFromTables(tables, threshold)
+    val vec = col("vec")
+    hyperplanePairs(normed(df, idCol, vecCol), threshold, numBits,
+      numTables)((t, b) => VectorExpressions.vectorDot(vec,
+        transform(sequence(lit(0), size(vec) - 1), i => comp(t, b, i))))
   }
 
-  /** SQL-replayable twin of [[lshNearDupPairs]] (VERDICT r4 #4): same
-    * bucket-join pipeline, but hyperplane components are INTEGERS
-    * precomputed driver-side from an LCG fold (see [[replayComp]]) and
-    * the bucket-bit decision is a pure integer dot product over the
-    * vector quantized as floor(x·2^20) — order-independent and exact
-    * in both Spark and DuckDB BIGINT arithmetic, so a SQL oracle
-    * replays the buckets bit-for-bit (a double dot's sign could flip
-    * with summation order). Candidate quality is equivalent: signs of
-    * LCG hyperplanes are as balanced as xxh64's at these bit widths.
-    * Production default stays [[lshNearDupPairs]] (xxh64).
+  /** SQL-replayable twin of [[lshNearDupPairs]], the one
+    * `embed_neardup_lsh` registers: the same bucket-join pipeline, but
+    * hyperplane components are INTEGERS precomputed driver-side from an
+    * LCG fold ([[replayComp]]) and the bit decision is an integer dot
+    * product over the vector quantized as floor(x·2^20) —
+    * order-independent and exact in both Spark and DuckDB BIGINT
+    * arithmetic, so a SQL oracle replays the buckets bit-for-bit (a
+    * double dot's sign could flip with summation order). The 2^20
+    * quantization is exact for |x| < 2^31 floats and changes only the
+    * hyperplane geometry (a rounded direction), not correctness. The
+    * hyperplanes span `dim` components: a vector of another length
+    * fails the query, naming its id and both lengths.
     *
-    * The 2^20 quantization is exact for |x| < 2^31 floats and changes
-    * only hyperplane geometry (a rounded direction), not correctness:
-    * verification is still exact cosine ≥ threshold.
+    * Recall contract: the LCG components of one table and bit are a
+    * linear sequence in the dim index cut to 20 bits, so the 48
+    * default hyperplanes lie close to a few common directions and the
+    * tables collide far less independently than (1 - θ/π)^numBits
+    * predicts — 1 of the 7 pairs at cosine ≥ 0.45 on the sf0.001
+    * embeddings, where [[lshNearDupPairs]] finds 4 of them.
     */
   def lshNearDupPairsReplayable(df: DataFrame, idCol: String,
       vecCol: String, threshold: Double, numBits: Int = 6,
       numTables: Int = 8, dim: Int = 64): DataFrame = {
     val v = normed(df, idCol, vecCol).withColumn("vq",
-      transform(col("vec"), x => floor(x * lit(1048576.0))))
-    def bucket(t: Int): Column =
-      (0 until numBits).map { b =>
-        val cs = typedLit((0 until dim).map(i => replayComp(t, b, i)))
-        val dot = aggregate(
-          zip_with(col("vq"), cs, (x, y) => x * y), lit(0L), _ + _)
-        when(dot >= 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
+      transform(sized(col("vec"), col("id"), dim),
+        x => floor(x * lit(1048576.0))))
+    hyperplanePairs(v, threshold, numBits, numTables) { (t, b) =>
+      val cs = typedLit((0 until dim).map(i => replayComp(t, b, i)))
+      aggregate(zip_with(col("vq"), cs, (x, y) => x * y), lit(0L), _ + _)
+    }
+  }
+
+  // the hyperplane LSH pipeline over the normed rows `v`: table t's
+  // bucket sets bit b where `dot(t, b)` — the row against hyperplane
+  // (t, b) — is ≥ 0; rows sharing a (table, bucket) key are paired and
+  // verified by exact cosine ≥ threshold
+  private def hyperplanePairs(v: DataFrame, threshold: Double,
+      numBits: Int, numTables: Int)(dot: (Int, Int) => Column)
+      : DataFrame = {
     val tables = (0 until numTables).map { t =>
-      v.select(lit(t).as("tbl"), bucket(t).as("bucket"),
+      v.select(lit(t).as("tbl"), (0 until numBits).map(b =>
+          when(dot(t, b) >= 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce(_ + _).as("bucket"),
         col("id"), col("vec"), col("norm"))
     }.reduce(_ union _)
-    pairsFromTables(tables, threshold)
+    val a = tables.select(col("tbl"), col("bucket"), col("id").as("id_a"),
+      col("vec").as("vec_a"), col("norm").as("norm_a"))
+    val b = tables.select(col("tbl"), col("bucket"), col("id").as("id_b"),
+      col("vec").as("vec_b"), col("norm").as("norm_b"))
+    a.join(b, Seq("tbl", "bucket")).where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        round(cosine(col("vec_a"), col("vec_b"), col("norm_a"),
+          col("norm_b")), 6).as("cos"))
+      .distinct()
+      .where(col("cos") >= threshold)
+      .orderBy("id_a", "id_b")
   }
 
   /** Integer hyperplane component for (table t, bit b, dim i): three
@@ -999,6 +994,85 @@ object Similarity {
     h = (h * A + C).mod(M)
     h = (h * A + C).mod(M)
     (((h >> 33).mod(BigInt(1) << 20)) - (BigInt(1) << 19)).toLong
+  }
+
+  /** Product quantizer (Jégou et al. 2011) of the array column `x`:
+    * `dim` splits into `numSubspaces` contiguous sub-vectors, and the
+    * codebook of subspace m is the m-th sub-vectors of the rows of
+    * `book`, code = row id — the deterministic stand-in for a trained
+    * codebook. A side's rows are keyed by `keys`, the first of them the
+    * id the length guard names. Sub-vector distances are rounded at 9
+    * decimals and folded in a fixed order, so a SQL oracle argmins and
+    * sums identical values.
+    */
+  private final class ProductQuantizer(book: DataFrame, x: String,
+      numCodes: Int, numSubspaces: Int, dim: Int) {
+    require(dim % numSubspaces == 0, "dim must split evenly")
+    private val subDim = dim / numSubspaces
+
+    // (keys..., m, svec): the m-th contiguous sub-vector of each row
+    private def sliced(side: DataFrame, keys: Seq[String]): DataFrame = {
+      val vec = sized(col(x), col(keys.head), dim)
+      side.select(keys.map(col) :+ posexplode(array((0 until numSubspaces)
+          .map(m => slice(vec, m * subDim + 1, subDim)): _*))
+        .as(Seq("m", "svec")): _*)
+    }
+
+    private val codebook = sliced(book, Seq("id")).select(col("m"),
+      col("id").cast("int").as("code"), col("svec").as("cvec"))
+
+    // every sub-vector against its subspace's broadcast codebook, with
+    // their squared L2 distance d2
+    private def scored(side: DataFrame, keys: Seq[String]): DataFrame =
+      sliced(side, keys).join(broadcast(codebook), Seq("m"))
+        .withColumn("d2", round(aggregate(zip_with(col("svec"),
+          col("cvec"), (a, b) => (a - b) * (a - b)), lit(0.0), _ + _), 9))
+
+    /** (keys..., codes): per subspace the nearest code — a map-side
+      * `min(struct)` partial agg, one code row per sub-vector reaches
+      * the shuffle — pivoted back to a position-ordered array.
+      */
+    def encode(side: DataFrame, keys: Seq[String]): DataFrame =
+      scored(side, keys)
+        .groupBy((keys :+ "m").map(col): _*)
+        .agg(min(struct(col("d2"), col("code"))).as("best"))
+        .select(keys.map(col) ++ Seq(col("m"), col("best.code").as("code")): _*)
+        .groupBy(keys.map(col): _*)
+        .agg(array_sort(collect_list(struct(col("m"), col("code"))))
+          .as("ps"))
+        .select(keys.map(col) :+
+          transform(col("ps"), p => p.getField("code")).as("codes"): _*)
+
+    /** (keys..., lut): each row's exact distance to every code, a flat
+      * table indexed by m·numCodes + code (asymmetric distance
+      * computation: the query side stays exact).
+      */
+    def lut(side: DataFrame, keys: Seq[String]): DataFrame =
+      scored(side, keys)
+        .withColumn("slot", col("m") * numCodes + col("code"))
+        .groupBy(keys.map(col): _*)
+        .agg(array_sort(collect_list(struct(col("slot"), col("d2"))))
+          .as("ps"))
+        .select(keys.map(col) :+
+          transform(col("ps"), p => p.getField("d2")).as("lut"): _*)
+
+    /** The ADC scan: `codes` rows (id, keys...) past the broadcast
+      * (query_id, keys..., lut) rows, the distance a fixed-order fold
+      * of `lut[m·numCodes + code_m]` — codegen'd array arithmetic over
+      * the codes, no vector math — and the `n` nearest rows per query
+      * (ties by id) as the (query_id, id) shortlist.
+      */
+    def shortlist(codes: DataFrame, luts: DataFrame, keys: Seq[String],
+        n: Int): DataFrame = {
+      val dist = aggregate(
+        zip_with(col("codes"), sequence(lit(0), lit(numSubspaces - 1)),
+          (c, mi) => element_at(col("lut"),
+            (mi * numCodes + c + 1).cast("int"))),
+        lit(0.0), _ + _)
+      topN(queryScan(codes, luts, keys).withColumn("dist", dist),
+        "query_id", n, "rn", col("dist").asc, col("id").asc)
+        .select(col("query_id"), col("id"))
+    }
   }
 
   /** Product-quantization top-k (Jégou et al. 2011, "Product
@@ -1027,107 +1101,32 @@ object Similarity {
     *     is a fixed-order fold of `lut[m·numCodes + code_m]` — pure
     *     codegen'd array arithmetic over the 8-byte codes, no vector
     *     math in the hot loop.
+    *   - rerank: ADC picks the `shortlist` best candidates per query
+    *     (the cheap scan over codes prunes the corpus), then ONLY those
+    *     rows are fetched for an exact cosine rerank to top-k —
+    *     quantization error affects which candidates survive the
+    *     shortlist, not the final ordering, so an untrained codebook
+    *     still reaches high recall. `shortlist` must be at least k.
     *
     * Vectors are L2-normalized before slicing, so squared-L2 ADC
     * ranking is cosine ranking (‖a−b‖² = 2−2·cos for unit vectors) and
-    * the results are comparable to [[knnBruteForce]]'s.
-    *
-    * `shortlist > 0` adds the production rerank stage: ADC picks the
-    * `shortlist` best candidates per query (the cheap scan over codes
-    * prunes the corpus), then ONLY those rows are fetched for an exact
-    * cosine rerank to top-k — quantization error affects which
-    * candidates survive the shortlist, not the final ordering, so an
-    * untrained codebook still reaches high recall. `shortlist = 0`
-    * returns the raw ADC ranking.
-    *
-    * Per-subspace distances are rounded at 9 decimals before the fold
-    * and the fold order is fixed (zip_with position order), so engine
-    * and oracle sum bit-identically; rank ties break by neighbor id.
+    * the results are comparable to [[knnBruteForce]]'s. A vector whose
+    * length is not `dim` fails the query, naming its id and both
+    * lengths. Rank ties break by neighbor id.
     */
   def knnPq(df: DataFrame, idCol: String, vecCol: String,
       numCodes: Int = 16, numSubspaces: Int = 8, numQueries: Int = 10,
-      k: Int = 5, dim: Int = 64, shortlist: Int = 0): DataFrame = {
-    require(dim % numSubspaces == 0, "dim must split evenly")
-    val subDim = dim / numSubspaces
+      k: Int = 5, dim: Int = 64, shortlist: Int = 50): DataFrame = {
+    require(shortlist >= k, s"shortlist $shortlist must be at least k $k")
     val vRaw = normed(df, idCol, vecCol)
     val v = vRaw.select(col("id"),
       transform(col("vec"), x => x / col("norm")).as("vec"))
-
-    // (id, m, svec): the m-th contiguous sub-vector of each row
-    def sliced(side: DataFrame): DataFrame =
-      side.select(col("id"), posexplode(
-        array((0 until numSubspaces).map(m =>
-          slice(col("vec"), m * subDim + 1, subDim)): _*))
-        .as(Seq("m", "svec")))
-
-    val cb = sliced(v.where(col("id") < numCodes))
-      .select(col("m"), col("id").cast("int").as("code"),
-        col("svec").as("cvec"))
-
-    // squared L2 between a sub-vector and a codebook entry, rounded so
-    // the oracle's argmin/sum compare identical values
-    val d2 = round(aggregate(
-      zip_with(col("svec"), col("cvec"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), _ + _), 9)
-
-    def scored(side: DataFrame): DataFrame =
-      side.join(broadcast(cb), Seq("m")).withColumn("d2", d2)
-
-    // corpus → codes: argmin per (id, subspace) aggregates partially
-    // map-side; codes pivot back to a position-ordered array
-    val enc = scored(sliced(v))
-      .groupBy("id", "m")
-      .agg(min(struct(col("d2"), col("code"))).as("best"))
-      .select(col("id"), col("m"), col("best.code").as("code"))
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("m"), col("code"))))
-        .as("ps"))
-      .select(col("id"),
-        transform(col("ps"), p => p.getField("code")).as("codes"))
-
-    // query → flat LUT array indexed by m·numCodes + code
-    val lut = scored(sliced(v.where(col("id") < numQueries)))
-      .withColumn("slot", col("m") * numCodes + col("code"))
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("slot"), col("d2"))))
-        .as("ps"))
-      .select(col("id").as("query_id"),
-        transform(col("ps"), p => p.getField("d2")).as("lut"))
-
-    // ADC: fixed-order fold over the code array through the LUT
-    val dist = aggregate(
-      zip_with(col("codes"),
-        sequence(lit(0), lit(numSubspaces - 1)),
-        (c, mi) => element_at(col("lut"),
-          (mi * numCodes + c + 1).cast("int"))),
-      lit(0.0), _ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("id").asc)
-    val adc = enc.join(broadcast(lut), col("id") =!= col("query_id"))
-      .withColumn("dist", dist)
-      .withColumn("rn", row_number().over(w))
-    if (shortlist <= 0) {
-      adc.where(col("rn") <= k)
-        .select(col("query_id"), col("rn"), col("id").as("neighbor_id"))
-        .orderBy("query_id", "rn")
-    } else {
-      // rerank: exact cosine over the ADC shortlist only — the join
-      // fetches shortlist·numQueries vectors, not the corpus
-      val cand = adc.where(col("rn") <= shortlist)
-        .select(col("query_id"), col("id"))
-      val q = vRaw.select(col("id").as("query_id"),
-        col("vec").as("qvec"), col("norm").as("qnorm"))
-      val rw = Window.partitionBy("query_id")
-        .orderBy(col("sim").desc, col("id").asc)
-      cand.join(broadcast(q), Seq("query_id"))
-        .join(vRaw, Seq("id"))
-        .withColumn("sim",
-          cosine(col("qvec"), col("vec"), col("qnorm"), col("norm")))
-        .withColumn("rn", row_number().over(rw))
-        .where(col("rn") <= k)
-        .select(col("query_id"), col("rn"), col("id").as("neighbor_id"))
-        .orderBy("query_id", "rn")
-    }
+    val pq = new ProductQuantizer(v.where(col("id") < numCodes), "vec",
+      numCodes, numSubspaces, dim)
+    val lut = pq.lut(v.where(col("id") < numQueries), Seq("id"))
+      .select(col("id").as("query_id"), col("lut"))
+    rerank(pq.shortlist(pq.encode(v, Seq("id")), lut, Nil, shortlist),
+      vRaw, k)
   }
 
   /** Scalar quantization (SQ8) — the remaining standard quantization
@@ -1146,25 +1145,16 @@ object Similarity {
     * broadcasts; encode/decode are per-row projections; the scan is
     * the same broadcast-queries pass as [[knnBruteForce]] but over
     * byte codes. A constant dimension (mx = mn) encodes as 0 and
-    * decodes back to mn exactly.
+    * decodes back to mn exactly. The projections index positions
+    * 1..dim, so a vector of another length fails the query, naming
+    * its id and both lengths.
     */
   def knnSq8(df: DataFrame, idCol: String, vecCol: String,
       numQueries: Int = 10, k: Int = 5, shortlist: Int = 50,
       dim: Int = 64): DataFrame = {
     val vRaw = normed(df, idCol, vecCol)
-    val u = vRaw.select(col("id"),
-      transform(col("vec"), x => x / col("norm")).as("uvec"))
-    // the encode/decode projections index positions 1..dim — a vector
-    // shorter than `dim` would element_at past its end and propagate
-    // NULLs into codes and the shortlist ranking silently. One
-    // size-only corpus pass fails fast instead (same guard family as
-    // the morton-bounds require in ZOrder).
-    u.agg(min(size(col("uvec"))).as("a"), max(size(col("uvec"))).as("b"))
-      .take(1).headOption.filterNot(_.isNullAt(0)).foreach { r =>
-        require(r.getInt(0) == dim && r.getInt(1) == dim,
-          s"knnSq8 dim=$dim but corpus vector lengths span " +
-            s"[${r.getInt(0)}, ${r.getInt(1)}]")
-      }
+    val u = vRaw.select(col("id"), transform(
+      sized(col("vec"), col("id"), dim), x => x / col("norm")).as("uvec"))
     // per-dimension corpus range, pivoted into broadcast arrays
     val ranges = u.select(posexplode(col("uvec")).as(Seq("d", "x")))
       .groupBy("d").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
@@ -1198,26 +1188,10 @@ object Similarity {
     val simQ = round(aggregate(
       zip_with(col("dvec"), col("qvec"), (a, b) => a * b),
       lit(0.0), _ + _), 9)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("simq").desc, col("id").asc)
-    val cand = dq.join(broadcast(queries), col("id") =!= col("query_id"))
-      .withColumn("simq", simQ)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= shortlist)
+    val cand = topN(queryScan(dq, queries).withColumn("simq", simQ),
+      "query_id", shortlist, "rn", col("simq").desc, col("id").asc)
       .select(col("query_id"), col("id"))
-    // exact rerank over the shortlist only
-    val qx = vRaw.select(col("id").as("query_id"),
-      col("vec").as("qvec"), col("norm").as("qnorm"))
-    val rw = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id").asc)
-    cand.join(broadcast(qx), Seq("query_id"))
-      .join(vRaw, Seq("id"))
-      .withColumn("sim",
-        cosine(col("qvec"), col("vec"), col("qnorm"), col("norm")))
-      .withColumn("rn", row_number().over(rw))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("id").as("neighbor_id"))
-      .orderBy("query_id", "rn")
+    rerank(cand, vRaw, k)
   }
 
   /** IVF-PQ (IVFADC — Jégou et al. 2011, §IV): the industry-standard
@@ -1247,15 +1221,14 @@ object Similarity {
     * training, assignment, residual encode, LUT, ADC, and rerank
     * bit-for-bit. The residual codebook is the deterministic stand-in
     * (residuals of vectors with `id < numCodes`), mirroring
-    * [[knnPq]]'s seed codebook.
+    * [[knnPq]]'s seed codebook. A residual whose length is not `dim`
+    * fails the query, naming its id and both lengths.
     */
   def knnIvfPq(df: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int = 16, nprobe: Int = 6, numCodes: Int = 16,
       numSubspaces: Int = 8, numQueries: Int = 10, k: Int = 5,
       dim: Int = 64, shortlist: Int = 50, iterations: Int = 2)
       : DataFrame = {
-    require(dim % numSubspaces == 0, "dim must split evenly")
-    val subDim = dim / numSubspaces
     val v = normed(df, idCol, vecCol)
     // pinned: the trained quantizer feeds assignment, codebook,
     // probes, and the unit-centroid view — without the persist every
@@ -1265,98 +1238,35 @@ object Similarity {
     val cu = broadcast(cents.select(col("cid"),
       transform(col("cvec"), x => x / col("cnorm")).as("cuvec")))
 
-    // unit-space residual vs the assigned (or probed) centroid
-    val rvec = zip_with(
-      transform(col("vec"), x => x / col("norm")), col("cuvec"),
-      (x, c) => x - c)
+    // unit-space residual vs the assigned (or probed) centroid of the
+    // row named `id`; zip_with pads a short vector to the centroid's
+    // length, so the vector's own length is checked first
+    def rvec(id: String): Column = zip_with(
+      transform(sized(col("vec"), col(id), dim), x => x / col("norm")),
+      col("cuvec"), (x, c) => x - c)
 
     // corpus: one list per vector (argmax with the (sim, cid) struct
-    // tie-break), residual against the OWN list's centroid
+    // tie-break), residual against the OWN list's centroid; the
+    // shared residual codebook is the stand-in rows' residuals
     val assigned = assignWith(v, cents)
       .join(cu, Seq("cid"))
-      .withColumn("rvec", rvec)
-
-    // (key..., m, svec): contiguous sub-vectors of the residual
-    def rsliced(side: DataFrame, keyCols: Seq[String]): DataFrame =
-      side.select(keyCols.map(col) :+ posexplode(
-        array((0 until numSubspaces).map(m =>
-          slice(col("rvec"), m * subDim + 1, subDim)): _*))
-        .as(Seq("m", "svec")): _*)
-
-    // shared residual codebook: residual sub-vectors of the stand-in
-    // rows, one codebook per subspace, broadcast everywhere
-    val cb = broadcast(
-      rsliced(assigned.where(col("id") < numCodes), Seq("id"))
-        .select(col("m"), col("id").cast("int").as("code"),
-          col("svec").as("cvec")))
-    val d2 = round(aggregate(
-      zip_with(col("svec"), col("cvec"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), _ + _), 9)
-
-    // encode: per-(id, subspace) argmin over the codebook, map-side
-    // partial agg, codes pivoted to a position-ordered byte array
-    val enc = rsliced(assigned, Seq("id", "cid")).join(cb, Seq("m"))
-      .withColumn("d2", d2)
-      .groupBy("id", "cid", "m")
-      .agg(min(struct(col("d2"), col("code"))).as("best"))
-      .select(col("id"), col("cid"), col("m"), col("best.code").as("code"))
-      .groupBy("id", "cid")
-      .agg(array_sort(collect_list(struct(col("m"), col("code"))))
-        .as("ps"))
-      .select(col("id"), col("cid"),
-        transform(col("ps"), p => p.getField("code")).as("codes"))
+      .withColumn("rvec", rvec("id"))
+    val pq = new ProductQuantizer(assigned.where(col("id") < numCodes),
+      "rvec", numCodes, numSubspaces, dim)
 
     // queries probe their nprobe best lists; each probe carries the
     // residual against THAT list's centroid (ADC's distances are
     // per-list because the centroid term differs)
-    val probeW = Window.partitionBy("id")
-      .orderBy(col("csim").desc, col("cid").desc)
-    val probes = centroidScored(v.where(col("id") < numQueries), cents)
-      .withColumn("pr", row_number().over(probeW))
-      .where(col("pr") <= nprobe)
+    val probed = probes(v, cents, numQueries, nprobe)
       .select(col("id").as("query_id"), col("cid"), col("vec"),
         col("norm"))
       .join(cu, Seq("cid"))
-      .withColumn("rvec", rvec)
-    val lut = rsliced(probes, Seq("query_id", "cid")).join(cb, Seq("m"))
-      .withColumn("d2", d2)
-      .withColumn("slot", col("m") * numCodes + col("code"))
-      .groupBy("query_id", "cid")
-      .agg(array_sort(collect_list(struct(col("slot"), col("d2"))))
-        .as("ps"))
-      .select(col("query_id"), col("cid"),
-        transform(col("ps"), p => p.getField("d2")).as("lut"))
+      .withColumn("rvec", rvec("query_id"))
 
     // ADC scan: codes join the broadcast per-(query, list) LUTs on
-    // cid — only probed lists produce candidates; fixed-order fold
-    val dist = aggregate(
-      zip_with(col("codes"),
-        sequence(lit(0), lit(numSubspaces - 1)),
-        (c, mi) => element_at(col("lut"),
-          (mi * numCodes + c + 1).cast("int"))),
-      lit(0.0), _ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("id").asc)
-    val cand = enc.join(broadcast(lut), Seq("cid"))
-      .where(col("id") =!= col("query_id"))
-      .withColumn("dist", dist)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= shortlist)
-      .select(col("query_id"), col("id"))
-
-    // exact-cosine rerank over the shortlist only
-    val q = v.select(col("id").as("query_id"), col("vec").as("qvec"),
-      col("norm").as("qnorm"))
-    val rw = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id").asc)
-    cand.join(broadcast(q), Seq("query_id"))
-      .join(v, Seq("id"))
-      .withColumn("sim",
-        cosine(col("qvec"), col("vec"), col("qnorm"), col("norm")))
-      .withColumn("rn", row_number().over(rw))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("id").as("neighbor_id"))
-      .orderBy("query_id", "rn")
+    // cid — only probed lists produce candidates
+    rerank(pq.shortlist(pq.encode(assigned, Seq("id", "cid")),
+      pq.lut(probed, Seq("query_id", "cid")), Seq("cid"), shortlist), v, k)
   }
 
   /** Hard-negative mining for contrastive training (the in-between
@@ -1368,6 +1278,19 @@ object Similarity {
     * swap the scorer for [[knnPq]]'s ADC shortlist and band-filter the
     * rerank instead — the band logic is one `where` either way.
     */
+  def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
+      numQueries: Int, k: Int, simLo: Double, simHi: Double)
+      : DataFrame = {
+    val v = normed(df, idCol, vecCol)
+    topN(queryScan(v, asQueries(v.where(col("id") < numQueries)))
+        .withColumn("sim", round(querySim, 6))
+        .where(col("sim") >= simLo && col("sim") < simHi),
+      "query_id", k, "rn", col("sim").desc, col("id"))
+      .select(col("query_id"), col("rn"),
+        col("id").as("negative_id"), col("sim"))
+      .orderBy("query_id", "rn")
+  }
+
   /** Embedding outlier report — vectors far from their group's
     * centroid, the curation screen for mis-embedded / mislabeled /
     * junk documents before they poison contrastive training or ANN
@@ -1415,44 +1338,5 @@ object Similarity {
       .select(col("grp"), col("vec_id"),
         round(col("dist"), 6).as("dist"), round(col("z"), 6).as("z"))
       .orderBy("grp", "vec_id")
-  }
-
-  def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
-      numQueries: Int, k: Int, simLo: Double, simHi: Double)
-      : DataFrame = {
-    val v = normed(df, idCol, vecCol)
-    val q = v.where(col("id") < numQueries)
-      .select(col("id").as("query_id"), col("vec").as("qvec"),
-        col("norm").as("qnorm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id"))
-    v.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("sim",
-        round(cosine(col("qvec"), col("vec"), col("qnorm"),
-          col("norm")), 6))
-      .where(col("sim") >= simLo && col("sim") < simHi)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("rn"),
-        col("id").as("negative_id"), col("sim"))
-      .orderBy("query_id", "rn")
-  }
-
-  /** Bucket equality join → exact-cosine verification, shared by both
-    * LSH variants.
-    */
-  private def pairsFromTables(tables: DataFrame,
-      threshold: Double): DataFrame = {
-    val a = tables.select(col("tbl"), col("bucket"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("norm").as("norm_a"))
-    val b = tables.select(col("tbl"), col("bucket"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("norm").as("norm_b"))
-    a.join(b, Seq("tbl", "bucket")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("vec_a"), col("vec_b"), col("norm_a"),
-          col("norm_b")), 6).as("cos"))
-      .distinct()
-      .where(col("cos") >= threshold)
-      .orderBy("id_a", "id_b")
   }
 }

@@ -123,11 +123,16 @@ object TypeInference {
     * is never tried on pure digits (it reads "2023" as 2023-01-01 and
     * "202311" as the year 202311, while the reference's Ymd families
     * need a month and a day — a column of 4-digit codes would turn
-    * datetime); and three `./-`-joined digit groups whose middle group
-    * has three or more digits are not dates. So "\t2023-01-02",
-    * "T12:30", "+2023-01-02" and "2023-001-02" stay NULL, though a
-    * parser alone would read them. TypeInferenceSpec and
-    * ExpressionFuzzSpec pin guarded == unguarded over this language.
+    * datetime); the ISO parse is never tried on a time-only value
+    * ("12:30", "1:2", "12:30:00"), which it reads as that time on the
+    * day the scan runs — a column of clock times would turn datetime,
+    * with summary dates that change from day to day, and none of the
+    * reference's orders is time-only; and three `./-`-joined digit
+    * groups whose middle group has three or more digits are not dates.
+    * So "\t2023-01-02", "T12:30", "12:30", "+2023-01-02" and
+    * "2023-001-02" stay NULL, though a parser alone would read them.
+    * TypeInferenceSpec and ExpressionFuzzSpec pin guarded == unguarded
+    * over this language.
     */
   def dateParse(name: String): Column = {
     val t = trim(col(s"`$name`"))

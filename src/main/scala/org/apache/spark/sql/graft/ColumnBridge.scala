@@ -54,6 +54,24 @@ object ColumnBridge {
       .fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
   }
 
+  /** Whether `df` is a checkpoint or a projection of one: its
+    * optimized plan is projections over a `LogicalRDD` whose RDD is
+    * checkpointed or persisted (what `checkpoint` and `localCheckpoint`
+    * produce), so its rows are already materialized.
+    */
+  def readsCheckpoint(df: org.apache.spark.sql.DataFrame): Boolean = {
+    def over(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : Boolean = p match {
+      case org.apache.spark.sql.catalyst.plans.logical.Project(_, c) =>
+        over(c)
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.isCheckpointed ||
+          lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case _ => false
+    }
+    over(df.queryExecution.optimizedPlan)
+  }
+
   /** Unpersist the RDDs behind a `localCheckpoint`ed DataFrame
     * (optimization r18). `Dataset.unpersist` only clears CacheManager
     * entries; a localCheckpoint persists at the RDD level, so its

@@ -352,6 +352,47 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(labels(nulls) == expected + (13L -> 13L))
   }
 
+  test("duplicate clustering reads a caller's checkpoint as it is: " +
+      "one job, the checkpoint survives, equal labels") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val plain = Seq((1L, 2L), (2L, 3L), (3L, 7L), (5L, 9L))
+      .toDF("id_a", "id_b").coalesce(1)
+    val ckpt = plain.localCheckpoint(true)
+    val pinned = sc.getPersistentRDDs.keySet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // (labels, jobs the call ran); the driver path returns local rows
+    def run(pairs: org.apache.spark.sql.DataFrame): (Map[Long, Long], Int) = {
+      org.apache.spark.TestListenerBus.drain(sc)
+      jobs.set(0)
+      val out = Dedup.duplicateClusters(pairs)
+      org.apache.spark.TestListenerBus.drain(sc)
+      val n = jobs.get
+      (out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, n)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (fromPlain, plainJobs) = run(plain)
+      // a projection of the checkpoint, as a caller's renamed columns
+      val (fromCkpt, ckptJobs) = run(ckpt.select(col("id_a"), col("id_b")))
+      assert(fromCkpt == fromPlain && fromPlain == Map(1L -> 1L,
+        2L -> 1L, 3L -> 1L, 7L -> 1L, 5L -> 5L, 9L -> 5L))
+      // the plain input is checkpointed, then collected; the caller's
+      // checkpoint is only collected
+      assert(plainJobs == 2 && ckptJobs == 1, s"$plainJobs / $ckptJobs jobs")
+      assert(pinned.subsetOf(sc.getPersistentRDDs.keySet),
+        "the caller's checkpoint was released")
+      assert(ckpt.count() == 4L)
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpointed(ckpt)
+    }
+  }
+
   test("duplicate clustering converges on a long path graph and under " +
       "the reliable-checkpoint option") {
     // a 16-node path with the min id in the middle — worst case for
@@ -508,14 +549,44 @@ class DedupSimilaritySpec extends AnyFunSuite {
       f"sq8 recall $recall%.3f below the 0.9 floor")
   }
 
+  // every message along an exception's cause chain: a length guard
+  // fails inside a task (wrapped in the job's SparkException) or, over
+  // a local relation, while the optimizer folds the projection
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+
   test("SQ8 fails fast when dim does not match the corpus vectors " +
       "instead of silently corrupting the shortlist") {
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[Exception] {
       Similarity.knnSq8(realVecs, "vec_id", "embedding",
         numQueries = 2, k = 2, shortlist = 10, dim = 48).count()
     }
-    assert(e.getMessage.contains("dim=48"))
+    assert(messages(e).contains("has length 64, expected dim=48"),
+      messages(e))
   }
+
+  // the same in-plan guard in each operator that slices or projects
+  // vectors by position: the 8-dim fixture against dim = 16
+  for ((name, run) <- Seq[(String, () => Long)](
+      "replayable hyperplane LSH" -> (() =>
+        Similarity.lshNearDupPairsReplayable(vecs, "vec_id", "embedding",
+          threshold = 0.9, dim = 16).count()),
+      "PQ" -> (() => Similarity.knnPq(vecs, "vec_id", "embedding",
+        numCodes = 5, numSubspaces = 4, numQueries = 2, k = 2, dim = 16,
+        shortlist = 2).count()),
+      "SQ8" -> (() => Similarity.knnSq8(vecs, "vec_id", "embedding",
+        numQueries = 2, k = 2, shortlist = 2, dim = 16).count()),
+      "IVF-PQ" -> (() => Similarity.knnIvfPq(vecs, "vec_id", "embedding",
+        numCentroids = 2, nprobe = 1, numCodes = 5, numSubspaces = 4,
+        numQueries = 2, k = 2, dim = 16, shortlist = 2,
+        iterations = 1).count())))
+    test(s"$name fails on a vector whose length is not dim, naming " +
+        "the id and both lengths") {
+      val msg = messages(intercept[Exception](run()))
+      assert(msg.matches("(?s).*vector id [0-4] has length 8, " +
+        "expected dim=16.*"), msg)
+    }
 
   test("k-means-trained IVF meets the 0.94 recall bar at its " +
       "registered config (sf0.001 embeddings)") {
@@ -643,8 +714,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val exact = Similarity.knnBruteForce(vecs, "vec_id", "embedding",
       numQueries = 2, k = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    // shortlist = k: the exact rerank only reorders the ADC top-k, so
+    // an ADC misrank that drops a true neighbor fails the comparison
     val pq = Similarity.knnPq(vecs, "vec_id", "embedding",
-      numCodes = 5, numSubspaces = 4, numQueries = 2, k = 2, dim = 8)
+      numCodes = 5, numSubspaces = 4, numQueries = 2, k = 2, dim = 8,
+      shortlist = 2)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(pq == exact)
@@ -751,10 +825,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("hyperplane LSH always buckets identical vectors together") {
     val dup = vecs.union(Seq((5L, Array(1.0f, 0.1f, 0f, 0f, 0f, 0f, 0f,
       0f))).toDF("vec_id", "embedding"))
-    val pairs = Similarity.lshNearDupPairs(dup, "vec_id", "embedding",
-      threshold = 0.9999).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 5L))) // identical vector, cos = 1
+    for (pairs <- Seq(
+        Similarity.lshNearDupPairs(dup, "vec_id", "embedding",
+          threshold = 0.9999),
+        Similarity.lshNearDupPairsReplayable(dup, "vec_id", "embedding",
+          threshold = 0.9999, dim = 8)))
+      assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+        .contains((0L, 5L))) // identical vector, cos = 1
   }
 
   test("containmentPairs catches near-subset docs symmetric Jaccard " +
@@ -909,8 +986,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val ortho = (0 until 3).map(i =>
       comps(0).eigenvector(i) * comps(1).eigenvector(i)).sum
     assert(math.abs(ortho) < 1e-6, s"dot=$ortho")
+    val (_, mean0, cov0) = Similarity.momentsOf(pts, "embedding")
     val corrected = Similarity.abttCorrect(pts, "vec_id", "embedding",
-      numComponents = 2)
+      mean0, cov0, numComponents = 2)
     val (n, mean, _) = Similarity.momentsOf(corrected, "corrected")
     assert(n == 60 && mean.forall(m => math.abs(m) < 1e-9))
     // with both planted directions removed only the third-axis noise

@@ -19,16 +19,19 @@ object ParseCorpus {
   /** The date language: the charset rule (a digit-led value of digits
     * and `Tt:zZ+ ./-`, or a month-token value of letters, digits and
     * `:, ./-`) minus three `./-`-joined digit groups with a 3+-digit
-    * middle group.
+    * middle group. The ISO parse is tried neither on pure digits nor on
+    * a time-only value (a digit run then `:`), which it would read as
+    * that time today.
     */
   private val charset =
     "^[0-9][0-9Tt:zZ+ ./-]*$|" +
       "(?i)^(?=.*(?:jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec))" +
       "[0-9a-z:, ./-]+$"
   private val wideMiddle = "^[0-9]+[./-][0-9]{3,}[./-][0-9]+$"
+  private val timeOnly = "^[0-9]+:"
 
   private def parsers(t: Column): Seq[Column] =
-    when(!t.rlike("^[0-9]+$"), try_to_timestamp(t)) +:
+    when(!t.rlike("^[0-9]+$") && !t.rlike(timeOnly), try_to_timestamp(t)) +:
       TypeInference.dateFormats.map(f => try_to_timestamp(t, lit(f)))
 
   /** Every parser of the cascade, unguarded, over the date language:
@@ -43,9 +46,10 @@ object ParseCorpus {
   def ungatedNumeric(name: String): Column =
     expr(s"try_cast(trim(`$name`) AS DOUBLE)")
 
-  /** The regex-gated date parse the kernel replaced, verbatim: the
-    * charset gate, the never-date shapes, and the two compact shapes
-    * for pure digits.
+  /** The regex-gated date parse the kernel replaced: the charset gate,
+    * the never-date shapes, and the two compact shapes for pure digits;
+    * since time-only values left the date language, its ISO parse skips
+    * them too.
     */
   def regexGatedDate(name: String): Column = {
     val never = "^(?:[0-9]{1,7}|[0-9]{9,13}|[0-9]{15,}|[0-9]+\\.[0-9]+" +
@@ -61,7 +65,7 @@ object ParseCorpus {
           when(t.rlike(compactDate), try_to_timestamp(t, lit("yyyyMMdd"))),
           when(t.rlike(compactTs),
             try_to_timestamp(t, lit("yyyyMMddHHmmss")))))
-        .otherwise(coalesce((try_to_timestamp(t) +:
+        .otherwise(coalesce((when(!t.rlike(timeOnly), try_to_timestamp(t)) +:
           TypeInference.dateFormats.map(f =>
             try_to_timestamp(t, lit(f)))): _*)))
   }

@@ -148,34 +148,36 @@ class PlanShapeSpec extends AnyFunSuite {
   test("knn_graph: the beam search never goes cartesian and every " +
       "frontier/candidate join rides a broadcast (bounded side)") {
     // the registered query collapses its bounded k-result to a local
-    // relation after releasing its caches (VERDICT r16 #4) and since
-    // r19 derives the final top-k from the last round's collected
-    // beam rows, so the guard inspects ONE REAL search round via the
-    // round twin (shared construction with the search loop —
-    // beamRoundPlan/collectFrontier) — same parameters as the
-    // registry's knn_graph entry
-    val (df, pinned) = operators.Similarity.graphRoundPlanTwin(
-      SparkEntry.tbl(spark, dir, "embeddings"), "vec_id", "embedding",
-      numCentroids = 16, graphDegree = 6, numEntries = 2,
-      beam = 10, numQueries = 10)
+    // relation and collects one action per beam round, so the guard
+    // reads the executed plans of the registered run's own actions:
+    // every round is the vector table joined against the broadcast
+    // candidate set and the broadcast queries, and NO join in the
+    // search may be anything but a broadcast, nothing cartesian
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val rounds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        // a beam round returns (query_id, id, sim) rows
+        if (qe.analyzed.output.map(_.name) == Seq("query_id", "id", "sim"))
+          rounds.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
     try {
-      // r18: the search runs round-wise with the bounded frontier
-      // collected to a local relation per round, so the inspectable
-      // plan is one round's shape — the vector table joined
-      // against the broadcast candidate set and broadcast queries.
-      // The guard strengthens accordingly: NO join in the search may
-      // be anything but a broadcast (previously only a count was
-      // pinned), and nothing may go cartesian.
-      val p = df.queryExecution.executedPlan.toString
+      SparkEntry.registry("knn_graph").run(spark, dir).collect()
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the registered entry runs rounds = 2
+    assert(rounds.size == 2, s"expected 2 round plans, saw ${rounds.size}")
+    rounds.forEach { p =>
       assert(!p.contains("CartesianProduct"), "graph search went cartesian")
       assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
         s"graph search joins must all broadcast:\n${p.take(800)}")
       assert(count(p, "BroadcastHashJoin") +
         count(p, "BroadcastNestedLoopJoin") >= 2,
         s"graph search lost its broadcasts:\n${p.take(800)}")
-    } finally pinned.foreach { d =>
-      d.unpersist()
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpointed(d)
     }
   }
 

@@ -79,6 +79,17 @@ class TypeInferenceSpec extends AnyFunSuite {
       == DatetimeT)
   }
 
+  test("a column of clock times stays character: a time-only value " +
+      "is no date (none of whiteRRabbit.R:174-178's orders is)") {
+    val times = Seq("12:30", "1:2", "12:30:00", "08:15", "23:59:59",
+      "7:05:09")
+    assert(inferOne(times) == CharacterT)
+    // not read as that time on the day the scan runs
+    val parsed = times.toDF("c").select(TypeInference.dateParse("c"))
+      .collect()
+    assert(parsed.forall(_.isNullAt(0)), parsed.mkString(", "))
+  }
+
   test("mixed non-date stays character (test_robust_parse.R:34-38)") {
     assert(inferOne(Seq("2023-01-15", "apple", "banana", "cherry",
       "dog")) == CharacterT)
