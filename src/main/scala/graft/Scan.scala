@@ -2,6 +2,7 @@ package graft
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.Success
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
@@ -31,7 +32,8 @@ final case class TableScanResult(
   * (sample/head) → type inference → promotion → optional date shift →
   * column exclusion → profile + frequency. In the exact (default)
   * mode inference, profile and frequency all read one value histogram
-  * of the capped sample (see [[scanTable]]). Unlike the reference's
+  * of the capped sample, and one per-cell pass computes the moments of
+  * the numeric columns (see [[exactScan]]). Unlike the reference's
   * sequential per-file loop (whiteRRabbit.R:450-464), folders are
   * scanned with the per-file Spark jobs submitted concurrently from
   * driver threads — files share the cluster instead of queueing
@@ -73,7 +75,7 @@ object Scan {
     // Both report sheets are REPORT-sized by construction (one row
     // per column; top-maxDistinctValues per column): collected once
     // and re-wrapped as local relations, every sink write is a
-    // driver-local operation (optimization r18), and — because
+    // driver-local operation that runs no Spark job, and — because
     // scanFolder runs scanFile in parallel futures — all of a
     // folder's profile compute runs in the concurrently-scheduled
     // per-file jobs. The collected rows also answer nRowsChecked
@@ -142,50 +144,62 @@ object Scan {
         config.minCellCount, config.maxDistinctValues).collect())
   }
 
-  /** The exact scan, histogram-first: every number of the report is a
-    * function of the capped sample's raw histogram H, (column, raw
-    * value) → count, except the row count, the NULL/"" counts and the
-    * moments, which one per-cell counters pass computes:
-    *   1. the counters pass ([[Profile.counterAggs]] with the numeric
-    *      parse of every string column, so a promoted column's moments
-    *      are the same aggregate over the same values as over the
-    *      promoted column) and the fill of H run concurrently — on a
-    *      capped sample (one partition) each is one Spark job;
-    *   2. H is persisted with each distinct raw value's numeric and
+  /** The exact scan, decisions first: every number of the report is
+    * a function of the capped sample's raw histogram H, (column, raw
+    * value) → count, except the moments of the numeric columns:
+    *   1. H is persisted with each distinct raw value's numeric and
     *      date parse ([[TypeInference.parsed]]), so the parse cascade
     *      runs once per distinct (column, value) rather than per cell
-    *      per consumer; the inference votes are weighted sums over H
-    *      and are what fills it;
-    *   3. H re-keyed by the decisions and regrouped ("1" and "1.0"
-    *      merge) is the typed histogram T ([[typedHistogram]]); the
-    *      profile's distinct counts, quartiles and date stats
-    *      ([[Profile.statsOf]]) and the frequency table
-    *      ([[Frequency.topK]]) both read T, concurrently;
-    *   4. every job this scan started has finished and H is released,
+    *      per consumer. One grouped aggregate over H, the action that
+    *      fills it, returns the row count, each column's NULL and ""
+    *      counts and each string column's inference votes
+    *      ([[Profile.census]]); the decisions follow on the driver;
+    *   2. three jobs then run concurrently:
+    *      - the moments pass ([[Profile.momentAggs]]), per cell over
+    *        the capped sample, of the numeric-decided string columns
+    *        (their [[TypeInference.numericParse]], so each is the same
+    *        aggregate over the same values as over the promoted
+    *        column) and the native numeric columns — skipped when the
+    *        table has none;
+    *      - the profile's distinct counts, quartiles and date stats
+    *        ([[Profile.statsOf]]) and
+    *      - the frequency table ([[Frequency.topK]]), both over H
+    *        re-keyed by the decisions and regrouped ("1" and "1.0"
+    *        merge): the typed histogram T ([[typedHistogram]]);
+    *   3. every job this scan started has finished and H is released,
     *      blocking, before returning — on failure too.
-    * No step re-reads the source or re-draws the sample after step 1,
-    * except with `shiftDates`: the shifted date columns are melted per
-    * cell, since each row draws its own shift.
+    * On a capped sample (one partition) the census is two Spark jobs,
+    * H's fill and its aggregate, and each pass of step 2 is one: five
+    * per table, four without a numeric column. No step but the
+    * moments pass re-reads the source or re-draws the sample, except
+    * with `shiftDates`: the shifted date columns are melted per cell,
+    * since each row draws its own shift.
     */
   private def exactScan(spark: SparkSession, capped: DataFrame,
       config: ScanConfig): Sheets = {
     val fields = capped.schema.fields
     val strIdx = fields.indices.filter(fields(_).dataType == StringType)
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val countersF = onPool(spark) {
-      val aggs = Profile.counterAggs(fields, stringMoments = true)
-      capped.agg(aggs.head, aggs.tail: _*).head()
-    }
     val h = TypeInference.parsed(
       Profile.regroup(Profile.melt(capped, fields.indices, raw = true)),
       strIdx).persist()
     try {
-      val votes = TypeInference.votes(h, strIdx)
+      val Profile.Census(total, rawCounts, votes) =
+        Profile.census(h, fields, strIdx)
       val inference = strIdx.map(i =>
         fields(i).name -> TypeInference.decide(votes.get(i), 0.8)).toMap
       val typed =
         dateShifted(TypeInference.promote(capped, inference), config)
       val typedFields = typed.schema.fields
+      val numIdx = typedFields.indices.filter(i =>
+        typedFields(i).dataType.isInstanceOf[NumericType])
+      val momentsF = onPool(spark) {
+        if (numIdx.isEmpty) None
+        else {
+          val aggs = Profile.momentAggs(fields, numIdx)
+          Some(capped.agg(aggs.head, aggs.tail: _*).head())
+        }
+      }
       val idx = freqIdx(typedFields, config)
       // the frequency table has no date column, so it never needs the
       // shifted dates' per-cell melt
@@ -197,10 +211,8 @@ object Scan {
           config.minCellCount, config.maxDistinctValues)).collect()
       }
       try {
-        val counters = Await.result(countersF, Duration.Inf)
-        val total = counters.getAs[Long]("total")
         val counts = fields.indices.map { i =>
-          val c = Profile.countsOf(counters, i)
+          val c = rawCounts(i)
           inference.get(fields(i).name) match {
             case Some(TypeInference.NumericT) =>
               c.copy(missing = c.missing + c.empty, empty = 0L)
@@ -209,17 +221,17 @@ object Scan {
             case _ => c
           }
         }
+        val stats = Profile.statsOf(
+          typedHistogram(h, typed, inference, config.shiftDates),
+          typedFields, counts.map(c => total - c.missing - c.empty))
         val summary = Profile.summaryFrame(spark, typedFields, total, counts,
-          Profile.statsOf(
-            typedHistogram(h, typed, inference, config.shiftDates),
-            typedFields,
-            counts.map(c => total - c.missing - c.empty))).collect()
+          Await.result(momentsF, Duration.Inf), stats).collect()
         Sheets(inference, summary, Await.result(freqF, Duration.Inf))
-      } finally Await.ready(freqF, Duration.Inf)
-    } finally {
-      Await.ready(countersF, Duration.Inf)
-      h.unpersist(blocking = true)
-    }
+      } finally {
+        Await.ready(momentsF, Duration.Inf)
+        Await.ready(freqF, Duration.Inf)
+      }
+    } finally h.unpersist(blocking = true)
   }
 
   /** The typed histogram T of `typed` from the capped sample's parsed
@@ -287,8 +299,11 @@ object Scan {
       : Seq[TableScanResult] = {
     val files = DelimitedSource.listFiles(
       spark, config.workingFolder, config.filePattern)
-    val futures = files.map(f => onPool(spark)(scanFile(spark, f, config)))
-    Await.result(Future.sequence(futures), Duration.Inf)
+    val futures = files.map(f =>
+      onPool(spark)(scanFile(spark, f, config)).transform(Success(_)))
+    // every file's scan finishes before the first failure is rethrown:
+    // a fail-fast Await would leave sibling scans' jobs running
+    Await.result(Future.sequence(futures), Duration.Inf).map(_.get)
   }
 
   val overviewSchema: StructType = StructType(Seq(

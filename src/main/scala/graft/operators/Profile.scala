@@ -133,59 +133,92 @@ object Profile {
     else {
       val fields = df.schema.fields
       require(fields.nonEmpty, "cannot profile a zero-column DataFrame")
-      val aggs = counterAggs(fields, stringMoments = false)
+      val aggs = counterAggs(fields)
       val counters = df.agg(aggs.head, aggs.tail: _*).head()
       val counts = fields.indices.map(countsOf(counters, _))
       val total = counters.getAs[Long]("total")
-      summaryFrame(df.sparkSession, fields, total, counts,
+      summaryFrame(df.sparkSession, fields, total, counts, Some(counters),
         histogramStats(df, counts.map(c => total - c.missing - c.empty)))
     }
 
-  /** The counters row's aggregates: the row count `total`, and per
-    * column i its NULL count `m_i`, its "" count `e_i` (string columns)
-    * and the moments `mn_i`/`mx_i`/`av_i`/`sd_i` of its numeric value.
-    * A numeric column's value is its double cast; with `stringMoments`
-    * a string column's is [[TypeInference.numericParse]], so the
-    * moments of a column promoted to numeric come from the raw column
-    * in one pass before the decision — the same aggregate over the
-    * same values in the same order as over the promoted column.
+  /** The counters row's aggregates: the row count `total`, per column
+    * i its NULL count `m_i` and its "" count `e_i` (string columns),
+    * and the moments ([[momentAggs]]) of the numeric columns.
     */
-  private[graft] def counterAggs(fields: Array[StructField],
-      stringMoments: Boolean): Seq[Column] =
-    count(lit(1)).as("total") +: fields.toSeq.zipWithIndex.flatMap {
+  private[graft] def counterAggs(fields: Array[StructField]): Seq[Column] =
+    (count(lit(1)).as("total") +: fields.toSeq.zipWithIndex.flatMap {
       case (f, i) =>
         val c = col(f.name)
-        val value = f.dataType match {
-          case StringType if stringMoments =>
-            Some(TypeInference.numericParse(f.name))
-          case t if isNum(t) => Some(c.cast(DoubleType))
-          case _ => None
-        }
-        Seq(count(when(c.isNull, lit(1))).as(s"m_$i")) ++
+        count(when(c.isNull, lit(1))).as(s"m_$i") +:
           (if (f.dataType == StringType)
             Seq(count(when(c === lit(""), lit(1))).as(s"e_$i"))
-          else Nil) ++
-          value.toSeq.flatMap(v => Seq(min(v).as(s"mn_$i"),
-            max(v).as(s"mx_$i"), avg(v).as(s"av_$i"),
-            stddev_samp(v).as(s"sd_$i")))
+          else Nil)
+    }) ++ momentAggs(fields, fields.indices.filter(i =>
+      isNum(fields(i).dataType)))
+
+  /** The moments `mn_i`/`mx_i`/`av_i`/`sd_i` (min, max, avg,
+    * stddev_samp) of the numeric value of each column i of `idx`. A
+    * numeric column's value is its double cast, a string column's is
+    * [[TypeInference.numericParse]]: so the moments of a column promoted
+    * to numeric come from the raw column — the same aggregate over the
+    * same values in the same order as over the promoted column.
+    */
+  private[graft] def momentAggs(fields: Array[StructField],
+      idx: Seq[Int]): Seq[Column] =
+    idx.flatMap { i =>
+      val f = fields(i)
+      val v =
+        if (f.dataType == StringType) TypeInference.numericParse(f.name)
+        else col(f.name).cast(DoubleType)
+      Seq(min(v).as(s"mn_$i"), max(v).as(s"mx_$i"), avg(v).as(s"av_$i"),
+        stddev_samp(v).as(s"sd_$i"))
     }
 
-  /** One column's counters, read off the counters row: NULL and ""
-    * counts and the boxed moments (min, max, mean, sd), empty when the
-    * row has none for the column.
-    */
-  private[graft] final case class ColCounts(missing: Long, empty: Long,
-      moments: Seq[java.lang.Double])
+  /** One column's NULL and "" counts. */
+  private[graft] final case class ColCounts(missing: Long, empty: Long)
 
-  private[graft] def countsOf(counters: Row, i: Int): ColCounts = {
-    def has(n: String) = counters.schema.fieldNames.contains(n)
-    def d(n: String): java.lang.Double =
-      if (counters.isNullAt(counters.fieldIndex(n))) null
-      else Double.box(counters.getAs[Double](n))
+  private[graft] def countsOf(counters: Row, i: Int): ColCounts =
     ColCounts(counters.getAs[Long](s"m_$i"),
-      if (has(s"e_$i")) counters.getAs[Long](s"e_$i") else 0L,
-      if (has(s"mn_$i")) Seq("mn", "mx", "av", "sd").map(m => d(s"${m}_$i"))
-      else Nil)
+      if (counters.schema.fieldNames.contains(s"e_$i"))
+        counters.getAs[Long](s"e_$i")
+      else 0L)
+
+  /** Column i's boxed moments (min, max, mean, sd) read off a row of
+    * [[momentAggs]].
+    */
+  private def momentsOf(row: Row, i: Int): Seq[java.lang.Double] =
+    Seq("mn", "mx", "av", "sd").map { m =>
+      val at = row.fieldIndex(s"${m}_$i")
+      if (row.isNullAt(at)) null else Double.box(row.getDouble(at))
+    }
+
+  /** The scan's census of its parsed raw histogram `h` — the (i, vs,
+    * vn, cnt, num, dt) rows of [[melt]] with `raw`, parsed by
+    * [[TypeInference.parsed]] — in one grouped aggregate: the row
+    * count, each column's NULL count (no key at all) and "" count
+    * (string columns only: a non-string column's string key can be ""
+    * too), and each string column's inference votes. Integer sums of
+    * the cell multiplicities, so each is the per-cell count exactly.
+    */
+  private[graft] final case class Census(total: Long,
+      counts: IndexedSeq[ColCounts], votes: Map[Int, TypeInference.Votes])
+
+  private[graft] def census(h: DataFrame, fields: Array[StructField],
+      strIdx: Seq[Int]): Census = {
+    val cnt = col("cnt")
+    def weighted(c: Column) = coalesce(sum(when(c, cnt)), lit(0L))
+    val aggs = Seq(weighted(lit(true)),
+      weighted(col("vs").isNull && col("vn").isNull),
+      weighted(col("vs") === lit(""))) ++
+      TypeInference.voteAggs(col("vs"), col("num"), col("dt"), cnt)
+    val byCol = h.groupBy("i").agg(aggs.head, aggs.tail: _*).collect()
+      .map(r => r.getInt(0) -> r).toMap
+    Census(byCol.values.headOption.fold(0L)(_.getLong(1)),
+      fields.indices.map(i => byCol.get(i).fold(ColCounts(0L, 0L))(r =>
+        ColCounts(r.getLong(2),
+          if (strIdx.contains(i)) r.getLong(3) else 0L))),
+      strIdx.flatMap(i =>
+        byCol.get(i).map(r => i -> TypeInference.votesOf(r, 4))).toMap)
   }
 
   /** Columns `idx` of `df` melted to one row per cell: (i, vs, vn, cnt)
@@ -512,17 +545,19 @@ object Profile {
 
   /** Driver-side reshape of the exact profile: each column's counters
     * and histogram stats into one summary row per column. Moments are
-    * read for numeric columns only, the date range and median for
-    * date-like ones.
+    * read off the `moments` row ([[momentAggs]]) for numeric columns
+    * only, the date range and median for date-like ones.
     */
   private[graft] def summaryFrame(spark: SparkSession,
       fields: Array[StructField], total: Long, counts: IndexedSeq[ColCounts],
+      moments: Option[Row],
       hist: Map[Int, HistStats]): DataFrame = {
     val rows: Seq[Row] = fields.toSeq.zipWithIndex.map { case (f, i) =>
       val c = counts(i)
       val h = hist.get(i)
       val Seq(mn, mx, av, sd) =
-        if (isNum(f.dataType)) c.moments else Seq.fill(4)(null)
+        if (isNum(f.dataType)) momentsOf(moments.get, i)
+        else Seq.fill(4)(null)
       def q(pick: ((Double, Double, Double)) => Double): java.lang.Double =
         h.flatMap(_.quartiles).map(t => Double.box(pick(t))).orNull
       def us(pick: ((Long, Long)) => Long): java.lang.Long =

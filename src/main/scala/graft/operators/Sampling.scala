@@ -42,7 +42,8 @@ object Sampling {
     * Pass `totalRows` (free from the parquet footer or
     * [[graft.sources.DelimitedSource.fastRowCount]]) to enable the
     * scale path: a `__rand < p` pre-thin ahead of the top-k, verified
-    * by an exact survivor count (one column-pruned job) with automatic
+    * by an exact survivor count (one column-pruned job: the rows of the
+    * filtered scan counted as they stream, no aggregate) with automatic
     * fallback on the rare shortfall. Without it the plain
     * TakeOrderedAndProject runs — fine for small/unknown inputs, a
     * single-node P·k merge at cluster scale. An over- or under-stated
@@ -57,7 +58,7 @@ object Sampling {
         val pre = keyed.where(col("__rand") < lit(thinTarget(k) / n))
         // rand(seed) is partition-deterministic over an unchanged scan,
         // so this count sees the same keys the final job will.
-        if (pre.count() >= k) pre else keyed
+        if (pre.select().queryExecution.toRdd.count() >= k) pre else keyed
       case _ => keyed
     }
     thinned.orderBy(col("__rand")).limit(k).drop("__rand")

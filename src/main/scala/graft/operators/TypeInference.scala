@@ -27,7 +27,7 @@ import graft.functions.ParseShape
   * columns at once — then a single cast projection. The exact scan
   * sums the same votes over its value histogram instead, so the parse
   * cascade runs once per distinct value rather than once per cell
-  * ([[votes]]). All parsing
+  * ([[Profile.census]]). All parsing
   * runs in codegen'd builtins (`try_cast`, `try_to_timestamp`) behind
   * one native shape classifier ([[graft.functions.ParseShape]]); no
   * UDFs. The date cascade stays affordable full-column because each
@@ -169,7 +169,7 @@ object TypeInference {
     * `weight`, and that value's parses `num` ([[numericParse]]) and
     * `dt` ([[dateParse]]).
     */
-  private def voteAggs(value: Column, num: Column, dt: Column,
+  private[graft] def voteAggs(value: Column, num: Column, dt: Column,
       weight: Column): Seq[Column] = {
     val nonEmpty = value.isNotNull && value =!= lit("")
     def weighted(c: Column) =
@@ -177,21 +177,8 @@ object TypeInference {
     Seq(weighted(lit(true)), weighted(num.isNull), weighted(dt.isNotNull))
   }
 
-  private def votesOf(r: org.apache.spark.sql.Row, at: Int): Votes =
+  private[graft] def votesOf(r: org.apache.spark.sql.Row, at: Int): Votes =
     Votes(r.getLong(at), r.getLong(at + 1), r.getLong(at + 2))
-
-  /** Each string column's votes over [[parsed]] histogram rows, each
-    * value weighted by its count: one grouped aggregate.
-    */
-  private[graft] def votes(cells: DataFrame,
-      strIdx: Seq[Int]): Map[Int, Votes] = {
-    val aggs = voteAggs(col("vs"), col("num"), col("dt"), col("cnt"))
-    cells.where(col("i").isin(strIdx: _*))
-      .groupBy("i").agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) -> votesOf(r, 1))
-      .toMap
-  }
 
   /** A string column's promotion decision from its votes:
     * numeric iff it has ≥1 non-empty value and every one parses, else
@@ -227,10 +214,10 @@ object TypeInference {
     *
     * Both decisions come from ONE global aggregation pass over the
     * string columns, each cell weighing 1 — the same vote aggregates
-    * the scan sums over its value histogram ([[votes]]), decided by the
-    * same [[decide]]; the shape classifier makes the full date
-    * validation as cheap on numeric columns as a sampled pre-filter
-    * would make skipping them.
+    * the scan sums over its value histogram ([[Profile.census]]),
+    * decided by the same [[decide]]; the shape classifier makes the
+    * full date validation as cheap on numeric columns as a sampled
+    * pre-filter would make skipping them.
     *
     * `seed` and `randomSample` do not affect the decision. They are
     * kept because the benchmark harness (perfbench/Workloads.scala)

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.DriverCsv
 
 import graft.{Scan, TableScanResult}
 import graft.operators.Profile
@@ -9,10 +10,12 @@ import graft.operators.Profile
   *
   * - TSV sink mirrors the reference layout (whiteRRabbit.R:515-531):
   *   <prefix>_Overview, <prefix>_File<i>_Summary, <prefix>_File<i>_Freq
-  *   (freq sheet only when non-empty), tab-separated with header. Spark
-  *   writes each sheet as a directory of part files; coalesce(1) gives
-  *   the reference's one-file-per-sheet shape (fine for report-sized
-  *   outputs — summaries are per-column, frequencies are top-K-bounded).
+  *   (freq sheet only when non-empty), tab-separated with header. Each
+  *   sheet is the directory Spark's `coalesce(1)` CSV write makes — one
+  *   part file, the reference's one-file-per-sheet shape — written on
+  *   the driver by Spark's own CSV generator ([[DriverCsv]]): the
+  *   sheets are report-sized local relations (summaries are per-column,
+  *   frequencies are top-K-bounded), so no Spark job runs.
   * - The xlsx workbook (whiteRRabbit.R:485-514) is a REAL `.xlsx`
   *   file written by [[XlsxSink]] (hand-rolled SpreadsheetML over
   *   `java.util.zip` — no library needed) with the reference's sheet
@@ -34,9 +37,9 @@ object ReportSink {
     ("Overview" -> overview) +: per
   }
 
-  /** Sheets are independent report-sized jobs — submit them from
-    * driver threads so they share the cluster instead of queueing
-    * (same pattern as Scan.scanFolder's per-file parallelism).
+  /** Sheets are independent report-sized writes — run them from
+    * driver threads so they overlap instead of queueing (same pattern
+    * as Scan.scanFolder's per-file parallelism).
     */
   private def writeAll(overview: DataFrame, results: Seq[TableScanResult])(
       write: (String, DataFrame) => Unit): Unit = {
@@ -45,7 +48,7 @@ object ReportSink {
     import scala.util.Try
     implicit val ec: ExecutionContext = ExecutionContext.global
     // Lift each write into Try and await them ALL before rethrowing:
-    // a fail-fast Await would return while sibling sheet jobs are
+    // a fail-fast Await would return while sibling sheet writes are
     // still in flight (partially-written report, racy cleanup).
     val outcomes = Await.result(
       Future.sequence(sheets(overview, results).map { case (name, df) =>
@@ -58,9 +61,8 @@ object ReportSink {
   def writeTsv(outputDir: String, prefix: String, overview: DataFrame,
       results: Seq[TableScanResult]): Unit =
     writeAll(overview, results) { (name, df) =>
-      df.coalesce(1).write.mode("overwrite")
-        .option("sep", "\t").option("header", "true")
-        .csv(s"$outputDir/${prefix}_$name")
+      DriverCsv.write(df, s"$outputDir/${prefix}_$name",
+        Map("sep" -> "\t", "header" -> "true"))
     }
 
   /** Workbook sink: one directory, one Parquet dataset per sheet. */

@@ -190,6 +190,106 @@ class ScanEquivalenceSpec extends AnyFunSuite {
       "c10" -> CharacterT, "c11" -> NumericT))
   }
 
+  /** A small TSV of `rows` rows whose column c holds `cells(c)(r)`. */
+  private def table(name: String, rows: Int,
+      cells: Seq[(String, Int => String)]): DataFrame = {
+    val dir = graft.config.Scratch.runDir + "/scan_equivalence"
+    Files.createDirectories(Paths.get(dir))
+    val path = s"$dir/$name.tsv"
+    val lines = cells.map(_._1).mkString("\t") +:
+      (0 until rows).map(r => cells.map(_._2(r)).mkString("\t"))
+    Files.write(Paths.get(path), lines.mkString("", "\n", "\n")
+      .getBytes("UTF-8"))
+    DelimitedSource.read(spark, path, "\t")
+  }
+
+  /** The Spark jobs `body` submits from this thread's job group. */
+  private def jobsOf(body: => Unit): Int = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "scan-equivalence-jobs"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "scan equivalence jobs")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("a capped table with no numeric column equals the per-cell " +
+      "pipeline and runs no moments pass") {
+    val text: Seq[(String, Int => String)] = Seq(
+      "code" -> (r => s"C${r % 7}"),
+      "day" -> (r => if (r % 11 == 0) "" else s"2021-02-${r % 28 + 1}"),
+      "note" -> (r => if (r % 5 == 0) "NA" else s"n ${r % 13}"))
+    val plain = table("no_numeric", 200, text)
+    val withNum =
+      table("one_numeric", 200, text :+ ("amt" -> (r => s"$r.5")))
+    val capped = ScanConfig(maxRows = 60L, seed = 3L)
+    assert(!TypeInference.infer(plain).values
+      .exists(_ == TypeInference.NumericT))
+    Seq(capped, capped.copy(shiftDates = true))
+      .foreach(assertEquivalent(plain, 201L, _))
+    def scan(df: DataFrame) =
+      jobsOf(Scan.scanTable(spark, df, "fixture", 201L, capped))
+    // the same table plus one numeric column: the moments pass is the
+    // one job more
+    assert(scan(plain) == scan(withNum) - 1)
+  }
+
+  test("a string column of -0, 0, NaN and 1e308 is numeric with the " +
+      "per-cell pipeline's moments bit for bit") {
+    val spellings = Seq("-0", "0", "NaN", "1e308")
+    val df = table("extremes", 90, Seq(
+      "x" -> (r => spellings(r % 4)),
+      // one 1e308 among signed zeros: a finite mean and sd
+      "y" -> (r => if (r == 7) "1e308" else spellings(r % 2)),
+      "k" -> (r => s"k${r % 3}")))
+    assert(TypeInference.infer(df) == Map("x" -> TypeInference.NumericT,
+      "y" -> TypeInference.NumericT, "k" -> TypeInference.CharacterT))
+    Seq(ScanConfig(maxRows = 1000L), ScanConfig(maxRows = 50L, seed = 5L))
+      .foreach { cfg =>
+        assertEquivalent(df, 91L, cfg)
+        val (_, summary, _) = reference(df, 91L, cfg)
+        val got = Scan.scanTable(spark, df, "fixture", 91L, cfg)
+          .summary.collect()
+        def bits(rows: Array[Row]) = rows.toSeq.map(r =>
+          Seq("min_val", "max_val", "mean_val", "sd_val").map { m =>
+            val at = r.fieldIndex(m)
+            if (r.isNullAt(at)) None
+            else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(at)))
+          })
+        assert(bits(got) == bits(summary))
+      }
+  }
+
+  test("a non-string column whose string key is \"\" counts no empties") {
+    // an empty binary value casts to the string "", the melt's key for
+    // a column of a type the profile has no number for
+    val df = spark.range(0, 40, 1, 2).select(
+      when(col("id") % 4 === 0, lit(Array.emptyByteArray))
+        .when(col("id") % 4 =!= 1, col("id").cast("string").cast("binary"))
+        .as("b"),
+      (col("id") % 3).cast("string").as("s"))
+    val cfg = ScanConfig(maxRows = -1L)
+    assertEquivalent(df, 40L, cfg)
+    val b = Scan.scanTable(spark, df, "fixture", 40L, cfg).summary.collect()
+      .find(_.getString(0) == "b").get
+    assert(b.getAs[Long]("empty_count") == 0L &&
+      b.getAs[Long]("missing_count") == 10L &&
+      b.getAs[Long]("non_missing") == 30L)
+  }
+
   test("the driver walk and the distributed rank walk give identical " +
       "stats on the same histogram") {
     val big = java.sql.Timestamp.valueOf("9999-12-31 23:59:59.999999")

@@ -43,4 +43,42 @@ class ScanMainSpec extends AnyFunSuite {
       XlsxSink.readSheet(s"$out/ScanReport.xlsx", "File1")
     assert(sHeader.contains("Column") && sRows.nonEmpty)
   }
+
+  /** A fresh folder holding the files `files` (name -> content). */
+  private def folder(files: (String, String)*): String = {
+    val in = Files.createTempDirectory(
+      Paths.get(graft.config.Scratch.runDir), "graft-scanmain")
+    files.foreach { case (n, body) =>
+      Files.write(in.resolve(n), body.getBytes("UTF-8")) }
+    in.toString
+  }
+
+  test("an empty file fails the scan with an error naming the file") {
+    val in = folder("good.tsv" -> "a\tb\n1\tx\n2\ty\n",
+      "empty.tsv" -> "")
+    val out = Files.createTempDirectory(
+      Paths.get(graft.config.Scratch.runDir), "graft-scanmain-out").toString
+    val e = intercept[IllegalArgumentException] {
+      ScanMain.run(spark, ScanMain.parse(Array("--working_folder", in,
+        "--output_dir", out, "--output_format", "tsv")))
+    }
+    assert(e.getMessage.contains("empty.tsv"), e.getMessage)
+  }
+
+  test("a header-only file scans: N_rows 1, N_rows_checked 0") {
+    val in = folder("header_only.tsv" -> "a\tb\n")
+    val out = Files.createTempDirectory(
+      Paths.get(graft.config.Scratch.runDir), "graft-scanmain-out").toString
+    ScanMain.run(spark, ScanMain.parse(Array("--working_folder", in,
+      "--output_dir", out, "--output_format", "tsv")))
+    val sheet = Paths.get(out, "ScanReport_Overview")
+    val part = Files.list(sheet).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).head
+    val Seq(header, row) = new String(Files.readAllBytes(part), "UTF-8")
+      .split("\n").toSeq
+    val cells = header.split("\t").zip(row.split("\t", -1)).toMap
+    assert(cells("FileName") == "header_only.tsv")
+    assert(cells("N_rows") == "1" && cells("N_rows_checked") == "0")
+    assert(cells("N_Fields") == "2")
+  }
 }
